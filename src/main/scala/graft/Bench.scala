@@ -32,41 +32,26 @@ object Bench {
     Set("q_dedup_ngram_jaccard", "q_ppjoin", "q_cosine_pairs",
       "q_shared_runs", "q_minhash_incremental")
 
-  /** Force full evaluation of every output row AND column: hash-agg over a
-    * struct of all columns. A bare `count()` lets Catalyst prune unused
-    * columns and drop result-irrelevant sorts, so projection-only queries
-    * would measure scan+count instead of the operator under test.
+  /** Order-independent fingerprint of every output row AND column: a
+    * one-row hash-agg over a struct of all columns. A bare `count()` lets
+    * Catalyst prune unused columns and drop result-irrelevant sorts, so
+    * projection-only queries would measure scan+count instead of the
+    * operator under test.
     */
-  private[graft] def fullyEvaluate(df: DataFrame): Unit = {
+  private[graft] def fingerprint(df: DataFrame): DataFrame =
     // bit_xor, not sum: ANSI mode makes a long sum of 64-bit hashes overflow
     df.agg(call_function("bit_xor",
-      xxhash64(struct(df.columns.map(col).toSeq: _*)))).collect()
+      xxhash64(struct(df.columns.map(col).toSeq: _*))))
+
+  /** Force full evaluation of `df` (see [[fingerprint]]). */
+  private[graft] def fullyEvaluate(df: DataFrame): Unit = {
+    fingerprint(df).collect()
     ()
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Kryo for shuffle/checkpoint blocks (the standard cluster default;
-      // ABA-measured ~8-12% on the anchor/shuffle-heavy class, r15 NOTES)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // pass-major sampling cycles the FULL query set between one query's
-      // samples; the default 100-entry codegen class cache then evicts
-      // every query's generated classes between its own passes, so each
-      // "steady" sample pays full Janino+JIT recompile (~+0.15 s/query,
-      // measured +35% on the whole suite). A long-running cluster job has a
-      // stable query set resident in this cache — size it so the benchmark
-      // does too.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // One-time session warmup outside any query's timer: first job in a fresh
     // JVM pays executor/codegen/scan infrastructure init (~5-20 s) that is not
     // attributable to whichever query happens to run first. Trivial queries
@@ -120,10 +105,16 @@ object Bench {
     // 3-8x regression (the r6 artifact shipped q_frequent_pairs at 4.48 s
     // vs 1.6 s converged exactly that way).
     val qseq = SparkEntry.queries.toSeq
+    // a query that threw in ANY pass: its time measures the failure, not
+    // the query, so it is listed in every totals line
+    val failed = scala.collection.mutable.Set.empty[String]
     def once(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
       try fullyEvaluate(fn(spark, sfDir))
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
+      catch { case e: Throwable =>
+        failed += name
+        System.err.println(s"[bench] $name failed: $e")
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // queries may persist intermediates; drop them so no run (or later
       // query) sees another's cache residue
@@ -145,11 +136,11 @@ object Bench {
     val verifTotal = timed.collect {
       case (k, v) if VerificationQueries(k) => v._1 }.sum
     val operTotal = total - verifTotal
+    def names(ns: Iterable[String]): String =
+      ns.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val breakdown = s""""operator_total":$operTotal,"verification_total":$verifTotal,""" +
-      s""""verification_queries":${VerificationQueries.toSeq.sorted
-        .map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""rescoped_r13":${RescopedR13.toSeq.sorted
-        .map("\"" + _ + "\"").mkString("[", ",", "]")}"""
+      s""""verification_queries":${names(VerificationQueries)},""" +
+      s""""rescoped_r13":${names(RescopedR13)},"failed":${names(failed)}"""
     // normalized-bench convention (BASELINE.md §"Bench-total convention"):
     // the raw total divides by the query count so a growing registry is
     // comparable across rounds — the r1 baseline ran 44 queries at

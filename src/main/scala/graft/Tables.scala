@@ -27,22 +27,12 @@ object Tables {
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  /** Test hook (Scratch A/Bs only): bypass the schema memo so reads pay the
-    * footer-inference path — lets an A/B separate memo effects from host
-    * phase inside one session. Never set outside dev tools.
-    */
-  @volatile private[graft] var bypassSchemaMemo: Boolean = false
-
   /** Schema-memoized parquet read for write-once paths (see [[schemaMemo]]).
     * Only the SCHEMA is memoized — file listing still happens per call, so a
     * path whose DATA is rewritten (same schema) is served fresh.
     */
   def cachedParquet(spark: SparkSession, path: String): DataFrame =
-    if (bypassSchemaMemo) spark.read.parquet(path)
-    else {
-      val s = schemaMemo.computeIfAbsent(path, p => spark.read.parquet(p).schema)
-      spark.read.schema(s).parquet(path)
-    }
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
 
   /** Memoized parquet schema of a write-once path (one footer read per
     * process — the catalog-metadata analogue for `readStream.schema(...)`

@@ -62,7 +62,7 @@ object DupClusters {
     * skew-safe enumeration documented on [[triangleCounts]]; shared with
     * [[kTrussPeel]].
     */
-  private[graft] def orientedTriangles(e0: DataFrame): DataFrame = {
+  private def orientedTriangles(e0: DataFrame): DataFrame = {
     val deg = e0.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     val ranked = e0

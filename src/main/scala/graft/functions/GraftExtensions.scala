@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * can call them directly:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * val spark = graft.GraftSession.local(cpus,
+  *   "spark.sql.extensions" -> classOf[GraftExtensions].getName)
   * spark.sql("SELECT java_hash(device_id), dot_product(a, b) FROM t")
   * }}}
   *

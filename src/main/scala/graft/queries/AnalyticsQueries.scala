@@ -313,12 +313,8 @@ object AnalyticsQueries {
     */
   private[queries] def withStreamShufflePartitions[T](
       s: org.apache.spark.sql.SparkSession, n: Int)(f: => T): T = {
-    // dev-only A/B hook (ProfileOne runs): override the pin width without
-    // a rebuild; unset in every driver/bench entrypoint
-    val eff = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(_.toInt).getOrElse(n)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    try { s.conf.set("spark.sql.shuffle.partitions", eff.toString); f }
+    try { s.conf.set("spark.sql.shuffle.partitions", n.toString); f }
     finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
@@ -424,23 +420,16 @@ object AnalyticsQueries {
     // measurement (defaultSizeInBytes, join-product estimates)
     val unknown = BigInt(1L) << 50
     val sizes = frontier.map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
-    val n =
-      if (sizes.isEmpty || sizes.exists(_ >= unknown) || sizes.sum >= unknown)
-        s.conf.get("spark.sql.shuffle.partitions").toInt
-      else ((sizes.sum + target - 1) / target).toInt.max(8)
-    // audit hook: SPARK_GRAFT_PIN_DEBUG=1 prints every derived pin, so a
-    // bench run can prove the whole registry still derives the measured 8
-    // at fixture scale (and see exactly which site drifts if one does)
-    if (sys.env.contains("SPARK_GRAFT_PIN_DEBUG"))
-      System.err.println(s"[pin] derived n=$n from bytes=${sizes.mkString("+")}")
-    n
+    if (sizes.isEmpty || sizes.exists(_ >= unknown) || sizes.sum >= unknown)
+      s.conf.get("spark.sql.shuffle.partitions").toInt
+    else ((sizes.sum + target - 1) / target).toInt.max(8)
   }
 
   /** [[withKernelShufflePartitions]] with the pin DERIVED from the
     * kernel's input frames via [[kernelPartitions]]. Same caller contract
     * (eager materialization inside `f`); same restore-on-exit semantics.
     */
-  private[graft] def withKernelShufflePartitionsFor[T](
+  private[queries] def withKernelShufflePartitionsFor[T](
       s: org.apache.spark.sql.SparkSession,
       frontier: org.apache.spark.sql.DataFrame*)(f: => T): T =
     withKernelShufflePartitions(s, kernelPartitions(s, frontier: _*))(f)

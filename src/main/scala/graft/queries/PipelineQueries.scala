@@ -3788,7 +3788,7 @@ object PipelineQueries {
     * corpus (shared bpeTrainCtes), so the memo is proven equivalent on
     * every run. Saves two of the three identical training passes.
     */
-  private[graft] def bpeMerges3(s: SparkSession, dir: String): Seq[(Int, String, String, String, Long)] =
+  private def bpeMerges3(s: SparkSession, dir: String): Seq[(Int, String, String, String, Long)] =
     bpeMergesCache.getOrElseUpdate(dir, {
       TextAnalysis.bpeTrain(Tables.documents(s, dir), rounds = 3)
         .orderBy(col("round")).collect().toSeq
@@ -4591,7 +4591,7 @@ object PipelineQueries {
     * re-pay both count shuffles (the baskets/shingle shared-fixture
     * pattern).
     */
-  private[graft] def bigramModel(s: SparkSession, dir: String): graft.text.NgramLm.BigramModel = {
+  private def bigramModel(s: SparkSession, dir: String): graft.text.NgramLm.BigramModel = {
     val base = bigramModelPaths.getOrElseUpdate(dir, {
       val m = graft.text.NgramLm.train(
         Tables.documents(s, dir).filter(col("doc_id") % 2 === 0))

@@ -26,17 +26,7 @@ object PlanDump {
     }
     val outDir = java.nio.file.Paths.get(args(0))
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(outDir)
     val wanted: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =

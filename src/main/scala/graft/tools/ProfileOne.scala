@@ -1,45 +1,41 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, GraftSession, SparkEntry}
 
-/** Dev utility: run one named query N times against a given sf dir and print
-  * per-iteration wall times (first = cold, rest = warm JIT/cache).
-  * Usage: runMain graft.tools.ProfileOne <name> <sfDir> [iters]
+/** Dev utility: run named queries N times against a given sf dir and print
+  * per-iteration wall times (first = cold, rest = warm JIT/cache), split
+  * into build (query construction, including its eager anchors), plan
+  * (analysis + optimization + physical planning of Bench's fingerprint
+  * aggregate) and exec (its collect).
+  *
+  * Conf A/Bs: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overrides session settings.
+  *
+  * Usage: runMain graft.tools.ProfileOne <q1,q2,...> <sfDir> [iters]
   */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names = args(0).split(',')
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // A/B hook for conf experiments: SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
     val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
       .split(';').filter(_.contains('=')).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Kryo for shuffle/checkpoint blocks (the standard cluster default;
-      // ABA-measured ~8-12% on the anchor/shuffle-heavy class, r15 NOTES)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_THRESHOLD", "128"))
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    name.split(',').foreach { q =>
+    val spark = GraftSession.local(GraftSession.cpus, extra.toSeq: _*)
+    names.foreach { q =>
       (1 to iters).foreach { i =>
         val t0 = System.nanoTime()
-        graft.Bench.fullyEvaluate(SparkEntry.queries(q)(spark, dir))
-        val dt = (System.nanoTime() - t0) / 1e9
+        val df = SparkEntry.queries(q)(spark, dir)
+        val t1 = System.nanoTime()
+        val fp = Bench.fingerprint(df)
+        fp.queryExecution.executedPlan
+        val t2 = System.nanoTime()
+        fp.collect()
+        val t3 = System.nanoTime()
         spark.sharedState.cacheManager.clearCache()
-        println(f"[profile] $q iter $i: $dt%.2f s")
+        println(f"[profile] $q iter $i: build=${(t1 - t0) / 1e9}%.2f " +
+          f"plan=${(t2 - t1) / 1e9}%.2f exec=${(t3 - t2) / 1e9}%.2f " +
+          f"total=${(t3 - t0) / 1e9}%.2f s")
       }
     }
     spark.stop()

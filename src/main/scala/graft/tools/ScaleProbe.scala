@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the hot dedup operators: build a corpus N× the base sf
@@ -26,19 +25,6 @@ import org.apache.spark.sql.functions._
   * walks, batch interval join).
   */
 object ScaleProbe {
-
-  private class ShuffleListener extends SparkListener {
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val read = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    def reset(): Unit = { write.set(0L); read.set(0L) }
-  }
 
   /** Base corpus + planted near-dups (1-in-10 docs copied, first token
     * dropped, id +5M) — so the pair joins have real work at every scale.
@@ -86,25 +72,10 @@ object ScaleProbe {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_scale"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Kryo for shuffle/checkpoint blocks (the standard cluster default;
-      // ABA-measured ~8-12% on the anchor/shuffle-heavy class, r15 NOTES)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // same rationale as Bench: cycling many distinct plans between one
-      // operator's samples must not evict its generated classes
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // bucketed standing tables (the r16 TB-delta probe) live in the
-      // probe's work dir, never the repo cwd
-      .config("spark.sql.warehouse.dir", s"$workDir/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // bucketed standing tables (the r16 TB-delta probe) live in the
+    // probe's work dir, never the repo cwd
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus,
+      "spark.sql.warehouse.dir" -> s"$workDir/warehouse")
     val listener = new ShuffleListener
     spark.sparkContext.addSparkListener(listener)
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.functions.GraftExtensions
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: run one SQL statement on a graft-extended session (native
   * functions + optimizer rules registered).
@@ -14,14 +13,8 @@ object SqlShell {
     val sql = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val factDir = if (args.length > 2) Some(args(2)) else None
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus,
+      "spark.sql.extensions" -> classOf[GraftExtensions].getName)
     spark.sparkContext.setLogLevel("ERROR")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>

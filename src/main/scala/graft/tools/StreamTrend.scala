@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -21,18 +20,7 @@ object StreamTrend {
 
   def main(args: Array[String]): Unit = {
     val label = if (args.nonEmpty) args(0) else "dev"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Kryo for shuffle/checkpoint blocks (the standard cluster default;
-      // ABA-measured ~8-12% on the anchor/shuffle-heavy class, r15 NOTES)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     import spark.implicits._
     implicit val sql = spark.sqlContext
 

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the versioned/maintenance family (the r12 verdict's
@@ -33,34 +32,9 @@ import org.apache.spark.sql.functions._
   */
 object VersionedScaleProbe {
 
-  private class ShuffleListener extends SparkListener {
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val read = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    def reset(): Unit = { write.set(0L); read.set(0L) }
-  }
-
   def main(args: Array[String]): Unit = {
     val workDir = if (args.length > 0) args(0) else "/tmp/graft_vscale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Kryo for shuffle/checkpoint blocks (the standard cluster default;
-      // ABA-measured ~8-12% on the anchor/shuffle-heavy class, r15 NOTES)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     import graft.maintain.Versioned
     val listener = new ShuffleListener
     spark.sparkContext.addSparkListener(listener)

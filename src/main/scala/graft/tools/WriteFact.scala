@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.maintain.Layout
 import graft.queries.TelematicsQueries
-import org.apache.spark.sql.SparkSession
 
 /** Ops utility: materialize the partitioned fact layout from the events
   * testdata. Usage: runMain graft.tools.WriteFact <sfDir> <outDir>
@@ -10,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object WriteFact {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     Layout.writeFact(TelematicsQueries.normalizedFact(spark, sfDir), outDir)
     println(s"[writefact] wrote $outDir")
     spark.stop()

@@ -57,10 +57,7 @@ class FoldAnchorLintSpec extends AnyFunSuite {
       "n" -> 5), // constant (broadcast order-statistic totals; pivot idiom —
                  // incl. trimmedMeanQ's max(n) over the two-pass quantile
                  // rows, where n is the identical total on every row)
-    "SummaryQueries.scala" -> Map("median_value" -> 1), // constant per (event_type, dow) after the broadcast join
-    "Scratch.scala" -> Map("__cum" -> 1, // monotone: R_i^2/n_i >= 0 — the kwNew A/B replica of Hypothesis.kruskalWallis's fold
-      "__c" -> 1, // monotone: entropy terms -p*ln(p') >= 0 — the entOld A/B replica of TimeSeries.entropyRate's fold (same justification as TimeSeries.scala)
-      "n" -> 2) // constant: kwNew's max(n) pivot over the crossJoin'd broadcast total (Hypothesis idiom) + entOld's max(n) over the broadcast tot (constant per row)
+    "SummaryQueries.scala" -> Map("median_value" -> 1) // constant per (event_type, dow) after the broadcast join
   )
 
   test("max/min over window-cumulative columns are anchored or whitelisted") {

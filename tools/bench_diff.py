@@ -11,8 +11,10 @@ wins), else falls back to scraping whatever per-query `"name":secs` pairs
 survive in a truncated tail — so a clipped BENCH_r02 still yields a partial
 per-query baseline instead of nothing.
 
-Exit code = number of regressed queries. Queries only present on one side are
-reported but never fail the gate (new operators are not regressions).
+Exit code = number of regressed queries plus the number of queries the new
+artifact lists as `failed` (a query that threw is never a fast one). Queries
+only present on one side are reported but never fail the gate (new operators
+are not regressions).
 """
 import json
 import re
@@ -28,6 +30,7 @@ def harvest(text: str) -> dict:
     full: dict = {}
     parts: dict = {}
     total = None
+    failed: set = set()
     for line in text.splitlines():
         start = line.find('{"metric"')
         if start < 0:
@@ -38,6 +41,7 @@ def harvest(text: str) -> dict:
             continue
         if cand.get("metric") == "total":
             total = cand.get("value", total)
+            failed.update(cand.get("failed", []))
             if cand.get("queries"):
                 full = cand["queries"]
         elif cand.get("metric") == "steady_part":
@@ -49,11 +53,12 @@ def harvest(text: str) -> dict:
         head = text.split('"cold_queries"')[0]
         queries = {k: float(v) for k, v in
                    re.findall(r'"(q[0-9a-z_]+)":([0-9.]+)', head)}
-    return {"queries": queries, "total": total}
+    return {"queries": queries, "total": total, "failed": failed}
 
 
 def extract(path: str) -> dict:
-    """Return {"queries": {name: steady_sec}, "total": float|None, ...}."""
+    """Return {"queries": {name: steady_sec}, "total": float|None,
+    "failed": {name, ...}}."""
     raw = open(path).read()
     try:
         doc = json.loads(raw)
@@ -61,14 +66,18 @@ def extract(path: str) -> dict:
         doc = None
     # raw Bench line(s): full map + steady parts merged
     if doc is not None and doc.get("metric") == "total":
-        return {"queries": doc.get("queries", {}), "total": doc.get("value")}
+        return {"queries": doc.get("queries", {}), "total": doc.get("value"),
+                "failed": set(doc.get("failed", []))}
     if doc is not None and ("tail" in doc or "parsed" in doc):
         parsed = doc.get("parsed")
         if isinstance(parsed, dict) and parsed.get("queries"):
-            return {"queries": parsed["queries"], "total": parsed.get("value")}
+            return {"queries": parsed["queries"], "total": parsed.get("value"),
+                    "failed": set(parsed.get("failed", []))}
         got = harvest(doc.get("tail", "") or "")
-        if got["total"] is None and isinstance(parsed, dict):
-            got["total"] = parsed.get("value")
+        if isinstance(parsed, dict):
+            if got["total"] is None:
+                got["total"] = parsed.get("value")
+            got["failed"].update(parsed.get("failed", []))
         return got
     # multi-line file of raw Bench output (e.g. BENCH_LOCAL.json)
     return harvest(raw)
@@ -86,7 +95,10 @@ def main(argv: list) -> int:
         print(f"WARN no per-query baseline recoverable from {old_path}; "
               "comparing totals only")
     regressed = []
-    shared = sorted(set(old["queries"]) & set(new["queries"]))
+    failed = sorted(new["failed"])
+    for q in failed:
+        print(f"{q:32s} FAILED")
+    shared = sorted(set(old["queries"]) & set(new["queries"]) - new["failed"])
     for q in shared:
         a, b = old["queries"][q], new["queries"][q]
         ratio = b / a if a > 0 else float("inf")
@@ -106,8 +118,8 @@ def main(argv: list) -> int:
     print(f"totals: {ot if ot is not None else '?'}s -> "
           f"{nt if nt is not None else '?'}s over "
           f"{len(shared)} shared / {len(new['queries'])} current queries; "
-          f"{len(regressed)} regressed")
-    return len(regressed)
+          f"{len(regressed)} regressed, {len(failed)} failed")
+    return len(regressed) + len(failed)
 
 
 if __name__ == "__main__":
