@@ -21,7 +21,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       e.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    // automate the reference's manual received_day partition guards
+    // automate the reference's manual partition guards (received_day) and
+    // derive the device_id_bucket one it never writes
     e.injectOptimizerRule(_ => graft.plans.InjectPartitionGuard())
   }
 }

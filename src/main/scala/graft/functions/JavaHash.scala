@@ -74,6 +74,6 @@ object JavaHash {
     ColumnBridge.column(JavaHashCode(ColumnBridge.expression(c)))
 
   /** Column wrapper: `abs(javaHash(c)) % buckets` — the reference's bucketing. */
-  def deviceBucket(c: Column, buckets: Int = 32): Column =
+  def deviceBucket(c: Column, buckets: Int): Column =
     ColumnBridge.column(JavaHashBucket(ColumnBridge.expression(c), buckets))
 }

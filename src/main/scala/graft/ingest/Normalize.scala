@@ -22,6 +22,14 @@ import org.apache.spark.sql.types._
   */
 object Normalize {
 
+  /** Hash buckets of the fact layout's `device_id_bucket` column
+    * (`sink_telematics_real_time.sql:40`): the ingest projection, the
+    * [[graft.maintain.Layout.writeFact]] contract check and the
+    * [[graft.plans.InjectPartitionGuard]] bucket derivation all use this one
+    * count.
+    */
+  val DeviceBuckets = 32
+
   /** Kafka-edge JSON schema (pre-cast): epochs/numerics arrive as strings.
     * Reference `config/flink/create.sql:72-93`.
     */
@@ -67,7 +75,7 @@ object Normalize {
     * [[graft.stream.StreamingIngest]]) rather than silently swallowed by
     * the state store.
     */
-  def normalizeTelemetry(edge: DataFrame, buckets: Int = 32): DataFrame =
+  def normalizeTelemetry(edge: DataFrame): DataFrame =
     edge.select(
       col("report_type"),
       col("tenant"), col("provider"), col("model"), col("firmware"),
@@ -89,7 +97,7 @@ object Normalize {
       epochStringToTs(col("received_epoch")).as("received_epoch"),
       epochStringToTs(col("decoded_epoch")).as("decoded_epoch"),
       col("correlation_id"),
-      deviceBucket(col("device_id"), buckets).as("device_id_bucket"),
+      deviceBucket(col("device_id"), DeviceBuckets).as("device_id_bucket"),
       to_date(epochStringToTs(col("received_epoch"))).as("received_day")
     ).filter(col("report_type").isin("STATUS", "ALERT"))
 

@@ -1,5 +1,7 @@
 package graft.maintain
 
+import graft.functions.JavaHash.deviceBucket
+import graft.ingest.Normalize
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
@@ -18,16 +20,21 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  /** Writes the fact table and **enforces the partition-guard skew
-    * contract**: every row must satisfy
-    * `|received_day − date(gps_epoch)| ≤ skewGuardDays`, the bound
-    * [[graft.plans.InjectPartitionGuard]] relies on to prune partitions
-    * without dropping late data. The check is an [[Observation]] riding on
-    * the write job itself — no second pass over the data — and the write
-    * fails (after materializing, like any constraint violation) if the
-    * contract is broken rather than letting guarded reads silently lose
-    * rows. Pass `skewGuardDays = -1` to skip (table then must not be
-    * opted into guard injection).
+  /** Writes the fact table and **enforces both partition-guard contracts**
+    * [[graft.plans.InjectPartitionGuard]] relies on to prune partitions:
+    *
+    *  - skew: every row has `|received_day − date(gps_epoch)| ≤
+    *    skewGuardDays`, so the derived `received_day` range keeps late data;
+    *  - bucket: every row has `device_id_bucket <=>
+    *    java_hash_bucket(device_id, Normalize.DeviceBuckets)`, so the bucket
+    *    derived from a `device_id` literal is the one its rows live in.
+    *
+    * Both checks are aggregates of one [[Observation]] riding on the write
+    * job itself — no second pass over the data — and the write fails (after
+    * materializing, like any constraint violation) if either contract is
+    * broken rather than letting guarded reads silently lose rows.
+    * `skewGuardDays = -1` skips both checks; a table written that way must
+    * not be opted into guard injection.
     */
   def writeFact(fact: DataFrame, path: String,
                 targetFileBytes: Long = 256L << 20,
@@ -35,9 +42,12 @@ object Layout {
     val obs = Observation()
     val validated =
       if (skewGuardDays < 0) fact
-      else fact.observe(obs, sum(when(
-        abs(datediff(col("received_day"), to_date(col("gps_epoch")))) >
-          skewGuardDays, 1L).otherwise(0L)).as("skew_violations"))
+      else fact.observe(obs,
+        sum(when(abs(datediff(col("received_day"), to_date(col("gps_epoch")))) >
+          skewGuardDays, 1L).otherwise(0L)).as("skew_violations"),
+        sum(when(!(col("device_id_bucket") <=>
+          deviceBucket(col("device_id"), Normalize.DeviceBuckets)), 1L)
+          .otherwise(0L)).as("bucket_violations"))
     validated
       .repartition(col("device_id_bucket"), col("received_day"))
       .sortWithinPartitions(col("device_id"), col("gps_epoch"))
@@ -50,13 +60,17 @@ object Layout {
       .option("parquet.bloom.filter.enabled#correlation_id", "true")
       .parquet(path)
     if (skewGuardDays >= 0) {
-      val violations = obs.get.get("skew_violations").collect {
+      def violations(name: String): Long = obs.get.get(name).collect {
         case n: java.lang.Long => n.longValue
       }.getOrElse(0L)
-      require(violations == 0L,
-        s"$violations rows violate |received_day - date(gps_epoch)| <= " +
-          s"$skewGuardDays; table at $path must not be opted into " +
-          "partition-guard injection")
+      val optOut = s"; table at $path must not be opted into partition-guard injection"
+      val skew = violations("skew_violations")
+      require(skew == 0L,
+        s"$skew rows violate |received_day - date(gps_epoch)| <= $skewGuardDays" + optOut)
+      val bucket = violations("bucket_violations")
+      require(bucket == 0L,
+        s"$bucket rows violate device_id_bucket <=> " +
+          s"java_hash_bucket(device_id, ${Normalize.DeviceBuckets})" + optOut)
     }
   }
 

@@ -52,7 +52,7 @@ object TelematicsQueries {
       |  FROM events
       |)
       |SELECT * EXCLUDE (__h),
-      |  (abs(CASE WHEN __h >= 2147483648 THEN __h - 4294967296 ELSE __h END) % 32)::INTEGER
+      |  (abs(CASE WHEN __h >= 2147483648 THEN __h - 4294967296 ELSE __h END) % ${Normalize.DeviceBuckets})::INTEGER
       |    AS device_id_bucket,
       |  CAST(received_epoch AS DATE) AS received_day
       |FROM edge

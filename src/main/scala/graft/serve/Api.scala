@@ -10,8 +10,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: the whole of the reference's HTTP→Trino→Iceberg path
   * collapses to one declarative plan; Catalyst pushes the predicates into the
-  * parquet scan (`PushedFilters`) and prunes partitions via the redundant
-  * `received_day` conjunct — the same manual technique the reference uses
+  * parquet scan (`PushedFilters`) and prunes both partition columns. On a
+  * table opted into [[graft.plans.InjectPartitionGuard]], the rule derives
+  * the `device_id_bucket` conjunct from the `device_id` equality / `IN` list
+  * and the `received_day` range from the `gps_epoch` range, so a device
+  * request reads 1 bucket per id × the guarded days. [[pointLookup]] also
+  * keeps the reference's hand-written `received_day` conjunct
   * (`main.py:258-259, 275-277`). Pagination is `offset().limit()` which plans
   * as a GlobalLimit over a sorted shuffle; for deep pagination at scale,
   * prefer keyset pagination (`$"gps_epoch" < lastSeen`) — both are provided.
@@ -28,7 +32,8 @@ object Api {
   val MaxPageSize = 10000 // main.py:247
 
   /** Point lookup (P3): equality on device + event-time range + the manual
-    * partition-pruning day-range conjunct.
+    * partition-pruning day-range conjunct; the bucket conjunct is derived by
+    * the partition guard on opted-in tables.
     */
   def pointLookup(fact: DataFrame, deviceId: String,
                   gpsFrom: String, gpsTo: String,

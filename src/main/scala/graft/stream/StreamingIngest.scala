@@ -48,8 +48,8 @@ object StreamingIngest {
     spark.readStream.schema(schema).json(dir)
 
   /** The streaming ingest transform — literally the batch pipeline. */
-  def ingest(edgeStream: DataFrame, buckets: Int = 32): DataFrame =
-    Normalize.normalizeTelemetry(edgeStream, buckets)
+  def ingest(edgeStream: DataFrame): DataFrame =
+    Normalize.normalizeTelemetry(edgeStream)
 
   /** [[ingest]] with an [[org.apache.spark.sql.Observation]]-style `observe`
     * node: per-micro-batch row/alert/overspeed counters ride the existing job
@@ -57,9 +57,9 @@ object StreamingIngest {
     * `StreamingQueryProgress.observedMetrics` — the ops dashboard the
     * reference gets from Flink's metric reporters, for free in-plan.
     */
-  def ingestWithMetrics(edgeStream: DataFrame, buckets: Int = 32,
+  def ingestWithMetrics(edgeStream: DataFrame,
                         name: String = "graft_ingest"): DataFrame =
-    ingest(edgeStream, buckets).observe(name,
+    ingest(edgeStream).observe(name,
       count(lit(1)).as("rows_out"),
       sum(when(col("report_type") === "ALERT", 1L).otherwise(0L)).as("alerts"),
       sum(when(col("speed_kmh") > 110.0, 1L).otherwise(0L)).as("overspeed"))

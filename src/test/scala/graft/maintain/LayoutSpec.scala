@@ -1,7 +1,10 @@
 package graft.maintain
 
 import graft.SparkSpec
+import graft.ingest.Normalize
+import graft.plans.GuardTesting
 import graft.queries.TelematicsQueries
+import graft.serve.Api
 import org.apache.spark.sql.functions._
 
 class LayoutSpec extends SparkSpec {
@@ -34,20 +37,19 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("point lookup on the layout prunes partitions in the scan") {
-    val df = spark.read.parquet(dir)
-      .filter($"received_day" === lit("2024-01-10").cast("date") &&
-        $"device_id_bucket" === math.abs("7".hashCode) % 32 &&
-        $"device_id" === "7")
-    val planStr = df.queryExecution.executedPlan.toString
-    assert(planStr.contains("PartitionFilters"), planStr)
-    val scan = df.queryExecution.executedPlan.collectLeaves().head
-    val pruned = scan.toString
-    assert(pruned.contains("received_day") && pruned.contains("device_id_bucket"),
-      s"partition filters missing from scan: $pruned")
-    // pushed data filter on device_id reaches the parquet reader
-    assert(pruned.contains("PushedFilters") && pruned.contains("EqualTo(device_id,7)"),
-      pruned)
-    assert(df.count() > 0)
+    val day = java.time.LocalDate.parse("2024-01-10")
+    GuardTesting.withGuard(spark, dir) {
+      val df = Api.pointLookup(spark.read.parquet(dir), "7",
+        s"$day 00:00:00", s"$day 23:59:59", day.toString, day.toString)
+      val scan = df.queryExecution.executedPlan.collectLeaves().head.toString
+      assert(scan.contains("PartitionFilters") && scan.contains("received_day") &&
+        scan.contains("device_id_bucket"), s"partition filters missing from scan: $scan")
+      // pushed data filter on device_id reaches the parquet reader
+      assert(scan.contains("PushedFilters") && scan.contains("EqualTo(device_id,7)"), scan)
+      val bucket = math.abs("7".hashCode) % Normalize.DeviceBuckets
+      assert(GuardTesting.selectedPartitions(df) == Set(bucket -> day))
+      assert(df.count() > 0)
+    }
   }
 
   test("co-bucketed tables join and aggregate with zero Exchange") {
