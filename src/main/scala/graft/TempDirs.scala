@@ -19,10 +19,11 @@ import java.nio.file.{Files, Path}
   *    re-invoking the same query — true of Bench (fullyEvaluate + timer)
   *    and Verify (parquet write) by construction.
   *
-  * Per-SF-dir FIXTURE dirs (the `*SrcDirs` / `versionedFixture` /
-  * `shinglesParquet` memo maps) are deliberately NOT routed here for
-  * delete-on-reuse — they are built once and re-read across passes — but
-  * may register for exit cleanup via [[registerForCleanup]].
+  * Per-SF-dir FIXTURE dirs are deliberately NOT routed through
+  * [[runDir]]'s delete-on-reuse — they are built once and re-read across
+  * passes. They come from [[fixtureDir]], which only registers them for
+  * exit cleanup; in the main tree its one caller is [[Fixtures]], the memo
+  * that builds each fixture once.
   */
 object TempDirs {
   private val byTag = new scala.collection.concurrent.TrieMap[String, Path]()
@@ -68,16 +69,12 @@ object TempDirs {
     p
   }
 
-  /** Exit-time-only cleanup for a long-lived fixture dir. */
-  def registerForCleanup(p: Path): Path = { all.add(p); p }
-  def registerForCleanup(p: String): String = {
-    all.add(java.nio.file.Paths.get(p)); p
-  }
-
-  /** A per-process FIXTURE dir (no delete-on-reuse — memoized callers
-    * re-read it across passes), reclaimed only at JVM exit.
+  /** A fresh per-process FIXTURE dir (no delete-on-reuse — memoized
+    * callers re-read it across passes), reclaimed only at JVM exit.
     */
-  def fixturePath(tag: String): Path =
-    registerForCleanup(Files.createTempDirectory(s"graft_${tag}_"))
-  def fixtureDir(tag: String): String = fixturePath(tag).toString
+  def fixtureDir(tag: String): String = {
+    val p = Files.createTempDirectory(s"graft_${tag}_")
+    all.add(p)
+    p.toString
+  }
 }

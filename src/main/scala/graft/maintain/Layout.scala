@@ -2,6 +2,7 @@ package graft.maintain
 
 import graft.functions.JavaHash.deviceBucket
 import graft.ingest.Normalize
+import graft.plans.InjectPartitionGuard.SkewDays
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
@@ -24,7 +25,8 @@ object Layout {
     * [[graft.plans.InjectPartitionGuard]] relies on to prune partitions:
     *
     *  - skew: every row has `|received_day − date(gps_epoch)| ≤
-    *    skewGuardDays`, so the derived `received_day` range keeps late data;
+    *    InjectPartitionGuard.SkewDays`, so the derived `received_day` range
+    *    keeps late data;
     *  - bucket: every row has `device_id_bucket <=>
     *    java_hash_bucket(device_id, Normalize.DeviceBuckets)`, so the bucket
     *    derived from a `device_id` literal is the one its rows live in.
@@ -32,23 +34,18 @@ object Layout {
     * Both checks are aggregates of one [[Observation]] riding on the write
     * job itself — no second pass over the data — and the write fails (after
     * materializing, like any constraint violation) if either contract is
-    * broken rather than letting guarded reads silently lose rows.
-    * `skewGuardDays = -1` skips both checks; a table written that way must
-    * not be opted into guard injection.
+    * broken rather than letting guarded reads silently lose rows. The skew
+    * bound is the rule's own constant, so the two cannot drift apart.
     */
   def writeFact(fact: DataFrame, path: String,
-                targetFileBytes: Long = 256L << 20,
-                skewGuardDays: Int = 1): Unit = {
+                targetFileBytes: Long = 256L << 20): Unit = {
     val obs = Observation()
-    val validated =
-      if (skewGuardDays < 0) fact
-      else fact.observe(obs,
-        sum(when(abs(datediff(col("received_day"), to_date(col("gps_epoch")))) >
-          skewGuardDays, 1L).otherwise(0L)).as("skew_violations"),
-        sum(when(!(col("device_id_bucket") <=>
-          deviceBucket(col("device_id"), Normalize.DeviceBuckets)), 1L)
-          .otherwise(0L)).as("bucket_violations"))
-    validated
+    fact.observe(obs,
+      sum(when(abs(datediff(col("received_day"), to_date(col("gps_epoch")))) >
+        SkewDays, 1L).otherwise(0L)).as("skew_violations"),
+      sum(when(!(col("device_id_bucket") <=>
+        deviceBucket(col("device_id"), Normalize.DeviceBuckets)), 1L)
+        .otherwise(0L)).as("bucket_violations"))
       .repartition(col("device_id_bucket"), col("received_day"))
       .sortWithinPartitions(col("device_id"), col("gps_epoch"))
       .write
@@ -59,19 +56,17 @@ object Layout {
       .option("parquet.bloom.filter.enabled#device_id", "true")
       .option("parquet.bloom.filter.enabled#correlation_id", "true")
       .parquet(path)
-    if (skewGuardDays >= 0) {
-      def violations(name: String): Long = obs.get.get(name).collect {
-        case n: java.lang.Long => n.longValue
-      }.getOrElse(0L)
-      val optOut = s"; table at $path must not be opted into partition-guard injection"
-      val skew = violations("skew_violations")
-      require(skew == 0L,
-        s"$skew rows violate |received_day - date(gps_epoch)| <= $skewGuardDays" + optOut)
-      val bucket = violations("bucket_violations")
-      require(bucket == 0L,
-        s"$bucket rows violate device_id_bucket <=> " +
-          s"java_hash_bucket(device_id, ${Normalize.DeviceBuckets})" + optOut)
-    }
+    def violations(name: String): Long = obs.get.get(name).collect {
+      case n: java.lang.Long => n.longValue
+    }.getOrElse(0L)
+    val optOut = s"; table at $path must not be opted into partition-guard injection"
+    val skew = violations("skew_violations")
+    require(skew == 0L,
+      s"$skew rows violate |received_day - date(gps_epoch)| <= $SkewDays" + optOut)
+    val bucket = violations("bucket_violations")
+    require(bucket == 0L,
+      s"$bucket rows violate device_id_bucket <=> " +
+        s"java_hash_bucket(device_id, ${Normalize.DeviceBuckets})" + optOut)
   }
 
   /** Z-order (Morton) interleave of two bounded non-negative ints: bit b of
@@ -262,16 +257,6 @@ object Layout {
       .drop("__z")
       .write.mode("overwrite").parquet(path)
 
-  /** Bucketed table write (`bucketBy` + catalog table): pre-shuffles rows
-    * into a fixed bucket count on `key`, so equi-joins and aggregations on
-    * that key between co-bucketed tables plan with **zero Exchange** — each
-    * task reads matching buckets from both sides directly. This is the
-    * "co-locate big joins" lever: at 100 TB the fact-table re-shuffle per
-    * join dwarfs everything else, so you pay the shuffle once at write time
-    * and never again (LayoutSpec asserts the exchange-free join plan).
-    * `sortCols` additionally orders within buckets (`sortBy`), letting a
-    * sort-merge join skip its sort when both sides declare the same order.
-    */
   /** Drop a catalog table AND its warehouse directory: the in-memory catalog
     * is fresh per JVM but `spark-warehouse/` persists, so a stale location
     * would break the next `saveAsTable`.
@@ -285,6 +270,16 @@ object Layout {
     if (loc.exists()) rm(loc)
   }
 
+  /** Bucketed table write (`bucketBy` + catalog table): pre-shuffles rows
+    * into a fixed bucket count on `key`, so equi-joins and aggregations on
+    * that key between co-bucketed tables plan with **zero Exchange** — each
+    * task reads matching buckets from both sides directly. This is the
+    * "co-locate big joins" lever: at 100 TB the fact-table re-shuffle per
+    * join dwarfs everything else, so you pay the shuffle once at write time
+    * and never again (LayoutSpec asserts the exchange-free join plan).
+    * `sortCols` additionally orders within buckets (`sortBy`), letting a
+    * sort-merge join skip its sort when both sides declare the same order.
+    */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int,
                     sortCols: Seq[String] = Seq.empty): Unit = {
     val w = df.write.mode("overwrite").format("parquet").bucketBy(buckets, key)

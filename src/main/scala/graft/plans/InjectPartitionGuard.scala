@@ -46,7 +46,7 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType, StringType, 
   * **Contracts.** Each added conjunct is implied by the original predicate
   * only if the table satisfies a contract Catalyst cannot check:
   *
-  *  - skew: |received_day − date(gps_epoch)| ≤ `skewDays` — receive time
+  *  - skew: |received_day − date(gps_epoch)| ≤ `SkewDays` — receive time
   *    trails event time by at most that many days (late data) and leads it
   *    by at most the same (clock skew). A table holding rows received later
   *    (offline-device uploads, backfills) would silently lose them from
@@ -71,11 +71,8 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType, StringType, 
   *
   * Injected via [[graft.functions.GraftExtensions]] (`injectOptimizerRule`).
   */
-case class InjectPartitionGuard(skewDays: Int = 1,
-                                eventCol: String = "gps_epoch",
-                                dayCol: String = "received_day")
-    extends Rule[LogicalPlan] {
-  import InjectPartitionGuard.{BucketCol, DeviceCol}
+case class InjectPartitionGuard() extends Rule[LogicalPlan] {
+  import InjectPartitionGuard.{BucketCol, DayCol, DeviceCol, EventCol, SkewDays}
 
   private def boundsOf(cond: Expression, ev: Attribute): (Option[Expression], Option[Expression]) = {
     val conjuncts = splitConjunctivePredicates(cond)
@@ -150,14 +147,14 @@ case class InjectPartitionGuard(skewDays: Int = 1,
   }
 
   private def dayGuards(cond: Expression, child: LogicalPlan): Seq[Expression] =
-    scanPairs(child, eventCol -> TimestampType, dayCol -> DateType).flatMap {
+    scanPairs(child, EventCol -> TimestampType, DayCol -> DateType).flatMap {
       case (ev, day) if !cond.references.contains(day) =>
         val (lo, hi) = boundsOf(cond, ev)
         // timestamp→date cast is TZ-aware: it must carry the session TZ or
         // the plan becomes unresolved post-optimization
         val tz = Some(conf.sessionLocalTimeZone)
-        lo.map(l => GreaterThanOrEqual(day, DateAdd(Cast(l, DateType, tz), Literal(-skewDays)))) ++
-          hi.map(h => LessThanOrEqual(day, DateAdd(Cast(h, DateType, tz), Literal(skewDays))))
+        lo.map(l => GreaterThanOrEqual(day, DateAdd(Cast(l, DateType, tz), Literal(-SkewDays)))) ++
+          hi.map(h => LessThanOrEqual(day, DateAdd(Cast(h, DateType, tz), Literal(SkewDays))))
       case _ => Nil
     }
 
@@ -188,6 +185,13 @@ object InjectPartitionGuard {
     */
   val PathsConfKey = "spark.graft.partitionGuard.paths"
 
+  /** The skew contract's bound in days, read by both this rule and
+    * [[graft.maintain.Layout.writeFact]], which enforces it at write time.
+    */
+  val SkewDays = 1
+
+  private val EventCol = "gps_epoch"
+  private val DayCol = "received_day"
   private val DeviceCol = "device_id"
   private val BucketCol = "device_id_bucket"
 

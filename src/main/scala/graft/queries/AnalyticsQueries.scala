@@ -277,20 +277,15 @@ object AnalyticsQueries {
     s.table(name).orderBy(col("window_start"))
   }
 
-  private val streamSrcDirs =
-    new scala.collection.concurrent.TrieMap[String, String]()
-
   /** Stream source dir holding a copy of `dir`'s events table, made once
     * per process and shared by every stream fixture query.
     */
   private[queries] def eventsStreamDir(dir: String): String =
-    streamSrcDirs.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixturePath("events_stream")
+    graft.Fixtures.dir("events_stream", dir) { p =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(dir, "events.parquet"),
-        p.resolve("events.parquet"))
-      p.toString
-    })
+        java.nio.file.Paths.get(p, "events.parquet"))
+    }
 
   /** Run `f` (which must START the streaming query inside it) with the
     * session's shuffle partitions pinned at `n`, restored after. A
@@ -424,28 +419,6 @@ object AnalyticsQueries {
       frontier: org.apache.spark.sql.DataFrame*)(f: => T): T =
     withStreamShufflePartitions(s, kernelPartitions(s, frontier: _*))(f)
 
-  private[queries] val versionedFixtureDirs =
-    new scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Two-snapshot versioned table (v1 = base commit, v2 = base + delta),
-    * built ONCE per (SF dir, tag) and re-read on every later call: the
-    * commits are data-loading fixture setup — the table a CDC pipeline
-    * already has on disk — not the incremental-maintenance work the
-    * `*_incremental` operators time, exactly the
-    * [[PipelineQueries.dupPairsParquet]] discipline. Each proof still
-    * re-runs its snapshot reads, CDC diff, delta maintenance, and
-    * rebuild-equivalence fold per pass; only the fixture commits
-    * amortize. `build` must be deterministic in (session, dir).
-    * BASELINE.md §Amortization is the binding convention.
-    */
-  private[queries] def versionedFixture(s: org.apache.spark.sql.SparkSession,
-      dir: String, tag: String)(build: String => Unit): String =
-    versionedFixtureDirs.getOrElseUpdate(dir + "#" + tag, {
-      val tmp = graft.TempDirs.fixtureDir(tag)
-      build(tmp)
-      tmp
-    })
-
   /** Watermark LATE-DATA accounting proven live, across a restart: run 1
     * streams the on-time half of `events` into an append-mode 6-hour
     * window aggregate (file sink + checkpoint) — its trailing no-data
@@ -465,17 +438,15 @@ object AnalyticsQueries {
     // per-SF fixture: the two single-file halves (order is imposed by the
     // two sequential RUNS below, never by file-listing order — a
     // modification-time race made listing-order nondeterministic)
-    val base = lateSrcDirs.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixturePath("events_late")
+    val base = graft.Fixtures.dir("events_late", dir) { p =>
       val ev = graft.Tables.events(s, dir)
         .select(col("event_id"), col("ts").cast("timestamp").as("ts"))
       ev.filter(col("event_id") % 2 === 0)
-        .coalesce(1).write.mode("overwrite").parquet(p.resolve("a").toString)
+        .coalesce(1).write.mode("overwrite").parquet(s"$p/a")
       ev.filter(col("event_id") % 2 =!= 0)
         .withColumn("ts", col("ts") - expr("INTERVAL 3650 DAYS"))
-        .coalesce(1).write.mode("overwrite").parquet(p.resolve("b").toString)
-      p.toString
-    })
+        .coalesce(1).write.mode("overwrite").parquet(s"$p/b")
+    }
     val p = java.nio.file.Paths.get(base)
     def part(sub: String): java.nio.file.Path =
       new java.io.File(p.resolve(sub).toFile.listFiles()
@@ -516,9 +487,6 @@ object AnalyticsQueries {
     s.read.parquet(sink).orderBy(col("window_start"))
   }
 
-  private val lateSrcDirs =
-    new scala.collection.concurrent.TrieMap[String, String]()
-
   private val streamLateOracle =
     """WITH a AS (SELECT ts FROM events WHERE event_id % 2 = 0),
       |wm AS (SELECT max(ts) - INTERVAL 3 DAY AS w FROM a),
@@ -539,14 +507,11 @@ object AnalyticsQueries {
     */
   private def streamDedupQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    val srcDir = dedupSrcDirs.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixturePath("events_dup_stream")
-      java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "events.parquet"),
-        p.resolve("events_a.parquet"))
-      java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "events.parquet"),
-        p.resolve("events_b.parquet"))
-      p.toString
-    })
+    val srcDir = graft.Fixtures.dir("events_dup_stream", dir) { p =>
+      Seq("events_a.parquet", "events_b.parquet").foreach(name =>
+        java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "events.parquet"),
+          java.nio.file.Paths.get(p, name)))
+    }
     val schema = graft.Tables.parquetSchema(s, srcDir)
     val raw = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
       .parquet(srcDir)
@@ -572,9 +537,6 @@ object AnalyticsQueries {
     q.awaitTermination()
     s.table(name).orderBy(col("event_id"))
   }
-
-  private val dedupSrcDirs =
-    new scala.collection.concurrent.TrieMap[String, String]()
 
   private val streamDedupOracle =
     """SELECT event_id, user_id, event_type, value

@@ -112,16 +112,10 @@ object CurationQueries {
     * table ≡ recomputation; the oracle re-derives from `documents`).
     */
   private[graft] def deconPositionalParquet(s: SparkSession, dir: String): String =
-    deconPositionalPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("decon_pos")
+    graft.Fixtures.parquet("decon_pos", dir) {
       graft.dedup.Dedup.positionalArrays(
           deconCorpus(Tables.documents(s, dir).select(col("doc_id"), col("text"))), 5)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val deconPositionalPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   // pinned at 8 with an eager epilogue (the withKernelShufflePartitionsFor
   // contract): corpus shingling is amortized to the materialized table,
@@ -1001,18 +995,13 @@ object CurationQueries {
     * the timed query is then the pruned two-generation read it claims to be.
     */
   private[queries] def partEvoRoot(s: SparkSession, dir: String): String =
-    partEvoRoots.getOrElseUpdate(dir, {
-      val tmp = graft.TempDirs.fixtureDir("part_evo")
+    graft.Fixtures.dir("part_evo", dir) { tmp =>
       val docs = Tables.documents(s, dir)
       docs.filter(col("doc_id") % 2 === 0)
         .write.partitionBy("lang").parquet(s"$tmp/v1")
       docs.filter(col("doc_id") % 2 === 1)
         .write.partitionBy("lang", "source").parquet(s"$tmp/v2")
-      tmp
-    })
-
-  private val partEvoRoots =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   // ---- registry ------------------------------------------------------------
 

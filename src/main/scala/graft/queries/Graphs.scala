@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Fixtures, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,18 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Graphs {
 
-  private val copurchaseTables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private val basketTables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  // collision-free, identifier-safe name per dir (hashCode collides
-  // across dirs and math.abs(Int.MinValue) is negative)
-  private def dirTag(dir: String): String = java.security.MessageDigest
-    .getInstance("MD5").digest(dir.getBytes("UTF-8"))
-    .map("%02x".format(_)).mkString.take(16)
-
   /** Distinct (basket = l_orderkey, item = l_partkey) rows, materialized
     * once per SF dir and bucketed+sorted by basket — the shared upstream
     * of both the co-purchase graph build and the whole itemset family
@@ -40,22 +28,13 @@ object Graphs {
     * re-scans lineitem and re-pays the same distinct shuffle. Basket
     * bucketing co-locates the per-basket self-joins those consumers run.
     */
-  def baskets(s: SparkSession, dir: String): DataFrame = {
-    val table = basketTables.getOrElseUpdate(dir, {
-      val name = "graft_baskets_" + dirTag(dir)
-      graft.maintain.Layout.resetTable(s, name)
-      val b = Tables.lineitem(s, dir)
+  def baskets(s: SparkSession, dir: String): DataFrame =
+    s.table(Fixtures.bucketedTable(s, "baskets", dir, "basket", 8,
+        Seq("basket", "item")) {
+      Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("basket"), col("l_partkey").as("item"))
         .distinct()
-      graft.maintain.Layout.writeBucketed(b, name, "basket", 8,
-        sortCols = Seq("basket", "item"))
-      name
     })
-    s.table(table)
-  }
-
-  private val triangleTables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Per-node triangle participation counts of the co-purchase graph,
     * materialized once per SF dir: the oriented-triangle enumeration
@@ -66,24 +45,12 @@ object Graphs {
     * join. Consumers' oracles still recount triangles naively from
     * lineitem, so the materialization is proven exact on every run.
     */
-  def copurchaseTriangles(s: SparkSession, dir: String): DataFrame = {
-    val table = triangleTables.getOrElseUpdate(dir, {
-      val name = "graft_copurchase_tri_" + dirTag(dir)
-      graft.maintain.Layout.resetTable(s, name)
-      val tri = graft.dedup.DupClusters.triangleCounts(copurchaseEdges(s, dir))
+  def copurchaseTriangles(s: SparkSession, dir: String): DataFrame =
+    s.table(Fixtures.bucketedTable(s, "copurchase_tri", dir, "node_id", 8,
+        Seq("node_id")) {
+      graft.dedup.DupClusters.triangleCounts(copurchaseEdges(s, dir))
         .select(col("doc_id").as("node_id"), col("n_triangles"))
-      graft.maintain.Layout.writeBucketed(tri, name, "node_id", 8,
-        sortCols = Seq("node_id"))
-      name
     })
-    s.table(table)
-  }
-
-  private val starRingTables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private val hubCycleTables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Edges (id_a, id_b) of the deterministic star-and-ring community
     * graph over document ids — each 10-block's hub collects its nine
@@ -97,10 +64,9 @@ object Graphs {
     * the graph from `documents` in SQL, so the materialization is proven
     * equivalent on every driver run.
     */
-  def starRingEdges(s: SparkSession, dir: String): DataFrame = {
-    val table = starRingTables.getOrElseUpdate(dir, {
-      val name = "graft_starring_" + dirTag(dir)
-      graft.maintain.Layout.resetTable(s, name)
+  def starRingEdges(s: SparkSession, dir: String): DataFrame =
+    s.table(Fixtures.bucketedTable(s, "starring", dir, "id_a", 8,
+        Seq("id_a", "id_b")) {
       val ids = Tables.documents(s, dir).select(col("doc_id").as("id"))
       val star = ids.filter(col("id") % 10 =!= 0)
         .select((col("id") - col("id") % 10).as("id_a"), col("id").as("id_b"))
@@ -108,12 +74,8 @@ object Graphs {
         .select(col("id").as("id_a"), (col("id") + 10).as("id_b"))
         .join(ids.select(col("id").as("id_b")), Seq("id_b"), "left_semi")
         .select(col("id_a"), col("id_b"))
-      graft.maintain.Layout.writeBucketed(star.unionByName(ring), name,
-        "id_a", 8, sortCols = Seq("id_a", "id_b"))
-      name
+      star.unionByName(ring)
     })
-    s.table(table)
-  }
 
   /** [[starRingEdges]] plus the per-100-block cycle-closing edge
     * (hub 90 → hub 0), so each block's ten hubs form a closed cycle —
@@ -121,39 +83,27 @@ object Graphs {
     * operators, materialized once per SF dir with the same oracle
     * discipline (consumers' oracles rebuild from `documents`).
     */
-  def hubCycleEdges(s: SparkSession, dir: String): DataFrame = {
-    val table = hubCycleTables.getOrElseUpdate(dir, {
-      val name = "graft_hubcycle_" + dirTag(dir)
-      graft.maintain.Layout.resetTable(s, name)
+  def hubCycleEdges(s: SparkSession, dir: String): DataFrame =
+    s.table(Fixtures.bucketedTable(s, "hubcycle", dir, "id_a", 8,
+        Seq("id_a", "id_b")) {
       val closing = Tables.documents(s, dir)
         .filter(col("doc_id") % 10 === 0 && col("doc_id") % 100 === 90)
         .select((col("doc_id") - lit(90L)).as("id_a"), col("doc_id").as("id_b"))
-      graft.maintain.Layout.writeBucketed(
-        starRingEdges(s, dir).unionByName(closing), name,
-        "id_a", 8, sortCols = Seq("id_a", "id_b"))
-      name
+      starRingEdges(s, dir).unionByName(closing)
     })
-    s.table(table)
-  }
 
   /** Edges (id_a < id_b) of the significant co-purchase graph: part
     * pairs sharing ≥ 2 distinct orders.
     */
-  def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val table = copurchaseTables.getOrElseUpdate(dir, {
-      val name = "graft_copurchase_" + dirTag(dir)
-      graft.maintain.Layout.resetTable(s, name)
+  def copurchaseEdges(s: SparkSession, dir: String): DataFrame =
+    s.table(Fixtures.bucketedTable(s, "copurchase", dir, "id_a", 8,
+        Seq("id_a", "id_b")) {
       val li = baskets(s, dir).select(col("basket").as("ok"), col("item").as("pk"))
-      val edges = li.as("x").join(li.as("y"),
+      li.as("x").join(li.as("y"),
           col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
         .groupBy(col("x.pk").as("id_a"), col("y.pk").as("id_b"))
         .agg(count(lit(1)).as("__sup"))
         .filter(col("__sup") >= 2)
         .select(col("id_a"), col("id_b"))
-      graft.maintain.Layout.writeBucketed(edges, name, "id_a", 8,
-        sortCols = Seq("id_a", "id_b"))
-      name
     })
-    s.table(table)
-  }
 }

@@ -205,13 +205,10 @@ object PipelineQueries {
     * carries the snapshot split for [[bloomIncrementalQ]]).
     */
   private[graft] def bloomCorpusFpParquet(s: SparkSession, dir: String): String =
-    bloomFpPaths.getOrElseUpdate("corpus:" + dir, {
-      val p = graft.TempDirs.fixtureDir("bloom_corpus_fp")
+    graft.Fixtures.parquet("bloom_corpus_fp", dir) {
       Tables.documents(s, dir)
         .select(col("doc_id"), md5(col("text")).as("fp"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+    }
 
   /** Incoming-batch fingerprints `(doc_id, fp)`: aug's >= 1M slice
     * ([[augDeltaSlice]]), fingerprinted at arrival — built from the slice
@@ -221,16 +218,10 @@ object PipelineQueries {
     * arrives fingerprinted; MaterializationSpec proves ≡ recomputation.
     */
   private[graft] def bloomDeltaFpParquet(s: SparkSession, dir: String): String =
-    bloomFpPaths.getOrElseUpdate("delta:" + dir, {
-      val p = graft.TempDirs.fixtureDir("bloom_delta_fp")
+    graft.Fixtures.parquet("bloom_delta_fp", dir) {
       augDeltaSlice(Tables.documents(s, dir).select(col("doc_id"), col("text")))
         .select(col("doc_id"), md5(col("text")).as("fp"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val bloomFpPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   private val bloomBitsMemo =
     new scala.collection.concurrent.TrieMap[String, Array[Long]]()
@@ -2001,15 +1992,9 @@ object PipelineQueries {
     * between timed runs (VERDICT r4 item 4).
     */
   private[graft] def pngMediaParquet(s: SparkSession, dir: String): String =
-    pngMediaPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("png_media")
-      Multimodal.pngMedia(s, Tables.documents(s, dir)).write
-        .mode("overwrite").parquet(p)
-      p
-    })
-
-  private val pngMediaPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    graft.Fixtures.parquet("png_media", dir) {
+      Multimodal.pngMedia(s, Tables.documents(s, dir))
+    }
 
   /** Perceptual dHash ([[Multimodal.imageDHash]]) over the real PNG round
     * trip: the oracle re-derives all 64 adjacent-column comparison bits
@@ -2094,36 +2079,24 @@ object PipelineQueries {
     * so a stale table cannot hash-match).
     */
   private[graft] def phashHashesParquet(s: SparkSession, dir: String): String =
-    phashHashPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("phash_hashes")
+    graft.Fixtures.parquet("phash_hashes", dir) {
       Multimodal.imageDHash(s,
           graft.Tables.cachedParquet(s, pngMediaParquet(s, dir))
             .filter(col("doc_id") % 16 + 1 >= 10 && col("doc_id") % 12 + 1 >= 8))
         .toDF().filter(col("decoded"))
         .select(col("doc_id"), col("hash_hi"), col("hash_lo"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val phashHashPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** The v1 (doc_id % 7 != 0) pHash BAND index — the maintained standing
     * artifact `q_phash_incremental` appends each accepted batch's bands to
     * (the mh_inc shape for the image modality).
     */
   private[graft] def phashV1BandsParquet(s: SparkSession, dir: String): String =
-    phashV1BandPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("phash_v1_bands")
+    graft.Fixtures.parquet("phash_v1_bands", dir) {
       Multimodal.phashBands(
           graft.Tables.cachedParquet(s, phashHashesParquet(s, dir))
             .filter(col("doc_id") % 7 =!= 0))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val phashV1BandPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** The SPARSE standing band index (`% 7 != 0 && % 53 == 1` slice) the
     * media e2e pipeline probes — see [[pipelineMediaE2eQ]]'s fixture-design
@@ -2132,14 +2105,11 @@ object PipelineQueries {
     * consumer's oracle re-derives it from `documents` every run.
     */
   private[graft] def phashV1SparseBandsParquet(s: SparkSession, dir: String): String =
-    phashV1BandPaths.getOrElseUpdate("sparse:" + dir, {
-      val p = graft.TempDirs.fixtureDir("phash_v1_sparse_bands")
+    graft.Fixtures.parquet("phash_v1_sparse_bands", dir) {
       Multimodal.phashBands(
           graft.Tables.cachedParquet(s, phashHashesParquet(s, dir))
             .filter(col("doc_id") % 7 =!= 0 && col("doc_id") % 53 === 1))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
+    }
 
   /** The IMAGE modality composed end-to-end (r15 verdict Next #4 — the
     * media twin of [[pipelineE2eQ]]): an incoming image batch (every
@@ -2458,26 +2428,14 @@ object PipelineQueries {
       |ORDER BY doc_id""".stripMargin
 
   private[graft] def wavMediaParquet(s: SparkSession, dir: String): String =
-    wavMediaPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("wav_media")
-      Multimodal.wavMedia(s, Tables.documents(s, dir)).write
-        .mode("overwrite").parquet(p)
-      p
-    })
-
-  private val wavMediaPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    graft.Fixtures.parquet("wav_media", dir) {
+      Multimodal.wavMedia(s, Tables.documents(s, dir))
+    }
 
   private[graft] def videoMediaParquet(s: SparkSession, dir: String): String =
-    videoMediaPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("video_media")
-      Multimodal.videoMedia(s, Tables.documents(s, dir)).write
-        .mode("overwrite").parquet(p)
-      p
-    })
-
-  private val videoMediaPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    graft.Fixtures.parquet("video_media", dir) {
+      Multimodal.videoMedia(s, Tables.documents(s, dir))
+    }
 
   /** Distinct k=5 shingle-hash arrays `(id, sh)` of the augmented corpus,
     * materialized once per process per sf dir — the derived frame every
@@ -2489,15 +2447,9 @@ object PipelineQueries {
     * (BASELINE.md §Amortization; MaterializationSpec).
     */
   private[graft] def shinglesParquet(s: SparkSession, dir: String): String =
-    shinglesPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("shingles")
+    graft.Fixtures.parquet("shingles", dir) {
       Dedup.withShingles(augmented(Tables.documents(s, dir)), 5)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val shinglesPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** Multiset `(id, shingle, tf)` k=5 shingle term frequencies of the
     * augmented corpus, materialized once per process per sf dir — the
@@ -2508,15 +2460,9 @@ object PipelineQueries {
     * MaterializationSpec proves table ≡ recomputation.
     */
   private[graft] def shingleTfParquet(s: SparkSession, dir: String): String =
-    shingleTfPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("shingle_tf")
+    graft.Fixtures.parquet("shingle_tf", dir) {
       Dedup.shingleTf(augmented(Tables.documents(s, dir)), 5)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val shingleTfPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** Distinct k=5 shingle arrays of the RAW documents table (no
     * augmentation), materialized once per process per sf dir — the frame
@@ -2528,15 +2474,9 @@ object PipelineQueries {
     * consumers' oracles re-derive from `documents`.
     */
   private[graft] def rawShinglesParquet(s: SparkSession, dir: String): String =
-    rawShinglesPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("raw_shingles")
+    graft.Fixtures.parquet("raw_shingles", dir) {
       Dedup.withShingles(Tables.documents(s, dir).select(col("doc_id"), col("text")), 5)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val rawShinglesPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** Positional k=5 shingle arrays `(id, __sh)` of the augmented corpus,
     * materialized once per process per sf dir — the frame the verbatim-run
@@ -2546,15 +2486,9 @@ object PipelineQueries {
     * consumer's oracle re-derives positional shingles from `documents`).
     */
   private[graft] def positionalShinglesParquet(s: SparkSession, dir: String): String =
-    positionalShinglesPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("pos_shingles")
+    graft.Fixtures.parquet("pos_shingles", dir) {
       Dedup.positionalArrays(augmented(Tables.documents(s, dir)), 5)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val positionalShinglesPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** Banded-LSH near-dup pair table (64 hashes / 16 bands, each pair
     * exact-verified at j ≥ 0.8 in-plan) over the augmented corpus,
@@ -2568,18 +2502,13 @@ object PipelineQueries {
     * (BASELINE.md §Amortization; MaterializationSpec).
     */
   private[graft] def minhashPairsParquet(s: SparkSession, dir: String): String =
-    minhashPairsPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("minhash_pairs")
+    graft.Fixtures.dir("minhash_pairs", dir) { p =>
       val sh = graft.Tables.cachedParquet(s, shinglesParquet(s, dir))
         .persist(StorageLevel.MEMORY_AND_DISK)
       MinHashLSH.nearDuplicatesFromShingles(sh, numHashes = 64, bands = 16)
         .write.mode("overwrite").parquet(p)
       sh.unpersist()
-      p
-    })
-
-  private val minhashPairsPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** Near-dup pair table over the augmented corpus, materialized once per
     * process per sf dir — the artifact every graph consumer (connected
@@ -2591,7 +2520,7 @@ object PipelineQueries {
     */
   private[graft] def dupPairsParquet(s: SparkSession, dir: String,
                                      variant: String = ""): String =
-    dupPairsPaths.getOrElseUpdate(dir + variant, {
+    graft.Fixtures.parquet("dup_pairs", dir + variant) {
       val docs = Tables.documents(s, dir)
       val corpus = variant match {
         case "#tri" => augmented(docs).unionByName(
@@ -2599,14 +2528,8 @@ object PipelineQueries {
             .select((col("doc_id") + 3000000L).as("doc_id"), col("text")))
         case _ => augmented(docs)
       }
-      val p = graft.TempDirs.fixtureDir("dup_pairs")
       Dedup.ngramJaccardPairs(corpus, k = 5, threshold = 0.5)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val dupPairsPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** Component assignment over [[dupPairsParquet]], cached with the same
     * rationale (CC itself is timed by `q_dup_clusters`; the canonical-member
@@ -2614,15 +2537,9 @@ object PipelineQueries {
     * MaterializationSpec.
     */
   private[graft] def componentsParquet(s: SparkSession, dir: String): String =
-    componentsPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("components")
+    graft.Fixtures.parquet("components", dir) {
       DupClusters.connectedComponents(graft.Tables.cachedParquet(s, dupPairsParquet(s, dir)))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val componentsPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** REAL audio codec round trip ([[Multimodal.wavMedia]] →
     * `javax.sound.sampled` decode): every document becomes a genuine 16-bit
@@ -2992,14 +2909,9 @@ object PipelineQueries {
     * every driver run).
     */
   private[graft] def e2eCorpusParquet(s: SparkSession, dir: String): String =
-    e2eCorpusPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("e2e_corpus")
-      e2eCorpus(Tables.documents(s, dir)).write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val e2eCorpusPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    graft.Fixtures.parquet("e2e_corpus", dir) {
+      e2eCorpus(Tables.documents(s, dir))
+    }
 
   private def pipelineE2eQ(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -4588,22 +4500,17 @@ object PipelineQueries {
     * pattern).
     */
   private def bigramModel(s: SparkSession, dir: String): graft.text.NgramLm.BigramModel = {
-    val base = bigramModelPaths.getOrElseUpdate(dir, {
+    val base = graft.Fixtures.dir("bigram_model", dir) { p =>
       val m = graft.text.NgramLm.train(
         Tables.documents(s, dir).filter(col("doc_id") % 2 === 0))
-      val p = graft.TempDirs.fixtureDir("bigram_model")
       m.c12.write.mode("overwrite").parquet(p + "/c12")
       m.c1.write.mode("overwrite").parquet(p + "/c1")
       m.vocab.write.mode("overwrite").parquet(p + "/vocab")
-      p
-    })
+    }
     graft.text.NgramLm.BigramModel(
       graft.Tables.cachedParquet(s, base + "/c12"), graft.Tables.cachedParquet(s, base + "/c1"),
       graft.Tables.cachedParquet(s, base + "/vocab"))
   }
-
-  private val bigramModelPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
 
   /** The perplexity FILTER decision itself
     * ([[graft.text.NgramLm.perplexityFilter]]): per-doc average bigram NLL

@@ -523,15 +523,10 @@ object SelectionQueries {
     * from `documents`.
     */
   private[queries] def skipgramPairsParquet(s: SparkSession, dir: String): String =
-    skipgramPairPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("sg_pairs")
+    graft.Fixtures.parquet("sg_pairs", dir) {
       graft.text.SkipGram.pairs(Tables.documents(s, dir), window = 2,
-        minCount = 3L).write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val skipgramPairPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+        minCount = 3L)
+    }
 
   private def coocPpmiQ(s: SparkSession, dir: String): DataFrame = {
     val p = graft.Tables.cachedParquet(s, skipgramPairsParquet(s, dir))

@@ -621,7 +621,7 @@ object StatQueries {
   private def postingsIncrementalQ(s: SparkSession, dir: String): DataFrame = {
     import graft.maintain.Versioned
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val tmp = AnalyticsQueries.versionedFixture(s, dir, "post_inc") { t =>
+    val tmp = graft.Fixtures.dir("post_inc", dir) { t =>
       Versioned.commit(docs.filter(col("doc_id") % 10 =!= 0), t)
       Versioned.commitAtomic(docs.filter(col("doc_id") % 10 === 0), t)
     }

@@ -1398,7 +1398,7 @@ object SummaryQueries {
   private def countMinIncrementalQ(s: SparkSession, dir: String): DataFrame = {
     import graft.maintain.Versioned
     val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"))
-    val tmp = AnalyticsQueries.versionedFixture(s, dir, "cm_inc") { t =>
+    val tmp = graft.Fixtures.dir("cm_inc", dir) { t =>
       Versioned.commit(ev.filter(col("event_id") % 10 =!= 0), t)
       Versioned.commitAtomic(ev.filter(col("event_id") % 10 === 0), t)
     }
@@ -1435,7 +1435,7 @@ object SummaryQueries {
   private def hllIncrementalQ(s: SparkSession, dir: String): DataFrame = {
     import graft.maintain.Versioned
     val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"))
-    val tmp = AnalyticsQueries.versionedFixture(s, dir, "hll_inc") { t =>
+    val tmp = graft.Fixtures.dir("hll_inc", dir) { t =>
       Versioned.commit(ev.filter(col("event_id") % 10 =!= 0), t)
       Versioned.commitAtomic(ev.filter(col("event_id") % 10 === 0), t)
     }
@@ -1515,7 +1515,7 @@ object SummaryQueries {
     val ords = Tables.orders(s, dir)
       .select(col("o_orderkey").as("k"),
         round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-    val tmp = AnalyticsQueries.versionedFixture(s, dir, "q_inc") { t =>
+    val tmp = graft.Fixtures.dir("q_inc", dir) { t =>
       Versioned.commit(ords.filter(col("k") % 10 =!= 0), t)
       Versioned.commitAtomic(ords.filter(col("k") % 10 === 0), t)
     }

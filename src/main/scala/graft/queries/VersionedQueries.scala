@@ -347,7 +347,7 @@ object VersionedQueries {
     import graft.dedup.{Dedup, MinHashLSH}
     import org.apache.spark.storage.StorageLevel
     val docs = Tables.documents(s, dir)
-    val tmp = AnalyticsQueries.versionedFixture(s, dir, "mh_inc") { t =>
+    val tmp = graft.Fixtures.dir("mh_inc", dir) { t =>
       Versioned.commit(docs.filter(col("doc_id") % 7 =!= 0)
         .select(col("doc_id"), col("text")), t)
       Versioned.commitAtomic(docs.filter(col("doc_id") % 7 === 0)
@@ -455,7 +455,7 @@ object VersionedQueries {
     import graft.sim.Ivf
     import org.apache.spark.storage.StorageLevel
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val tmp = AnalyticsQueries.versionedFixture(s, dir, "ivf_inc") { t =>
+    val tmp = graft.Fixtures.dir("ivf_inc", dir) { t =>
       Versioned.commit(emb.filter(col("vec_id") % 5 =!= 0), t)
       Versioned.commitAtomic(emb.filter(col("vec_id") % 5 === 0), t)
     }
@@ -517,7 +517,7 @@ object VersionedQueries {
     */
   private[graft] def xsnapFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    AnalyticsQueries.versionedFixture(s, dir, "xsnap_dedup") { t =>
+    graft.Fixtures.dir("xsnap_dedup", dir) { t =>
       Versioned.commit(docs.filter(col("doc_id") % 7 =!= 0), t)
       Versioned.commitAtomic(
         docs.filter(col("doc_id") % 7 === 0)
@@ -541,16 +541,10 @@ object VersionedQueries {
     * `documents`.
     */
   private[graft] def xsnapShinglesParquet(s: SparkSession, dir: String): String =
-    xsnapShinglesPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("xsnap_shingles")
+    graft.Fixtures.parquet("xsnap_shingles", dir) {
       graft.dedup.Dedup.withShingles(
           Versioned.read(s, xsnapFixture(s, dir), Some(2)), 5)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val xsnapShinglesPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** Distinct k=5 STRING-shingle arrays of the xsnap fixture's v2 snapshot
     * ([[graft.dedup.Dedup.withStringShingles]] — the oracle-replayable
@@ -561,16 +555,10 @@ object VersionedQueries {
     * recomputation; the oracle re-derives everything from `documents`.
     */
   private[graft] def xsnapStrShinglesParquet(s: SparkSession, dir: String): String =
-    xsnapStrShinglesPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("xsnap_str_shingles")
+    graft.Fixtures.parquet("xsnap_str_shingles", dir) {
       graft.dedup.Dedup.withStringShingles(
           Versioned.read(s, xsnapFixture(s, dir), Some(2)), 5)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val xsnapStrShinglesPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** The MAINTAINED banded minhash index over the xsnap fixture's v1
     * (corpus) snapshot — 16 md5-minhash rows in 8 bands of 2
@@ -586,19 +574,13 @@ object VersionedQueries {
     * the consumer's oracle full-replays band hashing from `documents`.
     */
   private[graft] def xsnapBandIndexParquet(s: SparkSession, dir: String): String =
-    xsnapBandIndexPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("xsnap_band_index")
+    graft.Fixtures.parquet("xsnap_band_index", dir) {
       graft.dedup.MinHashLSH.replayableBandRows(
           graft.dedup.MinHashLSH.md5Signatures(
             graft.dedup.Dedup.withStringShingles(
               Versioned.read(s, xsnapFixture(s, dir), Some(1)), 5),
             numHashes = 16), bands = 8)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val xsnapBandIndexPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   /** The v1 (xxhash-minhash, 64 hashes / 16 bands) band index of the
     * mh_inc fixture's BASE side — the standing artifact
@@ -609,18 +591,12 @@ object VersionedQueries {
     * driver run).
     */
   private[graft] def mhIncBandIndexParquet(s: SparkSession, dir: String): String =
-    mhIncBandIndexPaths.getOrElseUpdate(dir, {
-      val p = graft.TempDirs.fixtureDir("mh_inc_band_index")
+    graft.Fixtures.parquet("mh_inc_band_index", dir) {
       import graft.dedup.MinHashLSH
       val raw = graft.Tables.cachedParquet(s, PipelineQueries.rawShinglesParquet(s, dir))
       MinHashLSH.bandTable(
           MinHashLSH.signaturesFromShingles(raw.filter(col("id") % 7 =!= 0), 64), 16)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-
-  private val mhIncBandIndexPaths =
-    new scala.collection.concurrent.TrieMap[String, String]()
+    }
 
   // pinned at 8 shuffle partitions with an eager epilogue (the
   // withKernelShufflePartitionsFor contract): with shingling amortized to

@@ -2,6 +2,7 @@ package graft.stream
 
 import graft.ingest.Normalize
 import graft.ops.Upsert
+import graft.score.RiskScore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -62,7 +63,7 @@ object StreamingIngest {
     ingest(edgeStream).observe(name,
       count(lit(1)).as("rows_out"),
       sum(when(col("report_type") === "ALERT", 1L).otherwise(0L)).as("alerts"),
-      sum(when(col("speed_kmh") > 110.0, 1L).otherwise(0L)).as("overspeed"))
+      sum(when(col("speed_kmh") > RiskScore.OverspeedKmh, 1L).otherwise(0L)).as("overspeed"))
 
   /** Checkpointed, partitioned, exactly-once append sink (K1). */
   def factSink(normalized: DataFrame, targetDir: String, checkpointDir: String,
@@ -119,9 +120,20 @@ object StreamingIngest {
         ()
       }
 
-  private def emptyLike(batch: DataFrame): DataFrame =
-    batch.sparkSession.createDataFrame(
-      batch.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+  /** The live table at `targetDir`, or an empty frame of the batch's schema
+    * if there is none yet. Only a MISSING target counts as empty: any other
+    * read failure (a corrupt footer, an I/O error) propagates and fails the
+    * batch, because the caller overwrites what it read — treating an
+    * unreadable table as empty would replace it with one micro-batch.
+    */
+  private def existingOrEmpty(batch: DataFrame, targetDir: String): DataFrame = {
+    val spark = batch.sparkSession
+    val target = new org.apache.hadoop.fs.Path(targetDir)
+    if (target.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(target))
+      spark.read.parquet(targetDir)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+  }
 
   /** Partition-restricted merge: prune the read and the rewrite to the
     * partitions the micro-batch touches.
@@ -129,7 +141,6 @@ object StreamingIngest {
   private def upsertPartitions(batch: DataFrame, targetDir: String,
                                keys: Seq[String], precedenceCol: String,
                                partitionCols: Seq[String]): Unit = {
-    val spark = batch.sparkSession
     val cached = batch.persist()
     try {
       // the batch's partition set is small by construction (a micro-batch
@@ -140,9 +151,7 @@ object StreamingIngest {
           partitionCols.zipWithIndex.map { case (c, i) => col(c) === lit(r.get(i)) }
             .reduce(_ && _))
         .reduce(_ || _)
-      val existing =
-        try spark.read.parquet(targetDir).filter(touched)
-        catch { case _: Exception => emptyLike(cached) }
+      val existing = existingOrEmpty(cached, targetDir).filter(touched)
       val merged = Upsert.upsert(existing, cached, keys,
         col(precedenceCol), col(precedenceCol))
       graft.maintain.Maintenance.overwritePartitions(merged, targetDir, partitionCols)
@@ -161,10 +170,7 @@ object StreamingIngest {
     // recovery from a crash between the two renames below: the backup is the
     // last complete table — restore it before merging
     if (!fs.exists(target) && fs.exists(backup)) fs.rename(backup, target)
-    val existing =
-      try spark.read.parquet(targetDir)
-      catch { case _: Exception => emptyLike(batch) }
-    val merged = Upsert.upsert(existing, batch, keys,
+    val merged = Upsert.upsert(existingOrEmpty(batch, targetDir), batch, keys,
       col(precedenceCol), col(precedenceCol))
     fs.delete(tmp, true)
     merged.write.mode("overwrite").parquet(tmp.toString)
@@ -279,7 +285,7 @@ object StreamingIngest {
     * a processing-time timeout would retire idle devices at fleet scale.
     */
   def consecutiveSpeedAlerts(events: org.apache.spark.sql.Dataset[(String, Double)],
-                             threshold: Double = 110.0, runLength: Int = 3)(
+                             threshold: Double = RiskScore.OverspeedKmh, runLength: Int = 3)(
       implicit spark: SparkSession): org.apache.spark.sql.Dataset[(String, Int)] = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}

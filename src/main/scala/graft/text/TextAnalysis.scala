@@ -671,27 +671,20 @@ object TextAnalysis {
 
   /** Materialize the chunked posting index as a term-bucketed catalog table
     * — the SCALE.md §Curation serving layout: searches probe term buckets
-    * instead of re-tokenizing the corpus. Built once per `key` per process
-    * (the build is an offline indexing job, same amortization rationale as
-    * [[graft.sim.Ivf.cachedBuild]]; BASELINE.md §Amortization); returns the table name. Bucketing +
+    * instead of re-tokenizing the corpus. Built once per (`key`, `buckets`,
+    * `chunkSize`) per process through [[graft.Fixtures]] (the build is an
+    * offline indexing job, same amortization rationale as
+    * [[graft.sim.Ivf.cachedBuild]]); returns the table name. Bucketing +
     * within-bucket sort on `term` means a term-filtered probe scans only
     * `SelectedBucketsCount` buckets with zero Exchange on the scan side, and
     * [[buildPostingsChunked]] bounds every row even for hot terms.
     */
   def materializePostings(docs: DataFrame, key: String, buckets: Int = 8,
-                          chunkSize: Int = 1024): String = {
-    val table = "graft_postings_" + key.replaceAll("[^A-Za-z0-9]", "_")
-    postingTables.getOrElseUpdate((key, buckets, chunkSize), {
-      graft.maintain.Layout.resetTable(docs.sparkSession, table)
-      graft.maintain.Layout.writeBucketed(
-        buildPostingsChunked(docs, chunkSize), table, "term", buckets,
-        sortCols = Seq("term", "posting_part"))
-      table
-    })
-  }
-
-  private val postingTables =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int), String]()
+                          chunkSize: Int = 1024): String =
+    graft.Fixtures.bucketedTable(docs.sparkSession, "postings",
+        s"$key|$buckets|$chunkSize", "term", buckets, Seq("term", "posting_part")) {
+      buildPostingsChunked(docs, chunkSize)
+    }
 
   /** Conjunctive keyword search probing a [[materializePostings]] table:
     * the `isin` filter on the bucketing column prunes to the terms' buckets

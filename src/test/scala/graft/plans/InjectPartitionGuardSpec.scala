@@ -247,8 +247,9 @@ class InjectPartitionGuardSpec extends SparkSpec {
         Some(s"$from 00:00:00"), Some(s"$to 00:00:00")))
     }
     val buckets = ids.map(bucketOf).toSet
-    // skewDays = 1 widens the event-time range by one day on each side
-    val (lo, hi) = (from.minusDays(1), to.plusDays(1))
+    // the skew bound widens the event-time range on each side
+    val skew = InjectPartitionGuard.SkewDays.toLong
+    val (lo, hi) = (from.minusDays(skew), to.plusDays(skew))
     assert(parts.map(_._1).size <= ids.size)
     assert(parts.nonEmpty && parts == partitionsOnDisk(factDir).filter { case (b, d) =>
       buckets(b) && !d.isBefore(lo) && !d.isAfter(hi)
@@ -266,9 +267,6 @@ class InjectPartitionGuardSpec extends SparkSpec {
       Layout.writeFact(fact.unionByName(late), dir + "/bad")
     }
     assert(err.getMessage.contains("violate"))
-    // opt-out path still writes
-    Layout.writeFact(fact.unionByName(late), dir + "/ok", skewGuardDays = -1)
-    assert(spark.read.parquet(dir + "/ok").count() == fact.count() + 1)
   }
 
   test("writeFact rejects a row whose bucket is not java_hash_bucket(device_id)") {

@@ -185,6 +185,33 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("an unreadable live table fails the upsert batch and is left in place") {
+    implicit val s = spark
+    implicit val sql = spark.sqlContext
+    // full swap: a junk file at the table root; partitioned: one inside the
+    // partition the batch touches. Reading either throws; an upsert that
+    // took the table for empty would overwrite it with the batch.
+    for ((tag, partitionCols, junkDir) <- Seq(
+        ("upsert_junk", Nil, ""),
+        ("upsert_junk_part", Seq("report_date"), "/report_date=2024-01-01"))) {
+      val dir = graft.TempDirs.fixtureDir(tag) + "/table"
+      val junk = new java.io.File(dir + junkDir, "part-0.parquet")
+      junk.getParentFile.mkdirs()
+      java.nio.file.Files.writeString(junk.toPath, "not a parquet file")
+      val mem = MemoryStream[(String, String, Long, Int)]
+      val scored = mem.toDF().toDF("device_id", "report_date", "total", "version")
+      val q = StreamingIngest.upsertSink(scored, dir, graft.TempDirs.fixtureDir(tag + "_ckpt"),
+        Seq("device_id", "report_date"), "version", partitionCols).start()
+      try {
+        mem.addData(("d1", "2024-01-01", 5L, 1))
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+          q.processAllAvailable())
+      } finally q.stop()
+      assert(junk.isFile, s"$tag: the unreadable table was overwritten")
+      assert(java.nio.file.Files.readString(junk.toPath) == "not a parquet file")
+    }
+  }
+
   test("streaming dedup collapses replayed ids across micro-batches") {
     implicit val sql = spark.sqlContext
     val mem = MemoryStream[Edge]
