@@ -44,7 +44,7 @@ object Bench {
       xxhash64(struct(df.columns.map(col).toSeq: _*))))
 
   /** Force full evaluation of `df` (see [[fingerprint]]). */
-  private[graft] def fullyEvaluate(df: DataFrame): Unit = {
+  private def fullyEvaluate(df: DataFrame): Unit = {
     fingerprint(df).collect()
     ()
   }

@@ -32,42 +32,44 @@ object Layout {
     *    derived from a `device_id` literal is the one its rows live in.
     *
     * Both checks are aggregates of one [[Observation]] riding on the write
-    * job itself — no second pass over the data — and the write fails (after
-    * materializing, like any constraint violation) if either contract is
-    * broken rather than letting guarded reads silently lose rows. The skew
-    * bound is the rule's own constant, so the two cannot drift apart.
+    * job itself — no second pass over the data. The write is staged and
+    * promoted over `path` ([[Promote]]) only once both checks pass, so a
+    * broken contract fails it and leaves the previous table in place
+    * rather than letting guarded reads silently lose rows. The skew bound
+    * is the rule's own constant, so the two cannot drift apart.
     */
   def writeFact(fact: DataFrame, path: String,
-                targetFileBytes: Long = 256L << 20): Unit = {
-    val obs = Observation()
-    fact.observe(obs,
-      sum(when(abs(datediff(col("received_day"), to_date(col("gps_epoch")))) >
-        SkewDays, 1L).otherwise(0L)).as("skew_violations"),
-      sum(when(!(col("device_id_bucket") <=>
-        deviceBucket(col("device_id"), Normalize.DeviceBuckets)), 1L)
-        .otherwise(0L)).as("bucket_violations"))
-      .repartition(col("device_id_bucket"), col("received_day"))
-      .sortWithinPartitions(col("device_id"), col("gps_epoch"))
-      .write
-      .mode("overwrite")
-      .partitionBy("device_id_bucket", "received_day")
-      .option("compression", "zstd")
-      .option("parquet.block.size", targetFileBytes.toString)
-      .option("parquet.bloom.filter.enabled#device_id", "true")
-      .option("parquet.bloom.filter.enabled#correlation_id", "true")
-      .parquet(path)
-    def violations(name: String): Long = obs.get.get(name).collect {
-      case n: java.lang.Long => n.longValue
-    }.getOrElse(0L)
-    val optOut = s"; table at $path must not be opted into partition-guard injection"
-    val skew = violations("skew_violations")
-    require(skew == 0L,
-      s"$skew rows violate |received_day - date(gps_epoch)| <= $SkewDays" + optOut)
-    val bucket = violations("bucket_violations")
-    require(bucket == 0L,
-      s"$bucket rows violate device_id_bucket <=> " +
-        s"java_hash_bucket(device_id, ${Normalize.DeviceBuckets})" + optOut)
-  }
+                targetFileBytes: Long = 256L << 20): Unit =
+    Promote.replace(fact.sparkSession, path) { staged =>
+      val obs = Observation()
+      fact.observe(obs,
+        sum(when(abs(datediff(col("received_day"), to_date(col("gps_epoch")))) >
+          SkewDays, 1L).otherwise(0L)).as("skew_violations"),
+        sum(when(!(col("device_id_bucket") <=>
+          deviceBucket(col("device_id"), Normalize.DeviceBuckets)), 1L)
+          .otherwise(0L)).as("bucket_violations"))
+        .repartition(col("device_id_bucket"), col("received_day"))
+        .sortWithinPartitions(col("device_id"), col("gps_epoch"))
+        .write
+        .mode("overwrite")
+        .partitionBy("device_id_bucket", "received_day")
+        .option("compression", "zstd")
+        .option("parquet.block.size", targetFileBytes.toString)
+        .option("parquet.bloom.filter.enabled#device_id", "true")
+        .option("parquet.bloom.filter.enabled#correlation_id", "true")
+        .parquet(staged)
+      def violations(name: String): Long = obs.get.get(name).collect {
+        case n: java.lang.Long => n.longValue
+      }.getOrElse(0L)
+      val optOut = s"; table at $path must not be opted into partition-guard injection"
+      val skew = violations("skew_violations")
+      require(skew == 0L,
+        s"$skew rows violate |received_day - date(gps_epoch)| <= $SkewDays" + optOut)
+      val bucket = violations("bucket_violations")
+      require(bucket == 0L,
+        s"$bucket rows violate device_id_bucket <=> " +
+          s"java_hash_bucket(device_id, ${Normalize.DeviceBuckets})" + optOut)
+    }
 
   /** Z-order (Morton) interleave of two bounded non-negative ints: bit b of
     * `x` lands at position 2b, of `y` at 2b+1. Sorting by the z-value keeps

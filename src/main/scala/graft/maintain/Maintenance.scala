@@ -48,21 +48,21 @@ object Maintenance {
   /** Compaction (M1, `cleanup.sql:12-17`): rewrite one day-partition into
     * `ceil(bytes / targetFileSize)` files. Reads only the named partition —
     * the per-partition `WHERE received_day = …` form of the reference's
-    * `optimize`, which is the only form that scales.
+    * `optimize`, which is the only form that scales. The rewrite is staged
+    * and swapped in by [[Promote]], which first restores a partition an
+    * interrupted compaction left in its backup.
     */
   def compactPartition(spark: SparkSession, path: String, dayCol: String,
                        day: String, targetFileBytes: Long = 256L << 20): Unit = {
     val partPath = s"$path/$dayCol=$day"
-    val fs = new org.apache.hadoop.fs.Path(partPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(partPath))) return
-    val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(partPath)).getLength
+    Promote.recover(spark, partPath)
+    val part = new org.apache.hadoop.fs.Path(partPath)
+    val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(part)) return
+    val bytes = fs.getContentSummary(part).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val df = spark.read.parquet(partPath)
-    val tmp = s"$partPath.__compact_tmp"
-    df.coalesce(nFiles).write.mode("overwrite").parquet(tmp)
-    fs.delete(new org.apache.hadoop.fs.Path(partPath), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(partPath))
+    Promote.replace(spark, partPath)(
+      spark.read.parquet(partPath).coalesce(nFiles).write.mode("overwrite").parquet(_))
   }
 
   /** Compaction *planning* (the decision half of M1, `cleanup.sql:12-17`):

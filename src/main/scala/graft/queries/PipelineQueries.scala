@@ -32,10 +32,8 @@ object PipelineQueries {
     docs.select(col("doc_id"), col("text")).unionByName(augDeltaSlice(docs))
 
   /** aug's >= 1M slice on its own — the planted exact copies (+1M) and
-    * near copies (+2M). The single definition the bloom fixtures and
-    * Scratch share with [[augmented]]/[[augCte]].
-    */
-  private[graft] def augDeltaSlice(docs: DataFrame): DataFrame =
+    * near copies (+2M), shared by [[augmented]], [[augCte]] and the bloom fixtures. */
+  private def augDeltaSlice(docs: DataFrame): DataFrame =
     docs.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
       .unionByName(docs.filter(col("doc_id") % 10 === 1)

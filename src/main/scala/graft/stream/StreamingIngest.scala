@@ -158,30 +158,16 @@ object StreamingIngest {
     } finally { cached.unpersist(); () }
   }
 
-  /** Whole-table merge with a crash-safe backup-swap promote. */
+  /** Whole-table merge with a crash-safe backup-swap promote. The live
+    * table is read inside the staged write, after `Promote.replace` has
+    * restored a table an interrupted swap left in its backup.
+    */
   private def upsertFullSwap(batch: DataFrame, targetDir: String,
-                             keys: Seq[String], precedenceCol: String): Unit = {
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(targetDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(targetDir)
-    val tmp = new org.apache.hadoop.fs.Path(targetDir + "__tmp")
-    val backup = new org.apache.hadoop.fs.Path(targetDir + "__backup")
-    // recovery from a crash between the two renames below: the backup is the
-    // last complete table — restore it before merging
-    if (!fs.exists(target) && fs.exists(backup)) fs.rename(backup, target)
-    val merged = Upsert.upsert(existingOrEmpty(batch, targetDir), batch, keys,
-      col(precedenceCol), col(precedenceCol))
-    fs.delete(tmp, true)
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    // backup-swap: live data is never deleted before its replacement is
-    // promoted; every crash point leaves >= 1 complete copy on disk
-    fs.delete(backup, true)
-    if (fs.exists(target)) fs.rename(target, backup)
-    fs.rename(tmp, target)
-    fs.delete(backup, true)
-    ()
-  }
+                             keys: Seq[String], precedenceCol: String): Unit =
+    graft.maintain.Promote.replace(batch.sparkSession, targetDir) { staged =>
+      Upsert.upsert(existingOrEmpty(batch, targetDir), batch, keys,
+        col(precedenceCol), col(precedenceCol)).write.mode("overwrite").parquet(staged)
+    }
 
   /** Streaming dedup by id within the watermark horizon
     * (`dropDuplicatesWithinWatermark`): the in-flight version of exact dedup

@@ -105,6 +105,31 @@ class OpsSpec extends SparkSpec {
     assert(back.count() == 400 && back.agg(sum("id")).as[Long].head() == (1 to 400).sum.toLong)
   }
 
+  test("compactPartition restores a partition an interrupted swap left in its backup") {
+    val dir = graft.TempDirs.fixtureDir("cmp_rec")
+    (1 to 400).map(i => (i, if (i % 2 == 0) "2024-01-05" else "2024-01-06"))
+      .toDF("id", "day").repartition(8)
+      .write.partitionBy("day").mode("overwrite").parquet(dir)
+    def dirs() = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
+    val parts = Set("day=2024-01-05", "day=2024-01-06")
+    def rows() = spark.read.parquet(dir).select($"id", $"day".cast("string"))
+      .as[(Int, String)].collect().toSet
+    val all = rows()
+    assert(all.size == 400)
+    // a normal compaction leaves only partition dirs under the table root
+    Maintenance.compactPartition(spark, dir, "day", "2024-01-06")
+    assert(dirs() == parts)
+    assert(rows() == all)
+    // a crash between the swap's two renames: the live partition sits in
+    // its backup and a half-written staged copy is left beside it
+    val live = new java.io.File(dir, "day=2024-01-05")
+    assert(live.renameTo(new java.io.File(dir, ".day=2024-01-05__backup")))
+    assert(new java.io.File(dir, ".day=2024-01-05__staged").mkdir())
+    Maintenance.compactPartition(spark, dir, "day", "2024-01-05")
+    assert(dirs() == parts)
+    assert(rows() == all)
+  }
+
   test("analyze computes catalog statistics (M4)") {
     spark.sql("DROP TABLE IF EXISTS graft_stats_t")
     (1 to 100).toDF("id").write.saveAsTable("graft_stats_t")

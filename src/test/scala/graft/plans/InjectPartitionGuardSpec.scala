@@ -263,10 +263,18 @@ class InjectPartitionGuardSpec extends SparkSpec {
     val late = fact.limit(1)
       .withColumn("received_day", date_add($"received_day", 10))
     val dir = graft.TempDirs.fixtureDir("ipg_bad")
+    // a valid table already at the path: the rejected write must not touch it
+    Layout.writeFact(fact, dir + "/bad")
+    val before = spark.read.parquet(dir + "/bad").count()
     val err = intercept[IllegalArgumentException] {
       Layout.writeFact(fact.unionByName(late), dir + "/bad")
     }
     assert(err.getMessage.contains("violate"))
+    assert(spark.read.parquet(dir + "/bad").count() == before,
+      "the rejected write replaced the previous table")
+    assert(before == fact.count())
+    assert(new java.io.File(dir).list().toSeq == Seq("bad"),
+      "the rejected write left a staging dir behind")
   }
 
   test("writeFact rejects a row whose bucket is not java_hash_bucket(device_id)") {
