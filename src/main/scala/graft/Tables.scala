@@ -60,10 +60,16 @@ object Tables {
     * runs with session TZ UTC). Downstream code can then rely on
     * `unix_micros`/watermarks/`cast(long)` uniformly.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String): DataFrame =
+    eventTs(t(spark, dir, "events"))
+
+  /** The `ts` normalization of [[events]], for any frame with the events
+    * schema — batch or stream (a stream source over the events parquet
+    * needs it too, or `unix_micros`/watermarks reject the column).
+    */
+  def eventTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    val raw = t(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))

@@ -32,19 +32,14 @@ object GraftExtensions {
     new ExpressionInfo("graft.functions", null, name, usage, "", "", "", "", "4.0.0", "", "scala_udf")
 
   /** Validated scalar-literal extraction for SQL-registered builders: a
-    * wrong arity or a non-foldable/non-integer argument must surface as a
-    * usable analysis-time error naming the function and its usage, not a
-    * raw ClassCastException/IndexOutOfBoundsException from `es(i).eval()`.
+    * wrong arity ([[requireArity]]) or a non-foldable/non-integer argument
+    * must surface as a usable analysis-time error naming the function and
+    * its usage, not a raw ClassCastException/IndexOutOfBoundsException
+    * from `es(i).eval()`.
     */
   private def foldableInt(fn: String, usage: String, es: Seq[Expression],
                           arity: Int, i: Int): Int = {
-    if (es.length != arity)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map("functionName" -> fn,
-          "expectedNum" -> arity.toString, "actualNum" -> es.length.toString,
-          "docroot" -> usage))
-    val e = es(i)
+    val e = requireArity(fn, usage, es, arity)(i)
     val v = if (e.foldable) e.eval() else null
     v match {
       case n: Number => n.intValue()
@@ -62,13 +57,7 @@ object GraftExtensions {
     */
   private def foldableString(fn: String, usage: String, es: Seq[Expression],
                              arity: Int, i: Int): String = {
-    if (es.length != arity)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map("functionName" -> fn,
-          "expectedNum" -> arity.toString, "actualNum" -> es.length.toString,
-          "docroot" -> usage))
-    val e = es(i)
+    val e = requireArity(fn, usage, es, arity)(i)
     if (!e.foldable)
       throw new org.apache.spark.sql.AnalysisException(
         errorClass = "NON_FOLDABLE_ARGUMENT",
@@ -86,10 +75,10 @@ object GraftExtensions {
     }
   }
 
-  /** Arity-only guard for builders whose arguments are all columns (no
-    * foldable-literal requirement): wrong arity surfaces as the same
-    * WRONG_NUM_ARGS AnalysisException as the literal-taking builders,
-    * never a NoSuchElement/IndexOutOfBounds from bare `es(i)`.
+  /** The arity guard every builder runs before it reads an argument:
+    * a wrong arity, zero arguments included, surfaces as a WRONG_NUM_ARGS
+    * AnalysisException naming the function and its usage, never a
+    * NoSuchElement/IndexOutOfBounds from a bare `es.head`/`es(i)`.
     */
   private def requireArity(fn: String, usage: String, es: Seq[Expression],
                            arity: Int): Seq[Expression] = {
@@ -109,9 +98,11 @@ object GraftExtensions {
         requireArity("java_hash", "java_hash(str)", es, 1).head)),
     ("java_hash_bucket",
       info("java_hash_bucket", "java_hash_bucket(str, n) - MOD(ABS(java_hash(str)), n)"),
-      (es: Seq[Expression]) => JavaHashBucket(es.head,
-        foldableInt("java_hash_bucket",
-          "java_hash_bucket(str, n)", es, 2, 1))),
+      (es: Seq[Expression]) => {
+        val usage = "java_hash_bucket(str, n)"
+        val a = requireArity("java_hash_bucket", usage, es, 2)
+        JavaHashBucket(a.head, foldableInt("java_hash_bucket", usage, a, 2, 1))
+      }),
     ("dot_product",
       info("dot_product", "dot_product(array<double>, array<double>) - sequential-fold dot"),
       (es: Seq[Expression]) => {
@@ -121,16 +112,19 @@ object GraftExtensions {
       }),
     ("md5_field",
       info("md5_field", "md5_field(str, startNibble, nNibbles) - unsigned BIGINT value of nNibbles hex digits of md5(str), == conv(substring(md5(str), startNibble+1, nNibbles), 16, 10)"),
-      (es: Seq[Expression]) => Md5Field(es.head,
-        foldableInt("md5_field",
-          "md5_field(str, startNibble, nNibbles)", es, 3, 1),
-        foldableInt("md5_field",
-          "md5_field(str, startNibble, nNibbles)", es, 3, 2))),
+      (es: Seq[Expression]) => {
+        val usage = "md5_field(str, startNibble, nNibbles)"
+        val a = requireArity("md5_field", usage, es, 3)
+        Md5Field(a.head, foldableInt("md5_field", usage, a, 3, 1),
+          foldableInt("md5_field", usage, a, 3, 2))
+      }),
     ("normalize_unicode",
       info("normalize_unicode", "normalize_unicode(str, form) - Unicode NFC/NFD/NFKC/NFKD normalization"),
-      (es: Seq[Expression]) => NormalizeUnicode(es.head,
-        foldableString("normalize_unicode",
-          "normalize_unicode(str, form)", es, 2, 1))))
+      (es: Seq[Expression]) => {
+        val usage = "normalize_unicode(str, form)"
+        val a = requireArity("normalize_unicode", usage, es, 2)
+        NormalizeUnicode(a.head, foldableString("normalize_unicode", usage, a, 2, 1))
+      }))
 
   /** Register on an already-built session (temp functions). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

@@ -65,43 +65,6 @@ object Maintenance {
       spark.read.parquet(partPath).coalesce(nFiles).write.mode("overwrite").parquet(_))
   }
 
-  /** Compaction *planning* (the decision half of M1, `cleanup.sql:12-17`):
-    * assign each file to a rewrite bin by greedy capacity-restart packing —
-    * walk the partition's files in file-id order accumulating size, start a
-    * new bin whenever adding the next file would exceed `capacity` (a file
-    * larger than the capacity gets a bin to itself). This is the plan an
-    * OPTIMIZE implementation executes (each bin = one rewrite task ≈ one
-    * output file), and emitting it as a table makes the policy auditable
-    * before any data is moved.
-    *
-    * The greedy fold is inherently sequential *within a partition*
-    * (bin(i) depends on the exact fill after file i−1 — not a window
-    * function), so this drops to `flatMapGroups` per partition. That is the
-    * right trade at 100 TB: the input is the FILE MANIFEST, not data —
-    * ~10⁶ rows for a 100 TB / 100 MB-file table, thousands of partitions
-    * processed in parallel, each group a few-KB sorted list. Output schema:
-    * `(part, file_id, file_size, bin)`.
-    */
-  def compactionPlan(files: DataFrame, capacity: Long,
-                     partCol: String = "part", fileCol: String = "file_id",
-                     sizeCol: String = "file_size"): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    val rows = files.select(col(partCol).cast("long"), col(fileCol).cast("long"),
-      col(sizeCol).cast("long")).as[(Long, Long, Long)]
-    rows.groupByKey(_._1).flatMapGroups { (part, it) =>
-      var fill = 0L
-      var bin = 0L
-      var first = true
-      it.toSeq.sortBy(_._2).map { case (_, fid, sz) =>
-        if (!first && fill + sz > capacity) { bin += 1; fill = 0L }
-        first = false
-        fill += sz
-        (part, fid, sz, bin)
-      }
-    }.toDF(partCol, fileCol, sizeCol, "bin")
-  }
-
   /** Stats refresh (M4, `cleanup.sql:33-38`): ANALYZE over a catalog table. */
   def analyze(spark: SparkSession, table: String, columns: Seq[String] = Nil): Unit = {
     val forCols = if (columns.nonEmpty) s" FOR COLUMNS ${columns.mkString(", ")}" else ""

@@ -129,17 +129,21 @@ object Versioned {
     won
   }
 
+  /** CAS retries before a commit gives up, and the linear backoff step. */
+  private val MaxRetries = 8
+  private val BackoffMs = 25L
+
   /** Optimistic concurrent APPEND commit: write data files once (to a
     * writer-unique directory — no data is ever rewritten on retry), then
     * loop { read head → carried = head's files → CAS-publish head+1 }. An
     * append merges cleanly against ANY interleaved commit, so losing the
-    * race only costs re-reading one manifest; `maxRetries` with linear
-    * backoff bounds livelock under a commit storm. Returns the version that
-    * actually landed. Both racers keep their data: no lost update, the two
-    * appends serialize in whichever order the CAS decides.
+    * race only costs re-reading one manifest; [[MaxRetries]] with linear
+    * [[BackoffMs]] backoff bounds livelock under a commit storm. Returns
+    * the version that actually landed. Both racers keep their data: no
+    * lost update, the two appends serialize in whichever order the CAS
+    * decides.
     */
-  def commitAtomic(df: DataFrame, tableDir: String, maxRetries: Int = 8,
-                   backoffMs: Long = 25L): Int = {
+  def commitAtomic(df: DataFrame, tableDir: String): Int = {
     val spark = df.sparkSession
     val dataDir = new Path(tableDir,
       s"data/c_${java.util.UUID.randomUUID().toString}")
@@ -147,7 +151,7 @@ object Versioned {
     val newFiles = listDataFiles(spark, tableDir, dataDir)
     val f = fs(spark, tableDir)
     var attempt = 0
-    while (attempt <= maxRetries) {
+    while (attempt <= MaxRetries) {
       val prev = versions(spark, tableDir)
       val v = prev.lastOption.getOrElse(0) + 1
       val carried = if (prev.nonEmpty) readManifest(spark, tableDir, prev.last)
@@ -156,10 +160,10 @@ object Versioned {
           s"version=$v" +: (carried ++ newFiles)))
         return v
       attempt += 1
-      Thread.sleep(backoffMs * attempt) // linear bounded backoff
+      Thread.sleep(BackoffMs * attempt) // linear bounded backoff
     }
     throw new java.io.IOException(
-      s"commit to $tableDir lost the CAS race $maxRetries times; giving up")
+      s"commit to $tableDir lost the CAS race $MaxRetries times; giving up")
   }
 
   /** Optimistic commit WITH key-overlap validation (Iceberg's
@@ -173,8 +177,7 @@ object Versioned {
     * would silently double-write a key both writers touched.
     */
   def commitAtomicChecked(df: DataFrame, tableDir: String, keys: Seq[String],
-                          expectedVersion: Int, maxRetries: Int = 8,
-                          backoffMs: Long = 25L): Int = {
+                          expectedVersion: Int): Int = {
     import org.apache.spark.sql.functions.col
     val spark = df.sparkSession
     val incomingKeys = df.select(keys.map(col): _*).distinct()
@@ -193,7 +196,7 @@ object Versioned {
               "with overlapping keys: " +
               sample.map(_.toSeq.mkString("(", ",", ")")).mkString(", "))
       }
-      commitAtomic(df, tableDir, maxRetries, backoffMs)
+      commitAtomic(df, tableDir)
     } finally { incomingKeys.unpersist(); () }
   }
 

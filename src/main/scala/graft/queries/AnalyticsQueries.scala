@@ -242,7 +242,7 @@ object AnalyticsQueries {
       |FROM events GROUP BY 1 ORDER BY window_start""".stripMargin
 
   /** The SAME tumbling aggregation executed as a LIVE Structured Streaming
-    * query — file source over the events parquet, `Trigger.AvailableNow`,
+    * query — file source over the events parquet, one-shot run,
     * complete-mode memory sink — then compared against the identical batch
     * SQL oracle as `q_tumbling_window`. This puts actual streaming
     * execution (source → stateful agg → sink commit) under the driver's
@@ -252,72 +252,17 @@ object AnalyticsQueries {
     * runs a fresh uniquely-named query, so benches time the real stream.
     */
   private def streamTumblingQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, LongType}
-    val srcDir = eventsStreamDir(dir)
-    val schema = graft.Tables.parquetSchema(s, srcDir)
-    val raw = s.readStream.schema(schema).parquet(srcDir)
-    val ev =
-      (if (schema("ts").dataType == LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw).withColumn("ts", col("ts").cast("timestamp"))
-    val name = "graft_stream_tumbling_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = AnalyticsQueries.withStreamShufflePartitions(s, 4) {
-      ev.groupBy(window(col("ts"), "6 hours").as("w"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 4))).cast(DecimalType(18, 4))
-            .cast("double").as("sum_value"))
-        .select(col("w.start").as("window_start"), col("n"), col("sum_value"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    s.table(name).orderBy(col("window_start"))
+    import org.apache.spark.sql.types.DecimalType
+    OneShotStream.drain(OneShotStream.events(s, dir)
+      .groupBy(window(col("ts"), "6 hours").as("w"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast(DecimalType(18, 4))).cast(DecimalType(18, 4))
+          .cast("double").as("sum_value"))
+      .select(col("w.start").as("window_start"), col("n"), col("sum_value")),
+      "complete").orderBy(col("window_start"))
   }
 
-  /** Stream source dir holding a copy of `dir`'s events table, made once
-    * per process and shared by every stream fixture query.
-    */
-  private[queries] def eventsStreamDir(dir: String): String =
-    graft.Fixtures.dir("events_stream", dir) { p =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(dir, "events.parquet"),
-        java.nio.file.Paths.get(p, "events.parquet"))
-    }
-
-  /** Run `f` (which must START the streaming query inside it) with the
-    * session's shuffle partitions pinned at `n`, restored after. A
-    * stateful streaming aggregation allocates one state-store instance
-    * per shuffle partition PER BATCH; the registry's stream fixtures
-    * carry tiny bounded state (buckets, registers, sessions), nowhere
-    * near local[32]'s 32 partitions — 8 cut the fixed state-store cost
-    * ~20 % per query (measured on q_stream_psi: 1.6 → 1.3 s steady), and
-    * the r13 8-vs-4 A/B (9 stream queries, min-of-3, same window) took
-    * another ~0.05 s/query at 4 with no value change, so the fixtures
-    * now pin 4. The conf is read at query START, so the
-    * restore cannot affect a running stream; registry queries execute
-    * sequentially (Verify/Bench), so the temporary session mutation is
-    * not racy.
-    *
-    * The 8 is a calibration for THESE fixtures, not a magic number. The
-    * sizing rule a deployment applies: shuffle partitions ≈
-    * ceil(peak state volume / target per-store state size) — RocksDB/
-    * HDFS-backed stores run best holding ~0.5–2 GiB each, so a stream
-    * carrying e.g. 200 GiB of dedup/session state wants a few hundred
-    * partitions, while these fixtures carry KB-scale bounded state
-    * (fixed bucket grids, 32-register sketches, a handful of open
-    * sessions), where anything beyond a handful only multiplies
-    * per-batch store open/commit overhead. Resizing requires a new
-    * checkpoint dir (state is partition-count-keyed), which is why it is
-    * pinned at START and not varied mid-stream.
-    */
-  private[queries] def withStreamShufflePartitions[T](
-      s: org.apache.spark.sql.SparkSession, n: Int)(f: => T): T =
-    graft.GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> n.toString)(f)
-
-  /** Start a one-shot (`AvailableNow`) streaming lifecycle with the
+  /** Start a one-shot streaming lifecycle ([[OneShotStream]]) with the
     * trailing NO-DATA micro-batch disabled, for queries where that batch
     * is provably zero-effect: an r16 Scratch decomposition measured it at
     * ~0.9 s of q_stream_join's ~3.2 s lifecycle while (a) emitting zero
@@ -417,7 +362,8 @@ object AnalyticsQueries {
   private[queries] def withKernelShufflePartitionsFor[T](
       s: org.apache.spark.sql.SparkSession,
       frontier: org.apache.spark.sql.DataFrame*)(f: => T): T =
-    withStreamShufflePartitions(s, kernelPartitions(s, frontier: _*))(f)
+    graft.GraftSession.withConf(s,
+      "spark.sql.shuffle.partitions" -> kernelPartitions(s, frontier: _*).toString)(f)
 
   /** Watermark LATE-DATA accounting proven live, across a restart: run 1
     * streams the on-time half of `events` into an append-mode 6-hour
@@ -460,22 +406,15 @@ object AnalyticsQueries {
     java.nio.file.Files.createDirectories(src)
     val sink = runDir.resolve("sink").toString
     val ckpt = runDir.resolve("ckpt").toString
-    val schema = graft.Tables.parquetSchema(s, p.resolve("a").toString)
-    def run(): Unit = {
-      val q = AnalyticsQueries.withStreamShufflePartitions(s, 4) {
-        s.readStream.schema(schema).parquet(src.toString)
-          .withWatermark("ts", "3 days")
-          .groupBy(window(col("ts"), "6 hours").as("w"))
-          .agg(count(lit(1)).as("n"))
-          .select(col("w.start").as("window_start"), col("n"))
-          .writeStream.format("parquet").option("path", sink)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-    }
+    val stream = s.readStream
+      .schema(graft.Tables.parquetSchema(s, p.resolve("a").toString))
+      .parquet(src.toString)
+      .withWatermark("ts", "3 days")
+      .groupBy(window(col("ts"), "6 hours").as("w"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").as("window_start"), col("n"))
+    def run(): Unit = OneShotStream.run(stream)(_.format("parquet")
+      .option("path", sink).option("checkpointLocation", ckpt).outputMode("append"))
     java.nio.file.Files.copy(part("a"), src.resolve("ontime.parquet"))
     run()
     java.nio.file.Files.copy(part("b"), src.resolve("late.parquet"))
@@ -506,36 +445,24 @@ object AnalyticsQueries {
     * the dedup state (not batch-local distinct) is what passes the hash.
     */
   private def streamDedupQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     val srcDir = graft.Fixtures.dir("events_dup_stream", dir) { p =>
       Seq("events_a.parquet", "events_b.parquet").foreach(name =>
         java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "events.parquet"),
           java.nio.file.Paths.get(p, name)))
     }
-    val schema = graft.Tables.parquetSchema(s, srcDir)
-    val raw = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val ev =
-      (if (schema("ts").dataType == LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw).withColumn("ts", col("ts").cast("timestamp"))
-    val name = "graft_stream_dedup_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
+    val ev = graft.Tables.eventTs(s.readStream
+      .schema(graft.Tables.parquetSchema(s, srcDir))
+      .option("maxFilesPerTrigger", 1).parquet(srcDir))
     // no-data batch zero-effect here: append-mode dedup emits rows only on
     // ARRIVAL; the 3650-day watermark expires nothing within the fixture's
     // span, so the trailing batch neither emits nor evicts (see
     // withNoDataBatchesDisabled).
-    val q = withNoDataBatchesDisabled(s) { AnalyticsQueries.withStreamShufflePartitions(s, 4) {
-      ev.withWatermark("ts", "3650 days")
+    withNoDataBatchesDisabled(s) {
+      OneShotStream.drain(ev.withWatermark("ts", "3650 days")
         .dropDuplicatesWithinWatermark("event_id")
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    } }
-    q.awaitTermination()
-    s.table(name).orderBy(col("event_id"))
+        .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
+        "append")
+    }.orderBy(col("event_id"))
   }
 
   private val streamDedupOracle =
@@ -546,86 +473,52 @@ object AnalyticsQueries {
     * user's purchases within the next 2 hours, both sides watermarked
     * (the watermark + time-range condition is what lets Spark expire join
     * state — the unbounded-state trap this operator exists to avoid at
-    * 100 TB). File source over the events parquet, `AvailableNow`,
+    * 100 TB). File source over the events parquet, one-shot run,
     * append-mode memory sink; the oracle is the equivalent batch interval
     * join. Single-file source ⇒ one micro-batch ⇒ the watermark cannot
     * drop rows, so the streamed result is exactly the batch join.
     */
   private def streamJoinQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val srcDir = eventsStreamDir(dir)
-    val schema = graft.Tables.parquetSchema(s, srcDir)
-    def src(): DataFrame = {
-      val raw = s.readStream.schema(schema).parquet(srcDir)
-      (if (schema("ts").dataType == LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw).withColumn("ts", col("ts").cast("timestamp"))
-    }
-    // watermarks require TIMESTAMP (LTZ); the parquet column arrives NTZ.
-    // Session TZ is UTC in every graft entrypoint, so the cast is epoch-
-    // preserving and delta_us matches the oracle's epoch_us arithmetic.
-    val v = src().filter(col("event_type") === "view")
+    // Tables.eventTs gives both sides the TIMESTAMP (LTZ) watermarks need;
+    // session TZ is UTC in every graft entrypoint, so delta_us matches the
+    // oracle's epoch_us arithmetic.
+    val v = OneShotStream.events(s, dir).filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").cast("timestamp").as("vt"))
+        col("ts").as("vt"))
       .withWatermark("vt", "30 days")
-    val p = src().filter(col("event_type") === "purchase")
+    val p = OneShotStream.events(s, dir).filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").cast("timestamp").as("pt"))
+        col("ts").as("pt"))
       .withWatermark("pt", "30 days")
-    val name = "graft_stream_join_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
     // no-data batch zero-effect here: INNER-join eviction emits nothing,
     // and the fixture's 30-day event span ≈ the 30-day watermark delay so
     // the final eviction pass frees ~nothing before the query stops
     // (Scratch r16: 0 rows emitted, stateRows 40025 → 40025, ~0.9 s).
-    val q = withNoDataBatchesDisabled(s) { AnalyticsQueries.withStreamShufflePartitions(s, 4) {
-      v.join(p, col("v_user") === col("p_user") &&
+    withNoDataBatchesDisabled(s) {
+      OneShotStream.drain(v.join(p, col("v_user") === col("p_user") &&
           col("pt") >= col("vt") &&
           col("pt") < col("vt") + expr("INTERVAL 2 HOURS"))
         .select(col("v_user").as("user_id"), col("view_id"), col("purchase_id"),
-          (unix_micros(col("pt")) - unix_micros(col("vt"))).as("delta_us"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    } }
-    q.awaitTermination()
-    s.table(name).orderBy(col("user_id"), col("view_id"), col("purchase_id"))
+          (unix_micros(col("pt")) - unix_micros(col("vt"))).as("delta_us")),
+        "append")
+    }.orderBy(col("user_id"), col("view_id"), col("purchase_id"))
   }
 
   /** The SAME 30-minute-gap sessionization as `q_session_window`, executed
-    * as a LIVE streaming query (file source, `AvailableNow`, complete-mode
+    * as a LIVE streaming query (file source, one-shot run, complete-mode
     * memory sink — complete mode is what lets session windows emit without
     * a watermark having passed them). Shares `sessionWindowOracle`
     * verbatim: streamed stateful session merging must equal the batch
     * gaps-and-islands SQL. The memory sink holds one row per (user,
     * session) — bounded by the session count, not the event count.
     */
-  private def streamSessionQ(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val srcDir = eventsStreamDir(dir)
-    val schema = graft.Tables.parquetSchema(s, srcDir)
-    val raw = s.readStream.schema(schema).parquet(srcDir)
-    val ev =
-      (if (schema("ts").dataType == LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw).withColumn("ts", col("ts").cast("timestamp"))
-    val name = "graft_stream_session_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = AnalyticsQueries.withStreamShufflePartitions(s, 4) {
-      ev
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"), col("w.start").as("session_start"),
-          col("w.end").as("session_end"), col("n_events"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    s.table(name).orderBy(col("user_id"), col("session_start"))
-  }
+  private def streamSessionQ(s: SparkSession, dir: String): DataFrame =
+    OneShotStream.drain(OneShotStream.events(s, dir)
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(col("user_id"), col("w.start").as("session_start"),
+        col("w.end").as("session_end"), col("n_events")),
+      "complete").orderBy(col("user_id"), col("session_start"))
 
   /** OHLC downsampling bars: per (event_type, day) the opening/closing
     * values selected by lexicographic struct min/max over the unique

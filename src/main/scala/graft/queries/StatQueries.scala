@@ -1065,34 +1065,22 @@ object StatQueries {
       |ORDER BY p1."column"""".stripMargin
 
   /** LIVE classification-report maintenance: the confusion matrix as a
-    * complete-mode streaming aggregation (AvailableNow over the same
+    * complete-mode streaming aggregation (one-shot run over the same
     * event feed), report derived from the class²-bounded sink state via
     * [[graft.analytics.Eval.classificationReportFromConfusion]]. The
     * oracle is `q_eval_metrics`' batch SQL verbatim — the streaming
     * maintenance path must land on the identical report.
     */
   private def streamEvalQ(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = AnalyticsQueries.eventsStreamDir(dir)
-    val schema = graft.Tables.parquetSchema(s, srcDir)
-    val raw = s.readStream.schema(schema).parquet(srcDir)
     val pred = when(col("value") >= 300, "error")
       .when(col("value") >= 200, "click")
       .when(col("value") >= 100, "purchase")
       .when(col("value") >= 50, "view")
       .otherwise("signup")
-    val name = "graft_stream_eval_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = AnalyticsQueries.withStreamShufflePartitions(s, 4) {
-      raw
-        .groupBy(col("event_type").as("truth"), pred.as("pred"))
-        .agg(count(lit(1)).as("c"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    graft.analytics.Eval.classificationReportFromConfusion(s.table(name))
+    val confusion = OneShotStream.drain(OneShotStream.events(s, dir)
+      .groupBy(col("event_type").as("truth"), pred.as("pred"))
+      .agg(count(lit(1)).as("c")), "complete")
+    graft.analytics.Eval.classificationReportFromConfusion(confusion)
       .select(col("cls"), col("tp"), col("fp"), col("fn"),
         col("precision").as("prec"), col("recall").as("rec"), col("f1"))
       .orderBy(col("cls"))

@@ -754,28 +754,16 @@ object SummaryQueries {
       |FROM cnt GROUP BY source ORDER BY source""".stripMargin
 
   /** The Count-Min grid maintained as a LIVE streaming aggregation
-    * (complete-mode groupBy over the event stream, AvailableNow): the
+    * (complete-mode groupBy over the event stream, one-shot run): the
     * final in-memory sink state must equal the batch grid over the same
     * events — the oracle IS that batch grid, proving the sketch's
     * streaming maintenance path produces the identical mergeable summary.
     */
-  private def streamCountMinQ(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = AnalyticsQueries.eventsStreamDir(dir)
-    val schema = graft.Tables.parquetSchema(s, srcDir)
-    val raw = s.readStream.schema(schema).parquet(srcDir)
-    val name = "graft_stream_cm_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = AnalyticsQueries.withStreamShufflePartitions(s, 4) {
-      graft.analytics.CountMin
-        .sketch(raw.select(col("user_id")), "user_id", depth = 4, width = 512)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    s.table(name).orderBy(col("r"), col("cell"))
-  }
+  private def streamCountMinQ(s: SparkSession, dir: String): DataFrame =
+    OneShotStream.drain(graft.analytics.CountMin.sketch(
+        OneShotStream.events(s, dir).select(col("user_id")), "user_id",
+        depth = 4, width = 512), "complete")
+      .orderBy(col("r"), col("cell"))
 
   private val streamCountMinOracle = {
     val cellHash = OracleSql.md5U32Sql(
@@ -1227,27 +1215,15 @@ object SummaryQueries {
   }
 
   /** The HLL register table maintained as a LIVE streaming aggregation
-    * (complete-mode max per register, AvailableNow) — with
+    * (complete-mode max per register, one-shot run) — with
     * `q_stream_count_min` this pins BOTH mergeable summaries' streaming
     * maintenance ≡ batch; the oracle is the batch register table.
     */
-  private def streamHllQ(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = AnalyticsQueries.eventsStreamDir(dir)
-    val schema = graft.Tables.parquetSchema(s, srcDir)
-    val raw = s.readStream.schema(schema).parquet(srcDir)
-    val name = "graft_stream_hll_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = AnalyticsQueries.withStreamShufflePartitions(s, 4) {
-      graft.analytics.HllGrid
-        .registers(raw.select(col("user_id")), "user_id", m = 256)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    s.table(name).orderBy(col("idx"))
-  }
+  private def streamHllQ(s: SparkSession, dir: String): DataFrame =
+    OneShotStream.drain(graft.analytics.HllGrid.registers(
+        OneShotStream.events(s, dir).select(col("user_id")), "user_id", m = 256),
+        "complete")
+      .orderBy(col("idx"))
 
   private val streamHllOracle = {
     val u32 = OracleSql.md5U32Sql("'hllg:' || CAST(user_id AS VARCHAR)")
@@ -1264,31 +1240,18 @@ object SummaryQueries {
 
   /** PSI drift monitored as a LIVE stream: the current value-bucket
     * histogram is maintained by a complete-mode streaming aggregation
-    * (AvailableNow over the event feed) and compared against the static
+    * (one-shot run over the event feed) and compared against the static
     * first-week reference histogram with the exact [[graft.analytics
     * .Drift.psi]] fold — the production shape of a drift tripwire (the
     * reference is a broadcast lookup; only the 10-bucket summary crosses
     * from the stream). The oracle recomputes both histograms in batch.
     */
   private def streamPsiQ(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = AnalyticsQueries.eventsStreamDir(dir)
-    val schema = graft.Tables.parquetSchema(s, srcDir)
     def bucketOf(c: org.apache.spark.sql.Column) =
       least(greatest((c.cast("long") / 5000L).cast("long"), lit(0L)), lit(9L))
-    val raw = s.readStream.schema(schema).parquet(srcDir)
-    val name = "graft_stream_psi_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = AnalyticsQueries.withStreamShufflePartitions(s, 4) {
-      raw
-        .select(bucketOf(round(col("value") * 100, 0)).as("bucket"))
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n_cur"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
-    val cur = s.table(name)
+    val cur = OneShotStream.drain(OneShotStream.events(s, dir)
+      .select(bucketOf(round(col("value") * 100, 0)).as("bucket"))
+      .groupBy(col("bucket")).agg(count(lit(1)).as("n_cur")), "complete")
     val ref = Tables.events(s, dir)
       .filter(col("ts") < lit("2024-01-08 00:00:00").cast("timestamp"))
       .select(bucketOf(round(col("value") * 100, 0)).as("bucket"))
@@ -1461,29 +1424,17 @@ object SummaryQueries {
     * under the hash.
     */
   private def streamQuantileQ(s: SparkSession, dir: String): DataFrame = {
-    val srcDir = AnalyticsQueries.eventsStreamDir(dir)
-    val schema = graft.Tables.parquetSchema(s, srcDir)
-    val raw = s.readStream.schema(schema).parquet(srcDir)
     val bw = 1000L
-    val name = "graft_stream_qh_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = AnalyticsQueries.withStreamShufflePartitions(s, 4) {
-      raw
-        .filter(col("value").isNotNull)
-        .select(round(col("value") * 100, 0).cast("long").as("cents"))
-        .withColumn("bucket", expr(s"cents div $bw"))
-        .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
+    val hist = OneShotStream.drain(OneShotStream.events(s, dir)
+      .filter(col("value").isNotNull)
+      .select(round(col("value") * 100, 0).cast("long").as("cents"))
+      .withColumn("bucket", expr(s"cents div $bw"))
+      .groupBy(col("bucket")).agg(count(lit(1)).as("cnt")), "complete")
     val base = Tables.events(s, dir)
       .filter(col("value").isNotNull)
       .select(round(col("value") * 100, 0).cast("long").as("cents"))
     graft.analytics.Quantiles.exactQuantilesFromHistogram(
-        s.table(name), base, "cents", Seq(250, 500, 750, 900),
+        hist, base, "cents", Seq(250, 500, 750, 900),
         bucketWidth = bw)
       .orderBy(col("p"))
   }

@@ -4,7 +4,9 @@ import org.apache.spark.sql.types._
 
 /** Declared `StructType`s for all reference tables (SURVEY.md §1.2, FIXTURES.md
   * §1) — fixed schemas, no inference, mirroring the DDLs in
-  * `config/flink/create.sql`.
+  * `config/flink/create.sql`. `SchemasSpec` checks each against the frame
+  * that produces the table (field names and types; nullability aside).
+  * The Kafka-edge pre-cast schema is [[graft.ingest.Normalize.kafkaEdgeSchema]].
   */
 object Schemas {
 
@@ -63,9 +65,4 @@ object Schemas {
     StructField("raw_report", StringType),
     StructField("created_at", TimestampType, nullable = false),
     StructField("created_day", DateType)))
-
-  /** Kafka-edge pre-cast schema: see
-    * [[graft.ingest.Normalize.kafkaEdgeSchema]] (`create.sql:72-93`).
-    */
-  def kafkaEdge: StructType = graft.ingest.Normalize.kafkaEdgeSchema
 }

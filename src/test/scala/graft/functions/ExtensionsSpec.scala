@@ -27,4 +27,25 @@ class ExtensionsSpec extends SparkSpec {
     import s2.implicits._
     assert(s2.sql("SELECT java_hash('abc') AS h").as[Int].head() == "abc".hashCode)
   }
+
+  test("every function rejects zero and wrong argument counts with WRONG_NUM_ARGS") {
+    GraftExtensions.register(spark)
+    // (function, a call with one argument too many or too few)
+    val wrongArity = Seq(
+      "java_hash" -> "java_hash('a', 'b')",
+      "java_hash_bucket" -> "java_hash_bucket('a')",
+      "dot_product" -> "dot_product(array(1.0D))",
+      "md5_field" -> "md5_field('a', 0)",
+      "normalize_unicode" -> "normalize_unicode('a')")
+    assert(wrongArity.map(_._1).toSet == GraftExtensions.functions.map(_._1).toSet)
+    wrongArity.foreach { case (fn, call) =>
+      Seq(s"$fn()", call).foreach { sql =>
+        val e = intercept[org.apache.spark.sql.AnalysisException] {
+          spark.sql(s"SELECT $sql").collect()
+        }
+        assert(e.getCondition.startsWith("WRONG_NUM_ARGS") && e.getMessage.contains(fn),
+          s"$sql: ${e.getMessage}")
+      }
+    }
+  }
 }
