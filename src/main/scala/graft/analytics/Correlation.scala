@@ -4,6 +4,7 @@ import graft.Anchor._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Field.md5U32
 
 /** Rank statistics over groups. Spearman's ρ is computed from INTEGER ranks
   * (`row_number` with a deterministic id tie-break, so ranks are a
@@ -333,7 +334,6 @@ object Correlation {
                         yCol: String, idCol: String, pairsPerGroup: Int,
                         seed: String = "ktau"): DataFrame = {
     require(pairsPerGroup >= 1, s"need at least 1 pair, got $pairsPerGroup")
-    def md5U32(c: Column): Column = graft.functions.Md5Field.md5U32(c)
     val wr = Window.partitionBy(col(groupCol))
       .orderBy(md5(concat_ws(":", lit(seed), col(idCol).cast("string"))), col(idCol))
     val ranked = df

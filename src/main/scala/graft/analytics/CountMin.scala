@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Field.md5U32
 
 /** Count-Min sketch: a mergeable `depth × width` integer counter grid for
   * approximate frequency queries over corpora too large (or too streaming)
@@ -25,9 +26,6 @@ import org.apache.spark.sql.functions._
   * partitioning dependence).
   */
 object CountMin {
-
-  private def md5U32(c: Column): Column =
-    graft.functions.Md5Field.md5U32(c)
 
   private def cellsOf(item: Column, depth: Int, width: Int): Column =
     array((0 until depth).map { r =>

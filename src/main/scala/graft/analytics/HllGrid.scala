@@ -1,7 +1,8 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Field.md5U32
 
 /** From-scratch HyperLogLog as a DETERMINISTIC register table (Flajolet et
   * al. 2007) — the distinct-count companion to [[CountMin]]'s frequency
@@ -26,9 +27,6 @@ import org.apache.spark.sql.functions._
   * broadcast fill of untouched registers. The corpus is scanned once.
   */
 object HllGrid {
-
-  private def md5U32(c: Column): Column =
-    graft.functions.Md5Field.md5U32(c)
 
   /** The register table: one row per TOUCHED register (idx, max rank);
     * merge two grids with `unionByName → groupBy(idx) → max(m)`.

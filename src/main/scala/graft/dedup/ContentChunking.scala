@@ -1,8 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Field.md5U32
 
 /** Content-defined chunking (Rabin/CDC-style, cf. LBFS and every
   * dedupe-storage system since): cut each document into variable-size
@@ -26,9 +27,6 @@ import org.apache.spark.sql.functions._
   * the chunk hash.
   */
 object ContentChunking {
-
-  private def md5U32(c: Column): Column =
-    graft.functions.Md5Field.md5U32(c)
 
   /** One row per (doc, chunk): ordinal, token count, start position and the
     * chunk content hash. Expected chunk length ≈ `divisor` tokens.

@@ -13,19 +13,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout:
   * {{{
   *   table/
-  *     data/v<N>/part-*.parquet    files written by commit N
-  *     _manifests/v<N>.json        snapshot N = list of data files it reads
+  *     data/<uuid>/part-*.parquet      files written by one commit (main or branch)
+  *     _manifests/v<N>.json            main snapshot N = list of data files it reads
+  *     _manifests/<branch>.v<K>.json   branch commit K
+  *     _branches/<branch>              branch ref: the main snapshot it forked from
   * }}}
   *
-  * The **manifest rename is the commit point**: data files are written first
-  * (unreferenced until the manifest lands — a crash leaves only orphans, never
-  * a corrupt table), then the manifest is staged and atomically renamed.
-  * Readers resolve a snapshot by listing `_manifests` — no mutable pointer
-  * file, so a half-written commit is simply invisible. [[commit]] assumes a
-  * single writer (the reference serializes writes through cron/Flink the
-  * same way); concurrent writers use [[commitAtomic]] /
-  * [[commitAtomicChecked]] — the optimistic CAS-on-commit-sequence protocol
-  * of a Nessie/Iceberg catalog, with key-overlap validation on retry.
+  * One commit protocol serves every writer — the optimistic compare-and-swap
+  * on a ref's commit sequence of a Nessie/Iceberg catalog. The data is
+  * written once into a fresh writer-unique `data/<uuid>` dir (unreferenced
+  * until a manifest lands: a crash or a failed write leaves only orphans,
+  * never a corrupt or blocked table), then the manifest is CAS-created as
+  * the ref's next version ([[casPublish]]). Concurrent appends all land, in
+  * whichever order the CAS decides; a commit whose content was computed
+  * from a snapshot it read throws `ConcurrentModificationException` if the
+  * ref moved past that snapshot. Readers resolve a snapshot by listing
+  * `_manifests` — no mutable pointer file, so a half-written commit is
+  * simply invisible.
   *
   * Append commits reference the previous snapshot's files plus the new ones —
   * old snapshots stay readable (time travel) until expired.
@@ -37,30 +41,47 @@ object Versioned {
 
   private def manifestDir(tableDir: String) = new Path(tableDir, "_manifests")
 
-  /** Sorted snapshot versions present (committed manifests only). */
-  def versions(spark: SparkSession, tableDir: String): Seq[Int] = {
+  /** A ref is main (`None`) or a named branch. Its version `v` is the
+    * manifest `v<v>.json` on main and `<branch>.v<v>.json` on a branch;
+    * branch names cannot contain a dot, so neither pattern matches the
+    * other's files.
+    */
+  private def manifestPath(tableDir: String, ref: Option[String], v: Int): Path =
+    new Path(manifestDir(tableDir), ref.fold("")(_ + ".") + s"v$v.json")
+
+  /** Sorted committed versions of a ref. */
+  private def refVersions(spark: SparkSession, tableDir: String,
+                          ref: Option[String]): Seq[Int] = {
     val f = fs(spark, tableDir)
     val md = manifestDir(tableDir)
+    val name = (ref.fold("")(b => java.util.regex.Pattern.quote(b + ".")) +
+      "v(\\d+)\\.json").r
     if (!f.exists(md)) Seq.empty
     else f.listStatus(md).toSeq.map(_.getPath.getName)
-      .collect { case s if s.matches("v\\d+\\.json") =>
-        s.stripPrefix("v").stripSuffix(".json").toInt }
+      .collect { case name(v) => v.toInt }
       .sorted
   }
 
-  private def readManifest(spark: SparkSession, tableDir: String, v: Int): Seq[String] = {
-    val f = fs(spark, tableDir)
-    val in = f.open(new Path(manifestDir(tableDir), s"v$v.json"))
+  /** Sorted snapshot versions present (committed manifests only). */
+  def versions(spark: SparkSession, tableDir: String): Seq[Int] =
+    refVersions(spark, tableDir, None)
+
+  private def readLines(f: FileSystem, p: Path): Seq[String] = {
+    val in = f.open(p)
     val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    // manifest format: one relative path per line after the version header —
-    // line-oriented to avoid hand-rolled JSON parsing
-    txt.linesIterator.drop(1).filter(_.nonEmpty).toSeq
+    txt.linesIterator.filter(_.nonEmpty).toSeq
   }
 
-  private def writeManifest(spark: SparkSession, tableDir: String, v: Int,
-                            files: Seq[String]): Unit =
-    atomicWrite(fs(spark, tableDir),
-      new Path(manifestDir(tableDir), s"v$v.json"), s"version=$v" +: files)
+  /** The data files of `ref` at version `v` — one relative path per line
+    * after the version header, line-oriented to avoid hand-rolled JSON
+    * parsing. Version 0 is the ref before its first commit: empty on main,
+    * the fork point on a branch.
+    */
+  private def readManifest(spark: SparkSession, tableDir: String,
+                           ref: Option[String], v: Int): Seq[String] =
+    if (v > 0) readLines(fs(spark, tableDir), manifestPath(tableDir, ref, v)).drop(1)
+    else ref.fold(Seq.empty[String])(b =>
+      readManifest(spark, tableDir, None, branchBase(spark, tableDir, b)))
 
   /** Relative data-file paths under `tableDir` for commit directory `dataDir`. */
   private def listDataFiles(spark: SparkSession, tableDir: String,
@@ -78,33 +99,17 @@ object Versioned {
     out.toSeq.sorted
   }
 
-  /** Commit `df` as a new snapshot. `append = true` carries the previous
-    * snapshot's files forward; `false` is a logical overwrite (old files stay
-    * on disk for time travel until expired). Returns the new version.
-    */
-  def commit(df: DataFrame, tableDir: String, append: Boolean = true): Int = {
-    val spark = df.sparkSession
-    val prev = versions(spark, tableDir)
-    val v = prev.lastOption.getOrElse(0) + 1
-    val dataDir = new Path(tableDir, s"data/v$v")
-    df.write.mode("errorifexists").parquet(dataDir.toString)
-    val newFiles = listDataFiles(spark, tableDir, dataDir)
-    val carried = if (append && prev.nonEmpty)
-      readManifest(spark, tableDir, prev.last) else Seq.empty
-    writeManifest(spark, tableDir, v, carried ++ newFiles)
-    v
-  }
-
-  // ---- multi-writer commits (the Nessie/Iceberg optimistic-commit analog:
+  // ---- the commit protocol (the Nessie/Iceberg optimistic-commit analog:
   // reference `docker-compose.yml:100-119` runs a Nessie catalog whose ref
   // update is a compare-and-swap; this is the same protocol over the
   // manifest store) ----------------------------------------------------
 
-  /** CAS publish of a manifest: stage the content to a hidden tmp file, then
-    * rename onto the final name ONLY if no manifest claimed that version
-    * first. The version number in the file name IS the commit sequence, so
-    * "rename-if-unchanged" degenerates to "rename-if-absent": a writer that
-    * lost the race finds `v<N>.json` taken and must re-read the new head.
+  /** CAS create-if-absent of a metadata file (a manifest or a branch ref):
+    * stage the content to a hidden tmp file, then rename onto the final name
+    * ONLY if nothing claimed that name first. A manifest's version number IS
+    * the ref's commit sequence, so "rename-if-unchanged" degenerates to
+    * "rename-if-absent": a writer that lost the race finds `v<N>.json` taken
+    * and must re-read the new head.
     *
     * Atomicity of the publish: on HDFS, `rename` with an existing
     * destination fails atomically in the NameNode; on an object store you
@@ -133,31 +138,43 @@ object Versioned {
   private val MaxRetries = 8
   private val BackoffMs = 25L
 
-  /** Optimistic concurrent APPEND commit: write data files once (to a
-    * writer-unique directory — no data is ever rewritten on retry), then
-    * loop { read head → carried = head's files → CAS-publish head+1 }. An
-    * append merges cleanly against ANY interleaved commit, so losing the
-    * race only costs re-reading one manifest; [[MaxRetries]] with linear
-    * [[BackoffMs]] backoff bounds livelock under a commit storm. Returns
-    * the version that actually landed. Both racers keep their data: no
-    * lost update, the two appends serialize in whichever order the CAS
-    * decides.
+  /** The one commit: write `df` once into a fresh `data/<uuid>` dir (never
+    * rewritten on retry), then [[publish]] its files on `ref`.
     */
-  def commitAtomic(df: DataFrame, tableDir: String): Int = {
-    val spark = df.sparkSession
-    val dataDir = new Path(tableDir,
-      s"data/c_${java.util.UUID.randomUUID().toString}")
+  private def commitCore(df: DataFrame, tableDir: String, ref: Option[String],
+                         append: Boolean, readVersion: Option[Int]): Int = {
+    val dataDir = new Path(tableDir, s"data/${java.util.UUID.randomUUID()}")
     df.write.mode("errorifexists").parquet(dataDir.toString)
-    val newFiles = listDataFiles(spark, tableDir, dataDir)
+    publish(df.sparkSession, tableDir, ref,
+      listDataFiles(df.sparkSession, tableDir, dataDir), append, readVersion)
+  }
+
+  /** Publish `files` as the next version of `ref`: loop { read the head →
+    * manifest = the head's files (if `append`) ++ `files` → CAS-create
+    * head+1 }. An append merges cleanly against any interleaved commit, so
+    * losing the race costs one manifest re-read; [[MaxRetries]] with linear
+    * [[BackoffMs]] backoff bounds livelock under a commit storm.
+    * `readVersion` is the snapshot the caller computed `files` from: if the
+    * head is not that version the commit throws
+    * `ConcurrentModificationException` instead of retrying, because
+    * publishing would drop the other commit. Returns the version that
+    * landed.
+    */
+  private def publish(spark: SparkSession, tableDir: String, ref: Option[String],
+                      files: Seq[String], append: Boolean,
+                      readVersion: Option[Int]): Int = {
     val f = fs(spark, tableDir)
     var attempt = 0
     while (attempt <= MaxRetries) {
-      val prev = versions(spark, tableDir)
-      val v = prev.lastOption.getOrElse(0) + 1
-      val carried = if (prev.nonEmpty) readManifest(spark, tableDir, prev.last)
-                    else Seq.empty
-      if (casPublish(f, tableDir, new Path(manifestDir(tableDir), s"v$v.json"),
-          s"version=$v" +: (carried ++ newFiles)))
+      val head = refVersions(spark, tableDir, ref).lastOption.getOrElse(0)
+      for (r <- readVersion if r != head)
+        throw new java.util.ConcurrentModificationException(
+          s"commit to ${ref.getOrElse("main")} of $tableDir was computed from " +
+            s"v$r but the head is v$head")
+      val carried = if (append) readManifest(spark, tableDir, ref, head) else Seq.empty
+      val v = head + 1
+      if (casPublish(f, tableDir, manifestPath(tableDir, ref, v),
+          s"version=$v" +: (carried ++ files)))
         return v
       attempt += 1
       Thread.sleep(BackoffMs * attempt) // linear bounded backoff
@@ -166,15 +183,24 @@ object Versioned {
       s"commit to $tableDir lost the CAS race $MaxRetries times; giving up")
   }
 
+  /** Commit `df` as a new snapshot. `append = true` carries the head
+    * snapshot's files forward; `false` is a logical overwrite (old files stay
+    * on disk for time travel until expired). Concurrent appends all land
+    * (no lost update). Returns the new version.
+    */
+  def commit(df: DataFrame, tableDir: String, append: Boolean = true): Int =
+    commitCore(df, tableDir, None, append, None)
+
   /** Optimistic commit WITH key-overlap validation (Iceberg's
     * `validateNoConflictingData` analog): the caller claims its rows only
     * touch `df`'s key set and that it read snapshot `expectedVersion`. If
-    * the head advanced, the retry loop diffs `expectedVersion → head`
-    * ([[changedKeys]] — the same check [[branchConflicts]] uses) and
-    * intersects with the incoming keys: disjoint ⇒ the interleaved commits
-    * are independent and the append retries cleanly; overlapping ⇒ throws
+    * the head advanced, it diffs `expectedVersion → head` ([[changedKeys]]
+    * — the same check [[branchConflicts]] uses) and intersects with the
+    * incoming keys: disjoint ⇒ the interleaved commits are independent and
+    * the append lands on the validated head; overlapping ⇒ throws
     * `ConcurrentModificationException` with sample keys, because appending
-    * would silently double-write a key both writers touched.
+    * would silently double-write a key both writers touched. A commit that
+    * lands after the validation also throws it.
     */
   def commitAtomicChecked(df: DataFrame, tableDir: String, keys: Seq[String],
                           expectedVersion: Int): Int = {
@@ -186,9 +212,9 @@ object Versioned {
       val head = versions(spark, tableDir).lastOption.getOrElse(0)
       if (head != expectedVersion) {
         val baseDf =
-          if (expectedVersion == 0) read(spark, tableDir).limit(0)
+          if (expectedVersion == 0) read(spark, tableDir, Some(head)).limit(0)
           else read(spark, tableDir, Some(expectedVersion))
-        val moved = changedKeys(baseDf, read(spark, tableDir), keys)
+        val moved = changedKeys(baseDf, read(spark, tableDir, Some(head)), keys)
         val sample = moved.join(incomingKeys, keys, "inner").limit(5).collect()
         if (sample.nonEmpty)
           throw new java.util.ConcurrentModificationException(
@@ -196,7 +222,7 @@ object Versioned {
               "with overlapping keys: " +
               sample.map(_.toSeq.mkString("(", ",", ")")).mkString(", "))
       }
-      commitAtomic(df, tableDir)
+      commitCore(df, tableDir, None, append = true, readVersion = Some(head))
     } finally { incomingKeys.unpersist(); () }
   }
 
@@ -207,18 +233,20 @@ object Versioned {
     require(vs.nonEmpty, s"no committed snapshots under $tableDir")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"snapshot v$v does not exist (have: $vs)")
-    val files = readManifest(spark, tableDir, v).map(p => s"$tableDir/$p")
+    val files = readManifest(spark, tableDir, None, v).map(p => s"$tableDir/$p")
     spark.read.parquet(files: _*)
   }
 
-  /** MERGE INTO as a snapshot commit: read the current snapshot, apply the
-    * key-dedup merge ([[graft.ops.Upsert]]), commit as a logical overwrite.
-    * The manifest rename makes the merge atomic — readers see the old or the
-    * new table, never a partial rewrite (strictly stronger than the
-    * backup-swap file dance in `StreamingIngest.upsertFullSwap`) — and the
-    * pre-merge snapshot stays time-travelable until expired. New data files
-    * land in a fresh `data/v<N>` directory, so the merge never overwrites
-    * files it is still reading.
+  /** MERGE INTO as a snapshot commit: read the head snapshot, apply the
+    * key-dedup merge ([[graft.ops.Upsert]]), commit as a logical overwrite
+    * computed from that head. The manifest CAS makes the merge atomic —
+    * readers see the old or the new table, never a partial rewrite
+    * (strictly stronger than the backup-swap file dance in
+    * `StreamingIngest.upsertFullSwap`) — and a concurrent commit that lands
+    * first makes this one throw instead of being overwritten. The pre-merge
+    * snapshot stays time-travelable until expired. New data files land in a
+    * fresh `data/<uuid>` directory, so the merge never overwrites files it
+    * is still reading.
     */
   def upsert(incoming: DataFrame, tableDir: String, keys: Seq[String],
              precedence: org.apache.spark.sql.Column): Int = {
@@ -237,11 +265,11 @@ object Versioned {
       s"versioned upsert into $tableDir: key columns ${keys.mkString(",")} " +
         "must be non-null (PK constraint); route identity-less rows to a " +
         "DLQ before the keyed table")
+    val head = versions(spark, tableDir).lastOption.getOrElse(0)
     val existing =
-      if (versions(spark, tableDir).isEmpty) incoming.limit(0)
-      else read(spark, tableDir)
+      if (head == 0) incoming.limit(0) else read(spark, tableDir, Some(head))
     val merged = graft.ops.Upsert.upsert(existing, incoming, keys, precedence, precedence)
-    commit(merged, tableDir, append = false)
+    commitCore(merged, tableDir, None, append = false, readVersion = Some(head))
   }
 
   /** Change feed between two snapshots: rows only in `to` tagged `insert`,
@@ -263,32 +291,15 @@ object Versioned {
   // `config/flink/create.sql:1-13` pins a Nessie `main` ref; this is the
   // same named-ref surface over the manifest store) ---------------------
 
-  /** Branch commits live beside main's: manifests as
-    * `_manifests/<branch>.v<K>.json` (the dot keeps them invisible to
-    * [[versions]]' `v\d+.json` match), data under `data/<branch>/v<K>`,
-    * and the branch ref itself as `_branches/<branch>` recording the main
+  /** A branch is a ref beside main: its commits are manifests
+    * `_manifests/<branch>.v<K>.json` written by the same commit protocol,
+    * and the ref itself is `_branches/<branch>`, recording the main
     * snapshot it forked from. All paths in every manifest are
-    * tableDir-relative, so a fast-forward merge is ONE atomic manifest
-    * rename on main that adopts the branch head's file list — zero data
-    * movement, exactly the metadata-pointer semantics of a catalog ref
-    * update. Same single-writer assumption as [[commit]].
+    * tableDir-relative, so a fast-forward merge is ONE manifest CAS on main
+    * that adopts the branch head's file list — zero data movement, exactly
+    * the metadata-pointer semantics of a catalog ref update.
     */
   private def branchDir(tableDir: String) = new Path(tableDir, "_branches")
-
-  private def readLines(f: FileSystem, p: Path): Seq[String] = {
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    txt.linesIterator.filter(_.nonEmpty).toSeq
-  }
-
-  private def atomicWrite(f: FileSystem, p: Path, lines: Seq[String]): Unit = {
-    f.mkdirs(p.getParent)
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, p))
-      throw new java.io.IOException(s"ref update of ${p.getName} lost a rename race")
-  }
 
   /** Branch names with a committed ref file. */
   def branches(spark: SparkSession, tableDir: String): Seq[String] = {
@@ -309,73 +320,32 @@ object Versioned {
   }
 
   /** Local commit numbers on a branch (empty until the first branch commit). */
-  def branchVersions(spark: SparkSession, tableDir: String, name: String): Seq[Int] = {
-    val f = fs(spark, tableDir)
-    val md = manifestDir(tableDir)
-    if (!f.exists(md)) Seq.empty
-    else f.listStatus(md).toSeq.map(_.getPath.getName)
-      .collect { case s if s.matches(java.util.regex.Pattern.quote(name) + "\\.v\\d+\\.json") =>
-        s.stripPrefix(name + ".v").stripSuffix(".json").toInt }
-      .sorted
-  }
+  def branchVersions(spark: SparkSession, tableDir: String, name: String): Seq[Int] =
+    refVersions(spark, tableDir, Some(name))
 
   /** Create `name` from a main snapshot (default: current head). Metadata
-    * only — the branch starts reading the fork point's files.
+    * only — the branch starts reading the fork point's files. The ref file
+    * is CAS-created, so of two concurrent creators exactly one wins.
     */
   def createBranch(spark: SparkSession, tableDir: String, name: String,
                    fromVersion: Option[Int] = None): Unit = {
     require(name.matches("[A-Za-z0-9_-]+"), s"illegal branch name: $name")
-    // a branch named v<digits> would put its data at data/v<k>/..., squarely
-    // inside main's commit-directory namespace — refuse at creation
-    require(!name.matches("v\\d+"), s"branch name $name collides with main's version namespace")
-    val f = fs(spark, tableDir)
     val vs = versions(spark, tableDir)
     require(vs.nonEmpty, s"no committed snapshots under $tableDir to branch from")
     val base = fromVersion.getOrElse(vs.last)
     require(vs.contains(base), s"snapshot v$base does not exist (have: $vs)")
-    val p = new Path(branchDir(tableDir), name)
-    require(!f.exists(p), s"branch $name already exists")
-    atomicWrite(f, p, Seq(s"branch=$name", s"base=$base"))
+    require(casPublish(fs(spark, tableDir), tableDir, new Path(branchDir(tableDir), name),
+      Seq(s"branch=$name", s"base=$base")), s"branch $name already exists")
   }
 
   /** Commit `df` to a branch. `append = true` carries the branch head's
-    * files forward. Returns the branch-local commit number.
+    * files forward (the fork point's before the first branch commit).
+    * Returns the branch-local commit number.
     */
   def commitToBranch(df: DataFrame, tableDir: String, name: String,
                      append: Boolean = true): Int = {
-    val spark = df.sparkSession
-    val base = branchBase(spark, tableDir, name) // asserts the branch exists
-    val prev = branchVersions(spark, tableDir, name)
-    // a dropped-then-recreated branch may have left data dirs behind (its
-    // files can be live in a merged main manifest, so dropBranch cannot
-    // delete them) — number past any surviving data dir, not just past the
-    // surviving manifests, or the errorifexists write bricks the branch
-    val f0 = fs(spark, tableDir)
-    val dataRoot = new Path(tableDir, s"data/$name")
-    val dirK =
-      if (!f0.exists(dataRoot)) 0
-      else f0.listStatus(dataRoot).toSeq.map(_.getPath.getName)
-        .collect { case s if s.matches("v\\d+") => s.stripPrefix("v").toInt }
-        .maxOption.getOrElse(0)
-    val k = math.max(prev.lastOption.getOrElse(0), dirK) + 1
-    val dataDir = new Path(tableDir, s"data/$name/v$k")
-    df.write.mode("errorifexists").parquet(dataDir.toString)
-    val newFiles = listDataFiles(spark, tableDir, dataDir)
-    val carried =
-      if (!append) Seq.empty
-      else if (prev.nonEmpty) readBranchManifest(spark, tableDir, name, prev.last)
-      else readManifest(spark, tableDir, base)
-    val f = fs(spark, tableDir)
-    f.mkdirs(manifestDir(tableDir))
-    atomicWrite(f, new Path(manifestDir(tableDir), s"$name.v$k.json"),
-      s"version=$k" +: (carried ++ newFiles))
-    k
-  }
-
-  private def readBranchManifest(spark: SparkSession, tableDir: String,
-                                 name: String, k: Int): Seq[String] = {
-    val f = fs(spark, tableDir)
-    readLines(f, new Path(manifestDir(tableDir), s"$name.v$k.json")).drop(1)
+    branchBase(df.sparkSession, tableDir, name) // asserts the branch exists
+    commitCore(df, tableDir, Some(name), append, None)
   }
 
   /** Read a branch head (or an earlier branch-local commit). A branch with
@@ -383,16 +353,11 @@ object Versioned {
     */
   def readBranch(spark: SparkSession, tableDir: String, name: String,
                  version: Option[Int] = None): DataFrame = {
-    val base = branchBase(spark, tableDir, name)
     val ks = branchVersions(spark, tableDir, name)
-    val files = version match {
-      case Some(k) =>
-        require(ks.contains(k), s"branch $name has no commit v$k (have: $ks)")
-        readBranchManifest(spark, tableDir, name, k)
-      case None =>
-        if (ks.isEmpty) readManifest(spark, tableDir, base)
-        else readBranchManifest(spark, tableDir, name, ks.last)
-    }
+    version.foreach(k =>
+      require(ks.contains(k), s"branch $name has no commit v$k (have: $ks)"))
+    val files = readManifest(spark, tableDir, Some(name),
+      version.getOrElse(ks.lastOption.getOrElse(0)))
     spark.read.parquet(files.map(p => s"$tableDir/$p"): _*)
   }
 
@@ -423,45 +388,42 @@ object Versioned {
     * path). Diverged: key-level three-way merge — main rows keep every key
     * the branch didn't touch, branch rows win for keys it did (inserts and
     * updates carry over; branch deletes drop the key) — REFUSED with the
-    * offending keys if both sides modified the same key. Returns the new
-    * main version. The pre-merge main head stays time-travelable.
+    * offending keys if both sides modified the same key. Either way the
+    * commit is computed from the main head it read, so a main commit that
+    * lands first makes the merge throw `ConcurrentModificationException`.
+    * Returns the new main version. The pre-merge main head stays
+    * time-travelable.
     */
   def mergeBranch(spark: SparkSession, tableDir: String, name: String,
                   keys: Seq[String]): Int = {
-    import org.apache.spark.sql.functions.col
     val base = branchBase(spark, tableDir, name)
     val mainHead = versions(spark, tableDir).last
-    val ks = branchVersions(spark, tableDir, name)
     if (mainHead == base) {
-      // fast-forward: adopt the branch head's manifest as the next main
+      // fast-forward: adopt the branch head's files as the next main
       // snapshot (a branch with no commits merges to a no-op new snapshot)
-      val files =
-        if (ks.isEmpty) readManifest(spark, tableDir, base)
-        else readBranchManifest(spark, tableDir, name, ks.last)
-      val v = mainHead + 1
-      writeManifest(spark, tableDir, v, files)
-      v
+      val files = readManifest(spark, tableDir, Some(name),
+        branchVersions(spark, tableDir, name).lastOption.getOrElse(0))
+      publish(spark, tableDir, None, files, append = false, readVersion = Some(mainHead))
     } else {
       // one diff pass each side: branchTouched feeds both the conflict
       // check and the merge itself (branchConflicts would recompute it)
       val baseDf = read(spark, tableDir, Some(base))
       val branchHead = readBranch(spark, tableDir, name)
-      val main = read(spark, tableDir)
+      val main = read(spark, tableDir, Some(mainHead))
       val branchTouched = changedKeys(baseDf, branchHead, keys)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sample = changedKeys(baseDf, main, keys)
-        .join(branchTouched, keys, "inner").limit(5).collect()
-      if (sample.nonEmpty) {
-        branchTouched.unpersist()
-        throw new IllegalStateException(
-          s"merge of branch $name conflicts on keys: " +
-            sample.map(_.toSeq.mkString("(", ",", ")")).mkString(", "))
-      }
-      val untouched = main.join(branchTouched, keys, "left_anti")
-      val fromBranch = branchHead.join(branchTouched, keys, "left_semi")
-      val v = commit(untouched.unionByName(fromBranch), tableDir, append = false)
-      branchTouched.unpersist()
-      v
+      try {
+        val sample = changedKeys(baseDf, main, keys)
+          .join(branchTouched, keys, "inner").limit(5).collect()
+        if (sample.nonEmpty)
+          throw new IllegalStateException(
+            s"merge of branch $name conflicts on keys: " +
+              sample.map(_.toSeq.mkString("(", ",", ")")).mkString(", "))
+        val untouched = main.join(branchTouched, keys, "left_anti")
+        val fromBranch = branchHead.join(branchTouched, keys, "left_semi")
+        commitCore(untouched.unionByName(fromBranch), tableDir, None,
+          append = false, readVersion = Some(mainHead))
+      } finally { branchTouched.unpersist(); () }
     }
   }
 
@@ -471,7 +433,7 @@ object Versioned {
   def dropBranch(spark: SparkSession, tableDir: String, name: String): Unit = {
     val f = fs(spark, tableDir)
     branchVersions(spark, tableDir, name).foreach(k =>
-      f.delete(new Path(manifestDir(tableDir), s"$name.v$k.json"), false))
+      f.delete(manifestPath(tableDir, Some(name), k), false))
     f.delete(new Path(branchDir(tableDir), name), false)
     ()
   }
@@ -490,23 +452,22 @@ object Versioned {
     val pinned = branches(spark, tableDir)
       .map(b => branchBase(spark, tableDir, b)).toSet
     val expired = vs.dropRight(keepLast).filterNot(pinned)
-    expired.foreach(v => f.delete(new Path(manifestDir(tableDir), s"v$v.json"), false))
+    expired.foreach(v => f.delete(manifestPath(tableDir, None, v), false))
     expired
   }
 
   /** M2 `remove_orphan_files`: delete data files no retained manifest
-    * references — crash debris and expired-snapshot remnants. `minAgeMs`
-    * protects data of in-flight commits (files younger than the horizon are
-    * kept even if unreferenced), exactly Iceberg's `older_than` guard.
+    * references — crash debris, failed writes and expired-snapshot
+    * remnants. `minAgeMs` protects data of in-flight commits (files younger
+    * than the horizon are kept even if unreferenced), exactly Iceberg's
+    * `older_than` guard.
     */
   def removeOrphanFiles(spark: SparkSession, tableDir: String,
                         minAgeMs: Long = 0L): Seq[String] = {
     val f = fs(spark, tableDir)
-    val referenced = (versions(spark, tableDir)
-        .flatMap(v => readManifest(spark, tableDir, v)) ++
-      branches(spark, tableDir).flatMap(b =>
-        branchVersions(spark, tableDir, b)
-          .flatMap(k => readBranchManifest(spark, tableDir, b, k)))).toSet
+    val referenced = (None +: branches(spark, tableDir).map(Some(_))).flatMap(ref =>
+      refVersions(spark, tableDir, ref).flatMap(v => readManifest(spark, tableDir, ref, v)))
+      .toSet
     val dataRoot = new Path(tableDir, "data")
     if (!f.exists(dataRoot)) return Seq.empty
     val base = new Path(tableDir).toUri.getPath

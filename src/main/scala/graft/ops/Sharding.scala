@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Field.md5U32
 
 /** Rendezvous (highest-random-weight) sharding — the stateless shard
   * assignment used for stable key→worker routing (cache shards, stateful
@@ -22,9 +23,6 @@ import org.apache.spark.sql.functions._
   * shuffle key both sides).
   */
 object Sharding {
-
-  private def md5U32(c: Column): Column =
-    graft.functions.Md5Field.md5U32(c)
 
   /** (key, shard) under rendezvous hashing with `n` shards. */
   def assign(df: DataFrame, keyCol: String, n: Int,

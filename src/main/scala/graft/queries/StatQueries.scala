@@ -623,7 +623,7 @@ object StatQueries {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val tmp = graft.Fixtures.dir("post_inc", dir) { t =>
       Versioned.commit(docs.filter(col("doc_id") % 10 =!= 0), t)
-      Versioned.commitAtomic(docs.filter(col("doc_id") % 10 === 0), t)
+      Versioned.commit(docs.filter(col("doc_id") % 10 === 0), t)
     }
     val v1 = Versioned.read(s, tmp, Some(1))
     val delta = Versioned.snapshotDiff(s, tmp, from = 1, to = 2)
@@ -990,7 +990,7 @@ object StatQueries {
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     val tmp = graft.TempDirs.runDir("prof_drift").toString
     Versioned.commit(ev.filter(col("event_id") % 10 =!= 0), tmp)
-    Versioned.commitAtomic(ev.filter(col("event_id") % 10 === 0), tmp)
+    Versioned.commit(ev.filter(col("event_id") % 10 === 0), tmp)
     val cols = Seq("user_id" -> Profile.AsString,
       "event_type" -> Profile.AsString, "value" -> Profile.AsDecimal2)
     def prof(v: Int, sfx: String) =

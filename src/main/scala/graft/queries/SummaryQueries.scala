@@ -1363,7 +1363,7 @@ object SummaryQueries {
     val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"))
     val tmp = graft.Fixtures.dir("cm_inc", dir) { t =>
       Versioned.commit(ev.filter(col("event_id") % 10 =!= 0), t)
-      Versioned.commitAtomic(ev.filter(col("event_id") % 10 === 0), t)
+      Versioned.commit(ev.filter(col("event_id") % 10 === 0), t)
     }
     val v1 = Versioned.read(s, tmp, Some(1))
     val delta = Versioned.snapshotDiff(s, tmp, from = 1, to = 2)
@@ -1400,7 +1400,7 @@ object SummaryQueries {
     val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"))
     val tmp = graft.Fixtures.dir("hll_inc", dir) { t =>
       Versioned.commit(ev.filter(col("event_id") % 10 =!= 0), t)
-      Versioned.commitAtomic(ev.filter(col("event_id") % 10 === 0), t)
+      Versioned.commit(ev.filter(col("event_id") % 10 === 0), t)
     }
     val v1 = Versioned.read(s, tmp, Some(1))
     val delta = Versioned.snapshotDiff(s, tmp, from = 1, to = 2)
@@ -1468,7 +1468,7 @@ object SummaryQueries {
         round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
     val tmp = graft.Fixtures.dir("q_inc", dir) { t =>
       Versioned.commit(ords.filter(col("k") % 10 =!= 0), t)
-      Versioned.commitAtomic(ords.filter(col("k") % 10 === 0), t)
+      Versioned.commit(ords.filter(col("k") % 10 === 0), t)
     }
     val bw = 100000L
     def hist(d: org.apache.spark.sql.DataFrame) = d

@@ -329,8 +329,8 @@ object VersionedQueries {
   /** Incremental MinHash-LSH index maintenance over the snapshot layer: the
     * banded sketch table ([[graft.dedup.MinHashLSH.bandTable]]) is
     * maintained O(delta) from CDC — commit a base corpus (v1), land a delta
-    * through the CAS commit path ([[Versioned.commitAtomic]] — the
-    * concurrent-writer protocol in a real pipeline), take
+    * through [[Versioned.commit]] (a CAS publish — the concurrent-writer
+    * protocol in a real pipeline), take
     * [[Versioned.snapshotDiff]]'s inserts, compute band rows for ONLY those
     * docs, and union onto the v1 index. Two in-plan proofs: (a) the
     * delta-maintained index equals a full rebuild from v2 under
@@ -350,7 +350,7 @@ object VersionedQueries {
     val tmp = graft.Fixtures.dir("mh_inc", dir) { t =>
       Versioned.commit(docs.filter(col("doc_id") % 7 =!= 0)
         .select(col("doc_id"), col("text")), t)
-      Versioned.commitAtomic(docs.filter(col("doc_id") % 7 === 0)
+      Versioned.commit(docs.filter(col("doc_id") % 7 === 0)
         .select(col("doc_id"), col("text")), t)
     }
     // r13: shingles ride the materialized raw-corpus table (BASELINE.md
@@ -444,7 +444,7 @@ object VersionedQueries {
     * [[minhashIncrementalQ]]: the IVF index (16 k-means centroids) is
     * FROZEN at v1 (production retrains centroids offline on a cadence;
     * assignments between retrains are incremental), the delta lands
-    * through [[Versioned.commitAtomic]], CDC inserts get cell ids from the
+    * through [[Versioned.commit]], CDC inserts get cell ids from the
     * frozen codebook — a pure per-row native expression, NO shuffle — and
     * the union with v1's assignments must equal re-assigning all of v2
     * under (count, xor-hash). At 100 TB the layout update appends
@@ -457,7 +457,7 @@ object VersionedQueries {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val tmp = graft.Fixtures.dir("ivf_inc", dir) { t =>
       Versioned.commit(emb.filter(col("vec_id") % 5 =!= 0), t)
-      Versioned.commitAtomic(emb.filter(col("vec_id") % 5 === 0), t)
+      Versioned.commit(emb.filter(col("vec_id") % 5 === 0), t)
     }
     val v1 = Versioned.read(s, tmp, Some(1)).persist(StorageLevel.MEMORY_AND_DISK)
     val index = Ivf.build(v1, nlist = 16)
@@ -519,7 +519,7 @@ object VersionedQueries {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     graft.Fixtures.dir("xsnap_dedup", dir) { t =>
       Versioned.commit(docs.filter(col("doc_id") % 7 =!= 0), t)
-      Versioned.commitAtomic(
+      Versioned.commit(
         docs.filter(col("doc_id") % 7 === 0)
           .unionByName(docs.filter(col("doc_id") % 63 === 1)
             .select((col("doc_id") + 4000000L).as("doc_id"), col("text")))

@@ -104,7 +104,7 @@ object StreamingIngest {
       }
 
   /** Streaming upsert onto a [[graft.maintain.Versioned]] table: each
-    * micro-batch is one atomic MERGE snapshot (manifest-rename commit — a
+    * micro-batch is one atomic MERGE snapshot (manifest CAS commit — a
     * crash at any point leaves the previous snapshot fully readable), and
     * every batch's pre-state stays time-travelable until
     * `Versioned.expireSnapshots` retires it. The transaction-log answer to

@@ -1,8 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.functions.Md5Field.md5U32
 
 /** DSIR-style data selection with importance resampling (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling"): score raw
@@ -43,9 +44,6 @@ import org.apache.spark.storage.StorageLevel
   * because it feeds both the weight estimate and the scoring pass.
   */
 object Dsir {
-
-  private def md5U32(c: Column): Column =
-    graft.functions.Md5Field.md5U32(c)
 
   /** doc_id, source, bucket rows — one per hashed bigram occurrence. */
   private def bigramBuckets(docs: DataFrame, buckets: Int): DataFrame = {

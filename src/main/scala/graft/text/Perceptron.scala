@@ -1,8 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.functions.Md5Field.md5U32
 
 /** In-engine training of a linear text classifier — the batch perceptron
   * over hashed bag-of-words features (the fastText-style quality/domain
@@ -29,9 +30,6 @@ import org.apache.spark.storage.StorageLevel
   * frame is built once and persisted; weights never leave metadata size.
   */
 object Perceptron {
-
-  private def md5U32(c: Column): Column =
-    graft.functions.Md5Field.md5U32(c)
 
   /** Sparse hashed features: (doc, bucket, cnt) + per-doc label from
     * `labelCol` (must be ±1). Bucket = md5U32(token) mod dim.

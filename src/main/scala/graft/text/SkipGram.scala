@@ -1,8 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.functions.Md5Field.md5U32
 
 /** Skip-gram training-pair generation — the word2vec/DeepWalk data stage:
   * every (center, context) token pair within a `window`-token neighborhood,
@@ -32,9 +33,6 @@ import org.apache.spark.storage.StorageLevel
   * aggregate. Everything is linear in corpus size × window.
   */
 object SkipGram {
-
-  private def md5U32(c: Column): Column =
-    graft.functions.Md5Field.md5U32(c)
 
   /** (center, context, n_pairs) counts over the subsampled corpus;
     * `minCount` prunes the long tail (SQL HAVING). `tNum/tDen` is the

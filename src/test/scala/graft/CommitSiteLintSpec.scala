@@ -1,0 +1,37 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-level lint keeping `graft.maintain.Versioned`'s commit core the one
+  * writer of versioned tables: the writer-unique data-dir write
+  * (`mode("errorifexists")`) sits only in `commitCore`, the manifest
+  * `rename(` only in its CAS publish, and no other main file names the
+  * `_manifests` dir. A second commit path would bring back the numbered
+  * data dirs and overwriting manifest renames that one failed write could
+  * block a table with.
+  */
+class CommitSiteLintSpec extends AnyFunSuite {
+
+  private val defLine = "^\\s*(?:private\\s+)?def\\s+(\\w+)".r.unanchored
+
+  /** (file, enclosing def) of every main-tree line containing `token`. */
+  private def sites(token: String): Seq[(String, String)] =
+    MainSources.all.flatMap { case (f, t) =>
+      t.linesIterator.scanLeft(("", "")) { case ((enclosing, _), line) =>
+        (line match { case defLine(name) => name; case _ => enclosing }, line)
+      }.collect { case (enclosing, line) if line.contains(token) =>
+        f.getName -> enclosing }.toSeq
+    }
+
+  test("versioned tables are written only by Versioned's commit core") {
+    assert(sites("mode(\"errorifexists\")") == Seq("Versioned.scala" -> "commitCore"),
+      "a versioned data dir is written outside Versioned.commitCore")
+    assert(sites("rename(").filter(_._1 == "Versioned.scala") ==
+      Seq("Versioned.scala" -> "casPublish"),
+      "a Versioned manifest is renamed outside its CAS publish")
+    val manifestFiles = MainSources.all.collect {
+      case (f, t) if t.contains("_manifests") => f.getName }
+    assert(manifestFiles == Seq("Versioned.scala"),
+      s"the _manifests dir is named outside Versioned: $manifestFiles")
+  }
+}

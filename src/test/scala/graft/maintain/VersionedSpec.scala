@@ -8,6 +8,25 @@ class VersionedSpec extends SparkSpec {
   private def freshTable(): String =
     graft.TempDirs.fixtureDir("versioned") + "/t"
 
+  /** `files` (absolute URIs, e.g. a frame's `inputFiles`) relative to `dir`,
+    * the form `removeOrphanFiles` reports. */
+  private def relativeTo(dir: String, files: Seq[String]): Set[String] = {
+    val base = new org.apache.hadoop.fs.Path(dir).toUri.getPath
+    files.map(u => new java.net.URI(u).getPath.stripPrefix(base).stripPrefix("/")).toSet
+  }
+
+  /** Every parquet file under `dir/data`, relative to `dir`. */
+  private def dataFiles(dir: String): Set[String] = {
+    val it = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      .listFiles(new org.apache.hadoop.fs.Path(s"$dir/data"), true)
+    val out = Seq.newBuilder[String]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.endsWith(".parquet")) out += p.toUri.toString
+    }
+    relativeTo(dir, out.result())
+  }
+
   test("append commits accumulate; every snapshot stays readable (time travel)") {
     val dir = freshTable()
     val v1 = Versioned.commit(Seq((1L, "a")).toDF("id", "s"), dir)
@@ -31,10 +50,11 @@ class VersionedSpec extends SparkSpec {
     val dir = freshTable()
     Versioned.commit(Seq((1L, "a")).toDF("id", "s"), dir)
     Versioned.commit(Seq((9L, "z")).toDF("id", "s"), dir, append = false) // v1 files now v1-only
+    val v1Files = relativeTo(dir, Versioned.read(spark, dir, Some(1)).inputFiles.toSeq)
     val expired = Versioned.expireSnapshots(spark, dir, keepLast = 1)
     assert(expired == Seq(1))
     val gone = Versioned.removeOrphanFiles(spark, dir)
-    assert(gone.nonEmpty && gone.forall(_.startsWith("data/v1/")))
+    assert(v1Files.nonEmpty && gone.toSet == v1Files && gone.size == v1Files.size)
     // current snapshot unaffected by the cleanup
     assert(Versioned.read(spark, dir).as[(Long, String)].collect().toSeq == Seq((9L, "z")))
     intercept[IllegalArgumentException](Versioned.read(spark, dir, Some(1)))
@@ -105,15 +125,14 @@ class VersionedSpec extends SparkSpec {
     // isolation: main unchanged, branch sees the append
     assert(Versioned.read(spark, dir).count() == 2)
     assert(Versioned.readBranch(spark, dir, "dev").count() == 3)
-    // main has not advanced -> fast-forward; no new data files under data/v*
+    // main has not advanced -> fast-forward; no new data files under data/
     val before = Versioned.versions(spark, dir)
+    val filesBefore = dataFiles(dir)
     val v = Versioned.mergeBranch(spark, dir, "dev", Seq("id"))
     assert(v == before.last + 1)
     assert(Versioned.read(spark, dir).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "b"), (3L, "c")))
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/data/v$v")),
+    assert(dataFiles(dir) == filesBefore,
       "fast-forward merge wrote data files; it must be metadata-only")
     // drop: branch data becomes orphaned and removable; merged main intact
     Versioned.dropBranch(spark, dir, "dev")
@@ -151,20 +170,17 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.versions(spark, dir).contains(base))
   }
 
-  test("branches: v<digits> names refused; drop-and-recreate can commit again") {
+  test("branches: drop-and-recreate can commit again") {
     val dir = freshTable()
     Versioned.commit(Seq((1L, "a")).toDF("id", "s"), dir)
-    // a branch named v2 would write data under main's data/v2 commit dir
-    intercept[IllegalArgumentException](Versioned.createBranch(spark, dir, "v2"))
-    // dropped branch leaves data dirs (files may be live in merged main);
-    // a recreated branch must number past them instead of bricking
+    // a dropped branch leaves its data (files may be live in merged main);
+    // a recreated branch must still commit
     Versioned.createBranch(spark, dir, "dev")
     Versioned.commitToBranch(Seq((2L, "b")).toDF("id", "s"), dir, "dev")
-    Versioned.mergeBranch(spark, dir, "dev", Seq("id")) // FF: main references data/dev/v1
+    Versioned.mergeBranch(spark, dir, "dev", Seq("id")) // FF: main adopts the branch's files
     Versioned.dropBranch(spark, dir, "dev")
     Versioned.createBranch(spark, dir, "dev")
-    val k = Versioned.commitToBranch(Seq((3L, "c")).toDF("id", "s"), dir, "dev")
-    assert(k == 2, s"recreated branch must number past surviving data dirs, got v$k")
+    Versioned.commitToBranch(Seq((3L, "c")).toDF("id", "s"), dir, "dev")
     assert(Versioned.readBranch(spark, dir, "dev").count() == 3)
     assert(Versioned.read(spark, dir).count() == 2) // main still pre-second-merge
   }
@@ -175,39 +191,80 @@ class VersionedSpec extends SparkSpec {
     // simulate a crash mid-commit: data written, manifest never landed
     Seq((666L, "crash")).toDF("id", "s")
       .write.parquet(s"$dir/data/v2")
+    val debris = relativeTo(dir, spark.read.parquet(s"$dir/data/v2").inputFiles.toSeq)
     assert(Versioned.versions(spark, dir) == Seq(1))       // v2 invisible
     assert(Versioned.read(spark, dir).count() == 1)
     val gone = Versioned.removeOrphanFiles(spark, dir)
-    assert(gone.nonEmpty && gone.forall(_.startsWith("data/v2/")))
+    assert(debris.nonEmpty && gone.toSet == debris && gone.size == debris.size)
     // age guard: freshly-written unreferenced files survive a guarded sweep
     Seq((7L, "inflight")).toDF("id", "s").write.parquet(s"$dir/data/v3")
     assert(Versioned.removeOrphanFiles(spark, dir, minAgeMs = 3600000L).isEmpty)
+    // the debris dirs do not block the next commit
+    assert(Versioned.commit(Seq((2L, "b")).toDF("id", "s"), dir) == 2)
+    assert(Versioned.read(spark, dir).as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b")))
   }
 
-  test("two-writer race: concurrent commitAtomic — all commits land, no lost update") {
+  test("a commit whose write fails leaves no manifest and blocks nothing") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    // a range, not a local Seq: the optimizer would evaluate raise_error over
+    // a local relation at planning, before the write starts
+    val failing = spark.range(2, 4).select(col("id"), when(col("id") === 3L,
+      raise_error(lit("injected write failure"))).otherwise(lit("b")).as("s"))
+    def tableWithFailedCommit(): String = {
+      val dir = freshTable()
+      Versioned.commit(Seq((1L, "a")).toDF("id", "s"), dir)
+      val e = intercept[Exception](Versioned.commit(failing, dir))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("injected write failure")), e)
+      assert(Versioned.versions(spark, dir) == Seq(1), "no manifest for the failed commit")
+      dir
+    }
+    val a = tableWithFailedCommit()
+    assert(Versioned.commit(Seq((2L, "b")).toDF("id", "s"), a) == 2)
+    assert(Versioned.read(spark, a).as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b")))
+    val b = tableWithFailedCommit()
+    assert(Versioned.upsert(Seq((1L, "z")).toDF("id", "s"), b, Seq("id"), col("s")) == 2)
+    assert(Versioned.read(spark, b).as[(Long, String)].collect().toSeq == Seq((1L, "z")))
+  }
+
+  test("two-writer race: main and branch commits all land, no lost update") {
     val dir = freshTable()
     Versioned.commit(Seq((0L, "base")).toDF("id", "s"), dir)
-    // 8 concurrent appends (2 threads × 4 commits each) racing for versions;
-    // every commit must land under a unique version and every row survive
+    Versioned.createBranch(spark, dir, "dev")
+    // 8 concurrent appends to main (2 threads × 4 commits each) racing for
+    // versions, alongside 8 to the branch (writers 3 and 4); every commit
+    // must land under a unique version of its ref and every row survive
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
-    val futures = (1 to 2).map { w =>
+    def row(w: Int, i: Int) = (w * 100L + i, s"w$w-$i")
+    val futures = (1 to 4).map { w =>
       Future {
         (1 to 4).map { i =>
-          Versioned.commitAtomic(
-            Seq((w * 100L + i, s"w$w-$i")).toDF("id", "s"), dir)
+          val df = Seq(row(w, i)).toDF("id", "s")
+          if (w <= 2) Versioned.commit(df, dir)
+          else Versioned.commitToBranch(df, dir, "dev")
         }
       }
     }
-    val landed = futures.flatMap(Await.result(_, 120.seconds))
-    assert(landed.toSet.size == 8, s"versions must be unique, got $landed")
+    val landed = futures.map(Await.result(_, 120.seconds))
+    val (onMain, onBranch) = (landed.take(2).flatten, landed.drop(2).flatten)
+    assert(onMain.toSet.size == 8, s"versions must be unique, got $onMain")
+    assert(onBranch.toSet.size == 8, s"branch versions must be unique, got $onBranch")
     assert(Versioned.versions(spark, dir) == (1 to 9), "contiguous history")
+    assert(Versioned.branchVersions(spark, dir, "dev") == (1 to 8),
+      "contiguous branch history")
     val rows = Versioned.read(spark, dir).as[(Long, String)].collect().toSet
     val expected = Set(0L -> "base") ++
-      (for (w <- 1 to 2; i <- 1 to 4) yield (w * 100L + i, s"w$w-$i")).toSet
-    assert(rows.map(r => (r._1, r._2)) == expected, "no lost update")
+      (for (w <- 1 to 2; i <- 1 to 4) yield row(w, i)).toSet
+    assert(rows == expected, "no lost update")
+    val branchRows = Versioned.readBranch(spark, dir, "dev").as[(Long, String)].collect()
+    assert(branchRows.toSet == Set(0L -> "base") ++
+      (for (w <- 3 to 4; i <- 1 to 4) yield row(w, i)).toSet &&
+      branchRows.length == 9, "no lost branch update")
     // each intermediate snapshot is readable and monotonically grows
     val counts = Versioned.versions(spark, dir)
       .map(v => Versioned.read(spark, dir, Some(v)).count())
@@ -218,7 +275,7 @@ class VersionedSpec extends SparkSpec {
     val dir = freshTable()
     val v1 = Versioned.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), dir)
     // writer A lands first, advancing the head past what writer B read
-    Versioned.commitAtomic(Seq((3L, "c")).toDF("id", "s"), dir)
+    Versioned.commit(Seq((3L, "c")).toDF("id", "s"), dir)
     // B validated against v1 and touches key 4 only — disjoint from A's key 3
     val vb = Versioned.commitAtomicChecked(
       Seq((4L, "d")).toDF("id", "s"), dir, Seq("id"), expectedVersion = v1)
