@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
 object AsOfJoin {
 
   def asOfJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-               leftTime: Column, rightTime: Column,
-               joinType: String = "left"): DataFrame = {
+               leftTime: Column, rightTime: Column): DataFrame = {
     val w = Window.partitionBy(keys.map(right(_)): _*).orderBy(rightTime)
     val withValidity = right
       .withColumn("__valid_from", rightTime)
@@ -32,7 +31,7 @@ object AsOfJoin {
     val rangeCond = leftTime >= col("__valid_from") &&
       (col("__valid_to").isNull || leftTime < col("__valid_to"))
     val rightKeyCols = keys.map(withValidity(_))
-    left.join(withValidity, keyCond && rangeCond, joinType)
+    left.join(withValidity, keyCond && rangeCond, "left")
       .drop("__valid_from", "__valid_to")
       .drop(rightKeyCols.head, rightKeyCols.tail: _*)
   }

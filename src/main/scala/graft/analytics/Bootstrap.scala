@@ -35,11 +35,8 @@ object Bootstrap {
     * `ci_hi` over `replicates` deterministic replicate means.
     */
   def meanCI(df: DataFrame, idCol: Column, valueCents: Column, seed: String,
-             replicates: Int = 64, loPermille: Int = 25,
-             hiPermille: Int = 975): DataFrame = {
+             replicates: Int = 64): DataFrame = {
     require(replicates >= 2, s"need >= 2 replicates, got $replicates")
-    require(0 < loPermille && loPermille < hiPermille && hiPermille <= 1000,
-      s"need 0 < lo < hi <= 1000 permille, got ($loPermille, $hiPermille)")
     val base = df.select(idCol.cast("string").as("__id"),
       valueCents.cast("long").as("x"))
     val full = base
@@ -109,8 +106,8 @@ object Bootstrap {
       .withColumn("cnt", count(lit(1)).over(Window.partitionBy()))
     // rn >= ceil(cnt * p / 1000)  <=>  rn * 1000 >= cnt * p  (integers)
     val stats = ranked.agg(
-      min(when(col("rn") * 1000 >= col("cnt") * loPermille, col("m"))).as("ci_lo"),
-      min(when(col("rn") * 1000 >= col("cnt") * hiPermille, col("m"))).as("ci_hi"),
+      min(when(col("rn") * 1000 >= col("cnt") * 25, col("m"))).as("ci_lo"),
+      min(when(col("rn") * 1000 >= col("cnt") * 975, col("m"))).as("ci_hi"),
       max(col("cnt")).as("b_used"))
     full.crossJoin(broadcast(stats))
       .select(col("n"), col("sum_cents"), col("mean"), col("b_used"),

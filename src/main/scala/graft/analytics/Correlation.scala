@@ -117,11 +117,11 @@ object Correlation {
     * corpus scale.
     */
   def rbo(rankA: DataFrame, rankB: DataFrame, depth: Int,
-          idCol: String = "id", rankCol: String = "rank"): DataFrame = {
+          idCol: String = "id"): DataFrame = {
     require(depth >= 1 && depth <= 32, s"depth must be in [1, 32], got $depth")
-    val ra = rankA.select(col(idCol).as("__id"), col(rankCol).as("__ra"))
+    val ra = rankA.select(col(idCol).as("__id"), col("rank").as("__ra"))
       .filter(col("__ra") <= depth)
-    val rb = rankB.select(col(idCol).as("__id"), col(rankCol).as("__rb"))
+    val rb = rankB.select(col(idCol).as("__id"), col("rank").as("__rb"))
       .filter(col("__rb") <= depth)
     val j = ra.join(rb, Seq("__id"), "full_outer")
       .select(coalesce(col("__ra"), lit(depth + 1L)).as("ra"),
@@ -331,11 +331,10 @@ object Correlation {
     * O(n) term. Groups with n < 2 are skipped (no pairs exist).
     */
   def kendallTauSampled(df: DataFrame, groupCol: String, xCol: String,
-                        yCol: String, idCol: String, pairsPerGroup: Int,
-                        seed: String = "ktau"): DataFrame = {
+                        yCol: String, idCol: String, pairsPerGroup: Int): DataFrame = {
     require(pairsPerGroup >= 1, s"need at least 1 pair, got $pairsPerGroup")
     val wr = Window.partitionBy(col(groupCol))
-      .orderBy(md5(concat_ws(":", lit(seed), col(idCol).cast("string"))), col(idCol))
+      .orderBy(md5(concat_ws(":", lit("ktau"), col(idCol).cast("string"))), col(idCol))
     val ranked = df
       .select(col(groupCol), col(xCol), col(yCol), col(idCol))
       .withColumn("__r", row_number().over(wr).cast("long"))
@@ -345,9 +344,9 @@ object Correlation {
       .select(col(groupCol), col("__n"),
         explode(sequence(lit(1), lit(pairsPerGroup))).as("__t"))
       .withColumn("__i", lit(1) + pmod(md5U32(concat_ws(":",
-        lit(seed), col(groupCol).cast("string"), col("__t"), lit("a"))), col("__n")))
+        lit("ktau"), col(groupCol).cast("string"), col("__t"), lit("a"))), col("__n")))
       .withColumn("__j0", lit(1) + pmod(md5U32(concat_ws(":",
-        lit(seed), col(groupCol).cast("string"), col("__t"), lit("b"))), col("__n") - 1))
+        lit("ktau"), col(groupCol).cast("string"), col("__t"), lit("b"))), col("__n") - 1))
       .withColumn("__j",
         when(col("__j0") >= col("__i"), col("__j0") + 1).otherwise(col("__j0")))
     val left = ranked.select(col(groupCol), col("__r").as("__i"),

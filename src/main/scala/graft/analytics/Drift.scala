@@ -146,8 +146,7 @@ object Drift {
     * fixed-operand-order IEEE expression over them (z constants must be
     * CAST AS DOUBLE in any oracle — bare 1.96 parses as DECIMAL).
     */
-  def powerTwoProportions(units: DataFrame, cohortA: Column, converted: Column,
-                          zAlpha: Double = 1.96, zBeta: Double = 0.84): DataFrame = {
+  def powerTwoProportions(units: DataFrame, cohortA: Column, converted: Column): DataFrame = {
     val agg = units.select(cohortA.as("__a"), converted.cast("long").as("__c"))
       .agg(sum(when(col("__a"), 1L).otherwise(0L)).as("n_a"),
         sum(when(col("__a"), col("__c")).otherwise(0L)).as("conv_a"),
@@ -157,8 +156,8 @@ object Drift {
     val p2 = col("conv_b").cast("double") / col("n_b").cast("double")
     val pbar = (col("conv_a") + col("conv_b")).cast("double") /
       (col("n_a") + col("n_b")).cast("double")
-    val num = lit(zAlpha) * sqrt(lit(2.0) * pbar * (lit(1.0) - pbar)) +
-      lit(zBeta) * sqrt(p1 * (lit(1.0) - p1) + p2 * (lit(1.0) - p2))
+    val num = lit(1.96) * sqrt(lit(2.0) * pbar * (lit(1.0) - pbar)) +
+      lit(0.84) * sqrt(p1 * (lit(1.0) - p1) + p2 * (lit(1.0) - p2))
     agg
       .withColumn("rate_a", when(col("n_a") > 0, p1))
       .withColumn("rate_b", when(col("n_b") > 0, p2))

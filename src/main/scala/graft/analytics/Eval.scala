@@ -97,9 +97,7 @@ object Eval {
     * the bucket frame. Degenerate classes (n ≤ 1 on either side) gate
     * the SE to NULL.
     */
-  def aucDeLong(df: DataFrame, scoreCents: Column, label: Column,
-                bucketWidth: Long = 2048L): DataFrame = {
-    require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
+  def aucDeLong(df: DataFrame, scoreCents: Column, label: Column): DataFrame = {
     // the per-score count frame is value-domain bounded (metadata) and
     // feeds the bucket cumulative, the totals AND the placed join — anchored
     // eagerly, the source aggregates once instead of per consumer
@@ -107,7 +105,7 @@ object Eval {
       .select(scoreCents.cast("long").as("s"), label.cast("long").as("y"))
       .groupBy(col("s"))
       .agg(sum(col("y")).as("p"), (count(lit(1)) - sum(col("y"))).as("n"))
-      .withColumn("b", expr(s"s div $bucketWidth"))
+      .withColumn("b", expr("s div 2048"))
       .anchor(Bound.Metadata)
     val bucketFrame = Window.orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -173,14 +171,13 @@ object Eval {
     * parallelism, not serialization. One row per group.
     */
   def aucExactBy(df: DataFrame, groupCol: Column, scoreCents: Column,
-                 label: Column, bucketWidth: Long = 2048L): DataFrame = {
-    require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
+                 label: Column): DataFrame = {
     val perVal = df
       .select(groupCol.as("g"), scoreCents.cast("long").as("s"),
         label.cast("long").as("y"))
       .groupBy(col("g"), col("s"))
       .agg(sum(col("y")).as("p"), (count(lit(1)) - sum(col("y"))).as("n"))
-      .withColumn("b", expr(s"s div $bucketWidth"))
+      .withColumn("b", expr("s div 2048"))
     val bucketFrame = Window.partitionBy(col("g")).orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val bucketCum = perVal.groupBy(col("g"), col("b")).agg(sum(col("n")).as("nb"))
@@ -213,9 +210,7 @@ object Eval {
     * `d_num` (exact integer, emitted as canonical digit string), `d` =
     * d_num/(n_a·n_b).
     */
-  def ksStatistic(df: DataFrame, valueCents: Column, inA: Column, inB: Column,
-                  bucketWidth: Long = 2048L): DataFrame = {
-    require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
+  def ksStatistic(df: DataFrame, valueCents: Column, inA: Column, inB: Column): DataFrame = {
     val perVal = df
       .select(valueCents.cast("long").as("s"),
         inA.cast("long").as("a0"), inB.cast("long").as("b0"))
@@ -224,7 +219,7 @@ object Eval {
       .filter(col("s").isNotNull)
       .groupBy(col("s"))
       .agg(sum(col("a0")).as("a"), sum(col("b0")).as("b"))
-      .withColumn("bk", expr(s"s div $bucketWidth"))
+      .withColumn("bk", expr("s div 2048"))
     val bucketFrame = Window.orderBy(col("bk"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val bucketCum = perVal.groupBy(col("bk"))
@@ -341,13 +336,12 @@ object Eval {
     * n (the normal interval collapses or exits [0,1] exactly where
     * slicing makes groups thin). Counts are exact longs; p̂ and the
     * Wilson bounds are fixed-operand-order IEEE expressions over them
-    * (sqrt is correctly rounded), with `z` interpolated as one double
+    * (sqrt is correctly rounded), with z = 1.96 interpolated as one double
     * literal into both engines. One map-combined aggregate, one
     * projection; n = 0 gates to NULL.
     */
-  def wilsonProportions(df: DataFrame, group: Column, success: Column,
-                        z: Double = 1.96): DataFrame = {
-    val zc = lit(z)
+  def wilsonProportions(df: DataFrame, group: Column, success: Column): DataFrame = {
+    val zc = lit(1.96)
     df.select(group.as("g"), success.cast("long").as("y"))
       .groupBy(col("g"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("successes"))
@@ -412,22 +406,20 @@ object Eval {
     * predicted probability ×1000 as an integer (the repo's cent-scaling
     * discipline applied to probabilities), so the squared error
     * (p − 1000·y)² is an exact BIGINT and every emitted score is ONE
-    * gated division by n·10⁶. One map-combined aggregate to ≤ `bins`+1
-    * rows; the pooled row rides a grouping-sets-free union of one more
-    * aggregate over the same shuffle-reduced frame.
+    * gated division by n·10⁶. One map-combined aggregate to ≤ 11 rows
+    * (10 bins plus the pooled row); the pooled row rides a
+    * grouping-sets-free union of one more aggregate over the same
+    * shuffle-reduced frame.
     */
-  def brierReliability(df: DataFrame, probPermille: Column, label: Column,
-                       bins: Int = 10): DataFrame = {
-    require(bins >= 1 && 1000 % bins == 0,
-      s"bins must divide the permille grid (got $bins)")
+  def brierReliability(df: DataFrame, probPermille: Column, label: Column): DataFrame = {
     val base = df.select(probPermille.cast("long").as("p"),
       label.cast("long").as("y"))
       .select(col("p"), col("y"),
-        // clamp to [0, bins-1]: a permille outside the contract's [0,1000]
+        // clamp to [0, 9]: a permille outside the contract's [0,1000]
         // grid mis-bins into the edge bin instead of colliding with the
         // bin = -1 pooled-row sentinel
         greatest(lit(0L),
-          least(expr(s"p div ${1000 / bins}"), lit(bins.toLong - 1))).as("bin"),
+          least(expr("p div 100"), lit(9L))).as("bin"),
         ((col("p") - col("y") * 1000) * (col("p") - col("y") * 1000))
           .as("__se"))
     val perBin = base.groupBy(col("bin"))
@@ -570,14 +562,12 @@ object Eval {
     * rows, one metadata-sized fold.
     */
   def expectedCalibrationError(df: DataFrame, probPermille: Column,
-                               label: Column, bins: Int = 10): DataFrame = {
-    require(bins >= 1 && 1000 % bins == 0,
-      s"bins must divide the permille grid (got $bins)")
+                               label: Column): DataFrame = {
     val base = df.select(probPermille.cast("long").as("p"),
       label.cast("long").as("y"))
       .select(col("p"), col("y"),
         greatest(lit(0L),
-          least(expr(s"p div ${1000 / bins}"), lit(bins.toLong - 1))).as("bin"))
+          least(expr("p div 100"), lit(9L))).as("bin"))
     base.groupBy(col("bin"))
       .agg(count(lit(1)).as("n_b"), sum(col("y")).as("sum_y"),
         sum(col("p")).as("sum_p"))
@@ -610,15 +600,13 @@ object Eval {
     * any ranking decision; `ap_num` ships as a canonical digit string,
     * `average_precision` is one final division.
     */
-  def averagePrecision(df: DataFrame, scoreCents: Column, label: Column,
-                       bucketWidth: Long = 2048L): DataFrame = {
-    require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
+  def averagePrecision(df: DataFrame, scoreCents: Column, label: Column): DataFrame = {
     val grid = 1073741824.0 // 2^30
     val perVal = df
       .select(scoreCents.cast("long").as("s"), label.cast("long").as("y"))
       .groupBy(col("s"))
       .agg(sum(col("y")).as("p"), (count(lit(1)) - sum(col("y"))).as("n"))
-      .withColumn("b", expr(s"s div $bucketWidth"))
+      .withColumn("b", expr("s div 2048"))
     // descending cumulative: buckets above b, then in-bucket values above s
     val bucketFrame = Window.orderBy(col("b").desc)
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -79,9 +79,9 @@ object HllGrid {
     * registers contribute rank 0 via the closed form
     * `Σ 2^(B−M) = touchedSum + (m − touched)·2^B` — no domain join.
     */
-  def estimateBy(grid: DataFrame, m: Int = 256): DataFrame = {
-    val b = rankBase(m)
-    val alpha = lit(0.7213) / (lit(1.0) + lit(1.079) / lit(m.toDouble))
+  def estimateBy(grid: DataFrame): DataFrame = {
+    val b = rankBase(256)
+    val alpha = lit(0.7213) / (lit(1.0) + lit(1.079) / lit(256.0))
     grid
       .withColumn("__term",
         expr(s"shiftleft(CAST(1 AS BIGINT), CAST($b - m_rank AS INT))"))
@@ -90,9 +90,9 @@ object HllGrid {
         sum(col("__term")).as("__touched_sum"),
         sum(col("m_rank")).as("register_sum"))
       .withColumn("sum_scaled",
-        col("__touched_sum") + (lit(m.toLong) - col("n_used")) * (1L << b.toInt))
+        col("__touched_sum") + (lit(256L) - col("n_used")) * (1L << b.toInt))
       .withColumn("estimate",
-        alpha * lit((m.toLong * m * (1L << b.toInt)).toDouble) /
+        alpha * lit((256L * 256 * (1L << b.toInt)).toDouble) /
           col("sum_scaled").cast("double"))
       .select(col("grp"), col("n_used"), col("register_sum"),
         col("sum_scaled"), col("estimate"))
@@ -103,20 +103,20 @@ object HllGrid {
     * checksums (register sum / xor) so the WHOLE sketch state sits under a
     * verification hash.
     */
-  def estimate(grid: DataFrame, m: Int = 256): DataFrame = {
-    val full = grid.sparkSession.range(m).select(col("id").as("idx"))
+  def estimate(grid: DataFrame): DataFrame = {
+    val full = grid.sparkSession.range(256).select(col("id").as("idx"))
       .join(grid, Seq("idx"), "left")
       .withColumn("m_rank", coalesce(col("m_rank"), lit(0L)))
       .withColumn("__term",
-        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(${rankBase(m)} - m_rank AS INT))"))
-    val alpha = lit(0.7213) / (lit(1.0) + lit(1.079) / lit(m.toDouble))
+        expr(s"shiftleft(CAST(1 AS BIGINT), CAST(${rankBase(256)} - m_rank AS INT))"))
+    val alpha = lit(0.7213) / (lit(1.0) + lit(1.079) / lit(256.0))
     full.agg(
         sum(col("__term")).as("sum_scaled"),
         count(when(col("m_rank") > 0, 1)).as("n_used"),
         sum(col("m_rank")).as("register_sum"),
         call_function("bit_xor", col("idx") * 31 + col("m_rank")).as("register_xor"))
       .withColumn("estimate",
-        alpha * lit((m.toLong * m * (1L << rankBase(m).toInt)).toDouble) /
+        alpha * lit((256L * 256 * (1L << rankBase(256).toInt)).toDouble) /
           col("sum_scaled").cast("double"))
   }
 }

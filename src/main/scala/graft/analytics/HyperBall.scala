@@ -34,10 +34,9 @@ object HyperBall {
     * `rank_sum`, `reg_xor` (exact register-state pins) and the min-id
     * seed node's `seed_sum_scaled` + `seed_estimate`.
     */
-  def neighborhoodFunction(pairs: DataFrame, maxHops: Int, m: Int = 32,
-                           idA: String = "id_a", idB: String = "id_b"): DataFrame = {
+  def neighborhoodFunction(pairs: DataFrame, maxHops: Int, m: Int = 32): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = pairs.select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
+    val e = pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
     val adj = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       .distinct()

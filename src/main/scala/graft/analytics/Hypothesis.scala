@@ -274,7 +274,7 @@ object Hypothesis {
     * scores — the nonparametric companion of [[welchT]] when the score
     * distribution is heavy-tailed (token counts, latencies). Tie-aware
     * average ranks ride the same value-domain-bounded distinct-score
-    * histogram as [[kruskalWallis]] (same enforced `maxDistinctValues`
+    * histogram as [[kruskalWallis]] (same enforced 2²¹ value-domain
     * envelope, same exact twice-rank construction); U is carried as the
     * exact integer 2U_a = Σ_a trank − n_a(n_a+1), the tie numerator
     * Σ(t³−t) stays exact DECIMAL, and the tie-corrected normal z is one
@@ -282,8 +282,7 @@ object Hypothesis {
     * `n_b`, `u2_num` (2·U_a, canonical string — U itself is half-integer
     * under ties), `u_a`, `z`.
     */
-  def mannWhitney(df: DataFrame, cohortA: Column, centsCol: String,
-                  maxDistinctValues: Long = 1L << 21): DataFrame = {
+  def mannWhitney(df: DataFrame, cohortA: Column, centsCol: String): DataFrame = {
     // NULL scores are dropped BEFORE the histogram (the runsTest
     // discipline): a NULL would otherwise form its own histogram row and
     // rank NULLS FIRST in Spark but NULLS LAST in an ORDER BY cents SQL
@@ -294,7 +293,7 @@ object Hypothesis {
         .groupBy(col("cents"))
         .agg(sum(when(col("__a"), 1L).otherwise(0L)).as("d_a"),
           sum(when(col("__a"), 0L).otherwise(1L)).as("d_b")),
-      maxDistinctValues, "mannWhitney")
+      (1L << 21), "mannWhitney")
     val wv = Window.orderBy(col("cents"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ranked = vals
@@ -333,11 +332,10 @@ object Hypothesis {
     * from the same distinct-score histogram — C = Σ_v d_a(v)·cumB(<v),
     * D = Σ_v d_a(v)·(n_b − cumB(≤v)) — as order-free DECIMAL sums; δ is
     * one division, and the conventional |δ| bands ride along. Same
-    * enforced `maxDistinctValues` envelope. One row: `n_a`, `n_b`,
+    * enforced 2²¹ value-domain envelope. One row: `n_a`, `n_b`,
     * `gt_num`/`lt_num` (canonical strings), `delta`, `magnitude`.
     */
-  def cliffsDelta(df: DataFrame, cohortA: Column, centsCol: String,
-                  maxDistinctValues: Long = 1L << 21): DataFrame = {
+  def cliffsDelta(df: DataFrame, cohortA: Column, centsCol: String): DataFrame = {
     // NULL scores dropped before the histogram — same rationale as
     // [[mannWhitney]] (NULL would rank NULLS FIRST here, NULLS LAST in SQL).
     val vals = requireBoundedDomain(
@@ -346,7 +344,7 @@ object Hypothesis {
         .groupBy(col("cents"))
         .agg(sum(when(col("__a"), 1L).otherwise(0L)).as("d_a"),
           sum(when(col("__a"), 0L).otherwise(1L)).as("d_b")),
-      maxDistinctValues, "cliffsDelta")
+      (1L << 21), "cliffsDelta")
     val wv = Window.orderBy(col("cents"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = vals.withColumn("cb", sum(col("d_b")).over(wv))

@@ -90,9 +90,7 @@ object StarQueries {
     * self-role join); both roles and the customer/supplier dims broadcast,
     * the fact-fact join shuffles once on the order key.
     */
-  def volumeShipping(spark: SparkSession, dir: String,
-                     nationA: String = "NATION_1",
-                     nationB: String = "NATION_2"): DataFrame = {
+  def volumeShipping(spark: SparkSession, dir: String): DataFrame = {
     val nation = Tables.nation(spark, dir).select(col("n_nationkey"), col("n_name"))
     val li = Tables.lineitem(spark, dir)
     li.join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
@@ -104,8 +102,8 @@ object StarQueries {
         col("n_name").as("supp_nation"))), col("s_nationkey") === col("sn_key"))
       .join(broadcast(nation.select(col("n_nationkey").as("cn_key"),
         col("n_name").as("cust_nation"))), col("c_nationkey") === col("cn_key"))
-      .filter((col("supp_nation") === nationA && col("cust_nation") === nationB) ||
-        (col("supp_nation") === nationB && col("cust_nation") === nationA))
+      .filter((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2") ||
+        (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("l_shipdate")).as("l_year"))
       .agg(dec(sum(dec(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4)), 4)
@@ -119,9 +117,8 @@ object StarQueries {
     * supplier nation × order year. Part and supplier dims broadcast after
     * their filters; every monetary sum in exact decimal space.
     */
-  def productProfit(spark: SparkSession, dir: String,
-                    typeToken: String = "PROMO"): DataFrame = {
-    val part = Tables.part(spark, dir).filter(col("p_type").contains(typeToken))
+  def productProfit(spark: SparkSession, dir: String): DataFrame = {
+    val part = Tables.part(spark, dir).filter(col("p_type").contains("PROMO"))
     val li = Tables.lineitem(spark, dir)
     li.join(broadcast(part), col("l_partkey") === col("p_partkey"))
       .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
@@ -137,11 +134,11 @@ object StarQueries {
   }
 
   /** Interactive top-k (O2): plans as TakeOrderedAndProject, not a sort. */
-  def topOrders(spark: SparkSession, dir: String, k: Int = 20): DataFrame =
+  def topOrders(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderdate"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(k)
+      .limit(20)
 
   /** TPC-H Q18-style large-volume customers: aggregate-then-filter on the
     * fact (HAVING pushes the group cut BEFORE any dimension join — the big
@@ -149,12 +146,11 @@ object StarQueries {
     * with broadcast customer and TakeOrdered top-k. Quantity sums are
     * exact longs.
     */
-  def largeOrders(spark: SparkSession, dir: String,
-                  threshold: Long = 200L, k: Int = 100): DataFrame = {
+  def largeOrders(spark: SparkSession, dir: String): DataFrame = {
     val big = Tables.lineitem(spark, dir)
       .groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity").cast("long")).as("total_qty"))
-      .filter(col("total_qty") > threshold)
+      .filter(col("total_qty") > 200L)
     Tables.orders(spark, dir)
       .join(big, col("o_orderkey") === col("l_orderkey"))
       .join(broadcast(Tables.customer(spark, dir)),
@@ -162,22 +158,21 @@ object StarQueries {
       .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
         col("o_orderdate"), col("o_totalprice"), col("total_qty"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .limit(k)
+      .limit(100)
   }
 
   /** TPC-H Q4-style order-priority check: orders with at least one line
-    * shipped more than `lateDays` after the order date, counted per
+    * shipped more than 90 days after the order date, counted per
     * priority — the EXISTS correlated subquery rendered as one LEFT SEMI
     * join (equi key + the non-equi lateness predicate rides the same
     * join), then a 5-row aggregate.
     */
-  def latePriorityCheck(spark: SparkSession, dir: String,
-                        lateDays: Int = 90): DataFrame = {
+  def latePriorityCheck(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_shipdate"))
     Tables.orders(spark, dir)
       .join(li, col("l_orderkey") === col("o_orderkey") &&
-        col("l_shipdate") > col("o_orderdate") + expr(s"INTERVAL $lateDays DAYS"),
+        col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"),
         "left_semi")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("late_orders"))
@@ -199,13 +194,13 @@ object StarQueries {
   /** Sessionization over the event stream: lag → gap → session bounds —
     * the window-function analytics surface (exact integer microsecond gaps).
     */
-  def sessionStats(spark: SparkSession, dir: String, gapSeconds: Long = 1800): DataFrame = {
+  def sessionStats(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     Tables.events(spark, dir)
       .withColumn("prev_us", lag(unix_micros(col("ts")), 1).over(w))
       .withColumn("gap_us", unix_micros(col("ts")) - col("prev_us"))
       .withColumn("new_session",
-        when(col("gap_us").isNull || col("gap_us") > gapSeconds * 1000000L, 1L).otherwise(0L))
+        when(col("gap_us").isNull || col("gap_us") > 1800 * 1000000L, 1L).otherwise(0L))
       .groupBy(col("user_id"))
       .agg(
         count(lit(1)).as("n_events"),

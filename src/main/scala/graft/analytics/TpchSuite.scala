@@ -37,15 +37,13 @@ object TpchSuite {
     * re-aggregation join. Candidate (part, supplier) pairs come from a
     * distinct projection of lineitem (two columns reach the scan).
     */
-  def bestSupplierPerPart(spark: SparkSession, dir: String,
-                          maxSize: Int = 15, ptype: String = "STANDARD",
-                          region: String = "EUROPE", k: Int = 100): DataFrame = {
+  def bestSupplierPerPart(spark: SparkSession, dir: String): DataFrame = {
     val part = Tables.part(spark, dir)
-      .filter(col("p_size") <= maxSize && col("p_type") === ptype)
+      .filter(col("p_size") <= 15 && col("p_type") === "STANDARD")
       .select(col("p_partkey"), col("p_retailprice"))
     val supp = Tables.supplier(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, dir).filter(col("r_name") === region)),
+      .join(broadcast(Tables.region(spark, dir).filter(col("r_name") === "EUROPE")),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
     val pairs = Tables.lineitem(spark, dir)
@@ -58,7 +56,7 @@ object TpchSuite {
       .select(col("s_acctbal"), col("s_name"), col("n_name"),
         col("p_partkey"), col("p_retailprice"))
       .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"), col("p_partkey"))
-      .limit(k)
+      .limit(100)
   }
 
   /** Q6-style forecasting-revenue scan: every predicate lands in
@@ -82,19 +80,17 @@ object TpchSuite {
     * exact-decimal sums; the share is one division of their doubles
     * (identical on both engines), rounded for presentation.
     */
-  def marketShare(spark: SparkSession, dir: String,
-                  region: String = "AMERICA", ptype: String = "ECONOMY",
-                  nation: String = "NATION_6"): DataFrame = {
+  def marketShare(spark: SparkSession, dir: String): DataFrame = {
     val n = Tables.nation(spark, dir)
     val custRegion = Tables.customer(spark, dir)
       .join(broadcast(n.select(col("n_nationkey").as("cn_key"), col("n_regionkey"))),
         col("c_nationkey") === col("cn_key"))
-      .join(broadcast(Tables.region(spark, dir).filter(col("r_name") === region)),
+      .join(broadcast(Tables.region(spark, dir).filter(col("r_name") === "AMERICA")),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("c_custkey"))
     val zero = dec(lit(0), 4)
     Tables.lineitem(spark, dir)
-      .join(broadcast(Tables.part(spark, dir).filter(col("p_type") === ptype)
+      .join(broadcast(Tables.part(spark, dir).filter(col("p_type") === "ECONOMY")
         .select(col("p_partkey"))), col("l_partkey") === col("p_partkey"))
       .join(Tables.orders(spark, dir)
         .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
@@ -108,7 +104,7 @@ object TpchSuite {
         col("n_name").as("supp_nation"))), col("s_nationkey") === col("sn_key"))
       .groupBy(year(col("o_orderdate")).as("o_year"))
       .agg(
-        dec(sum(when(col("supp_nation") === nation, rev).otherwise(zero)), 4)
+        dec(sum(when(col("supp_nation") === "NATION_6", rev).otherwise(zero)), 4)
           .cast("double").as("nation_rev"),
         dec(sum(rev), 4).cast("double").as("total_rev"))
       .withColumn("mkt_share", round(col("nation_rev") / col("total_rev"), 6))
@@ -119,7 +115,7 @@ object TpchSuite {
     * returns in a quarter. Customer and nation broadcast; the fact-fact
     * join shuffles once on the order key; top-k is TakeOrderedAndProject.
     */
-  def returnedItems(spark: SparkSession, dir: String, k: Int = 20): DataFrame =
+  def returnedItems(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir).filter(col("l_returnflag") === "R")
       .join(Tables.orders(spark, dir)
         .filter(col("o_orderdate") >= lit("1995-10-01").cast("timestamp") &&
@@ -130,17 +126,16 @@ object TpchSuite {
       .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
       .agg(dec(sum(rev), 4).cast("double").as("revenue"))
       .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(k)
+      .limit(20)
 
   /** Q11-style important parts: parts whose revenue through one nation's
     * suppliers exceeds a fraction of that nation's total. The grand total is
     * a 1-row broadcast cross join and the fraction gate is cross-multiplied
     * in exact decimal space (`value · 1000 > total`) — no FP threshold.
     */
-  def importantParts(spark: SparkSession, dir: String,
-                     nation: String = "NATION_11", perMille: Int = 1): DataFrame = {
+  def importantParts(spark: SparkSession, dir: String): DataFrame = {
     val supp = Tables.supplier(spark, dir)
-      .join(broadcast(Tables.nation(spark, dir).filter(col("n_name") === nation)),
+      .join(broadcast(Tables.nation(spark, dir).filter(col("n_name") === "NATION_11")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"))
     val v = Tables.lineitem(spark, dir)
@@ -152,7 +147,7 @@ object TpchSuite {
       // cross-multiplied with NO division: `1000 / perMille` truncates for
       // perMille values not dividing 1000 (e.g. 3 → ×333, a silently looser
       // gate); value·1000 > total·perMille is exact for every perMille
-      .filter(col("value_dec") * 1000 > col("total_dec") * perMille)
+      .filter(col("value_dec") * 1000 > col("total_dec") * 1)
       .select(col("p_partkey"), col("value_dec").cast("double").as("value"))
       .orderBy(col("value").desc, col("p_partkey"))
   }
@@ -162,11 +157,10 @@ object TpchSuite {
     * priority exclusion is applied to the orders side before the join —
     * equivalent to the ON-clause filter, and it prunes before the shuffle.
     */
-  def orderCountDistribution(spark: SparkSession, dir: String,
-                             excludePriority: String = "4-NOT SPECIFIED"): DataFrame =
+  def orderCountDistribution(spark: SparkSession, dir: String): DataFrame =
     Tables.customer(spark, dir).select(col("c_custkey"))
       .join(Tables.orders(spark, dir)
-        .filter(col("o_orderpriority") =!= excludePriority)
+        .filter(col("o_orderpriority") =!= "4-NOT SPECIFIED")
         .select(col("o_custkey"), col("o_orderkey")),
         col("c_custkey") === col("o_custkey"), "left_outer")
       .groupBy(col("c_custkey"))
@@ -237,9 +231,8 @@ object TpchSuite {
     * parts), and the `qty < 0.2·avg` gate cross-multiplies to exact longs:
     * `5·qty·n < Σqty`.
     */
-  def smallQuantityRevenue(spark: SparkSession, dir: String,
-                           brand: String = "Brand#3"): DataFrame = {
-    val bparts = Tables.part(spark, dir).filter(col("p_brand") === brand)
+  def smallQuantityRevenue(spark: SparkSession, dir: String): DataFrame = {
+    val bparts = Tables.part(spark, dir).filter(col("p_brand") === "Brand#3")
       .select(col("p_partkey"))
     val lines = Tables.lineitem(spark, dir)
       .join(broadcast(bparts), col("l_partkey") === col("p_partkey"))
@@ -280,9 +273,8 @@ object TpchSuite {
     * correlated availability threshold becomes a window total over the part
     * key; quantities stay in exact longs.
     */
-  def dominantSuppliers(spark: SparkSession, dir: String,
-                        nameToken: String = "gear"): DataFrame = {
-    val gparts = Tables.part(spark, dir).filter(col("p_name").contains(nameToken))
+  def dominantSuppliers(spark: SparkSession, dir: String): DataFrame = {
+    val gparts = Tables.part(spark, dir).filter(col("p_name").contains("gear"))
       .select(col("p_partkey"))
     val ps = Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -307,15 +299,14 @@ object TpchSuite {
     * the order-key equi join with the supplier inequality as residual.
     * Late pairs are distinct first so numwait counts ORDERS, not lines.
     */
-  def waitingSuppliers(spark: SparkSession, dir: String,
-                       lateDays: Int = 60, k: Int = 10): DataFrame = {
+  def waitingSuppliers(spark: SparkSession, dir: String): DataFrame = {
     val l = Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
     val late = l
       .join(Tables.orders(spark, dir).filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey"), col("o_orderdate")),
         col("l_orderkey") === col("o_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr(s"INTERVAL $lateDays DAYS"))
+          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
       .select(col("l_orderkey"), col("l_suppkey")).distinct()
     val waiting = late
       .join(l.select(col("l_orderkey").as("lo2"), col("l_suppkey").as("ls2")),
@@ -329,7 +320,7 @@ object TpchSuite {
       .groupBy(col("s_name"))
       .agg(count(lit(1)).as("numwait"))
       .orderBy(col("numwait").desc, col("s_name"))
-      .limit(k)
+      .limit(10)
   }
 
   /** Q22-style dormant high-balance customers: above-average balance (the
@@ -337,13 +328,12 @@ object TpchSuite {
     * identically, from an exact decimal sum) with no orders since a cutoff
     * (LEFT ANTI join), reported per nation.
     */
-  def dormantCustomers(spark: SparkSession, dir: String,
-                       cutoff: String = "1999-01-01"): DataFrame = {
+  def dormantCustomers(spark: SparkSession, dir: String): DataFrame = {
     val avgBal = Tables.customer(spark, dir).filter(col("c_acctbal") > 0.0)
       .agg((dec(sum(dec(col("c_acctbal")))).cast("double") /
         count(lit(1))).as("avg_bal"))
     val recent = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= lit(cutoff).cast("timestamp"))
+      .filter(col("o_orderdate") >= lit("1999-01-01").cast("timestamp"))
       .select(col("o_custkey"))
     Tables.customer(spark, dir)
       .crossJoin(broadcast(avgBal))

@@ -80,9 +80,8 @@ object BloomDedup {
   /** Build the corpus bloom: one scan, map-side partial ORs, one 8 KB row to
     * the driver (1-row memo class — bounded by m, never by corpus size).
     */
-  def corpusBloom(corpusFp: DataFrame, mBits: Int, k: Int,
-                  fpCol: String = "fp"): Array[Long] =
-    corpusFp.select(col(fpCol)).as[String](Encoders.STRING)
+  def corpusBloom(corpusFp: DataFrame, mBits: Int, k: Int): Array[Long] =
+    corpusFp.select(col("fp")).as[String](Encoders.STRING)
       .select(new BitmapAggregator(mBits, k).toColumn)
       .head().words
 
@@ -113,7 +112,7 @@ object BloomDedup {
     * `bloom_hit` (all k bits set in the corpus bitmap), `is_dup` (exact —
     * bloom hit CONFIRMED against the corpus fingerprints), and the keep/drop
     * `verdict`. `corpusFp`/`deltaFp` carry a fingerprint column `fp`
-    * (delta additionally `idCol`); fingerprints are whatever content hash
+    * (delta additionally `doc_id`); fingerprints are whatever content hash
     * the pipeline standardizes on (md5 hex here and in the oracle).
     *
     * Plan shape: the bitmap enters as a literal (8 KB at the default m), the
@@ -123,10 +122,9 @@ object BloomDedup {
     * left-semi join runs ONLY over bloom-hit rows.
     */
   def bloomDeltaDedup(corpusFp: DataFrame, deltaFp: DataFrame,
-                      mBits: Int = 1 << 16, k: Int = 4,
-                      idCol: String = "doc_id"): DataFrame =
+                      mBits: Int = 1 << 16, k: Int = 4): DataFrame =
     bloomProbe(corpusBloom(corpusFp, mBits, k), corpusFp, deltaFp,
-      mBits, k, idCol)
+      mBits, k)
 
   /** [[bloomDeltaDedup]] with a prebuilt bitmap — the standing-artifact
     * entry point: the caller holds the corpus bloom (built once, maintained
@@ -137,8 +135,7 @@ object BloomDedup {
     * co-located confirm over the fp store as a catalog table (r17).
     */
   def bloomProbe(words: Array[Long], corpusFp: DataFrame, deltaFp: DataFrame,
-                 mBits: Int = 1 << 16, k: Int = 4,
-                 idCol: String = "doc_id", keepFp: Boolean = false): DataFrame = {
+                 mBits: Int = 1 << 16, k: Int = 4, keepFp: Boolean = false): DataFrame = {
     require(words.length == mBits / 64,
       s"bitmap has ${words.length} words, expected ${mBits / 64}")
     val bits = typedLit(words.toSeq)
@@ -156,7 +153,7 @@ object BloomDedup {
         element_at(bits, shiftrightunsigned(p, 6).cast("int") + 1)
           .bitwiseAND(element_at(masks, pmod(p, lit(64L)).cast("int") + 1))
           =!= 0L))
-    val probed = deltaFp.select(col(idCol), col("fp"))
+    val probed = deltaFp.select(col("doc_id"), col("fp"))
       .withColumn("bloom_hit", hit)
     // exact confirm: BROADCAST the deduped bloom-hit fingerprint set
     // (bounded by true dups + the disclosed fp rate) and STREAM the corpus
@@ -188,7 +185,7 @@ object BloomDedup {
     // Round17OpsSpec now exercises the NULL row explicitly).
     val isDup = when(col("fp").isNotNull, coalesce(col("__dup"), lit(false)))
     val keep =
-      (if (keepFp) Seq(col("fp")) else Nil) ++ Seq(col(idCol), col("bloom_hit"),
+      (if (keepFp) Seq(col("fp")) else Nil) ++ Seq(col("doc_id"), col("bloom_hit"),
         isDup.as("is_dup"),
         when(coalesce(isDup, lit(false)), lit("drop"))
           .otherwise(lit("keep")).as("verdict"))
@@ -224,9 +221,7 @@ object BloomDedup {
     * same disclosure as [[bloomProbe]].
     */
   def bloomProbeBucketed(words: Array[Long], corpusFpTable: String,
-                         deltaFp: DataFrame, mBits: Int = 1 << 16, k: Int = 4,
-                         idCol: String = "doc_id",
-                         keepFp: Boolean = false): DataFrame = {
+                         deltaFp: DataFrame, mBits: Int = 1 << 16, k: Int = 4): DataFrame = {
     require(words.length == mBits / 64,
       s"bitmap has ${words.length} words, expected ${mBits / 64}")
     val s = deltaFp.sparkSession
@@ -240,7 +235,7 @@ object BloomDedup {
         element_at(bits, shiftrightunsigned(p, 6).cast("int") + 1)
           .bitwiseAND(element_at(masks, pmod(p, lit(64L)).cast("int") + 1))
           =!= 0L))
-    val probed = deltaFp.select(col(idCol), col("fp"))
+    val probed = deltaFp.select(col("doc_id"), col("fp"))
       .withColumn("bloom_hit", hit)
     // exact confirm: the deduped hit-fp set shuffles into the fp store's
     // bucketing — corpus side co-located, zero Exchange, nothing broadcast
@@ -249,11 +244,9 @@ object BloomDedup {
       .join(corpusFp.select(col("fp")), Seq("fp"), "left_semi")
       .select(col("fp"), lit(true).as("__dup"))
     val isDup = when(col("fp").isNotNull, coalesce(col("__dup"), lit(false)))
-    val keep =
-      (if (keepFp) Seq(col("fp")) else Nil) ++ Seq(col(idCol), col("bloom_hit"),
-        isDup.as("is_dup"),
-        when(coalesce(isDup, lit(false)), lit("drop"))
-          .otherwise(lit("keep")).as("verdict"))
-    probed.join(dupFps, Seq("fp"), "left").select(keep: _*)
+    probed.join(dupFps, Seq("fp"), "left").select(col("doc_id"), col("bloom_hit"),
+      isDup.as("is_dup"),
+      when(coalesce(isDup, lit(false)), lit("drop"))
+        .otherwise(lit("keep")).as("verdict"))
   }
 }

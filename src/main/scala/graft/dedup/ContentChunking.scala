@@ -31,11 +31,10 @@ object ContentChunking {
   /** One row per (doc, chunk): ordinal, token count, start position and the
     * chunk content hash. Expected chunk length ≈ `divisor` tokens.
     */
-  def chunks(docs: DataFrame, divisor: Int = 16,
-             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def chunks(docs: DataFrame, divisor: Int = 16): DataFrame = {
     require(divisor >= 2, s"divisor must be >= 2, got $divisor")
     val toks = docs
-      .select(col(idCol).as("doc"), Dedup.tokens(col(textCol)).as("__t"))
+      .select(col("doc_id").as("doc"), Dedup.tokens(col("text")).as("__t"))
       .select(col("doc"), expr("filter(__t, x -> x <> '')").as("__t"))
     val pos = toks.select(col("doc"), posexplode(col("__t")).as(Seq("pos", "tok")))
     val byPos = Window.partitionBy(col("doc")).orderBy(col("pos"))

@@ -28,10 +28,9 @@ object Dedup {
   /** Exact dedup: content-hash groupBy. One shuffle on the hash; at scale,
     * hash first so the shuffle key is 16 bytes, not the document.
     */
-  def exactDuplicateGroups(docs: DataFrame, textCol: String = "text",
-                           idCol: String = "doc_id"): DataFrame =
-    docs.groupBy(md5(col(textCol)).as("content_hash"))
-      .agg(count(lit(1)).as("n_docs"), min(col(idCol)).as("keep_id"))
+  def exactDuplicateGroups(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col("text")).as("content_hash"))
+      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_id"))
       .filter(col("n_docs") > 1)
 
   /** Exact dedup, keep-first: survivors of hash-dedup (min id per hash).
@@ -42,11 +41,10 @@ object Dedup {
     * NULL keys, equi-joins never match them — without the coalesce the two
     * paths would disagree on null-text docs).
     */
-  def dedupExact(docs: DataFrame, textCol: String = "text",
-                 idCol: String = "doc_id"): DataFrame = {
+  def dedupExact(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(md5(coalesce(col(textCol), lit(""))))
-      .orderBy(col(idCol))
+    val w = Window.partitionBy(md5(coalesce(col("text"), lit(""))))
+      .orderBy(col("doc_id"))
     docs.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
@@ -58,9 +56,9 @@ object Dedup {
     * One shuffle (window over the content hash, no ordering → group count);
     * the weight is one IEEE division of an exact long.
     */
-  def duplicateWeights(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  def duplicateWeights(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(md5(coalesce(col(textCol), lit(""))))
+    val w = Window.partitionBy(md5(coalesce(col("text"), lit(""))))
     docs.withColumn("dup_count", count(lit(1)).over(w))
       .withColumn("weight", lit(1.0) / col("dup_count").cast("double"))
   }
@@ -184,11 +182,9 @@ object Dedup {
     * posexplode's inferred constraints substitute the shingle lambda, with
     * `split` re-inlined per element, into the scan: measured 22 s → 1 s).
     */
-  def positionalArrays(docs: DataFrame, k: Int,
-                       idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
+  def positionalArrays(docs: DataFrame, k: Int): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    docs.select(col(idCol).as("id"), col(textCol).as("__text"))
+    docs.select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", tokens(col("__text")))
       .filter(size(col("__toks")) >= k)
@@ -197,19 +193,16 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  def sharedTokenRuns(docs: DataFrame, k: Int, minRunTokens: Int,
-                      idCol: String = "doc_id", textCol: String = "text",
-                      maxShingleFreq: Int = 1000): DataFrame =
-    sharedTokenRunsFromPositional(positionalArrays(docs, k, idCol, textCol),
-      k, minRunTokens, maxShingleFreq)
+  def sharedTokenRuns(docs: DataFrame, k: Int, minRunTokens: Int): DataFrame =
+    sharedTokenRunsFromPositional(positionalArrays(docs, k),
+      k, minRunTokens)
 
   /** [[sharedTokenRuns]] with the `(id, __sh)` positional-array frame
     * supplied by the caller (BASELINE.md §Amortization: shingling
     * amortizes; the df cut, candidate join, islands window, and per-pair
     * aggregate all stay inside the caller's timer).
     */
-  def sharedTokenRunsFromPositional(arr: DataFrame, k: Int, minRunTokens: Int,
-                                    maxShingleFreq: Int = 1000): DataFrame = {
+  def sharedTokenRunsFromPositional(arr: DataFrame, k: Int, minRunTokens: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(minRunTokens >= k, s"minRunTokens ($minRunTokens) must be >= k ($k)")
     val ps = arr
@@ -221,7 +214,7 @@ object Dedup {
     // fallback above the row ceiling), result identical by complement
     val hot = ps.select(col("id"), col("shingle")).distinct()
       .groupBy(col("shingle")).agg(count(lit(1)).as("f"))
-      .filter(col("f") > maxShingleFreq)
+      .filter(col("f") > 1000)
       .select(col("shingle"))
     val m = hotCutJoiner(hot)(ps)
     val matches = m.as("a").hint("shuffle_hash")
@@ -268,12 +261,10 @@ object Dedup {
     * doc (n_runs, n_bench_docs, max_run_tokens).
     */
   def benchmarkTokenRuns(corpus: DataFrame, benchmark: DataFrame, k: Int,
-                         minRunTokens: Int,
-                         idCol: String = "doc_id", textCol: String = "text",
-                         maxShingleFreq: Int = 1000): DataFrame =
+                         minRunTokens: Int): DataFrame =
     benchmarkTokenRunsFromPositional(
-      positionalArrays(corpus, k, idCol, textCol), benchmark,
-      k, minRunTokens, idCol, textCol, maxShingleFreq)
+      positionalArrays(corpus, k), benchmark,
+      k, minRunTokens)
 
   /** [[benchmarkTokenRuns]] with the CORPUS positional-array frame
     * supplied by the caller (BASELINE.md §Amortization: corpus shingling
@@ -282,10 +273,7 @@ object Dedup {
     * stay inside the caller's timer).
     */
   def benchmarkTokenRunsFromPositional(cpArr: DataFrame, benchmark: DataFrame,
-                                       k: Int, minRunTokens: Int,
-                                       idCol: String = "doc_id",
-                                       textCol: String = "text",
-                                       maxShingleFreq: Int = 1000): DataFrame = {
+                                       k: Int, minRunTokens: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(minRunTokens >= k, s"minRunTokens ($minRunTokens) must be >= k ($k)")
     // cp is deliberately NOT persisted (ADVICE r13 persist hygiene): with
@@ -295,7 +283,7 @@ object Dedup {
     // corpus-sized cache entry leaked past the operator's return
     val cp = cpArr
       .select(col("id"), posexplode(col("__sh")).as(Seq("pos", "shingle")))
-    val bp = positionalArrays(benchmark, k, idCol, textCol)
+    val bp = positionalArrays(benchmark, k)
       .select(col("id"), posexplode(col("__sh")).as(Seq("pos", "shingle")))
       .select(col("id").as("bid"), col("pos").as("bpos"), col("shingle"))
     // the df cut INVERTED: the >maxShingleFreq HOT set is usually
@@ -306,7 +294,7 @@ object Dedup {
     // over match rows
     val hot = cp.select(col("id"), col("shingle")).distinct()
       .groupBy(col("shingle")).agg(count(lit(1)).as("f"))
-      .filter(col("f") > maxShingleFreq)
+      .filter(col("f") > 1000)
       .select(col("shingle"))
     val matches = hotCutJoiner(hot)(cp.join(broadcast(bp), Seq("shingle")))
       .select(col("id"), col("bid"), col("pos").as("pos_c"),
@@ -318,7 +306,7 @@ object Dedup {
       .groupBy(col("id"), col("bid"), col("diag"), col("__island"))
       .agg((count(lit(1)) + lit(k - 1).cast("long")).as("run_tokens"))
       .filter(col("run_tokens") >= minRunTokens)
-      .groupBy(col("id").as(idCol))
+      .groupBy(col("id").as("doc_id"))
       .agg(count(lit(1)).as("n_runs"),
         countDistinct(col("bid")).as("n_bench_docs"),
         max(col("run_tokens")).as("max_run_tokens"))
@@ -416,9 +404,9 @@ object Dedup {
     * Downstream code may assume every emitted `sh` is non-empty.
     */
   def withShingles(docs: DataFrame, k: Int,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                   idCol: String = "doc_id"): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    docs.select(col(idCol).as("id"), col(textCol).as("__text"))
+    docs.select(col(idCol).as("id"), col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", tokens(col("__text")))
       .filter(size(col("__toks")) >= k)
@@ -435,11 +423,9 @@ object Dedup {
     * contract as [[withShingles]]: documents shorter than k tokens are
     * dropped here, emitted `sh` is distinct and non-empty.
     */
-  def withStringShingles(docs: DataFrame, k: Int,
-                         idCol: String = "doc_id",
-                         textCol: String = "text"): DataFrame = {
+  def withStringShingles(docs: DataFrame, k: Int): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    docs.select(col(idCol).as("id"), col(textCol).as("__text"))
+    docs.select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", tokens(col("__text")))
       .filter(size(col("__toks")) >= k)
@@ -481,11 +467,9 @@ object Dedup {
     * co-located join over catalog-table standing artifacts (r16).
     */
   def dedupDeltaAgainstCorpusLsh(baseSh: DataFrame, baseBands: DataFrame,
-                                 deltaSh: DataFrame, threshold: Double,
-                                 numHashes: Int = 16, bands: Int = 8,
-                                 seed: Long = 42L): DataFrame = {
+                                 deltaSh: DataFrame, threshold: Double): DataFrame = {
     val dBands = MinHashLSH.replayableBandRows(
-      MinHashLSH.md5Signatures(deltaSh, numHashes, seed), bands)
+      MinHashLSH.md5Signatures(deltaSh, 16), 8)
     val rhs = baseBands.select(col("id").as("rid"), col("band"), col("bucket"),
         lit(true).as("__corpus"))
       .unionByName(dBands.select(col("id").as("rid"), col("band"), col("bucket"),
@@ -540,9 +524,7 @@ object Dedup {
   def dedupDeltaAgainstCorpusLshBucketed(baseArrTable: String,
                                          indexTable: String,
                                          deltaSh: DataFrame,
-                                         threshold: Double,
-                                         numHashes: Int = 16, bands: Int = 8,
-                                         seed: Long = 42L): DataFrame = {
+                                         threshold: Double): DataFrame = {
     val s = deltaSh.sparkSession
     // EAGER anchor (ADVICE r16): the delta band frame feeds THREE plan
     // branches (corpus probe, delta-internal rhs, delta-internal probe) —
@@ -550,7 +532,7 @@ object Dedup {
     // O(delta). `deltaSh` persistence stays caller-owned (the shared
     // contract above).
     val dBands = MinHashLSH.replayableBandRows(
-      MinHashLSH.md5Signatures(deltaSh, numHashes, seed), bands)
+      MinHashLSH.md5Signatures(deltaSh, 16), 8)
       .anchor(Bound.Fixture)
     val corpusIdx = s.table(indexTable)
       .select(col("id").as("rid"), col("band"), col("bucket"))
@@ -598,7 +580,6 @@ object Dedup {
     * frequency cut).
     */
   def ngramJaccardPairs(docs: DataFrame, k: Int, threshold: Double,
-                        idCol: String = "doc_id", textCol: String = "text",
                         maxShingleFreq: Int = 1000): DataFrame =
     // persist the array-form shingle frame BEFORE exploding: the cache is a
     // predicate-pushdown boundary, so the `isnotnull(sh)`/`size(sh) > 0`
@@ -606,7 +587,7 @@ object Dedup {
     // cached attribute instead of being substituted (with `split` re-inlined
     // per array element — measured 10× the whole pipeline) into the scan
     jaccardPairsFromShingles(
-      withShingles(docs, k, idCol, textCol)
+      withShingles(docs, k)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       threshold, maxShingleFreq)
 
@@ -615,14 +596,13 @@ object Dedup {
     * the accumulated corpus without re-deduping the corpus itself. Hash-first:
     * the anti-join shuffles 16-byte hashes, never documents.
     */
-  def dedupAgainstCorpus(newDocs: DataFrame, existing: DataFrame,
-                         textCol: String = "text"): DataFrame = {
+  def dedupAgainstCorpus(newDocs: DataFrame, existing: DataFrame): DataFrame = {
     // coalesce on BOTH sides: an equi-join never matches NULL = NULL, so
     // without it a null-text batch doc could never be recognized as a dup
     // of anything — null ≡ empty, per the dedupExact identity
     val seen = existing.select(
-      md5(coalesce(col(textCol), lit(""))).as("__seen_hash")).distinct()
-    newDocs.withColumn("__h", md5(coalesce(col(textCol), lit(""))))
+      md5(coalesce(col("text"), lit(""))).as("__seen_hash")).distinct()
+    newDocs.withColumn("__h", md5(coalesce(col("text"), lit(""))))
       .join(seen, col("__h") === col("__seen_hash"), "left_anti")
       .drop("__h")
   }
@@ -638,26 +618,25 @@ object Dedup {
     * *hash* instead of the string to shrink the shuffle key — kept as the raw
     * line here so the DuckDB oracle is collision-proof-identical.
     */
-  def lineDedup(docs: DataFrame, sep: String = "\\. ", joinSep: String = ". ",
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def lineDedup(docs: DataFrame, sep: String = "\\. ", joinSep: String = ". "): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // coalesce: split(NULL) is a NULL array and posexplode would silently
     // drop the document; a null-text doc line-dedups as an empty-text doc
     val lines = docs
-      .select(col(idCol),
-        posexplode(split(coalesce(col(textCol), lit("")), sep))
+      .select(col("doc_id"),
+        posexplode(split(coalesce(col("text"), lit("")), sep))
           .as(Seq("pos", "line")))
-    val perDoc = lines.groupBy(col(idCol)).agg(count(lit(1)).as("n_lines"))
-    val w = Window.partitionBy(col("line")).orderBy(col(idCol), col("pos"))
+    val perDoc = lines.groupBy(col("doc_id")).agg(count(lit(1)).as("n_lines"))
+    val w = Window.partitionBy(col("line")).orderBy(col("doc_id"), col("pos"))
     val kept = lines.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-    val clean = kept.groupBy(col(idCol)).agg(
+    val clean = kept.groupBy(col("doc_id")).agg(
       count(lit(1)).as("n_kept"),
       concat_ws(joinSep,
         transform(sort_array(collect_list(struct(col("pos"), col("line")))),
           s => s.getField("line"))).as("clean_text"))
-    perDoc.join(clean, Seq(idCol), "left")
-      .select(col(idCol), col("n_lines"),
+    perDoc.join(clean, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_lines"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("clean_text"), lit("")).as("clean_text"))
   }
@@ -667,15 +646,14 @@ object Dedup {
     * boilerplate-heavy documents score low — the inverse signal of
     * [[graft.text.Curation.decontaminate]], over the corpus itself.
     */
-  def noveltyScores(docs: DataFrame, k: Int = 5,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sh = withShingles(docs, k, idCol, textCol)
+  def noveltyScores(docs: DataFrame): DataFrame = {
+    val sh = withShingles(docs, 5)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       .select(col("id"), explode(col("sh")).as("shingle"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val freq = sh.groupBy("shingle").agg(count(lit(1)).as("f"))
     sh.hint("shuffle_hash").join(freq.hint("shuffle_hash"), Seq("shingle"))
-      .groupBy(col("id").as(idCol))
+      .groupBy(col("id").as("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
         sum(when(col("f") === 1, 1L).otherwise(0L)).as("n_unique"))
       .withColumn("novelty",
@@ -694,9 +672,7 @@ object Dedup {
     * keys on the 8-byte shingle hash and its fan-out per shingle is bounded
     * by #sources² (not docs²) — the output is #sources² rows, metadata-sized.
     */
-  def sourceOverlap(docs: DataFrame, k: Int,
-                    sourceCol: String = "source",
-                    textCol: String = "text"): DataFrame = {
+  def sourceOverlap(docs: DataFrame, k: Int): DataFrame = {
     // two EAGER anchors instead of the old lazy double-persist (same-window
     // A/B in the window that reproduced the driver's 1.85 s reading:
     // 1.88-2.09 s with lazy persists → 1.02-1.26 s anchored, identical
@@ -704,7 +680,7 @@ object Dedup {
     // exploded-distinct frame leaves the shingle HOF unmaterialized inside
     // that job and the explode re-inlines it per element (rule-1 trap,
     // measured 22 s in the same window).
-    val sh = withShingles(docs, k, idCol = sourceCol, textCol = textCol)
+    val sh = withShingles(docs, k, idCol = "source")
       .anchor(Bound.PerEntity)
       .select(col("id").as("src"), explode(col("sh")).as("shingle"))
       .distinct()
@@ -766,19 +742,16 @@ object Dedup {
     * the long doc). Same candidate machinery and frequency-cut valve as
     * [[ngramJaccardPairs]] — O(collisions), never all-pairs.
     */
-  def containmentPairs(docs: DataFrame, k: Int, threshold: Double,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       maxShingleFreq: Int = 1000): DataFrame =
-    containmentPairsFromShingles(withShingles(docs, k, idCol, textCol),
-      threshold, maxShingleFreq)
+  def containmentPairs(docs: DataFrame, k: Int, threshold: Double): DataFrame =
+    containmentPairsFromShingles(withShingles(docs, k),
+      threshold)
 
   /** [[containmentPairs]] with pass 1's `(id, sh)` shingle frame supplied
     * by the caller — the entry point when the corpus shingles are already
     * materialized (the shared-fixture discipline; same contract as
     * [[graft.dedup.MinHashLSH.signaturesFromShingles]]).
     */
-  def containmentPairsFromShingles(shingled: DataFrame, threshold: Double,
-                                   maxShingleFreq: Int = 1000): DataFrame = {
+  def containmentPairsFromShingles(shingled: DataFrame, threshold: Double): DataFrame = {
     // sizes ride the explode; hot-set broadcast anti instead of the rare
     // join-back (the [[jaccardPairsFromShingles]] r13 shape — result set
     // identical by complement)
@@ -787,7 +760,7 @@ object Dedup {
         explode(col("sh")).as("shingle"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val hot = sh.groupBy("shingle").agg(count(lit(1)).as("f"))
-      .filter(col("f") > maxShingleFreq).select(col("shingle"))
+      .filter(col("f") > 1000).select(col("shingle"))
     val filtered = hotCutJoiner(hot)(sh)
     filtered.as("a").hint("shuffle_hash")
       .join(filtered.as("b").hint("shuffle_hash"),
@@ -828,11 +801,9 @@ object Dedup {
     * shingle-count) join inputs, r13: replaced two exploded-frame shuffles
     * + a groupBy with two doc-count joins (q_ppjoin 2.1 → measured below).
     */
-  def prefixFilterJaccardPairs(docs: DataFrame, k: Int, threshold: Double,
-                               idCol: String = "doc_id",
-                               textCol: String = "text"): DataFrame =
+  def prefixFilterJaccardPairs(docs: DataFrame, k: Int, threshold: Double): DataFrame =
     prefixFilterJaccardPairsFromShingles(
-      withShingles(docs, k, idCol, textCol)
+      withShingles(docs, k)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
       threshold)
 
@@ -906,10 +877,9 @@ object Dedup {
     * persisted before the explode so the downstream explode's inferred
     * constraints cannot push `split` back into the scan).
     */
-  def shingleTf(docs: DataFrame, k: Int,
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def shingleTf(docs: DataFrame, k: Int): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    docs.select(col(idCol).as("id"), col(textCol).as("__text"))
+    docs.select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", tokens(col("__text")))
       .filter(size(col("__toks")) >= k)
@@ -945,13 +915,11 @@ object Dedup {
     * join sides corpus-sized ⇒ shuffle-hash hinted (the file-size-derived
     * broadcast trap, see [[jaccardPairsFromShingles]]).
     */
-  def tfCosinePairs(docs: DataFrame, k: Int, threshold: Double,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    maxShingleFreq: Int = 1000): DataFrame =
+  def tfCosinePairs(docs: DataFrame, k: Int, threshold: Double): DataFrame =
     tfCosinePairsFromTf(
-      shingleTf(docs, k, idCol, textCol)
+      shingleTf(docs, k)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      threshold, maxShingleFreq)
+      threshold)
 
   /** [[tfCosinePairs]] with the `(id, shingle, tf)` multiset frame
     * supplied by the caller — the entry point when the corpus shingle TF
@@ -959,14 +927,13 @@ object Dedup {
     * amortizes; the df cut, norms, dot join, and cosine verification stay
     * inside the caller's timer).
     */
-  def tfCosinePairsFromTf(tf: DataFrame, threshold: Double,
-                          maxShingleFreq: Int = 1000): DataFrame = {
+  def tfCosinePairsFromTf(tf: DataFrame, threshold: Double): DataFrame = {
     // df cut INVERTED to the usually-metadata-sized hot set via the
     // size-gated [[hotCutJoiner]] (broadcast anti-join with shuffle-anti
     // fallback; result identical by complement)
     val pruned = hotCutJoiner(
         tf.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxShingleFreq).select(col("shingle")))(tf)
+          .filter(col("df") > 1000).select(col("shingle")))(tf)
       .select(col("id"), col("shingle"), col("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val norms = pruned.groupBy(col("id")).agg(sum(col("tf") * col("tf")).as("norm2"))

@@ -105,9 +105,8 @@ object DupClusters {
     * its three edges, one map-combined count, edges never in a triangle
     * kept at support 0 via the outer join.
     */
-  def edgeTriangleSupport(pairs: DataFrame, idA: String = "id_a",
-                          idB: String = "id_b"): DataFrame = {
-    val e0 = undirectedEdges(pairs, idA, idB)
+  def edgeTriangleSupport(pairs: DataFrame): DataFrame = {
+    val e0 = undirectedEdges(pairs, "id_a", "id_b")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val triEdges = orientedTriangles(e0)
       .select(explode(array(
@@ -139,11 +138,10 @@ object DupClusters {
     * cheap primitive for). Returns the surviving edges with their
     * final-round support.
     */
-  def kTrussPeel(pairs: DataFrame, k: Int, rounds: Int,
-                 idA: String = "id_a", idB: String = "id_b"): DataFrame = {
+  def kTrussPeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k must be >= 3, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = undirectedEdges(pairs, idA, idB)
+    var e = undirectedEdges(pairs, "id_a", "id_b")
       .anchor(Bound.Fixture)
     def roundSupport(edges: DataFrame): DataFrame =
       orientedTriangles(edges)
@@ -184,8 +182,7 @@ object DupClusters {
     * ≤ its degree. Labels are persisted per round and the previous round
     * unpersisted; fully deterministic, so round-for-round SQL-replicable.
     */
-  def labelPropagation(pairs: DataFrame, rounds: Int, idA: String = "id_a",
-                       idB: String = "id_b"): DataFrame = {
+  def labelPropagation(pairs: DataFrame, rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 0, s"rounds must be non-negative, got $rounds")
     // ONE materialization per round (r18 dispatch-floor fusion, the
@@ -196,7 +193,7 @@ object DupClusters {
     // labels is one (node, lbl) row per node — node-set-sized, the anchor
     // envelope class (see SCALE.md r18). q_label_prop A/B x4 interleaved,
     // exact-equal: 1.14-1.60 s (24 jobs) -> 0.67-0.93 (16 jobs).
-    val e = undirectedEdges(pairs, idA, idB)
+    val e = undirectedEdges(pairs, "id_a", "id_b")
       .anchor(Bound.Fixture)
     val nodes = e.select(col("u").as("n")).union(e.select(col("v").as("n"))).distinct()
     var labels = nodes.select(col("n"), col("n").as("lbl"))
@@ -238,11 +235,10 @@ object DupClusters {
     * edge set only shrinks. an anchor per round truncates the
     * otherwise round-stacking lineage exactly like [[pageRankFixedPoint]].
     */
-  def kCorePeel(pairs: DataFrame, k: Int, rounds: Int,
-                idA: String = "id_a", idB: String = "id_b"): DataFrame = {
+  def kCorePeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be non-negative, got $rounds")
-    var e = undirectedEdges(pairs, idA, idB)
+    var e = undirectedEdges(pairs, "id_a", "id_b")
       .anchor(Bound.Fixture)
     (1 to rounds).foreach { _ =>
       val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
@@ -270,9 +266,8 @@ object DupClusters {
     * where degrees are bounded by construction. Everything downstream of
     * the join is distinct + counts on node keys.
     */
-  def twoHopNeighbors(pairs: DataFrame, idA: String = "id_a",
-                      idB: String = "id_b"): DataFrame = {
-    val e = undirectedEdges(pairs, idA, idB)
+  def twoHopNeighbors(pairs: DataFrame): DataFrame = {
+    val e = undirectedEdges(pairs, "id_a", "id_b")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val adj = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -309,8 +304,7 @@ object DupClusters {
     * prediction the signal you usually want to ignore anyway. Endpoint
     * degrees (and so `n_union`) stay exact.
     */
-  def linkPrediction(pairs: DataFrame, maxMiddleDegree: Int = Int.MaxValue,
-                     idA: String = "id_a", idB: String = "id_b"): DataFrame = {
+  def linkPrediction(pairs: DataFrame, maxMiddleDegree: Int = Int.MaxValue): DataFrame = {
     require(maxMiddleDegree >= 1, s"maxMiddleDegree must be >= 1, got $maxMiddleDegree")
     // one EAGER anchor on the normalized edge set; adj deliberately NOT
     // persisted — it is a map-only union over the anchor, so each consumer
@@ -320,7 +314,7 @@ object DupClusters {
     // that reproduced the driver's 3.2 s q_link_prediction reading:
     // 4.0-6.0 s with two lazy persists → 0.63 s anchored, identical rows).
     // Eager: calling this operator runs the edge-normalization job at once.
-    val e = undirectedEdges(pairs, idA, idB)
+    val e = undirectedEdges(pairs, "id_a", "id_b")
       .anchor(Bound.Fixture)
     val adj = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
     val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -358,13 +352,12 @@ object DupClusters {
     * id-keyed anti-join, and a #distinct-sizes-row output — metadata-sized
     * end to end.
     */
-  def clusterSizeAudit(components: DataFrame, universe: DataFrame,
-                       idCol: String = "doc_id"): DataFrame = {
+  def clusterSizeAudit(components: DataFrame, universe: DataFrame): DataFrame = {
     val sizes = components.groupBy(col("component"))
       .agg(count(lit(1)).as("cluster_size"))
       .select(col("cluster_size"))
-    val singles = universe.select(col(idCol))
-      .join(components.select(col(idCol)), Seq(idCol), "left_anti")
+    val singles = universe.select(col("doc_id"))
+      .join(components.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(lit(1L).as("cluster_size"))
     sizes.unionByName(singles)
       .groupBy(col("cluster_size"))
@@ -379,20 +372,18 @@ object DupClusters {
     * first-crawled one). One window top-1 per component (WindowGroupLimit:
     * only per-task winners shuffle) plus a metadata-sized count join.
     */
-  def canonicalPerCluster(components: DataFrame, scores: DataFrame,
-                          idCol: String = "doc_id",
-                          scoreCol: String = "quality_score"): DataFrame = {
+  def canonicalPerCluster(components: DataFrame, scores: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val joined = components.select(col("id").as(idCol), col("component"))
-      .join(scores.select(col(idCol), col(scoreCol)), idCol)
+    val joined = components.select(col("id").as("doc_id"), col("component"))
+      .join(scores.select(col("doc_id"), col("quality_score")), "doc_id")
     val counts = joined.groupBy(col("component")).agg(count(lit(1)).as("n_members"))
     val w = Window.partitionBy(col("component"))
-      .orderBy(col(scoreCol).desc, col(idCol))
+      .orderBy(col("quality_score").desc, col("doc_id"))
     joined.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .join(counts, "component")
-      .select(col("component"), col(idCol).as("canon_id"),
-        col(scoreCol).as("canon_score"), col("n_members"))
+      .select(col("component"), col("doc_id").as("canon_id"),
+        col("quality_score").as("canon_score"), col("n_members"))
   }
 
   /** Fixed-point PageRank over the undirected pair graph: probabilities are
@@ -412,9 +403,8 @@ object DupClusters {
     * denser graphs.
     */
   def pageRankFixedPoint(pairs: DataFrame, iterations: Int = 2,
-                         scale: Long = 1000000000000L,
-                         idA: String = "id_a", idB: String = "id_b"): DataFrame = {
-    val e = pairs.select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
+                         scale: Long = 1000000000000L): DataFrame = {
+    val e = pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .filter(col("u") =!= col("v")).distinct()
     val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -439,7 +429,7 @@ object DupClusters {
     * pinned to a SEED set instead of spread uniformly: the graph-expansion
     * primitive for curation ("given these trusted/contaminated documents,
     * rank everything by proximity in the duplicate/similarity graph").
-    * Same scaled-integer message discipline (`scale` units per seed, 15%
+    * Same scaled-integer message discipline (10¹² units per seed, 15%
     * restart, integer div floors) — every round is deterministic integer
     * arithmetic, so iterations unroll into an exact SQL oracle and the
     * result is bit-reproducible on any cluster. Non-seed nodes receive
@@ -449,11 +439,8 @@ object DupClusters {
     * destination + a left join back onto the node table — shuffles keyed
     * on node ids only; an anchor truncates the per-round lineage.
     */
-  def personalizedPageRank(pairs: DataFrame, seeds: DataFrame,
-                           iterations: Int = 2,
-                           scale: Long = 1000000000000L,
-                           idA: String = "id_a", idB: String = "id_b"): DataFrame = {
-    val e = pairs.select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
+  def personalizedPageRank(pairs: DataFrame, seeds: DataFrame): DataFrame = {
+    val e = pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .filter(col("u") =!= col("v")).distinct()
     val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -466,9 +453,9 @@ object DupClusters {
       .join(sd, Seq("id"), "left")
       .select(col("id"), coalesce(col("__s1"), lit(0L)).as("__s"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val base = 15L * scale / 100L
-    var pr = nodes.select(col("id"), (col("__s") * lit(scale)).as("pr"))
-    (1 to iterations).foreach { _ =>
+    val base = 15L * 1000000000000L / 100L
+    var pr = nodes.select(col("id"), (col("__s") * lit(1000000000000L)).as("pr"))
+    (1 to 2).foreach { _ =>
       val msgs = edges.join(pr, edges("u") === pr("id"))
         .select(col("v"), expr("pr div du").as("c"))
         .groupBy(col("v")).agg(sum(col("c")).as("s"))
@@ -485,9 +472,7 @@ object DupClusters {
     * `pairs(idA, idB)`; `component` is the smallest node id reachable from
     * `id` (so planted-duplicate groups get their original doc as canon).
     */
-  def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-                          idB: String = "id_b",
-                          maxIterations: Int = 30): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     // large-star: every neighbor v > u links to m = min(Γ(u) ∪ {u}).
     // Emitted edges always point child → strictly-smaller parent.
     def largeStar(e: DataFrame): DataFrame = {
@@ -521,14 +506,14 @@ object DupClusters {
     }
 
     var edges = pairs
-      .select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
+      .select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
       .anchor(Bound.Fixture)
     var sig = signature(edges)
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIterations) {
+    while (!converged && iter < 30) {
       val next = smallStar(largeStar(edges)).anchor(Bound.Fixture)
       val nextSig = signature(next)
       converged = nextSig == sig
@@ -536,7 +521,7 @@ object DupClusters {
       sig = nextSig
       iter += 1
     }
-    require(converged, s"connected components did not converge in $maxIterations rounds")
+    require(converged, "connected components did not converge in 30 rounds")
     // fixpoint is a star forest child→root; roots carry themselves
     edges.select(col("u").as("id"), col("v").as("component"))
       .unionAll(edges.select(col("v").as("id"), col("v").as("component")))
@@ -571,10 +556,9 @@ object DupClusters {
     * reachability. Default (None) is exact over the full adjacency.
     */
   def randomWalks(edges: DataFrame, steps: Int, seed: String = "walk",
-                  idA: String = "id_a", idB: String = "id_b",
                   maxDegree: Option[Int] = None): DataFrame = {
-    val fullAdj = edges.select(col(idA).as("u"), col(idB).as("v"))
-      .unionByName(edges.select(col(idB).as("u"), col(idA).as("v")))
+    val fullAdj = edges.select(col("id_a").as("u"), col("id_b").as("v"))
+      .unionByName(edges.select(col("id_b").as("u"), col("id_a").as("v")))
       .distinct()
     val adj = maxDegree match {
       case None => fullAdj
@@ -621,8 +605,7 @@ object DupClusters {
     * shape without the dangling-mass correction. Edges are used as-is
     * (directed); scores live keyed by node.
     */
-  def hits(edges: DataFrame, srcCol: String = "src",
-           dstCol: String = "dst",
+  def hits(edges: DataFrame,
            distinctAnchored: Boolean = false): DataFrame = {
     // eager anchor, not a lazy persist (r17): the distinct edge table is
     // MB-scale (two longs per edge) with THREE consumers (a1, the h1 join,
@@ -636,7 +619,7 @@ object DupClusters {
     // distinct + SECOND eager materialization — write + read + shuffle +
     // write of the same edge list — is skipped (q_hits A/B x4 interleaved,
     // exact-equal: 1.49-1.87 s -> 1.25-1.52, 16 -> 15 jobs).
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e0 = edges.select(col("src"), col("dst"))
     val e = if (distinctAnchored) e0 else e0.distinct().anchor(Bound.Fixture)
     val a1 = e.groupBy(col("dst")).agg(count(lit(1)).as("a1")) // Σ h0 = indeg
     val h1 = e.join(a1, Seq("dst"))
@@ -660,10 +643,9 @@ object DupClusters {
     * expression. One degree aggregate, two broadcast-shaped joins onto the
     * edge list, one map-combined moment aggregate.
     */
-  def degreeAssortativity(pairs: DataFrame, idA: String = "id_a",
-                          idB: String = "id_b"): DataFrame = {
-    val e = pairs.select(col(idA).as("u"), col(idB).as("v"))
-      .unionByName(pairs.select(col(idB).as("u"), col(idA).as("v")))
+  def degreeAssortativity(pairs: DataFrame): DataFrame = {
+    val e = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
+      .unionByName(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -698,9 +680,8 @@ object DupClusters {
     * `n_triangles = 0`; `clustering` is NULL for degree < 2 (undefined,
     * not 0 — a leaf is not "perfectly un-clustered").
     */
-  def clusteringCoefficient(pairs: DataFrame, idA: String = "id_a",
-                            idB: String = "id_b"): DataFrame = {
-    val e0 = undirectedEdges(pairs, idA, idB)
+  def clusteringCoefficient(pairs: DataFrame): DataFrame = {
+    val e0 = undirectedEdges(pairs, "id_a", "id_b")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = e0.select(explode(array(col("u"), col("v"))).as("node_id"))
       .groupBy(col("node_id")).agg(count(lit(1)).as("degree"))
@@ -728,14 +709,11 @@ object DupClusters {
     * endpoints, map-combined aggregates to a |communities|-row frame,
     * one final fold. Nothing is ever quadratic in nodes or communities.
     */
-  def modularity(pairs: DataFrame, communities: DataFrame,
-                 idA: String = "id_a", idB: String = "id_b",
-                 nodeCol: String = "node_id",
-                 communityCol: String = "community"): DataFrame = {
-    val e = undirectedEdges(pairs, idA, idB)
+  def modularity(pairs: DataFrame, communities: DataFrame): DataFrame = {
+    val e = undirectedEdges(pairs, "id_a", "id_b")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cm = communities.select(col(nodeCol).cast("long").as("n"),
-      col(communityCol).as("c"))
+    val cm = communities.select(col("node_id").cast("long").as("n"),
+      col("community").as("c"))
     val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     val dc = deg.join(cm, Seq("n")).groupBy(col("c")).agg(sum(col("d")).as("dc"))
@@ -773,18 +751,15 @@ object DupClusters {
     * the ball) instead of O(diameter) at 100 TB). Integer weights ⇒
     * distances exact BIGINTs.
     */
-  def boundedShortestPaths(edges: DataFrame, seeds: DataFrame, rounds: Int,
-                           idA: String = "id_a", idB: String = "id_b",
-                           weightCol: String = "w",
-                           seedCol: String = "node_id"): DataFrame = {
+  def boundedShortestPaths(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    val e = edges.select(col(idA).cast("long").as("u"),
-      col(idB).cast("long").as("v"), col(weightCol).cast("long").as("w"))
+    val e = edges.select(col("id_a").cast("long").as("u"),
+      col("id_b").cast("long").as("v"), col("w").cast("long").as("w"))
       .filter(col("u") =!= col("v"))
     val adj = e.unionByName(e.select(col("v").as("u"), col("u").as("v"), col("w")))
       .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = seeds.select(col(seedCol).cast("long").as("node_id"))
+    var dist = seeds.select(col("node_id").cast("long").as("node_id"))
       .distinct().withColumn("dist", lit(0L)).anchor(Bound.PerEntity)
     var r = 0
     while (r < rounds) {
@@ -816,16 +791,14 @@ object DupClusters {
     * "everything within radius k", which is also what keeps the cost
     * O(edges within k hops) on a 100 TB graph instead of O(diameter).
     */
-  def bfsHops(pairs: DataFrame, seeds: DataFrame, maxHops: Int,
-              idA: String = "id_a", idB: String = "id_b",
-              seedCol: String = "node_id"): DataFrame = {
+  def bfsHops(pairs: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = pairs.select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
+    val e = pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
     val adj = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var visited = seeds.select(col(seedCol).cast("long").as("node_id"))
+    var visited = seeds.select(col("node_id").cast("long").as("node_id"))
       .distinct().withColumn("hop", lit(0)).anchor(Bound.PerEntity)
     var frontier = visited
     var h = 1

@@ -42,8 +42,8 @@ object MinHashLSH {
     * (the previous `transform`+`aggregate` shape; same values, order
     * independent either way since min commutes).
     */
-  def signaturesFromShingles(sh: DataFrame, numHashes: Int, seed: Long = 42L): DataFrame = {
-    val ps = params(numHashes, seed)
+  def signaturesFromShingles(sh: DataFrame, numHashes: Int): DataFrame = {
+    val ps = params(numHashes, 42L)
     sh.select(col("id"), explode(col("sh")).as("s"))
       .groupBy(col("id"))
       .agg(graft.functions.MinHashAgg
@@ -53,9 +53,8 @@ object MinHashLSH {
   /** doc_id, signature array<long> of length `numHashes`. Empty-shingle docs
     * (shorter than k tokens) are dropped — they have no resemblance sketch.
     */
-  def signatures(docs: DataFrame, k: Int, numHashes: Int, seed: Long = 42L,
-                 idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    signaturesFromShingles(Dedup.withShingles(docs, k, idCol, textCol), numHashes, seed)
+  def signatures(docs: DataFrame, k: Int, numHashes: Int): DataFrame =
+    signaturesFromShingles(Dedup.withShingles(docs, k), numHashes)
 
   /** Oracle-REPLAYABLE signatures over STRING shingles
     * ([[Dedup.withStringShingles]]): the base hash is the md5-u32 uniform
@@ -67,8 +66,8 @@ object MinHashLSH {
     * their proofs at self-verifying in-plan booleans
     * (`q_minhash_incremental`). Same aggregate kernel, same shuffle shape.
     */
-  def md5Signatures(sh: DataFrame, numHashes: Int, seed: Long = 42L): DataFrame = {
-    val ps = params(numHashes, seed)
+  def md5Signatures(sh: DataFrame, numHashes: Int): DataFrame = {
+    val ps = params(numHashes, 42L)
     sh.select(col("id"), explode(col("sh")).as("s"))
       .groupBy(col("id"))
       .agg(graft.functions.MinHashAgg
@@ -100,8 +99,8 @@ object MinHashLSH {
     * (densification is deterministic), so exact-duplicate capture remains a
     * hard guarantee.
     */
-  def signaturesOPH(sh: DataFrame, buckets: Int, seed: Long = 42L): DataFrame = {
-    val Seq((a, b)) = params(1, seed)
+  def signaturesOPH(sh: DataFrame, buckets: Int): DataFrame = {
+    val Seq((a, b)) = params(1, 42L)
     sh.select(col("id"), explode(col("sh")).as("s"))
       .groupBy(col("id"))
       .agg(graft.functions.MinHashAgg
@@ -109,10 +108,9 @@ object MinHashLSH {
   }
 
   /** [[nearDuplicatesFromShingles]] with one-permutation signatures. */
-  def nearDuplicatesOPH(sh: DataFrame, buckets: Int = 64, bands: Int = 16,
-                        threshold: Double = 0.8, seed: Long = 42L): DataFrame = {
-    val cands = candidatePairs(signaturesOPH(sh, buckets, seed), bands)
-    verifyExact(cands, sh, threshold)
+  def nearDuplicatesOPH(sh: DataFrame, buckets: Int = 64, bands: Int = 16): DataFrame = {
+    val cands = candidatePairs(signaturesOPH(sh, buckets), bands)
+    verifyExact(cands, sh, 0.8)
   }
 
   /** The banded LSH index itself — (id, band, bucket), `bands` rows per
@@ -148,15 +146,13 @@ object MinHashLSH {
     * sketch only prunes; it never asserts).
     */
   def nearDuplicates(docs: DataFrame, k: Int = 5, numHashes: Int = 128,
-                     bands: Int = 32, threshold: Double = 0.8,
-                     seed: Long = 42L,
-                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                     bands: Int = 32, threshold: Double = 0.8): DataFrame = {
     // the shingle frame feeds three plan branches (signatures + both sides of
     // the verification join); persist so shingling runs once, not three times
     // — at cluster scale this is the sketch table you would checkpoint
-    val sh = Dedup.withShingles(docs, k, idCol, textCol)
+    val sh = Dedup.withShingles(docs, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    nearDuplicatesFromShingles(sh, numHashes, bands, threshold, seed)
+    nearDuplicatesFromShingles(sh, numHashes, bands, threshold)
   }
 
   /** [[nearDuplicates]] from an already-shingled, nonempty-filtered (id, sh)
@@ -164,9 +160,8 @@ object MinHashLSH {
     * runs once across the sketch and any exact baseline sharing it).
     */
   def nearDuplicatesFromShingles(sh: DataFrame, numHashes: Int, bands: Int,
-                                 threshold: Double = 0.8,
-                                 seed: Long = 42L): DataFrame = {
-    val cands = candidatePairs(signaturesFromShingles(sh, numHashes, seed), bands)
+                                 threshold: Double = 0.8): DataFrame = {
+    val cands = candidatePairs(signaturesFromShingles(sh, numHashes), bands)
     verifyExact(cands, sh, threshold)
   }
 

@@ -30,8 +30,7 @@ object SimHash {
     * object-hash aggregate, and map-side combine ships one 512-byte buffer
     * per document at 100 TB fan-in.
     */
-  def fingerprints(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame = {
+  def fingerprints(docs: DataFrame): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
     // explode_outer + null-guarded hash: a null/blank document (zero tokens
     // under the shared tokenizer) must still get a fingerprint row — plain
@@ -40,7 +39,7 @@ object SimHash {
     // when() passes a true NULL through, which SimHashAggregate skips, so a
     // token-less doc evals the empty vote buffer to the well-defined fp 0.
     docs
-      .select(col(idCol).as("id"), col(textCol).as("__text"))
+      .select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(parallelism)
       .select(col("id"), explode_outer(Dedup.tokens(col("__text"))).as("tok"))
       .groupBy(col("id"))
@@ -49,11 +48,10 @@ object SimHash {
   }
 
   /** Near-dup pairs with Hamming distance ≤ maxHamming via block-join. */
-  def nearDuplicates(docs: DataFrame, maxHamming: Int = 3,
-                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def nearDuplicates(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val blocks = maxHamming + 1
     val width = 64 / blocks
-    val fps = fingerprints(docs, idCol, textCol)
+    val fps = fingerprints(docs)
     // the blocked frame is both sides of the self-join; persist the (tiny)
     // (id, fp, block, key) projection so the fingerprint aggregation — the
     // expensive part — runs once, not once per join side

@@ -45,12 +45,11 @@ object Winnowing {
     * `fp` is the minimum k-gram hash of some full `w`-window. Documents with
     * fewer than `w + k − 1` tokens yield no fingerprints.
     */
-  def fingerprints(docs: DataFrame, k: Int = 3, w: Int = 4,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def fingerprints(docs: DataFrame, k: Int = 3, w: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(w >= 1, s"w must be >= 1, got $w")
     val toks = docs
-      .select(col(idCol).as("doc"), Dedup.tokens(col(textCol)).as("__t"))
+      .select(col("doc_id").as("doc"), Dedup.tokens(col("text")).as("__t"))
       .select(col("doc"), expr("filter(__t, x -> x <> '')").as("__t"))
     val pos = toks.select(col("doc"), posexplode(col("__t")).as(Seq("pos", "wd")))
     val byPos = Window.partitionBy(col("doc")).orderBy(col("pos"))
@@ -82,8 +81,7 @@ object Winnowing {
     * `maxDocFreq` is the boilerplate valve (see object doc).
     */
   def fingerprintPairs(docs: DataFrame, k: Int = 3, w: Int = 4,
-                       minShared: Int = 2, maxDocFreq: Int = 50,
-                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                       minShared: Int = 2, maxDocFreq: Int = 50): DataFrame = {
     // eager anchor before the self-join: both join branches (and both df-cut
     // consumers below) ultimately consume the fingerprint table, and without
     // the cut each re-runs the whole tokenize → k-gram window → winnow-min →
@@ -93,7 +91,7 @@ object Winnowing {
     // positions, two longs per row) — materializing it once is strictly
     // cheaper than recomputing the fingerprint pipeline per branch; at
     // scale the standing fingerprint parquet artifact replaces the anchor.
-    val fps = fingerprints(docs, k, w, idCol, textCol)
+    val fps = fingerprints(docs, k, w)
       .anchor(Bound.Data("selected fingerprints, ~2/(w+1) of token positions"))
     // df cut as a broadcast LEFT ANTI of the metadata-sized HOT set (the r13
     // inversion, r17 here: A/B x4 interleaved, exact-equal, 1.32-1.69 s →

@@ -38,8 +38,7 @@ object Layout {
     * rather than letting guarded reads silently lose rows. The skew bound
     * is the rule's own constant, so the two cannot drift apart.
     */
-  def writeFact(fact: DataFrame, path: String,
-                targetFileBytes: Long = 256L << 20): Unit =
+  def writeFact(fact: DataFrame, path: String): Unit =
     Promote.replace(fact.sparkSession, path) { staged =>
       val obs = Observation()
       fact.observe(obs,
@@ -54,7 +53,7 @@ object Layout {
         .mode("overwrite")
         .partitionBy("device_id_bucket", "received_day")
         .option("compression", "zstd")
-        .option("parquet.block.size", targetFileBytes.toString)
+        .option("parquet.block.size", (256L << 20).toString)
         .option("parquet.bloom.filter.enabled#device_id", "true")
         .option("parquet.bloom.filter.enabled#correlation_id", "true")
         .parquet(staged)
@@ -78,7 +77,7 @@ object Layout {
     * of `OPTIMIZE ZORDER BY (x, y)`. Disjoint bit positions make `+`
     * equivalent to `|`, and the math is identical integer ops in any engine.
     *
-    * Inputs are widened to long before shifting: at the default `bits = 16`,
+    * Inputs are widened to long before shifting: at `bits = 16` ([[writeZOrdered]]),
     * y's top bit lands at position 31, which wraps negative in 32-bit
     * arithmetic and silently corrupts the sort order (and max z = 2³²−1
     * doesn't fit an int at all). Long shifts are exact up to `bits = 31`.
@@ -125,13 +124,12 @@ object Layout {
     * linear in `bits`; everything is long arithmetic, bit-identical in any
     * engine, and the oracle unrolls the identical rounds as CTEs.
     */
-  def withHilbert(df: DataFrame, xCol: String, yCol: String, bits: Int,
-                  outCol: String = "h"): DataFrame = {
+  def withHilbert(df: DataFrame, xCol: String, yCol: String, bits: Int): DataFrame = {
     require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
     var out = df
       .withColumn("__hx", col(xCol).cast("long"))
       .withColumn("__hy", col(yCol).cast("long"))
-      .withColumn(outCol, lit(0L))
+      .withColumn("h", lit(0L))
     for (i <- (bits - 1) to 0 by -1) {
       val s = 1L << i
       out = out
@@ -139,8 +137,8 @@ object Layout {
           when(col("__hx").bitwiseAND(lit(s)) > 0, lit(1L)).otherwise(lit(0L)))
         .withColumn("__ry",
           when(col("__hy").bitwiseAND(lit(s)) > 0, lit(1L)).otherwise(lit(0L)))
-        .withColumn(outCol,
-          col(outCol) + lit(s * s) *
+        .withColumn("h",
+          col("h") + lit(s * s) *
             (lit(3L) * col("__rx")).bitwiseXOR(col("__ry")))
         .withColumn("__nx",
           when(col("__ry") === 0,
@@ -252,9 +250,8 @@ object Layout {
     }.mkString(" || ")
 
   /** Rewrite a table clustered by the z-order of two columns. */
-  def writeZOrdered(df: DataFrame, path: String, x: Column, y: Column,
-                    bits: Int = 16): Unit =
-    df.withColumn("__z", zValue(x, y, bits))
+  def writeZOrdered(df: DataFrame, path: String, x: Column, y: Column): Unit =
+    df.withColumn("__z", zValue(x, y, 16))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
       .write.mode("overwrite").parquet(path)

@@ -27,21 +27,28 @@ object Maintenance {
 
   /** Apply retention in place on a `dayCol`-partitioned parquet path: deletes
     * whole expired partitions (metadata-only file deletes, no rewrite) — at
-    * 100 TB this must never be a read-rewrite of surviving data.
+    * 100 TB this must never be a read-rewrite of surviving data. The staged
+    * copy and backup an interrupted [[Promote.replace]] left beside an
+    * expired partition go too: no later compaction of that day would
+    * recover them. Returns the deleted partition dirs.
     */
   def retentionDelete(spark: SparkSession, path: String, dayCol: String,
                       days: Int, asOf: java.time.LocalDate): Seq[String] = {
     val cutoff = asOf.minusDays(days.toLong).toString
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val expired = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
+    val live = s"\\Q$dayCol=\\E(.+)".r
+    val leftover = s"\\.\\Q$dayCol=\\E(.+)__(?:staged|backup)".r
+    def expiredBy(re: scala.util.matching.Regex)(p: org.apache.hadoop.fs.Path) =
+      p.getName match {
+        case re(day) => day < cutoff
+        case _ => false
+      }
+    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(path)).toSeq
       .filter(_.isDirectory)
       .map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.startsWith(s"$dayCol=") && n.stripPrefix(s"$dayCol=") < cutoff
-      }
-    expired.foreach(p => fs.delete(p, true))
+    val expired = dirs.filter(expiredBy(live))
+    (expired ++ dirs.filter(expiredBy(leftover))).foreach(p => fs.delete(p, true))
     expired.map(_.toString)
   }
 
@@ -53,14 +60,14 @@ object Maintenance {
     * interrupted compaction left in its backup.
     */
   def compactPartition(spark: SparkSession, path: String, dayCol: String,
-                       day: String, targetFileBytes: Long = 256L << 20): Unit = {
+                       day: String): Unit = {
     val partPath = s"$path/$dayCol=$day"
     Promote.recover(spark, partPath)
     val part = new org.apache.hadoop.fs.Path(partPath)
     val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(part)) return
     val bytes = fs.getContentSummary(part).getLength
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+    val nFiles = math.max(1, math.ceil(bytes.toDouble / (256L << 20)).toInt)
     Promote.replace(spark, partPath)(
       spark.read.parquet(partPath).coalesce(nFiles).write.mode("overwrite").parquet(_))
   }

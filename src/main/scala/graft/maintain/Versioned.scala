@@ -1,6 +1,6 @@
 package graft.maintain
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Manifest-based table versioning over plain parquet — the analog of the
@@ -323,17 +323,15 @@ object Versioned {
   def branchVersions(spark: SparkSession, tableDir: String, name: String): Seq[Int] =
     refVersions(spark, tableDir, Some(name))
 
-  /** Create `name` from a main snapshot (default: current head). Metadata
-    * only — the branch starts reading the fork point's files. The ref file
-    * is CAS-created, so of two concurrent creators exactly one wins.
+  /** Create `name` from the current main head. Metadata only — the branch
+    * starts reading the fork point's files. The ref file is CAS-created, so
+    * of two concurrent creators exactly one wins.
     */
-  def createBranch(spark: SparkSession, tableDir: String, name: String,
-                   fromVersion: Option[Int] = None): Unit = {
+  def createBranch(spark: SparkSession, tableDir: String, name: String): Unit = {
     require(name.matches("[A-Za-z0-9_-]+"), s"illegal branch name: $name")
     val vs = versions(spark, tableDir)
     require(vs.nonEmpty, s"no committed snapshots under $tableDir to branch from")
-    val base = fromVersion.getOrElse(vs.last)
-    require(vs.contains(base), s"snapshot v$base does not exist (have: $vs)")
+    val base = vs.last
     require(casPublish(fs(spark, tableDir), tableDir, new Path(branchDir(tableDir), name),
       Seq(s"branch=$name", s"base=$base")), s"branch $name already exists")
   }
@@ -348,16 +346,12 @@ object Versioned {
     commitCore(df, tableDir, Some(name), append, None)
   }
 
-  /** Read a branch head (or an earlier branch-local commit). A branch with
-    * no local commits reads its fork point.
+  /** Read a branch head. A branch with no local commits reads its fork
+    * point.
     */
-  def readBranch(spark: SparkSession, tableDir: String, name: String,
-                 version: Option[Int] = None): DataFrame = {
-    val ks = branchVersions(spark, tableDir, name)
-    version.foreach(k =>
-      require(ks.contains(k), s"branch $name has no commit v$k (have: $ks)"))
+  def readBranch(spark: SparkSession, tableDir: String, name: String): DataFrame = {
     val files = readManifest(spark, tableDir, Some(name),
-      version.getOrElse(ks.lastOption.getOrElse(0)))
+      branchVersions(spark, tableDir, name).lastOption.getOrElse(0))
     spark.read.parquet(files.map(p => s"$tableDir/$p"): _*)
   }
 
@@ -460,7 +454,12 @@ object Versioned {
     * references — crash debris, failed writes and expired-snapshot
     * remnants. `minAgeMs` protects data of in-flight commits (files younger
     * than the horizon are kept even if unreferenced), exactly Iceberg's
-    * `older_than` guard.
+    * `older_than` guard. A commit's `data/<uuid>` dir goes as a whole, with
+    * its `_SUCCESS` marker and checksums, once none of its files is
+    * referenced and none is younger than the horizon; otherwise its
+    * unreferenced old files go one by one (a checksummed `FileSystem`, such
+    * as the local one, deletes each file's `.crc` sidecar with it).
+    * Returns the deleted parquet files, relative to `tableDir`.
     */
   def removeOrphanFiles(spark: SparkSession, tableDir: String,
                         minAgeMs: Long = 0L): Seq[String] = {
@@ -471,19 +470,21 @@ object Versioned {
     val dataRoot = new Path(tableDir, "data")
     if (!f.exists(dataRoot)) return Seq.empty
     val base = new Path(tableDir).toUri.getPath
+    def rel(p: Path) = p.toUri.getPath.stripPrefix(base).stripPrefix("/")
     val horizon = System.currentTimeMillis() - minAgeMs
-    val deleted = scala.collection.mutable.ArrayBuffer[String]()
-    val it = f.listFiles(dataRoot, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
+    f.listStatus(dataRoot).toSeq.flatMap { entry =>
+      val files = scala.collection.mutable.ArrayBuffer[FileStatus]()
+      val it = f.listFiles(entry.getPath, true)
+      while (it.hasNext) files += it.next()
       // only data files: committer markers (_SUCCESS) are not manifest-tracked
-      if (st.isFile && rel.endsWith(".parquet") &&
-          !referenced.contains(rel) && st.getModificationTime <= horizon) {
-        f.delete(st.getPath, false)
-        deleted += rel
-      }
-    }
-    deleted.toSeq.sorted
+      val orphans = files.filter(st => st.getPath.getName.endsWith(".parquet") &&
+        !referenced.contains(rel(st.getPath)) && st.getModificationTime <= horizon)
+      val parquet = files.count(_.getPath.getName.endsWith(".parquet"))
+      if (entry.isDirectory && orphans.size == parquet &&
+          (entry +: files).forall(_.getModificationTime <= horizon))
+        f.delete(entry.getPath, true)
+      else orphans.foreach(st => f.delete(st.getPath, false))
+      orphans.map(st => rel(st.getPath))
+    }.sorted
   }
 }

@@ -30,10 +30,10 @@ object BloomPrefilter {
     * in the agg); the finished filter is collected to the driver.
     */
   def build(keys: DataFrame, key: Column,
-            expectedItems: Long = 1000000L, numBits: Long = 8L * 1024 * 1024): Array[Byte] = {
+            expectedItems: Long = 1000000L): Array[Byte] = {
     val agg = new BloomFilterAggregate(
       ColumnBridge.expression(xxhash64(key)),
-      Literal(expectedItems), Literal(numBits)).toAggregateExpression()
+      Literal(expectedItems), Literal(8L * 1024 * 1024)).toAggregateExpression()
     keys.agg(ColumnBridge.column(agg).as("bloom")).head().getAs[Array[Byte]](0)
   }
 

@@ -24,15 +24,14 @@ import org.apache.spark.sql.functions._
 object GeoJoin {
 
   /** Pairs of points within `radius` (inclusive, Euclidean) of each other.
-    * `points` needs (`idCol`, `xCol`, `yCol`) integer columns; emits
+    * `points` needs (`id`, `x`, `y`) integer columns; emits
     * (id_a, id_b, dist2) with id_a < id_b, dist2 = squared distance.
     */
-  def radiusJoin(points: DataFrame, radius: Long, idCol: String = "id",
-                 xCol: String = "x", yCol: String = "y"): DataFrame = {
+  def radiusJoin(points: DataFrame, radius: Long): DataFrame = {
     require(radius > 0, s"radius must be positive, got $radius")
     def cell(c: Column): Column = floor(c.cast("long").cast("double") / radius).cast("long")
-    val base = points.select(col(idCol).cast("long").as("id"),
-      col(xCol).cast("long").as("x"), col(yCol).cast("long").as("y"))
+    val base = points.select(col("id").cast("long").as("id"),
+      col("x").cast("long").as("x"), col("y").cast("long").as("y"))
     val binned = base
       .withColumn("cx", cell(col("x"))).withColumn("cy", cell(col("y")))
     // one side carries its 3x3 neighborhood; the other its own cell — each
@@ -60,9 +59,8 @@ object GeoJoin {
     * are absent (the radius bound is what keeps the search distributed —
     * unbounded NN needs an expanding-ring or a spatial index).
     */
-  def nearestWithin(points: DataFrame, radius: Long, idCol: String = "id",
-                    xCol: String = "x", yCol: String = "y"): DataFrame = {
-    val pairs = radiusJoin(points, radius, idCol, xCol, yCol)
+  def nearestWithin(points: DataFrame, radius: Long): DataFrame = {
+    val pairs = radiusJoin(points, radius)
     val both = pairs.select(col("id_a").as("id"), col("id_b").as("nn"), col("dist2"))
       .unionByName(pairs.select(col("id_b").as("id"), col("id_a").as("nn"),
         col("dist2")))

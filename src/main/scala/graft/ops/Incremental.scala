@@ -20,16 +20,16 @@ import org.apache.spark.sql.functions._
 object Incremental {
 
   /** `baseAgg` must be `delta`'s source aggregated as
-    * (groupCols*, n_rows, sum_<c>*); `delta` carries `changeCol`
+    * (groupCols*, n_rows, sum_<c>*); `delta` carries `__change`
     * ('insert'/'delete'), the group columns, and the summed columns.
     * Returns the updated aggregate, same shape as `baseAgg`.
     */
   def applyDelta(baseAgg: DataFrame, delta: DataFrame, groupCols: Seq[String],
-                 sumCols: Seq[String], changeCol: String = "__change"): DataFrame = {
+                 sumCols: Seq[String]): DataFrame = {
     require(groupCols.nonEmpty, "applyDelta requires at least one group column")
-    val sign = when(col(changeCol) === "insert", lit(1L))
-      .when(col(changeCol) === "delete", lit(-1L))
-      .otherwise(raise_error(concat(lit(s"unknown $changeCol: "), col(changeCol))))
+    val sign = when(col("__change") === "insert", lit(1L))
+      .when(col("__change") === "delete", lit(-1L))
+      .otherwise(raise_error(concat(lit("unknown __change: "), col("__change"))))
     val deltaAgg = delta.groupBy(groupCols.map(col): _*)
       .agg(sum(sign).as("__dn"),
         sumCols.map(c => sum(sign * col(c)).as(s"__d_$c")): _*)

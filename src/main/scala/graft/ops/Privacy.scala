@@ -177,11 +177,10 @@ object Privacy {
     * ndcgDiscounts discipline) — sampling is then pure exact-integer
     * comparison, no per-row transcendental anywhere.
     */
-  def discreteLaplaceThresholds(epsNum: Int, epsDen: Int,
-                                tailCut: Int = 20): Seq[Long] = {
-    require(epsNum > 0 && epsDen > 0 && tailCut >= 1)
+  def discreteLaplaceThresholds(epsNum: Int, epsDen: Int): Seq[Long] = {
+    require(epsNum > 0 && epsDen > 0)
     val alpha = math.exp(-epsNum.toDouble / epsDen)
-    val ks = -tailCut to tailCut
+    val ks = -20 to 20
     val w = ks.map(k => math.pow(alpha, math.abs(k)))
     val total = w.sum
     val cdf = w.scanLeft(0.0)(_ + _).tail.map(_ / total)
@@ -199,14 +198,14 @@ object Privacy {
     * pure projection after; the threshold array is a 2K-element literal.
     */
   def dpCounts(df: DataFrame, keyCol: Column, epsNum: Int, epsDen: Int,
-               seed: String, tailCut: Int = 20): DataFrame = {
-    val thresholds = discreteLaplaceThresholds(epsNum, epsDen, tailCut)
+               seed: String): DataFrame = {
+    val thresholds = discreteLaplaceThresholds(epsNum, epsDen)
     val u = graft.functions.Md5Field.md5U32(
       concat(lit(s"dp:$seed:"), col("key")))
     df.select(keyCol.cast("string").as("key"))
       .groupBy(col("key")).agg(count(lit(1)).as("true_count"))
       .withColumn("noise",
-        lit(-tailCut.toLong) +
+        lit(-20L) +
           size(filter(typedlit(thresholds), t => t <= u)).cast("long"))
       .withColumn("released", col("true_count") + col("noise"))
   }

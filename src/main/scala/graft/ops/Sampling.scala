@@ -71,10 +71,9 @@ object Sampling {
     * [[stratifiedSample]].
     */
   def weightedStratifiedSample(df: DataFrame, stratum: Column, weight: Column,
-                               n: Int, id: Column,
-                               seed: String = "aes"): DataFrame = {
+                               n: Int, id: Column): DataFrame = {
     val w = Window.partitionBy(stratum).orderBy(col("__aes").desc, id)
-    df.withColumn("__aes", aesKey(id, weight, seed))
+    df.withColumn("__aes", aesKey(id, weight, "aes"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= n)
       .drop("__aes", "__rn")

@@ -25,15 +25,14 @@ import graft.functions.Md5Field.md5U32
 object Sharding {
 
   /** (key, shard) under rendezvous hashing with `n` shards. */
-  def assign(df: DataFrame, keyCol: String, n: Int,
-             seed: String = "shard"): DataFrame = {
+  def assign(df: DataFrame, keyCol: String, n: Int): DataFrame = {
     require(n >= 1 && n <= 1024, s"shard count must be in [1,1024], got $n")
     df.select(col(keyCol).as("key"))
       .distinct()
       .select(col("key"),
         explode(array((0 until n).map(s => lit(s.toLong)): _*)).as("s"))
       .withColumn("w", md5U32(concat_ws(":",
-        lit(seed), col("key").cast("string"), col("s"))))
+        lit("shard"), col("key").cast("string"), col("s"))))
       .groupBy(col("key"))
       .agg(max_by(col("s"), struct(col("w"), col("s"))).as("shard"))
   }
@@ -42,10 +41,9 @@ object Sharding {
     * (expected ≈ n_keys/(n+1) — THE rendezvous advantage over mod-hashing,
     * which moves ≈ n_keys·n/(n+1)), and the old ring's load spread.
     */
-  def growthAudit(df: DataFrame, keyCol: String, n: Int,
-                  seed: String = "shard"): DataFrame = {
-    val a = assign(df, keyCol, n, seed)
-    val b = assign(df, keyCol, n + 1, seed)
+  def growthAudit(df: DataFrame, keyCol: String, n: Int): DataFrame = {
+    val a = assign(df, keyCol, n)
+    val b = assign(df, keyCol, n + 1)
       .withColumnRenamed("shard", "shard_next")
     val moved = a.join(b, Seq("key"))
       .agg(count(lit(1)).as("n_keys"),

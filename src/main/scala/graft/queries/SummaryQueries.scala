@@ -478,7 +478,7 @@ object SummaryQueries {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val grid = graft.analytics.HllGrid.registers(toks, "token", m = 256)
     val truth = toks.agg(countDistinct(col("token")).as("true_distinct"))
-    graft.analytics.HllGrid.estimate(grid, m = 256)
+    graft.analytics.HllGrid.estimate(grid)
       .crossJoin(broadcast(truth))
       .withColumn("within_band",
         abs(col("estimate") - col("true_distinct").cast("double")) <=
@@ -531,7 +531,7 @@ object SummaryQueries {
     */
   private def pcaPowerQ(s: SparkSession, dir: String): DataFrame =
     graft.sim.PowerIteration.topComponent(
-        graft.Tables.cachedParquet(s, s"$dir/embeddings.parquet"), d = 64, scale = 1000)
+        graft.Tables.cachedParquet(s, s"$dir/embeddings.parquet"), d = 64)
       .select(col("dim").cast("int").as("dim"), col("w1"), col("v1"),
         col("w2"), col("v2"))
       .orderBy(col("dim"))

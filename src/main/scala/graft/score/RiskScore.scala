@@ -27,16 +27,16 @@ object RiskScore {
   val LocalTz = "America/Mexico_City"
 
   /** Event instant (stored UTC) → local wall-clock timestamp. */
-  def localTs(ts: Column, tz: String = LocalTz): Column =
-    convert_timezone(lit("UTC"), lit(tz), ts)
+  def localTs(ts: Column): Column =
+    convert_timezone(lit("UTC"), lit(LocalTz), ts)
 
   /** Stage `base` (`sink_risk_score_daily.sql:13-23`): per-report derivations.
     * Day filtering is the caller's concern (the reference hardcodes
     * yesterday + a device IN-list); pass filters before this stage so they
     * push down to the scan.
     */
-  def base(fact: DataFrame, tz: String = LocalTz): DataFrame = {
-    val lt = localTs(col("gps_epoch"), tz)
+  def base(fact: DataFrame): DataFrame = {
+    val lt = localTs(col("gps_epoch"))
     fact.select(
       col("device_id"),
       to_date(lt).as("report_date"),
@@ -88,6 +88,6 @@ object RiskScore {
   }
 
   /** Full pipeline: fact-table shape in, `risk_score_daily` shape out. */
-  def pipeline(fact: DataFrame, tz: String = LocalTz): DataFrame =
-    classify(score(aggregate(base(fact, tz))))
+  def pipeline(fact: DataFrame): DataFrame =
+    classify(score(aggregate(base(fact))))
 }

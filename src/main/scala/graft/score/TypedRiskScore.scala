@@ -41,11 +41,10 @@ object TypedRiskScore {
     }
 
   /** Typed equivalent of `RiskScore.base` + `RiskScore.aggregate`. */
-  def aggregate(spark: SparkSession, fact: org.apache.spark.sql.DataFrame,
-                tz: String = RiskScore.LocalTz): Dataset[DeviceDay] = {
+  def aggregate(spark: SparkSession, fact: org.apache.spark.sql.DataFrame): Dataset[DeviceDay] = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val lt = RiskScore.localTs(col("gps_epoch"), tz)
+    val lt = RiskScore.localTs(col("gps_epoch"))
     fact.select(
         col("device_id"),
         to_date(lt).as("report_date"),

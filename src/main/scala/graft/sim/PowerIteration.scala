@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   * power iteration (whose per-partition sum order perturbs low bits and
   * with them the whole trajectory), the iterate is a pure function of the
   * corpus, partitioning-invariant, and bit-replicable in a verification
-  * engine. Between rounds the iterate rescales to magnitude ≤ `scale` by
+  * engine. Between rounds the iterate rescales to magnitude ≤ scale = 10³ by
   * truncated-toward-zero integer division (sign-split into `abs … div` so
   * engines whose `//` floors replay it exactly); headroom:
-  * |q|·d·scale²·n ≲ 2^52 for n = 10⁹ docs at d = 64, scale = 10³ — and
+  * |q|·d·scale²·n ≲ 2^52 for n = 10⁹ docs at d = 64 — and
   * DECIMAL(38) is the documented widening path beyond that (the
   * `momentsWide` precedent).
   *
@@ -31,16 +31,14 @@ import org.apache.spark.sql.functions._
   */
 object PowerIteration {
 
-  /** Two-round power iteration over `vecCol` (array<float/double>, fixed
+  /** Two-round power iteration over `embedding` (array<float/double>, fixed
     * dim `d`). Returns one row per dimension with the raw and rescaled
     * iterates of both rounds — all exact BIGINTs.
     */
-  def topComponent(corpus: DataFrame, d: Int, scale: Int = 1000,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def topComponent(corpus: DataFrame, d: Int): DataFrame = {
     require(d >= 2 && d <= 4096, s"d must be in [2,4096], got $d")
-    require(scale >= 2, s"scale must be >= 2, got $scale")
-    val q = corpus.select(col(idCol).as("vid"),
-      expr(s"transform($vecCol, x -> CAST(round(CAST(x AS DOUBLE) * $scale, 0) AS BIGINT))")
+    val q = corpus.select(col("vec_id").as("vid"),
+      expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))")
         .as("q"))
     // round 1: v0 = ones, so the dot is the plain element sum
     val withDot1 = q.withColumn("dot1",
@@ -54,7 +52,7 @@ object PowerIteration {
     // sign-split truncating rescale to magnitude <= scale (exact integer)
     def rescaled(w: DataFrame, wc: String, vc: String): DataFrame = {
       val s = w.agg(
-        expr(s"greatest(max(abs($wc)) div $scale, CAST(1 AS BIGINT))").as("__s"))
+        expr(s"greatest(max(abs($wc)) div 1000, CAST(1 AS BIGINT))").as("__s"))
       w.crossJoin(broadcast(s))
         .withColumn(vc,
           when(col(wc) < 0, -expr(s"abs($wc) div __s"))

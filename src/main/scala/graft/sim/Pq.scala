@@ -43,21 +43,18 @@ object Pq {
   /** Fit `m` per-subspace codebooks of `k` centroids over `dim`-dimensional
     * vectors (`dim` must divide evenly into `m` subspaces).
     */
-  def build(corpus: DataFrame, dim: Int, m: Int, k: Int, seed: Long = 42L,
-            vecCol: String = "embedding", sampleFraction: Double = 1.0): Index = {
+  def build(corpus: DataFrame, dim: Int, m: Int, k: Int): Index = {
     require(dim % m == 0, s"dim $dim must be divisible by m $m")
     val dsub = dim / m
-    // finite-vector guard before sampling — same rationale as Ivf.build
-    val clean = Similarity.finiteVectors(corpus, vecCol)
-    val base = if (sampleFraction < 1.0)
-      clean.sample(withReplacement = false, sampleFraction, seed) else clean
-    val v = base.select(col(vecCol).cast("array<double>").as("v"))
+    // finite-vector guard — same rationale as Ivf.build
+    val clean = Similarity.finiteVectors(corpus)
+    val v = clean.select(col("embedding").cast("array<double>").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val books = (0 until m).map { sub =>
         val feats = v.select(
           array_to_vector(slice(col("v"), sub * dsub + 1, dsub)).as("features"))
-        val model = new KMeans().setK(k).setSeed(seed + sub).setMaxIter(10)
+        val model = new KMeans().setK(k).setSeed(42L + sub).setMaxIter(10)
           .setInitMode("random").fit(feats)
         model.clusterCenters.map(_.toArray.toSeq).toSeq
       }
@@ -69,12 +66,12 @@ object Pq {
     * rationale as [[Ivf.cachedBuild]].
     */
   private val indexCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int, Int, Long), Index]()
+    new scala.collection.concurrent.TrieMap[(String, Int, Int, Int), Index]()
 
   def cachedBuild(corpus: => DataFrame, corpusKey: String, dim: Int, m: Int,
-                  k: Int, seed: Long = 42L): Index =
-    indexCache.getOrElseUpdate((corpusKey, dim, m, k, seed),
-      build(corpus, dim, m, k, seed))
+                  k: Int): Index =
+    indexCache.getOrElseUpdate((corpusKey, dim, m, k),
+      build(corpus, dim, m, k))
 
   /** PQ codes for a vector column: per subspace, the argmin centroid of
     * `||c||² − 2·c·v_sub`, ties to the lowest code — the native
@@ -106,14 +103,13 @@ object Pq {
     * pass it via `precomputedCodes` to search without re-encoding.
     */
   def topK(corpus: DataFrame, queries: DataFrame, index: Index, k: Int,
-           idCol: String = "vec_id", vecCol: String = "embedding",
            precomputedCodes: Option[DataFrame] = None): DataFrame = {
     val c = precomputedCodes.getOrElse(
-      corpus.select(col(idCol).as("nn_id"),
-        codes(col(vecCol).cast("array<double>"), index).as("codes")))
+      corpus.select(col("vec_id").as("nn_id"),
+        codes(col("embedding").cast("array<double>"), index).as("codes")))
     // the lookup table is computed once per query row, before the broadcast
-    val q = queries.select(col(idCol).as("query_id"),
-        adcTable(col(vecCol).cast("array<double>"), index).as("adc_tab"))
+    val q = queries.select(col("vec_id").as("query_id"),
+        adcTable(col("embedding").cast("array<double>"), index).as("adc_tab"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("approx_dist"), col("nn_id"))
     c.crossJoin(broadcast(q))
@@ -135,15 +131,14 @@ object Pq {
     * guarantee for any `nprobe ≥ 1`.
     */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, ivf: Ivf.Index,
-                pq: Index, k: Int, nprobe: Int,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                pq: Index, k: Int, nprobe: Int): DataFrame = {
     val c = corpus
-      .select(col(idCol).as("nn_id"), col(vecCol).cast("array<double>").as("v"))
+      .select(col("vec_id").as("nn_id"), col("embedding").cast("array<double>").as("v"))
       .repartition(corpus.sparkSession.sessionState.conf.numShufflePartitions)
       .select(col("nn_id"), Ivf.cellId(col("v"), ivf).as("cell"),
         codes(col("v"), pq).as("codes"))
     val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("q_vec"))
+      .select(col("vec_id").as("query_id"), col("embedding").cast("array<double>").as("q_vec"))
       .withColumn("cell", explode(Ivf.probeCells(col("q_vec"), ivf, nprobe)))
       .select(col("query_id"), col("cell"),
         adcTable(col("q_vec"), pq).as("adc_tab"))

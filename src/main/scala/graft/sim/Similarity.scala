@@ -85,8 +85,8 @@ object Similarity {
     * though cosine against them is undefined. Null arrays drop (forall over
     * NULL is NULL).
     */
-  def finiteVectors(df: DataFrame, vecCol: String = "embedding"): DataFrame =
-    df.filter(forall(asDouble(col(vecCol)),
+  def finiteVectors(df: DataFrame): DataFrame =
+    df.filter(forall(asDouble(col("embedding")),
       x => !isnan(x) && abs(x) <= lit(Double.MaxValue)))
 
   /** Repartition a vector table for CPU-bound scoring: embedding tables are
@@ -99,10 +99,10 @@ object Similarity {
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus
     * vectors (excluding itself). Deterministic rank: (cosine desc, id asc).
     */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val c = spread(corpus.select(col(idCol).as("nn_id"), asDouble(col(vecCol)).as("nn_vec")))
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("q_vec"))
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val c = spread(corpus.select(col("vec_id").as("nn_id"),
+      asDouble(col("embedding")).as("nn_vec")))
+    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("q_vec"))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("nn_id"))
       .withColumn("cosine", cosine(col("q_vec"), col("nn_vec")))
@@ -135,11 +135,10 @@ object Similarity {
     * except here the scores are themselves reproducible outputs).
     */
   def mmrSelect(corpus: DataFrame, queryId: Long, k: Int, nCandidates: Int,
-                lambda: Double, idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
+                lambda: Double): DataFrame = {
     require(k >= 1 && nCandidates >= k,
       s"need nCandidates >= k >= 1, got k=$k, nCandidates=$nCandidates")
-    val v = corpus.select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("vec"))
+    val v = corpus.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
     val q = v.filter(col("vec_id") === queryId)
       .select(col("vec").as("q_vec"))
     val cand = spread(v).filter(col("vec_id") =!= queryId)
@@ -181,9 +180,8 @@ object Similarity {
     * near-duplicate detection use [[bucketedThresholdPairs]] — an unbounded
     * left side here is the classic O(N²) scale killer.
     */
-  def thresholdPairs(corpus: DataFrame, threshold: Double, leftFilter: Column,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val v = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
+  def thresholdPairs(corpus: DataFrame, threshold: Double, leftFilter: Column): DataFrame = {
+    val v = corpus.select(col("vec_id").as("id"), asDouble(col("embedding")).as("vec"))
     val left = v.filter(leftFilter)
     left.select(col("id").as("id_a"), col("vec").as("vec_a"))
       .crossJoin(spread(v.select(col("id").as("id_b"), col("vec").as("vec_b"))))
@@ -205,12 +203,9 @@ object Similarity {
     * verification bounded).
     */
   def bucketedThresholdPairs(corpus: DataFrame, threshold: Double,
-                             bands: Int = 4, planesPerBand: Int = 4,
-                             dim: Int = 64, seed: Long = 42L,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding"): DataFrame = {
-    val planes = hyperplanes(bands * planesPerBand, dim, seed)
-    val v = spread(corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec")))
+                             bands: Int = 4, planesPerBand: Int = 4): DataFrame = {
+    val planes = hyperplanes(bands * planesPerBand, 64, 42L)
+    val v = spread(corpus.select(col("vec_id").as("id"), asDouble(col("embedding")).as("vec")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bandCols = (0 until bands).map { b =>
       srpBucket(col("vec"), planes.slice(b * planesPerBand, (b + 1) * planesPerBand))
@@ -243,14 +238,10 @@ object Similarity {
     * set is id-distinct, survivors via a hash anti-join on the id — every
     * stage O(collisions), never all-pairs.
     */
-  def semDedupSurvivors(corpus: DataFrame, threshold: Double, bands: Int = 4,
-                        planesPerBand: Int = 4, dim: Int = 64, seed: Long = 42L,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
-    val dropped = bucketedThresholdPairs(corpus, threshold, bands,
-        planesPerBand, dim, seed, idCol, vecCol)
-      .select(col("id_b").as(idCol)).distinct()
-    corpus.join(dropped, Seq(idCol), "left_anti")
+  def semDedupSurvivors(corpus: DataFrame, threshold: Double): DataFrame = {
+    val dropped = bucketedThresholdPairs(corpus, threshold)
+      .select(col("id_b").as("vec_id")).distinct()
+    corpus.join(dropped, Seq("vec_id"), "left_anti")
   }
 
   /** Seeded deterministic unit-free hyperplanes: values from an LCG, shaped
@@ -287,13 +278,12 @@ object Similarity {
     * cosine, rank per query. Approximate (recall < 1): vectors near a
     * hyperplane may land in a different bucket than their neighbors.
     */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              numPlanes: Int = 8, dim: Int = 64, seed: Long = 42L,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val planes = hyperplanes(numPlanes, dim, seed)
-    val c = spread(corpus.select(col(idCol).as("nn_id"), asDouble(col(vecCol)).as("nn_vec")))
+  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val planes = hyperplanes(8, 64, 42L)
+    val c = spread(corpus.select(col("vec_id").as("nn_id"),
+      asDouble(col("embedding")).as("nn_vec")))
       .withColumn("bucket", srpBucket(col("nn_vec"), planes))
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("q_vec"))
+    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("q_vec"))
       .withColumn("bucket", srpBucket(col("q_vec"), planes))
     val scored = c.join(broadcast(q), "bucket")
       .filter(col("query_id") =!= col("nn_id"))
@@ -308,23 +298,21 @@ object Similarity {
   /** Multiprobe SRP-LSH ANN: probe the query's bucket AND every bucket at
     * Hamming distance 1 (one sign bit flipped — the buckets a near-boundary
     * neighbor most likely fell into). Recall approaches multi-table LSH at
-    * the cost of `numPlanes` extra *probe keys* per query instead of
-    * `numPlanes` extra copies of the corpus index — the standard trade
+    * the cost of 8 extra *probe keys* per query (one per plane) instead of
+    * 8 extra copies of the corpus index — the standard trade
     * (Lv et al., VLDB '07) when the index is 100 TB and queries are not.
     * Probe expansion happens on the tiny broadcast query side; the corpus
     * side stays a single equi-join on its one bucket column, and a corpus
     * vector can match at most one probe of a query (probe buckets are
     * pairwise distinct), so no dedup pass is needed.
     */
-  def lshTopKMultiprobe(corpus: DataFrame, queries: DataFrame, k: Int,
-                        numPlanes: Int = 8, dim: Int = 64, seed: Long = 42L,
-                        idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
-    val planes = hyperplanes(numPlanes, dim, seed)
-    val c = spread(corpus.select(col(idCol).as("nn_id"), asDouble(col(vecCol)).as("nn_vec")))
+  def lshTopKMultiprobe(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val planes = hyperplanes(8, 64, 42L)
+    val c = spread(corpus.select(col("vec_id").as("nn_id"),
+      asDouble(col("embedding")).as("nn_vec")))
       .withColumn("bucket", srpBucket(col("nn_vec"), planes))
-    val masks = 0L +: (0 until numPlanes).map(i => 1L << i)
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("q_vec"))
+    val masks = 0L +: (0 until 8).map(i => 1L << i)
+    val q = queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("q_vec"))
       .withColumn("__b0", srpBucket(col("q_vec"), planes))
       .withColumn("bucket",
         explode(array(masks.map(m => col("__b0").bitwiseXOR(lit(m))): _*)))
@@ -354,14 +342,12 @@ object Similarity {
     * Hamming-1 multiprobe ([[lshTopKMultiprobe]]'s expansion applied to the
     * banded keys), not by densifying buckets.
     */
-  def knnGraph(corpus: DataFrame, k: Int, bands: Int = 4,
-               planesPerBand: Int = 4, dim: Int = 64, seed: Long = 42L,
-               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val planes = hyperplanes(bands * planesPerBand, dim, seed)
-    val v = spread(corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec")))
+  def knnGraph(corpus: DataFrame, k: Int): DataFrame = {
+    val planes = hyperplanes(4 * 4, 64, 42L)
+    val v = spread(corpus.select(col("vec_id").as("id"), asDouble(col("embedding")).as("vec")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bandCols = (0 until bands).map { b =>
-      srpBucket(col("vec"), planes.slice(b * planesPerBand, (b + 1) * planesPerBand))
+    val bandCols = (0 until 4).map { b =>
+      srpBucket(col("vec"), planes.slice(b * 4, (b + 1) * 4))
     }
     val banded = v.select(col("id"),
       posexplode(array(bandCols: _*)).as(Seq("band", "bucket")))
@@ -392,10 +378,9 @@ object Similarity {
     * admission gate before an embedding table feeds ANN/dedup — a single
     * zero vector silently poisons cosine top-k (division by zero norm).
     */
-  def vectorHygiene(corpus: DataFrame, dim: Int = 64,
-                    vecCol: String = "embedding"): DataFrame = {
-    val v = asDouble(col(vecCol))
-    val wrongDim = size(v) =!= dim
+  def vectorHygiene(corpus: DataFrame): DataFrame = {
+    val v = asDouble(col("embedding"))
+    val wrongDim = size(v) =!= 64
     val withNan = exists(v, x => isnan(x))
     val allZero = forall(v, x => x === 0.0)
     corpus.agg(
@@ -416,16 +401,13 @@ object Similarity {
     * side one bucket equi-join, rank-1 window per (anchor, kind). The
     * label join rides the same rows; no extra shuffle.
     */
-  def hardNegatives(corpus: DataFrame, anchors: DataFrame,
-                    numPlanes: Int = 8, dim: Int = 64, seed: Long = 42L,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    labelCol: String = "label"): DataFrame = {
-    val planes = hyperplanes(numPlanes, dim, seed)
-    val c = spread(corpus.select(col(idCol).as("nn_id"),
-        asDouble(col(vecCol)).as("nn_vec"), col(labelCol).as("nn_label")))
+  def hardNegatives(corpus: DataFrame, anchors: DataFrame): DataFrame = {
+    val planes = hyperplanes(8, 64, 42L)
+    val c = spread(corpus.select(col("vec_id").as("nn_id"),
+        asDouble(col("embedding")).as("nn_vec"), col("label").as("nn_label")))
       .withColumn("bucket", srpBucket(col("nn_vec"), planes))
-    val a = anchors.select(col(idCol).as("anchor"),
-        asDouble(col(vecCol)).as("a_vec"), col(labelCol).as("a_label"))
+    val a = anchors.select(col("vec_id").as("anchor"),
+        asDouble(col("embedding")).as("a_vec"), col("label").as("a_label"))
       .withColumn("bucket", srpBucket(col("a_vec"), planes))
     val scored = c.join(broadcast(a), "bucket")
       .filter(col("anchor") =!= col("nn_id"))
@@ -451,12 +433,11 @@ object Similarity {
     * live over MemoryStream.
     */
   def nearDupFlags(incoming: DataFrame, corpus: DataFrame, threshold: Double,
-                   numPlanes: Int = 8, dim: Int = 64, seed: Long = 42L,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val planes = hyperplanes(numPlanes, dim, seed)
-    val c = corpus.select(col(idCol).as("dup_of"), asDouble(col(vecCol)).as("c_vec"))
+                   dim: Int = 64): DataFrame = {
+    val planes = hyperplanes(8, dim, 42L)
+    val c = corpus.select(col("vec_id").as("dup_of"), asDouble(col("embedding")).as("c_vec"))
       .withColumn("bucket", srpBucket(col("c_vec"), planes))
-    val in = incoming.select(col(idCol).as("in_id"), asDouble(col(vecCol)).as("in_vec"))
+    val in = incoming.select(col("vec_id").as("in_id"), asDouble(col("embedding")).as("in_vec"))
       .withColumn("bucket", srpBucket(col("in_vec"), planes))
     in.join(c, "bucket")
       .filter(col("in_id") =!= col("dup_of"))
@@ -473,9 +454,8 @@ object Similarity {
     * min/max are materialized in their own projection so the transform
     * lambda doesn't re-reduce the array per element.
     */
-  def quantizeInt8(corpus: DataFrame, idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame =
-    corpus.select(col(idCol), asDouble(col(vecCol)).as("vec"))
+  def quantizeInt8(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id"), asDouble(col("embedding")).as("vec"))
       .withColumn("mn", array_min(col("vec")))
       .withColumn("scale", (array_max(col("vec")) - col("mn")) / 255.0)
       .withColumn("codes",
@@ -486,10 +466,9 @@ object Similarity {
   /** Per-label centroids via exact decimal sums (order-independent): output
     * (label, dim, n, centroid) with centroid = decimal-sum / n rounded.
     */
-  def labelCentroids(corpus: DataFrame, labelCol: String = "label",
-                     vecCol: String = "embedding"): DataFrame =
-    corpus.select(col(labelCol).as("label"),
-        posexplode(asDouble(col(vecCol))).as(Seq("dim", "v")))
+  def labelCentroids(corpus: DataFrame): DataFrame =
+    corpus.select(col("label"),
+        posexplode(asDouble(col("embedding"))).as(Seq("dim", "v")))
       .groupBy(col("label"), col("dim"))
       .agg(count(lit(1)).as("n"),
         sum(col("v").cast(org.apache.spark.sql.types.DecimalType(28, 12)))
@@ -513,16 +492,14 @@ object Similarity {
     * point scan, one map-combined aggregate per label. Per label: `label`,
     * `n`, `s_sum_micro`, `mean_silhouette`.
     */
-  def centroidSilhouette(corpus: DataFrame, idCol: String = "vec_id",
-                         labelCol: String = "label",
-                         vecCol: String = "embedding"): DataFrame = {
-    val cvecs = labelCentroids(corpus, labelCol, vecCol)
+  def centroidSilhouette(corpus: DataFrame): DataFrame = {
+    val cvecs = labelCentroids(corpus)
       .groupBy(col("label").as("clabel"))
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("centroid")))),
         x => x("centroid")).as("cvec"))
     val dists = corpus
-      .select(col(idCol).as("__id"), col(labelCol).as("label"),
-        asDouble(col(vecCol)).as("vec"))
+      .select(col("vec_id").as("__id"), col("label"),
+        asDouble(col("embedding")).as("vec"))
       .crossJoin(broadcast(cvecs))
       .select(col("__id"), col("label"), col("clabel"),
         sqrt(aggregate(zip_with(col("vec"), col("cvec"),

@@ -6,7 +6,6 @@ import graft.score.RiskScore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming wrappers of the batch pipeline — the Spark
   * re-expression of the reference's 7 always-on Flink jobs (SURVEY.md §2.10).
@@ -30,23 +29,21 @@ object StreamingIngest {
     * connector on the classpath at runtime; the shape is what matters for the
     * offline harness, where [[jsonFileSource]] / MemoryStream stand in.
     */
-  def kafkaSource(spark: SparkSession, bootstrap: String, topic: String,
-                  schema: StructType = Normalize.kafkaEdgeSchema): DataFrame =
+  def kafkaSource(spark: SparkSession, bootstrap: String, topic: String): DataFrame =
     spark.readStream
       .format("kafka")
       .option("kafka.bootstrap.servers", bootstrap)
       .option("subscribe", topic)
       .option("startingOffsets", "earliest") // ≈ 'scan.startup.mode' create.sql:103-104
       .load()
-      .select(from_json(col("value").cast("string"), schema).as("j"))
+      .select(from_json(col("value").cast("string"), Normalize.kafkaEdgeSchema).as("j"))
       .select(col("j.*"))
 
   /** File-based streaming source with the same edge schema (offline stand-in
     * for Kafka; also the production pattern for landing-zone ingest).
     */
-  def jsonFileSource(spark: SparkSession, dir: String,
-                     schema: StructType = Normalize.kafkaEdgeSchema): DataFrame =
-    spark.readStream.schema(schema).json(dir)
+  def jsonFileSource(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(Normalize.kafkaEdgeSchema).json(dir)
 
   /** The streaming ingest transform — literally the batch pipeline. */
   def ingest(edgeStream: DataFrame): DataFrame =
@@ -58,9 +55,8 @@ object StreamingIngest {
     * `StreamingQueryProgress.observedMetrics` — the ops dashboard the
     * reference gets from Flink's metric reporters, for free in-plan.
     */
-  def ingestWithMetrics(edgeStream: DataFrame,
-                        name: String = "graft_ingest"): DataFrame =
-    ingest(edgeStream).observe(name,
+  def ingestWithMetrics(edgeStream: DataFrame): DataFrame =
+    ingest(edgeStream).observe("graft_ingest",
       count(lit(1)).as("rows_out"),
       sum(when(col("report_type") === "ALERT", 1L).otherwise(0L)).as("alerts"),
       sum(when(col("speed_kmh") > RiskScore.OverspeedKmh, 1L).otherwise(0L)).as("overspeed"))
@@ -174,13 +170,11 @@ object StreamingIngest {
     * — replayed/duplicated telemetry (at-least-once upstreams) collapses to
     * one row, with state bounded by the watermark instead of growing forever.
     */
-  def dedupStream(normalized: DataFrame, idCol: String = "correlation_id",
-                  eventTimeCol: String = "gps_epoch",
-                  watermark: String = "10 minutes"): DataFrame =
+  def dedupStream(normalized: DataFrame): DataFrame =
     normalized
-      .transform(withEventTime(_, eventTimeCol))
-      .withWatermark(eventTimeCol, watermark)
-      .dropDuplicatesWithinWatermark(idCol)
+      .transform(withEventTime)
+      .withWatermark("gps_epoch", "10 minutes")
+      .dropDuplicatesWithinWatermark("correlation_id")
 
   /** The watermark-boundary gate: only rows whose event time survived
     * normalization may enter watermarked state.
@@ -195,11 +189,11 @@ object StreamingIngest {
     * is unbounded state at crawl scale. This gate replaces both
     * behaviors with one explicit, documented disposition: corrupt-time
     * rows are excluded from event-time state; callers that must not
-    * lose them route `filter(col(eventTimeCol).isNull)` to the DLQ
+    * lose them route `filter(col("gps_epoch").isNull)` to the DLQ
     * sink, the same keep-the-failures discipline as the payload DLQ.
     */
-  def withEventTime(df: DataFrame, eventTimeCol: String = "gps_epoch"): DataFrame =
-    df.filter(col(eventTimeCol).isNotNull)
+  def withEventTime(df: DataFrame): DataFrame =
+    df.filter(col("gps_epoch").isNotNull)
 
   /** Arbitrary-state streaming (`mapGroupsWithState`): running per-device
     * totals that survive across micro-batches — the `GroupState` surface for
@@ -296,7 +290,7 @@ object StreamingIngest {
   def windowedDeviceCounts(normalized: DataFrame, window_ : String = "5 minutes",
                            watermark: String = "10 minutes"): DataFrame =
     normalized
-      .transform(withEventTime(_, "gps_epoch"))
+      .transform(withEventTime)
       .withWatermark("gps_epoch", watermark)
       .groupBy(window(col("gps_epoch"), window_), col("device_id"))
       .agg(count(lit(1)).as("n"), max(col("speed_kmh")).as("max_speed"))
@@ -309,7 +303,7 @@ object StreamingIngest {
   def sessionizedDeviceCounts(normalized: DataFrame, gap: String = "30 minutes",
                               watermark: String = "10 minutes"): DataFrame =
     normalized
-      .transform(withEventTime(_, "gps_epoch"))
+      .transform(withEventTime)
       .withWatermark("gps_epoch", watermark)
       .groupBy(session_window(col("gps_epoch"), gap).as("w"), col("device_id"))
       .agg(count(lit(1)).as("n_events"), max(col("speed_kmh")).as("max_speed"))
@@ -336,9 +330,9 @@ object StreamingIngest {
   def alertEnrichmentJoin(alerts: DataFrame, statuses: DataFrame,
                           lookback: String = "5 minutes",
                           watermark: String = "10 minutes"): DataFrame = {
-    val a = withEventTime(alerts, "gps_epoch")
+    val a = withEventTime(alerts)
       .withWatermark("gps_epoch", watermark).alias("a")
-    val st = withEventTime(statuses, "gps_epoch")
+    val st = withEventTime(statuses)
       .withWatermark("gps_epoch", watermark).alias("s")
     a.join(st,
         col("a.device_id") === col("s.device_id") &&

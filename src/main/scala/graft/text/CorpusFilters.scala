@@ -28,24 +28,22 @@ object CorpusFilters {
   // ---- C4-style cleanliness rules -----------------------------------------
 
   /** Per-document C4 rule booleans + the conjunctive `keep` flag. */
-  def c4Flags(docs: DataFrame, textCol: String = "text", minWords: Int = 20,
-              maxWordLen: Int = 30,
-              badWords: Seq[String] = Seq("zqxbadword")): DataFrame = {
+  def c4Flags(docs: DataFrame, minWords: Int = 20): DataFrame = {
     // Coalesce so a null document gets definite flags (keep=false via
     // r_min_words) rather than NULL flags — NULL `keep` passes a
     // `filter(!keep)` reject-side audit, the same three-valued trap as the
     // bloom NULL-fingerprint verdict. Token-less docs pass r_word_len_ok
     // vacuously (array_max of an empty array is NULL, not a verdict).
-    val t = coalesce(col(textCol), lit(""))
+    val t = coalesce(col("text"), lit(""))
     val w = toks(t)
-    val badHit = badWords.map(b => t.contains(b)).reduce(_ || _)
+    val badHit = Seq("zqxbadword").map(b => t.contains(b)).reduce(_ || _)
     docs
       .withColumn("r_terminal_punct", t.rlike("[.!?\"]$"))
       .withColumn("r_no_brace", !t.contains("{") && !t.contains("}"))
       .withColumn("r_no_lorem", !t.contains("lorem ipsum"))
       .withColumn("r_no_badword", !badHit)
       .withColumn("r_word_len_ok",
-        coalesce(array_max(transform(w, x => length(x))) <= maxWordLen,
+        coalesce(array_max(transform(w, x => length(x))) <= 30,
           lit(true)))
       .withColumn("r_min_words", size(w) >= minWords)
       .withColumn("keep",
@@ -57,9 +55,7 @@ object CorpusFilters {
     * One map-side partial aggregate to a single row, then a local `stack` —
     * the whole audit costs one reduce of ~8 longs regardless of corpus size.
     */
-  def c4Summary(docs: DataFrame, textCol: String = "text", minWords: Int = 20,
-                maxWordLen: Int = 30,
-                badWords: Seq[String] = Seq("zqxbadword")): DataFrame = {
+  def c4Summary(docs: DataFrame): DataFrame = {
     val rules = Seq("r_terminal_punct", "r_no_brace", "r_no_lorem",
       "r_no_badword", "r_word_len_ok", "r_min_words", "keep")
     val names = Map("r_terminal_punct" -> "terminal_punct",
@@ -69,7 +65,7 @@ object CorpusFilters {
     val aggs = rules.map(r =>
       sum(when(col(r), 1L).otherwise(0L)).as(s"p_$r")) :+
       count(lit(1)).as("n_total")
-    val one = c4Flags(docs, textCol, minWords, maxWordLen, badWords)
+    val one = c4Flags(docs)
       .agg(aggs.head, aggs.tail: _*)
     val stackArgs = rules.map(r => s"'${names(r)}', p_$r").mkString(", ")
     one.selectExpr("n_total",
@@ -84,16 +80,13 @@ object CorpusFilters {
     * conjunctive `keep`. All metrics are exact-integer-derived; the three
     * ratio columns are each one IEEE division (bit-stable cross-engine).
     */
-  def gopherFlags(docs: DataFrame, textCol: String = "text",
-                  minWords: Int = 20, maxWords: Int = 10000,
-                  minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
-                  maxSymbolRatio: Double = 0.05, minAlphaFrac: Double = 0.8,
+  def gopherFlags(docs: DataFrame,
                   minStopwords: Int = 2): DataFrame = {
     // Coalesce + ratio guards: under the null-safe tokenizer a null/blank
     // document has n_words = 0, and ANSI division would otherwise throw at
     // the first degenerate crawl row. Ratios are 0.0 for token-less docs
     // (keep already rejects them via g_words).
-    val t = coalesce(col(textCol), lit(""))
+    val t = coalesce(col("text"), lit(""))
     val nWords = size(toks(t)).cast("long")
     val nonSpace = length(regexp_replace(t, "\\s", "")).cast("long")
     val hashes = (length(t) - length(regexp_replace(t, "#", ""))).cast("long")
@@ -110,11 +103,11 @@ object CorpusFilters {
       .withColumn("symbol_ratio", ratio(hashes + ellipses))
       .withColumn("alpha_frac", ratio(nAlpha))
       .withColumn("n_stopwords", nStop)
-      .withColumn("g_words", col("n_words").between(minWords, maxWords))
+      .withColumn("g_words", col("n_words").between(20, 10000))
       .withColumn("g_mean_len",
-        col("mean_word_len").between(minMeanLen, maxMeanLen))
-      .withColumn("g_symbol", col("symbol_ratio") <= maxSymbolRatio)
-      .withColumn("g_alpha", col("alpha_frac") >= minAlphaFrac)
+        col("mean_word_len").between(3.0, 10.0))
+      .withColumn("g_symbol", col("symbol_ratio") <= 0.05)
+      .withColumn("g_alpha", col("alpha_frac") >= 0.8)
       .withColumn("g_stop", col("n_stopwords") >= minStopwords)
       .withColumn("keep", col("g_words") && col("g_mean_len") &&
         col("g_symbol") && col("g_alpha") && col("g_stop"))

@@ -29,13 +29,12 @@ object Curation {
     * shuffle on the shard key; the running offset is a window cumsum within
     * the shard. At 100 TB, shards ≫ executors keeps every partition bounded.
     */
-  def packSequences(docs: DataFrame, seqLen: Int, numShards: Int,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val w = Window.partitionBy(col("shard")).orderBy(col(idCol))
+  def packSequences(docs: DataFrame, seqLen: Int, numShards: Int): DataFrame = {
+    val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     docs
-      .select(col(idCol), (col(idCol) % numShards).as("shard"),
-        size(Dedup.tokens(col(textCol))).cast("long").as("n_tokens"))
+      .select(col("doc_id"), (col("doc_id") % numShards).as("shard"),
+        size(Dedup.tokens(col("text"))).cast("long").as("n_tokens"))
       .withColumn("start_offset", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
       .withColumn("seq_first", expr(s"start_offset div $seqLen"))
       .withColumn("seq_last", expr(s"(start_offset + n_tokens - 1) div $seqLen"))
@@ -52,18 +51,17 @@ object Curation {
     * groupBy on doc id over only the *matching* shingles.
     */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, k: Int = 5,
-                    minOverlap: Long = 3,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                    minOverlap: Long = 3): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     // persist the array-form shingle frames BEFORE exploding ([[Dedup]]
     // object doc + ngramJaccardPairs): the cache is a pushdown boundary, so
     // the explode's inferred `isnotnull(sh)` constraint can't substitute the
     // whole shingle lambda (split re-inlined per element) into the scan —
     // measured 22 s → 1.2 s warm at sf0.1
-    val corpusSh = Dedup.withShingles(corpus, k, idCol, textCol)
+    val corpusSh = Dedup.withShingles(corpus, k)
       .persist(StorageLevel.MEMORY_AND_DISK)
       .select(col("id"), explode(col("sh")).as("shingle"))
-    val benchSh = Dedup.withShingles(benchmark, k, idCol, textCol)
+    val benchSh = Dedup.withShingles(benchmark, k)
       .persist(StorageLevel.MEMORY_AND_DISK)
       .select(explode(col("sh")).as("shingle")).distinct()
     corpusSh.join(broadcast(benchSh), Seq("shingle"))
@@ -84,10 +82,9 @@ object Curation {
     * a per-document feature operator must emit a row per document, not
     * silently drop the degenerate ones.
     */
-  def repetitionFeatures(docs: DataFrame,
-                         idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def repetitionFeatures(docs: DataFrame): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val base = docs.select(col(idCol).as("id"), col(textCol).as("__text"))
+    val base = docs.select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", Dedup.tokens(col("__text")))
     val narrow = base.select(col("id"),
@@ -125,15 +122,13 @@ object Curation {
     *
     * One shuffle on the source; cumsum is a window within it.
     */
-  def tokenBudget(docs: DataFrame, budget: Long,
-                  idCol: String = "doc_id", textCol: String = "text",
-                  sourceCol: String = "source"): DataFrame = {
-    val w = Window.partitionBy(col(sourceCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
+  def tokenBudget(docs: DataFrame, budget: Long): DataFrame = {
+    val w = Window.partitionBy(col("source"))
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     docs
-      .select(col(idCol), col(sourceCol),
-        size(Dedup.tokens(col(textCol))).cast("long").as("n_tokens"))
+      .select(col("doc_id"), col("source"),
+        size(Dedup.tokens(col("text"))).cast("long").as("n_tokens"))
       .withColumn("tokens_before", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
       .filter(col("tokens_before") < budget)
   }
@@ -143,13 +138,12 @@ object Curation {
     * `0, stride, 2·stride, …  < n_tokens` and `len = min(window, n - start)`.
     * Narrow explode — no shuffle; chunk count per doc is O(n/stride).
     */
-  def slidingChunks(docs: DataFrame, window: Int, stride: Int,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+  def slidingChunks(docs: DataFrame, window: Int, stride: Int): DataFrame =
     docs
-      .select(col(idCol), size(Dedup.tokens(col(textCol))).cast("long").as("n_tokens"))
+      .select(col("doc_id"), size(Dedup.tokens(col("text"))).cast("long").as("n_tokens"))
       .withColumn("chunk_start",
         explode(sequence(lit(0L), col("n_tokens") - 1, lit(stride.toLong))))
-      .select(col(idCol), col("n_tokens"),
+      .select(col("doc_id"), col("n_tokens"),
         (col("chunk_start") / stride).cast("long").as("chunk_idx"),
         col("chunk_start"),
         least(lit(window.toLong), col("n_tokens") - col("chunk_start")).as("chunk_len"))
@@ -165,16 +159,13 @@ object Curation {
     * interleave order (Spark range-partitions the sort — no single-reducer
     * bottleneck; a `limit(n)` on top plans as TakeOrdered).
     */
-  def mixtureInterleave(docs: DataFrame, weights: Seq[(String, Double)],
-                        defaultWeight: Double = 1.0,
-                        idCol: String = "doc_id",
-                        sourceCol: String = "source"): DataFrame = {
-    val wt = weights.foldLeft(lit(defaultWeight)) { case (acc, (s, x)) =>
-      when(col(sourceCol) === s, lit(x)).otherwise(acc)
+  def mixtureInterleave(docs: DataFrame, weights: Seq[(String, Double)]): DataFrame = {
+    val wt = weights.foldLeft(lit(1.0)) { case (acc, (s, x)) =>
+      when(col("source") === s, lit(x)).otherwise(acc)
     }
-    val w = Window.partitionBy(col(sourceCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    docs.select(col(idCol), col(sourceCol))
+    val w = Window.partitionBy(col("source"))
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+    docs.select(col("doc_id"), col("source"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("ord", col("rn") / wt)
   }
@@ -190,23 +181,22 @@ object Curation {
     * (`a`/`b` NULL, full text in `prefix`). Pure stateless projection —
     * pushes down, zero shuffle, linear at any corpus size.
     */
-  def fimSplit(docs: DataFrame, idCol: String = "doc_id",
-               textCol: String = "text", seed: String = "fim"): DataFrame = {
-    val t = graft.dedup.Dedup.tokens(col(textCol))
+  def fimSplit(docs: DataFrame): DataFrame = {
+    val t = graft.dedup.Dedup.tokens(col("text"))
     val n = size(t).cast("long")
     val u1 = graft.functions.Md5Field.md5U32(
-      concat(lit(s"$seed:a:"), col(idCol).cast("string")))
+      concat(lit("fim:a:"), col("doc_id").cast("string")))
     val u2 = graft.functions.Md5Field.md5U32(
-      concat(lit(s"$seed:b:"), col(idCol).cast("string")))
+      concat(lit("fim:b:"), col("doc_id").cast("string")))
     val a = lit(1L) + pmod(u1, n - lit(1L))
     val b = a + pmod(u2, n - a)
     val splittable = n >= 2
-    docs.select(col(idCol).as("doc_id"),
+    docs.select(col("doc_id"),
       n.as("n_tokens"),
       when(splittable, a).as("a"),
       when(splittable, b).as("b"),
       when(splittable, array_join(slice(t, lit(1), a.cast("int")), " "))
-        .otherwise(col(textCol)).as("prefix"),
+        .otherwise(col("text")).as("prefix"),
       when(splittable,
         array_join(slice(t, (a + lit(1L)).cast("int"), (b - a).cast("int")), " "))
         .otherwise(lit("")).as("middle"),
@@ -222,13 +212,11 @@ object Curation {
     * ones arrive), and leakage-free by construction. Fractions are expressed
     * as integer thresholds to keep the comparison exact.
     */
-  def datasetSplit(docs: DataFrame, trainPct: Int = 80, valPct: Int = 10,
-                   idCol: String = "doc_id"): DataFrame = {
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
+  def datasetSplit(docs: DataFrame): DataFrame = {
     // md5-derived 32-bit uniform, same construction as the A-ES sampler
-    val u = graft.functions.Md5Field.md5U32(col(idCol).cast("string"))
-    val trainMax = (1L << 32) * trainPct / 100
-    val valMax = (1L << 32) * (trainPct + valPct) / 100
+    val u = graft.functions.Md5Field.md5U32(col("doc_id").cast("string"))
+    val trainMax = (1L << 32) * 80 / 100
+    val valMax = (1L << 32) * 90 / 100
     docs.withColumn("split",
       when(u < trainMax, "train").when(u < valMax, "val").otherwise("test"))
   }
@@ -237,18 +225,16 @@ object Curation {
     * CLUSTER, not the document — a per-doc hash split ([[datasetSplit]])
     * puts two near-copies of the same page on opposite sides of the
     * train/test fence, and the eval silently measures memorization. The
-    * frame must already carry a `componentCol` (connected components over
+    * frame must already carry a `component` column (connected components over
     * the near-dup pair graph, singletons = their own id); the split is the
     * same md5 uniform keyed by the component, so "whole cluster on one
     * side" is a construction invariant, not a post-hoc fixup. Pure
     * stateless projection — pushes down, zero shuffle.
     */
-  def clusterAwareSplit(docs: DataFrame, componentCol: String = "component",
-                        trainPct: Int = 80, valPct: Int = 10): DataFrame = {
-    require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100)
-    val u = graft.functions.Md5Field.md5U32(col(componentCol).cast("string"))
-    val trainMax = (1L << 32) * trainPct / 100
-    val valMax = (1L << 32) * (trainPct + valPct) / 100
+  def clusterAwareSplit(docs: DataFrame): DataFrame = {
+    val u = graft.functions.Md5Field.md5U32(col("component").cast("string"))
+    val trainMax = (1L << 32) * 80 / 100
+    val valMax = (1L << 32) * 90 / 100
     docs.withColumn("split",
       when(u < trainMax, "train").when(u < valMax, "val").otherwise("test"))
   }
@@ -261,18 +247,16 @@ object Curation {
     * math. One window per bucket; buckets are few and balanced by
     * construction, so no skewed reducer.
     */
-  def lengthBuckets(docs: DataFrame, batchSize: Int,
-                    idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
+  def lengthBuckets(docs: DataFrame, batchSize: Int): DataFrame = {
     require(batchSize > 0)
-    val len = size(graft.dedup.Dedup.tokens(col(textCol))).cast("long")
+    val len = size(graft.dedup.Dedup.tokens(col("text"))).cast("long")
     val nt = col("n_tokens")
     val bucket = when(nt <= 16, 16L).when(nt <= 32, 32L)
       .when(nt <= 64, 64L).when(nt <= 128, 128L).when(nt <= 256, 256L)
       .otherwise(512L)
     val w = Window.partitionBy(col("bucket"))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    docs.select(col(idCol), len.as("n_tokens"))
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+    docs.select(col("doc_id"), len.as("n_tokens"))
       .withColumn("bucket", bucket)
       .withColumn("batch_idx",
         ((row_number().over(w) - 1) / batchSize).cast("long"))
@@ -297,21 +281,20 @@ object Curation {
     * single-partition rank window is a bounded driver-free reduction, not a
     * data-path bottleneck. The deficit is provably < #sources.
     */
-  def mixtureQuotas(docs: DataFrame, total: Long,
-                    sourceCol: String = "source"): DataFrame = {
+  def mixtureQuotas(docs: DataFrame, total: Long): DataFrame = {
     require(total >= 0, s"total must be non-negative, got $total")
-    val counts = docs.groupBy(col(sourceCol)).agg(count(lit(1)).as("n_docs"))
+    val counts = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
     val corpus = counts.agg(sum(col("n_docs")).as("__corpus"))
     val q = counts.crossJoin(corpus)
       .withColumn("__fq", expr(s"(n_docs * ${total}L) div __corpus"))
       .withColumn("__rem", (col("n_docs") * lit(total)) % col("__corpus"))
     val deficit = q.agg((lit(total) - sum(col("__fq"))).as("__deficit"))
-    val w = Window.orderBy(col("__rem").desc, col(sourceCol))
+    val w = Window.orderBy(col("__rem").desc, col("source"))
     q.crossJoin(deficit)
       .withColumn("quota",
         col("__fq") + when(row_number().over(w) <= col("__deficit"), 1L)
           .otherwise(0L))
-      .select(col(sourceCol), col("n_docs"), col("quota"))
+      .select(col("source"), col("n_docs"), col("quota"))
   }
 
   /** Shard-assignment balance audit: docs assigned to `shards` by the
@@ -323,13 +306,12 @@ object Curation {
     * writing training shards: a skewed shard is the straggler that
     * serializes the epoch.
     */
-  def shardBalance(docs: DataFrame, shards: Int,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def shardBalance(docs: DataFrame, shards: Int): DataFrame = {
     require(shards >= 1, s"shards must be >= 1, got $shards")
-    val u32 = graft.functions.Md5Field.md5U32(col(idCol).cast("string"))
+    val u32 = graft.functions.Md5Field.md5U32(col("doc_id").cast("string"))
     val perShard = docs
       .select((u32 % shards).as("shard"),
-        size(graft.dedup.Dedup.tokens(col(textCol))).cast("long").as("__nt"))
+        size(graft.dedup.Dedup.tokens(col("text"))).cast("long").as("__nt"))
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"), sum(col("__nt")).as("n_tokens"))
     val tot = perShard.agg(sum(col("n_tokens")).as("__tt"))
@@ -360,10 +342,9 @@ object Curation {
     * Scale shape: identical to [[mixtureQuotas]] — one map-combined
     * corpus aggregate, then #sources-sized arithmetic.
     */
-  def temperatureQuotas(docs: DataFrame, total: Long,
-                        sourceCol: String = "source"): DataFrame = {
+  def temperatureQuotas(docs: DataFrame, total: Long): DataFrame = {
     require(total >= 0, s"total must be non-negative, got $total")
-    val counts = docs.groupBy(col(sourceCol)).agg(count(lit(1)).as("n_docs"))
+    val counts = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
       .withColumn("weight_q20",
         floor(sqrt(col("n_docs").cast("double")) * lit((1L << 20).toDouble))
           .cast("long"))
@@ -372,12 +353,12 @@ object Curation {
       .withColumn("__fq", expr(s"(weight_q20 * ${total}L) div __W"))
       .withColumn("__rem", (col("weight_q20") * lit(total)) % col("__W"))
     val deficit = q.agg((lit(total) - sum(col("__fq"))).as("__deficit"))
-    val w = Window.orderBy(col("__rem").desc, col(sourceCol))
+    val w = Window.orderBy(col("__rem").desc, col("source"))
     q.crossJoin(deficit)
       .withColumn("quota",
         col("__fq") + when(row_number().over(w) <= col("__deficit"), 1L)
           .otherwise(0L))
-      .select(col(sourceCol), col("n_docs"), col("weight_q20"), col("quota"))
+      .select(col("source"), col("n_docs"), col("weight_q20"), col("quota"))
   }
 
   /** Execute a [[temperatureQuotas]] apportionment: the α=1/2 quotas drawn
@@ -387,18 +368,16 @@ object Curation {
     * then draw). Same scale shape: broadcast #sources-row quotas, one rank
     * window, WindowGroupLimit-able cut.
     */
-  def temperatureSample(docs: DataFrame, total: Long,
-                        sourceCol: String = "source",
-                        idCol: String = "doc_id"): DataFrame = {
-    val quotas = temperatureQuotas(docs, total, sourceCol)
-      .select(col(sourceCol), col("quota"))
-    val w = Window.partitionBy(col(sourceCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    docs.select(col(idCol), col(sourceCol))
+  def temperatureSample(docs: DataFrame, total: Long): DataFrame = {
+    val quotas = temperatureQuotas(docs, total)
+      .select(col("source"), col("quota"))
+    val w = Window.partitionBy(col("source"))
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+    docs.select(col("doc_id"), col("source"))
       .withColumn("rn", row_number().over(w).cast("long"))
-      .join(broadcast(quotas), Seq(sourceCol))
+      .join(broadcast(quotas), Seq("source"))
       .filter(col("rn") <= col("quota"))
-      .select(col(idCol), col(sourceCol), col("rn"))
+      .select(col("doc_id"), col("source"), col("rn"))
   }
 
   /** Execute a [[mixtureQuotas]] apportionment: draw exactly `quota` docs
@@ -413,18 +392,16 @@ object Curation {
     * forwards only candidate rows per task once the per-source cap is a
     * constant; with per-source quotas it stays a single window pass.
     */
-  def quotaSample(docs: DataFrame, total: Long,
-                  sourceCol: String = "source",
-                  idCol: String = "doc_id"): DataFrame = {
-    val quotas = mixtureQuotas(docs, total, sourceCol)
-      .select(col(sourceCol), col("quota"))
-    val w = Window.partitionBy(col(sourceCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    docs.select(col(idCol), col(sourceCol))
+  def quotaSample(docs: DataFrame, total: Long): DataFrame = {
+    val quotas = mixtureQuotas(docs, total)
+      .select(col("source"), col("quota"))
+    val w = Window.partitionBy(col("source"))
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+    docs.select(col("doc_id"), col("source"))
       .withColumn("rn", row_number().over(w).cast("long"))
-      .join(broadcast(quotas), Seq(sourceCol))
+      .join(broadcast(quotas), Seq("source"))
       .filter(col("rn") <= col("quota"))
-      .select(col(idCol), col(sourceCol), col("rn"))
+      .select(col("doc_id"), col("source"), col("rn"))
   }
 
   /** Edit-distance fuzzy pairs: all (a < b) pairs within `maxDist`
@@ -448,12 +425,11 @@ object Curation {
     * early-exits once the distance provably exceeds the threshold — so the
     * output is exact, identical to the all-pairs formulation.
     */
-  def fuzzyPairs(items: DataFrame, maxDist: Int,
-                 idCol: String = "doc_id", strCol: String = "title"): DataFrame = {
+  def fuzzyPairs(items: DataFrame, maxDist: Int): DataFrame = {
     val t = maxDist
     val tp1 = t + 1
-    val base = items.select(col(idCol).as("id"), col(strCol).as("s"),
-      length(col(strCol)).as("len"))
+    val base = items.select(col("doc_id").as("id"), col("title").as("s"),
+      length(col("title")).as("len"))
     // persist: the frame feeds both join sides of candidate generation plus
     // the verification lookups ([[Dedup]] object doc, rule 1)
     val withLen = base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -523,8 +499,8 @@ object Curation {
     * redacted text (email → IP → phone, fixed order so results are
     * deterministic). Pure codegen'd projection — no shuffle, no UDF.
     */
-  def piiRedact(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def piiRedact(df: DataFrame): DataFrame = {
+    val t = col("text")
     df.withColumn("n_email", regexp_count(t, lit(EmailRe)).cast("long"))
       .withColumn("n_phone", regexp_count(t, lit(PhoneRe)).cast("long"))
       .withColumn("n_ip", regexp_count(t, lit(IpRe)).cast("long"))

@@ -79,9 +79,8 @@ object Dsir {
   /** Per-document importance score: Σ weight over the document's hashed
     * bigrams (exact BIGINT). Documents with fewer than two tokens score 0.
     */
-  def docScores(docs: DataFrame, targetSource: String,
-                buckets: Int = 256): DataFrame = {
-    val bb = bigramBuckets(docs, buckets).persist(StorageLevel.MEMORY_AND_DISK)
+  def docScores(docs: DataFrame, targetSource: String): DataFrame = {
+    val bb = bigramBuckets(docs, 256).persist(StorageLevel.MEMORY_AND_DISK)
     val w = weightsOf(bb, targetSource).select(col("bucket"), col("weight"))
     val scored = bb
       .join(broadcast(w), Seq("bucket"))

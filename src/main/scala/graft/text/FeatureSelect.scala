@@ -22,10 +22,9 @@ import org.apache.spark.sql.functions._
   */
 object FeatureSelect {
 
-  def giniStumps(docs: DataFrame, labelCol: Column, topTokens: Int = 30,
-                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val base = docs.select(col(idCol).as("doc"), labelCol.cast("long").as("y"),
-        graft.dedup.Dedup.tokens(col(textCol)).as("t"))
+  def giniStumps(docs: DataFrame, labelCol: Column, topTokens: Int = 30): DataFrame = {
+    val base = docs.select(col("doc_id").as("doc"), labelCol.cast("long").as("y"),
+        graft.dedup.Dedup.tokens(col("text")).as("t"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val presence = base
       .select(col("doc"), col("y"), explode(col("t")).as("token"))

@@ -37,14 +37,13 @@ object NgramLm {
   final case class BigramModel(c12: DataFrame, c1: DataFrame, vocab: DataFrame)
 
   /** Train the model (two term-keyed count shuffles + one distinct). */
-  def train(trainDocs: DataFrame, idCol: String = "doc_id",
-            textCol: String = "text"): BigramModel = {
-    val trB = bigrams(trainDocs, idCol, textCol)
+  def train(trainDocs: DataFrame): BigramModel = {
+    val trB = bigrams(trainDocs, "doc_id", "text")
       .persist(StorageLevel.MEMORY_AND_DISK)
     BigramModel(
       trB.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")),
       trB.groupBy(col("w1")).agg(count(lit(1)).as("c1")),
-      trainDocs.select(explode(graft.dedup.Dedup.tokens(col(textCol))).as("t"))
+      trainDocs.select(explode(graft.dedup.Dedup.tokens(col("text"))).as("t"))
         .agg(countDistinct(col("t")).as("v")))
   }
 
@@ -68,11 +67,9 @@ object NgramLm {
     * and flag documents above it. Per-doc rows: `doc`, `n_bigrams`,
     * `nll_micronats`, `threshold`, `flagged`.
     */
-  def perplexityFilter(train: DataFrame, test: DataFrame, permille: Int = 900,
-                       idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame =
-    perplexityFilter(NgramLm.train(train, idCol, textCol), test, permille,
-      idCol, textCol)
+  def perplexityFilter(train: DataFrame, test: DataFrame, permille: Int = 900): DataFrame =
+    perplexityFilter(NgramLm.train(train), test, permille,
+      "doc_id", "text")
 
   /** Model-based variant — the entry point when the trained counts are
     * shared across scorers. */
@@ -114,10 +111,8 @@ object NgramLm {
     * (test bigrams seen in training), `mn_sum` (Σ floor(ln p · 10⁶) as
     * canonical string) and the corpus `perplexity`.
     */
-  def bigramPerplexity(train: DataFrame, test: DataFrame,
-                       idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame =
-    bigramPerplexity(NgramLm.train(train, idCol, textCol), test, idCol, textCol)
+  def bigramPerplexity(train: DataFrame, test: DataFrame): DataFrame =
+    bigramPerplexity(NgramLm.train(train), test, "doc_id", "text")
 
   /** Model-based variant: `train_bigrams` is Σc1 — the model frames carry
     * the full training state. */
@@ -170,13 +165,11 @@ object NgramLm {
     * shapes as [[bigramPerplexity]]. One row: `n_scored`, `n_skipped`,
     * `sum_micro_nats` (string), `ppl`.
     */
-  def kneserNeyAudit(model: BigramModel, test: DataFrame,
-                     idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = {
+  def kneserNeyAudit(model: BigramModel, test: DataFrame): DataFrame = {
     val n1fw = model.c12.groupBy(col("w1")).agg(count(lit(1)).as("n1fw"))
     val n1bw = model.c12.groupBy(col("w2")).agg(count(lit(1)).as("n1bw"))
     val types = model.c12.agg(count(lit(1)).as("tt"))
-    val teB = bigrams(test, idCol, textCol)
+    val teB = bigrams(test, "doc_id", "text")
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("tc"))
     val j = teB
       .join(model.c1, Seq("w1"), "left_outer")

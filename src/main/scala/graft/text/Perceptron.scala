@@ -34,9 +34,8 @@ object Perceptron {
   /** Sparse hashed features: (doc, bucket, cnt) + per-doc label from
     * `labelCol` (must be ±1). Bucket = md5U32(token) mod dim.
     */
-  def features(docs: DataFrame, dim: Int, idCol: String = "doc_id",
-               textCol: String = "text"): DataFrame = {
-    val tok = docs.select(col(idCol).as("doc"), graft.dedup.Dedup.tokens(col(textCol)).as("t"))
+  def features(docs: DataFrame, dim: Int): DataFrame = {
+    val tok = docs.select(col("doc_id").as("doc"), graft.dedup.Dedup.tokens(col("text")).as("t"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     tok.select(col("doc"), explode(col("t")).as("w"))
       .filter(col("w") =!= "")

@@ -40,11 +40,10 @@ object SkipGram {
     * above 1% of the stream get dropped proportionally).
     */
   def pairs(docs: DataFrame, window: Int = 2, minCount: Long = 2L,
-            tNum: Long = 1L, tDen: Long = 100L, seed: String = "sg",
-            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+            tNum: Long = 1L, tDen: Long = 100L): DataFrame = {
     require(window >= 1 && window <= 16, s"window must be in [1,16], got $window")
     val tok = docs
-      .select(col(idCol).as("doc"), graft.dedup.Dedup.tokens(col(textCol)).as("t"))
+      .select(col("doc_id").as("doc"), graft.dedup.Dedup.tokens(col("text")).as("t"))
       .persist(StorageLevel.MEMORY_AND_DISK) // NOTES rule 1: array before explode
     val occ = tok.select(col("doc"), posexplode(col("t")).as(Seq("pos", "w")))
       .filter(col("w") =!= "")
@@ -55,7 +54,7 @@ object SkipGram {
       .join(freq, Seq("w"))
       .crossJoin(broadcast(totals))
       .filter(
-        md5U32(concat_ws(":", lit(seed), col("doc"), col("pos"))) *
+        md5U32(concat_ws(":", lit("sg"), col("doc"), col("pos"))) *
           lit(tDen) * col("f") < lit(tNum) * col("N") * lit(4294967296L))
       .withColumn("p", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("doc"))

@@ -49,13 +49,12 @@ object TextAnalysis {
     * gated division of exact longs). One map-combined aggregate on the
     * segment key; the scan prunes to (segment, text).
     */
-  def encodingAudit(docs: DataFrame, segCol: String = "source",
-                    textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def encodingAudit(docs: DataFrame): DataFrame = {
+    val t = col("text")
     def has(sig: String): Column = when(t.contains(sig), 1L).otherwise(0L)
     val anySig = when(t.contains("�") || t.contains("Ã©") ||
       t.contains("Ã±") || t.contains("â€"), 1L).otherwise(0L)
-    docs.select(col(segCol).as("segment"), t)
+    docs.select(col("source").as("segment"), t)
       .groupBy(col("segment"))
       .agg(count(lit(1)).as("n_docs"),
         sum(has("�")).as("n_replacement"),
@@ -79,14 +78,13 @@ object TextAnalysis {
     * llama-chat `[INST]`. Per segment: doc counts per marker, the
     * any-marker union, and its permille rate.
     */
-  def specialTokenAudit(docs: DataFrame, segCol: String = "source",
-                        textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def specialTokenAudit(docs: DataFrame): DataFrame = {
+    val t = col("text")
     def has(sig: String): Column = when(t.contains(sig), 1L).otherwise(0L)
     val anySig = when(t.contains("<|endoftext|>") || t.contains("<|im_start|>") ||
       t.contains("<s>") || t.contains("</s>") || t.contains("[INST]"),
       1L).otherwise(0L)
-    docs.select(col(segCol).as("segment"), t)
+    docs.select(col("source").as("segment"), t)
       .groupBy(col("segment"))
       .agg(count(lit(1)).as("n_docs"),
         sum(has("<|endoftext|>")).as("n_endoftext"),
@@ -109,8 +107,8 @@ object TextAnalysis {
     * null document 0.5 — above every real short document. A quality gate at
     * the conventional 0.5 would have selected exactly the null docs.
     */
-  def qualityFeatures(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = coalesce(col(textCol), lit(""))
+  def qualityFeatures(df: DataFrame): DataFrame = {
+    val t = coalesce(col("text"), lit(""))
     val nTokens = size(toks(t))
     val nChars = length(t)
     val nonSpaceChars = length(regexp_replace(t, "\\s", ""))
@@ -144,14 +142,12 @@ object TextAnalysis {
     * pre-split them ([[graft.ops.SkewJoin]]-style salting changes band
     * boundaries, so the valve here is splitting the source label upstream).
     */
-  def qualityBands(docs: DataFrame, nBands: Int,
-                   groupCol: String = "source", idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame = {
-    val w = Window.partitionBy(col(groupCol))
-      .orderBy(col("quality_score").desc, col(idCol))
-    qualityFeatures(docs, textCol)
+  def qualityBands(docs: DataFrame, nBands: Int): DataFrame = {
+    val w = Window.partitionBy(col("source"))
+      .orderBy(col("quality_score").desc, col("doc_id"))
+    qualityFeatures(docs)
       .withColumn("band", ntile(nBands).over(w))
-      .groupBy(col(groupCol), col("band"))
+      .groupBy(col("source"), col("band"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("total_tokens"),
         min(col("quality_score")).as("min_quality"),
@@ -210,10 +206,10 @@ object TextAnalysis {
     * cuts on: tag count and the fraction of characters the strip removed
     * (markup-heavy pages score high and get dropped before tokenization).
     */
-  def markupStats(df: DataFrame, textCol: String = "text"): DataFrame = {
+  def markupStats(df: DataFrame): DataFrame = {
     // coalesce: null text gets definite stats (stripped "", 0 tags, ratio
     // 0.0) instead of NULL feature columns
-    val t = coalesce(col(textCol), lit(""))
+    val t = coalesce(col("text"), lit(""))
     df.withColumn("stripped", stripMarkup(t))
       .withColumn("n_tags", regexp_count(t, lit("<[^>]*>")).cast("long"))
       .withColumn("markup_ratio",
@@ -228,10 +224,10 @@ object TextAnalysis {
     * shared tokenizer contract; `regexp_count` gets the same coalesce so the
     * two columns agree on degenerate input).
     */
-  def tokenCounts(df: DataFrame, textCol: String = "text"): DataFrame =
-    df.withColumn("ws_tokens", size(toks(col(textCol))).cast("long"))
+  def tokenCounts(df: DataFrame): DataFrame =
+    df.withColumn("ws_tokens", size(toks(col("text"))).cast("long"))
       .withColumn("re_tokens",
-        regexp_count(coalesce(col(textCol), lit("")),
+        regexp_count(coalesce(col("text"), lit("")),
           lit("[A-Za-z0-9]+|[^A-Za-z0-9\\s]")).cast("long"))
 
   /** Top-k salient terms per document by tf·idf — with the idf kept as the
@@ -244,11 +240,10 @@ object TextAnalysis {
     * window per doc whose `row_number ≤ k` triggers the WindowGroupLimit
     * rewrite (top-k forwarded per map task, never a full per-doc sort).
     */
-  def topTermsByTfIdf(docs: DataFrame, k: Int,
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def topTermsByTfIdf(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val tf = docs.select(col(idCol).as("id"), col(textCol).as("__text"))
+    val tf = docs.select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", toks(col("__text")))
       .select(col("id"), explode(col("__toks")).as("term"))
@@ -259,7 +254,7 @@ object TextAnalysis {
       .withColumn("score", col("tf").cast("double") / col("df"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("id").as(idCol), col("term"), col("tf"), col("df"), col("score"))
+      .select(col("id").as("doc_id"), col("term"), col("tf"), col("df"), col("score"))
   }
 
   /** 32-bit rolling-polynomial document fingerprint over normalized text
@@ -284,16 +279,15 @@ object TextAnalysis {
     * cut (keep top-K terms, default-weight the tail) is the standard memory
     * valve if vocabulary explodes.
     */
-  def corpusFreqScores(docs: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text"): DataFrame = {
+  def corpusFreqScores(docs: DataFrame): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val tok = docs.select(col(idCol).as("id"), col(textCol).as("__text"))
+    val tok = docs.select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", toks(col("__text")))
       .select(col("id"), explode(col("__toks")).as("term"))
     val freq = tok.groupBy(col("term")).agg(count(lit(1)).as("cf"))
     tok.join(freq, "term")
-      .groupBy(col("id").as(idCol))
+      .groupBy(col("id").as("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
         sum(col("cf")).as("sum_cf"),
         min(col("cf")).as("min_cf"),
@@ -305,15 +299,14 @@ object TextAnalysis {
     * hapax mass, type-token ratio). Two aggregates — (group, term) then
     * group — both with map-side combine; no joins.
     */
-  def vocabStats(docs: DataFrame, groupCol: String = "source",
-                 textCol: String = "text"): DataFrame = {
+  def vocabStats(docs: DataFrame): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val perTerm = docs.select(col(groupCol), col(textCol).as("__text"))
+    val perTerm = docs.select(col("source"), col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", toks(col("__text")))
-      .select(col(groupCol), explode(col("__toks")).as("term"))
-      .groupBy(col(groupCol), col("term")).agg(count(lit(1)).as("f"))
-    perTerm.groupBy(col(groupCol))
+      .select(col("source"), explode(col("__toks")).as("term"))
+      .groupBy(col("source"), col("term")).agg(count(lit(1)).as("f"))
+    perTerm.groupBy(col("source"))
       .agg(sum(col("f")).as("n_tokens"),
         count(lit(1)).as("vocab_size"),
         sum(when(col("f") === 1, 1L).otherwise(0L)).as("n_hapax"))
@@ -336,10 +329,9 @@ object TextAnalysis {
     * hold to ~4·10⁹ count×corpus scale; beyond that swap DECIMAL(38,0) in
     * both engines.
     */
-  def collocations(docs: DataFrame, minCount: Long, k: Int,
-                   textCol: String = "text"): DataFrame = {
+  def collocations(docs: DataFrame, minCount: Long, k: Int): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val arr = docs.select(col(textCol).as("__text"))
+    val arr = docs.select(col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", toks(col("__text")))
       .select(col("__toks"))
@@ -378,15 +370,14 @@ object TextAnalysis {
     * array is materialized in its own projection per the object rules);
     * no shuffle.
     */
-  def sentenceStats(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame =
+  def sentenceStats(docs: DataFrame): DataFrame =
     docs
       .withColumn("__sents",
-        filter(split(coalesce(col(textCol), lit("")), "[.!?]+\\s*"), s => s =!= ""))
-      .select(col(idCol), col("__sents"))
+        filter(split(coalesce(col("text"), lit("")), "[.!?]+\\s*"), s => s =!= ""))
+      .select(col("doc_id"), col("__sents"))
       .withColumn("__lens", transform(col("__sents"), s => size(toks(s))))
       .select(
-        col(idCol),
+        col("doc_id"),
         size(col("__sents")).cast("long").as("n_sentences"),
         aggregate(col("__lens"), lit(0L), (acc, x) => acc + x).as("n_words"),
         // empty/whitespace-only doc: array_max of [] is null and 0/0 would
@@ -403,17 +394,16 @@ object TextAnalysis {
     * one IEEE division and the formula's constants multiply in fixed
     * order, so the score itself is hash-comparable. Pure projection.
     */
-  def readability(docs: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text"): DataFrame = {
+  def readability(docs: DataFrame): DataFrame = {
     // coalesce + n_words guard: a null/blank doc has zero words under the
     // shared tokenizer and the syllables/word term would throw under ANSI;
     // a word-less doc has no defined readability → flesch NULL, counts 0
-    val t = coalesce(col(textCol), lit(""))
+    val t = coalesce(col("text"), lit(""))
     val nWords = size(toks(t)).cast("long")
     val nSents = greatest(
       size(filter(split(t, "[.!?]+\\s*"), s => s =!= "")).cast("long"), lit(1L))
     val nSyll = greatest(regexp_count(t, lit("[aeiou]+")).cast("long"), lit(1L))
-    docs.select(col(idCol), nWords.as("n_words"), nSents.as("n_sentences"),
+    docs.select(col("doc_id"), nWords.as("n_words"), nSents.as("n_sentences"),
         nSyll.as("n_syllables"))
       .withColumn("flesch",
         when(col("n_words") > 0,
@@ -436,9 +426,9 @@ object TextAnalysis {
     * An iterated trainer would re-run this per merge round over the
     * re-paired corpus; each round is this same plan.
     */
-  def bpePairs(docs: DataFrame, k: Int, textCol: String = "text"): DataFrame = {
+  def bpePairs(docs: DataFrame, k: Int): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val words = docs.select(col(textCol).as("__text"))
+    val words = docs.select(col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", toks(col("__text")))
       .select(explode(col("__toks")).as("word"))
@@ -464,7 +454,7 @@ object TextAnalysis {
     * ≤ observed adjacent pairs), one single-row argmax to the driver (the
     * merge table is driver-side BY DESIGN — it is the trainer's output,
     * bounded by `rounds`), one codegen'd `replace` projection. Lineage is
-    * truncated every `checkpointEvery` rounds (an anchor, the
+    * truncated every 8 rounds (an anchor, the
     * [[graft.dedup.DupClusters]] fixed-point convention) so a vocab-budget
     * training run doesn't stack thousands of optimizer passes.
     *
@@ -480,13 +470,12 @@ object TextAnalysis {
     * (count desc, lhs, rhs) — fully deterministic. Stops early if no pair
     * is left to merge.
     */
-  def bpeTrain(docs: DataFrame, rounds: Int, textCol: String = "text",
-               checkpointEvery: Int = 8): DataFrame = {
+  def bpeTrain(docs: DataFrame, rounds: Int): DataFrame = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     val spark = docs.sparkSession
     val sep = "\u001f"
     val parallelism = spark.sessionState.conf.numShufflePartitions
-    val words = docs.select(col(textCol).as("__text"))
+    val words = docs.select(col("text").as("__text"))
       .repartition(parallelism)
       .select(explode(toks(col("__text"))).as("word"))
       .filter(col("word") =!= "")
@@ -518,7 +507,7 @@ object TextAnalysis {
         cur = cur.withColumn("s",
           call_function("replace", col("s"),
             lit(sep + l + sep + sep + rr + sep), lit(sep + l + rr + sep)))
-        if (r % checkpointEvery == 0) cur = cur.anchor(Bound.Metadata)
+        if (r % 8 == 0) cur = cur.anchor(Bound.Metadata)
         r += 1
       }
     }
@@ -552,26 +541,25 @@ object TextAnalysis {
     * the SQL oracle mirror). Measured 0.96-1.04 s → 0.54-0.69 on
     * q_bpe_encode at sf0.1 (A/B ×4 interleaved, exact-equal).
     */
-  def bpeEncode(docs: DataFrame, merges: Seq[(String, String)],
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def bpeEncode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     val s = "\u001f"
     val rs = "\u001e"
-    val wordSyms = transform(filter(toks(col(textCol)), w => w =!= ""),
+    val wordSyms = transform(filter(toks(col("text")), w => w =!= ""),
       w => concat(lit(s + s),
         array_join(filter(split(w, ""), c => c =!= ""), s + s), lit(s + s)))
     def encChain(acc0: Column): Column = merges.foldLeft(acc0) { case (acc, (l, r)) =>
       call_function("replace", acc, lit(s + l + s + s + r + s), lit(s + l + r + s))
     }
-    val hasSentinel = col(textCol).contains(s) || col(textCol).contains(rs)
+    val hasSentinel = col("text").contains(s) || col("text").contains(rs)
     val oldChars = size(filter(split(col("__doc0"), s"[$rs$s]+"), x => x =!= ""))
       .cast("long")
     val oldToks = size(filter(split(col("__enc"), s"[$rs$s]+"), x => x =!= ""))
       .cast("long")
     val arith =
       expr("(CAST(length(__doc0) AS BIGINT) - 3L * n_words + 1L) div 3L")
-    docs.select(col(idCol), col(textCol))
+    docs.select(col("doc_id"), col("text"))
       .withColumn("n_words",
-        size(filter(toks(col(textCol)), w => w =!= "")).cast("long"))
+        size(filter(toks(col("text")), w => w =!= "")).cast("long"))
       .withColumn("__doc0", array_join(wordSyms, rs))
       .withColumn("__enc", encChain(col("__doc0")))
       .withColumn("n_chars_sym", when(hasSentinel, oldChars).otherwise(arith))
@@ -579,7 +567,7 @@ object TextAnalysis {
         when(hasSentinel, oldToks).otherwise(
           col("n_chars_sym") -
             expr("(CAST(length(__doc0) AS BIGINT) - CAST(length(__enc) AS BIGINT)) div 2L")))
-      .select(col(idCol), col("n_words"), col("n_chars_sym"), col("n_tokens"))
+      .select(col("doc_id"), col("n_words"), col("n_chars_sym"), col("n_tokens"))
   }
 
   /** Inverted-index posting lists: one row per term with its document
@@ -590,10 +578,9 @@ object TextAnalysis {
     * (posting_part arrays of bounded length) is the standard follow-up if a
     * term's postings outgrow a task.
     */
-  def buildPostings(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
+  def buildPostings(docs: DataFrame): DataFrame = {
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    docs.select(col(idCol).as("id"), col(textCol).as("__text"))
+    docs.select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", toks(col("__text")))
       .select(col("id"), explode(col("__toks")).as("term"))
@@ -630,14 +617,12 @@ object TextAnalysis {
     * Requires a numeric id column (the salt is `id mod salts`).
     */
   def buildPostingsChunked(docs: DataFrame, chunkSize: Int,
-                           idCol: String = "doc_id",
-                           textCol: String = "text",
                            salts: Int = 32): DataFrame = {
     require(chunkSize > 0, s"chunkSize must be positive, got $chunkSize")
     require(salts > 0, s"salts must be positive, got $salts")
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
     val wSalted = Window.partitionBy(col("term"), col("__salt")).orderBy(col("id"))
-    val ranked = docs.select(col(idCol).as("id"), col(textCol).as("__text"))
+    val ranked = docs.select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", toks(col("__text")))
       .select(col("id"), explode(col("__toks")).as("term"))
@@ -721,12 +706,10 @@ object TextAnalysis {
     * serving deployment the same scoring runs on a [[materializePostings]]
     * probe instead of the corpus scan.
     */
-  def bm25TopK(docs: DataFrame, terms: Seq[String], k: Int,
-               k1: Double = 1.2, b: Double = 0.75,
-               idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def bm25TopK(docs: DataFrame, terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty, "terms must be non-empty")
     val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val base = docs.select(col(idCol).as("id"), col(textCol).as("__text"))
+    val base = docs.select(col("doc_id").as("id"), col("text").as("__text"))
       .repartition(parallelism)
       .withColumn("__toks", toks(col("__text")))
     val dl = base.select(col("id"), size(col("__toks")).cast("long").as("dl"))
@@ -742,9 +725,9 @@ object TextAnalysis {
       .withColumn("__idf",
         log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
       .withColumn("__score",
-        col("__idf") * (col("tf").cast("double") * (k1 + 1)) /
+        col("__idf") * (col("tf").cast("double") * (1.2 + 1)) /
           (col("tf").cast("double") +
-            lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast("double") / col("avgdl")))))
+            lit(1.2) * (lit(1.0 - 0.75) + lit(0.75) * (col("dl").cast("double") / col("avgdl")))))
     val perTerm = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, col("__score"))).as(s"__s$i")
     }
@@ -757,7 +740,7 @@ object TextAnalysis {
       .withColumn("rank",
         row_number().over(Window.orderBy(total.desc, col("id"))))
       .filter(col("rank") <= k)
-      .select(col("id").as(idCol), col("rank"), col("n_matched"), col("sum_tf"))
+      .select(col("id").as("doc_id"), col("rank"), col("n_matched"), col("sum_tf"))
   }
 
   /** Exact-integer keyword relevance rank: documents matching ANY of `terms`
@@ -765,16 +748,15 @@ object TextAnalysis {
     * transcendental-free keyword side for [[rrfFuse]], where fusion itself
     * must stay bit-exact across engines.
     */
-  def keywordRank(docs: DataFrame, terms: Seq[String], k: Int,
-                  idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).as(idCol), col(textCol).as("__text"))
+  def keywordRank(docs: DataFrame, terms: Seq[String], k: Int): DataFrame =
+    docs.select(col("doc_id"), col("text").as("__text"))
       .withColumn("__toks", toks(col("__text")))
-      .select(col(idCol), explode(col("__toks")).as("term"))
+      .select(col("doc_id"), explode(col("__toks")).as("term"))
       .filter(col("term").isin(terms.map(lit(_)): _*))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(countDistinct(col("term")).as("n_matched"), count(lit(1)).as("sum_tf"))
       .withColumn("rank", row_number().over(
-        Window.orderBy(col("n_matched").desc, col("sum_tf").desc, col(idCol))))
+        Window.orderBy(col("n_matched").desc, col("sum_tf").desc, col("doc_id"))))
       .filter(col("rank") <= k)
 
   /** Reciprocal-rank fusion of two ranked lists (keyword ⊕ vector — the
@@ -788,19 +770,18 @@ object TextAnalysis {
     * Both inputs are top-k lists (bounded); the fusion is a full outer join
     * on the id plus one global top-k window over ≤ 2k rows.
     */
-  def rrfFuse(left: DataFrame, right: DataFrame, k: Int, kRrf: Int = 60,
-              idCol: String = "doc_id", rankCol: String = "rank"): DataFrame = {
-    val l = left.select(col(idCol), col(rankCol).cast("long").as("__lr"))
-    val r = right.select(col(idCol), col(rankCol).cast("long").as("__rr"))
+  def rrfFuse(left: DataFrame, right: DataFrame, k: Int): DataFrame = {
+    val l = left.select(col("doc_id"), col("rank").cast("long").as("__lr"))
+    val r = right.select(col("doc_id"), col("rank").cast("long").as("__rr"))
     val rrf =
-      coalesce(lit(1.0) / (lit(kRrf.toLong) + col("__lr")), lit(0.0)) +
-        coalesce(lit(1.0) / (lit(kRrf.toLong) + col("__rr")), lit(0.0))
-    l.join(r, Seq(idCol), "full_outer")
+      coalesce(lit(1.0) / (lit(60L) + col("__lr")), lit(0.0)) +
+        coalesce(lit(1.0) / (lit(60L) + col("__rr")), lit(0.0))
+    l.join(r, Seq("doc_id"), "full_outer")
       .withColumn("rrf", rrf)
       .withColumn("fused_rank",
-        row_number().over(Window.orderBy(col("rrf").desc, col(idCol))))
+        row_number().over(Window.orderBy(col("rrf").desc, col("doc_id"))))
       .filter(col("fused_rank") <= k)
-      .select(col(idCol), coalesce(col("__lr"), lit(0L)).as("left_rank"),
+      .select(col("doc_id"), coalesce(col("__lr"), lit(0L)).as("left_rank"),
         coalesce(col("__rr"), lit(0L)).as("right_rank"), col("rrf"),
         col("fused_rank"))
   }
@@ -814,13 +795,12 @@ object TextAnalysis {
     * tables once and probes them; this operator is that probe expressed
     * against the raw corpus.)
     */
-  def searchAll(docs: DataFrame, terms: Seq[String],
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).as(idCol), col(textCol).as("__text"))
+  def searchAll(docs: DataFrame, terms: Seq[String]): DataFrame =
+    docs.select(col("doc_id"), col("text").as("__text"))
       .withColumn("__toks", toks(col("__text")))
-      .select(col(idCol), explode(col("__toks")).as("term"))
+      .select(col("doc_id"), explode(col("__toks")).as("term"))
       .filter(col("term").isin(terms.map(lit(_)): _*))
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(countDistinct(col("term")).as("n_matched"))
       .filter(col("n_matched") === terms.size)
 

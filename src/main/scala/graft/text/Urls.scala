@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
 object Urls {
 
   /** All http(s) URLs in the text, exploded one per row as `url`. */
-  def extractUrls(df: DataFrame, textCol: String = "text"): DataFrame =
+  def extractUrls(df: DataFrame): DataFrame =
     df.withColumn("url",
-      explode(regexp_extract_all(col(textCol), lit("https?://[^\\s]+"), lit(0))))
+      explode(regexp_extract_all(col("text"), lit("https?://[^\\s]+"), lit(0))))
 
   /** Host with `www.` stripped, lowercased — the per-domain grouping key. */
   def domainOf(url: Column): Column =
@@ -41,8 +41,8 @@ object Urls {
   }
 
   /** Per-(domain, normalized URL) occurrence counts over a corpus. */
-  def urlStats(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val u = extractUrls(df, textCol)
+  def urlStats(df: DataFrame): DataFrame = {
+    val u = extractUrls(df)
     u.select(domainOf(col("url")).as("domain"),
         normalizeUrl(col("url")).as("url_norm"))
       .groupBy(col("domain"), col("url_norm"))

@@ -55,13 +55,12 @@ object Vocab {
     * plus the same over the occurrence stream; the 1-row id-range frame
     * broadcasts. Nothing is ever sorted.
     */
-  def heapsCurve(docs: DataFrame, points: Int = 10,
-                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def heapsCurve(docs: DataFrame, points: Int = 10): DataFrame = {
     require(points >= 2 && points <= 64, s"points must be in [2,64], got $points")
     // `tok` is consumed exactly once (by `occ`, which IS persisted), so it
     // carries no cache of its own (r17 — the lazy persist only added
     // cache-block management)
-    val tok = docs.select(col(idCol).as("__id"), graft.dedup.Dedup.tokens(col(textCol)).as("t"))
+    val tok = docs.select(col("doc_id").as("__id"), graft.dedup.Dedup.tokens(col("text")).as("t"))
     val occ = tok.select(col("__id"), explode(col("t")).as("term"))
       .filter(col("term") =!= "")
       .persist(StorageLevel.MEMORY_AND_DISK)

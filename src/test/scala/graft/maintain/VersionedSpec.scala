@@ -205,6 +205,23 @@ class VersionedSpec extends SparkSpec {
       Set((1L, "a"), (2L, "b")))
   }
 
+  test("expire + sweep leaves under data/ exactly the dirs of referenced files") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val dir = freshTable()
+    Versioned.commit(Seq((1L, "a")).toDF("id", "s"), dir)
+    Versioned.commit(Seq((9L, "z")).toDF("id", "s"), dir, append = false)
+    intercept[Exception](Versioned.commit(spark.range(1).select(col("id"),
+      when(col("id") === 0L, raise_error(lit("injected"))).otherwise(lit("x")).as("s")), dir))
+    Seq((666L, "crash")).toDF("id", "s").write.parquet(s"$dir/data/debris")
+    Versioned.expireSnapshots(spark, dir, keepLast = 1)
+    Versioned.removeOrphanFiles(spark, dir)
+    val live = relativeTo(dir, Versioned.read(spark, dir).inputFiles.toSeq)
+      .map(_.stripPrefix("data/").takeWhile(_ != '/'))
+    assert(live.size == 1)
+    assert(new java.io.File(s"$dir/data").list().toSet == live)
+    assert(Versioned.read(spark, dir).as[(Long, String)].collect().toSeq == Seq((9L, "z")))
+  }
+
   test("a commit whose write fails leaves no manifest and blocks nothing") {
     import org.apache.spark.sql.functions.{col, lit, raise_error, when}
     // a range, not a local Seq: the optimizer would evaluate raise_error over

@@ -91,6 +91,24 @@ class OpsSpec extends SparkSpec {
     assert(left.count() == 10)
   }
 
+  test("retentionDelete also removes an expired day's interrupted-swap leftovers") {
+    val dir = graft.TempDirs.fixtureDir("ret_leftover")
+    Seq((1, "2024-01-01"), (2, "2024-01-20")).toDF("id", "day")
+      .write.partitionBy("day").mode("overwrite").parquet(dir)
+    val expiredLeftovers = Seq(".day=2024-01-01__staged", ".day=2024-01-01__backup")
+    val keptLeftover = ".day=2024-01-20__backup"
+    (expiredLeftovers :+ keptLeftover).foreach { n =>
+      val d = new java.io.File(dir, n)
+      assert(d.mkdirs())
+      java.nio.file.Files.writeString(new java.io.File(d, "part-0.parquet").toPath, "x")
+    }
+    Maintenance.retentionDelete(spark, dir, "day", 10, java.time.LocalDate.parse("2024-01-25"))
+    val left = new java.io.File(dir).list().toSet
+    assert(expiredLeftovers.forall(n => !left.contains(n)), left)
+    assert(left.contains(keptLeftover) && left.contains("day=2024-01-20"), left)
+    assert(new java.io.File(dir, s"$keptLeftover/part-0.parquet").exists())
+  }
+
   test("compactPartition merges small files without changing data") {
     val dir = graft.TempDirs.fixtureDir("cmp")
     (1 to 400).map(i => (i, "2024-01-05")).toDF("id", "day")
