@@ -39,7 +39,7 @@ object StarQueries {
         // product of three doubles ties at a 4-decimal cast ~1% of the time
         // and engines disagree on the tie direction
         sum(dec(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4) *
-            dec(lit(1.0) + col("l_tax"), 2))
+            dec(lit(1.0) + col("l_tax")))
           .cast(DecimalType(18, 6)).cast("double").as("sum_charge"),
         count(lit(1)).as("count_order"))
       .withColumn("avg_qty", round(col("sum_qty").cast("double") / col("count_order"), 4))

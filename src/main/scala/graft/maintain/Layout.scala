@@ -37,6 +37,12 @@ object Layout {
     * broken contract fails it and leaves the previous table in place
     * rather than letting guarded reads silently lose rows. The skew bound
     * is the rule's own constant, so the two cannot drift apart.
+    *
+    * Once both checks pass, the staged copy gains its `_manifest`
+    * ([[TableIndex.writeManifest]]: each data file's path, length and
+    * mtime), so it is promoted together with the data it names.
+    * [[graft.Tables.cachedParquet]] opens the table from it without a
+    * directory listing.
     */
   def writeFact(fact: DataFrame, path: String): Unit =
     Promote.replace(fact.sparkSession, path) { staged =>
@@ -68,6 +74,7 @@ object Layout {
       require(bucket == 0L,
         s"$bucket rows violate device_id_bucket <=> " +
           s"java_hash_bucket(device_id, ${Normalize.DeviceBuckets})" + optOut)
+      TableIndex.writeManifest(fact.sparkSession, staged)
     }
 
   /** Z-order (Morton) interleave of two bounded non-negative ints: bit b of

@@ -6,6 +6,11 @@ import org.apache.spark.sql.functions._
 /** Table-maintenance operators (SURVEY.md §2.11) over a plain-parquet,
   * directory-partitioned layout — the Spark analog of the reference's Trino
   * `DELETE`/`optimize`/`ANALYZE` cycle (`config/flink/cleanup.sql`).
+  *
+  * Each in-place writer drops the table's manifest
+  * ([[TableIndex.dropManifest]]) before it touches a file, so a
+  * `Layout.writeFact` table is never opened from a file list that no
+  * longer matches its directories.
   */
 object Maintenance {
 
@@ -34,6 +39,7 @@ object Maintenance {
     */
   def retentionDelete(spark: SparkSession, path: String, dayCol: String,
                       days: Int, asOf: java.time.LocalDate): Seq[String] = {
+    TableIndex.dropManifest(spark, path)
     val cutoff = asOf.minusDays(days.toLong).toString
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -62,6 +68,7 @@ object Maintenance {
   def compactPartition(spark: SparkSession, path: String, dayCol: String,
                        day: String): Unit = {
     val partPath = s"$path/$dayCol=$day"
+    TableIndex.dropManifest(spark, partPath)
     Promote.recover(spark, partPath)
     val part = new org.apache.hadoop.fs.Path(partPath)
     val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -82,10 +89,12 @@ object Maintenance {
     * — the write half of the upsert-at-scale pattern (pairs with
     * `Upsert.upsert` output restricted to changed partitions).
     */
-  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+  def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
+    TableIndex.dropManifest(df.sparkSession, path)
     df.write
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .partitionBy(partitionCols: _*)
       .parquet(path)
+  }
 }

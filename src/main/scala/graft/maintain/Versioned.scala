@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * {{{
   *   table/
   *     data/<uuid>/part-*.parquet      files written by one commit (main or branch)
-  *     _manifests/v<N>.json            main snapshot N = list of data files it reads
+  *     _manifests/v<N>.json            main snapshot N = the data files it reads
   *     _manifests/<branch>.v<K>.json   branch commit K
   *     _branches/<branch>              branch ref: the main snapshot it forked from
   * }}}
@@ -30,6 +30,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ref moved past that snapshot. Readers resolve a snapshot by listing
   * `_manifests` — no mutable pointer file, so a half-written commit is
   * simply invisible.
+  *
+  * A manifest line is a [[TableIndex.Entry]] (path, length, mtime), the
+  * file list a `Layout.writeFact` table's `_manifest` holds, so a snapshot
+  * opens the same way ([[TableIndex.openFiles]]), with no listing of its
+  * files and no Spark job.
   *
   * Append commits reference the previous snapshot's files plus the new ones —
   * old snapshots stay readable (time travel) until expired.
@@ -72,32 +77,17 @@ object Versioned {
     txt.linesIterator.filter(_.nonEmpty).toSeq
   }
 
-  /** The data files of `ref` at version `v` — one relative path per line
-    * after the version header, line-oriented to avoid hand-rolled JSON
-    * parsing. Version 0 is the ref before its first commit: empty on main,
-    * the fork point on a branch.
+  /** The data files of `ref` at version `v` — one [[TableIndex.Entry]]
+    * line per file after the version header, line-oriented to avoid
+    * hand-rolled JSON parsing. Version 0 is the ref before its first commit:
+    * empty on main, the fork point on a branch.
     */
   private def readManifest(spark: SparkSession, tableDir: String,
-                           ref: Option[String], v: Int): Seq[String] =
+                           ref: Option[String], v: Int): Seq[TableIndex.Entry] =
     if (v > 0) readLines(fs(spark, tableDir), manifestPath(tableDir, ref, v)).drop(1)
-    else ref.fold(Seq.empty[String])(b =>
+      .map(TableIndex.Entry.parse)
+    else ref.fold(Seq.empty[TableIndex.Entry])(b =>
       readManifest(spark, tableDir, None, branchBase(spark, tableDir, b)))
-
-  /** Relative data-file paths under `tableDir` for commit directory `dataDir`. */
-  private def listDataFiles(spark: SparkSession, tableDir: String,
-                            dataDir: Path): Seq[String] = {
-    val f = fs(spark, tableDir)
-    val base = new Path(tableDir).toUri.getPath
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val it = f.listFiles(dataDir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val p = st.getPath.toUri.getPath
-      if (st.isFile && p.endsWith(".parquet"))
-        out += p.stripPrefix(base).stripPrefix("/")
-    }
-    out.toSeq.sorted
-  }
 
   // ---- the commit protocol (the Nessie/Iceberg optimistic-commit analog:
   // reference `docker-compose.yml:100-119` runs a Nessie catalog whose ref
@@ -139,14 +129,16 @@ object Versioned {
   private val BackoffMs = 25L
 
   /** The one commit: write `df` once into a fresh `data/<uuid>` dir (never
-    * rewritten on retry), then [[publish]] its files on `ref`.
+    * rewritten on retry), then [[publish]] its parquet files, with their
+    * lengths and mtimes, on `ref`.
     */
   private def commitCore(df: DataFrame, tableDir: String, ref: Option[String],
                          append: Boolean, readVersion: Option[Int]): Int = {
     val dataDir = new Path(tableDir, s"data/${java.util.UUID.randomUUID()}")
     df.write.mode("errorifexists").parquet(dataDir.toString)
-    publish(df.sparkSession, tableDir, ref,
-      listDataFiles(df.sparkSession, tableDir, dataDir), append, readVersion)
+    val files = TableIndex.listEntries(df.sparkSession, new Path(tableDir), dataDir)(
+      _.endsWith(".parquet"))
+    publish(df.sparkSession, tableDir, ref, files, append, readVersion)
   }
 
   /** Publish `files` as the next version of `ref`: loop { read the head →
@@ -161,7 +153,7 @@ object Versioned {
     * landed.
     */
   private def publish(spark: SparkSession, tableDir: String, ref: Option[String],
-                      files: Seq[String], append: Boolean,
+                      files: Seq[TableIndex.Entry], append: Boolean,
                       readVersion: Option[Int]): Int = {
     val f = fs(spark, tableDir)
     var attempt = 0
@@ -174,7 +166,7 @@ object Versioned {
       val carried = if (append) readManifest(spark, tableDir, ref, head) else Seq.empty
       val v = head + 1
       if (casPublish(f, tableDir, manifestPath(tableDir, ref, v),
-          s"version=$v" +: (carried ++ files)))
+          s"version=$v" +: (carried ++ files).map(_.line)))
         return v
       attempt += 1
       Thread.sleep(BackoffMs * attempt) // linear bounded backoff
@@ -233,8 +225,7 @@ object Versioned {
     require(vs.nonEmpty, s"no committed snapshots under $tableDir")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"snapshot v$v does not exist (have: $vs)")
-    val files = readManifest(spark, tableDir, None, v).map(p => s"$tableDir/$p")
-    spark.read.parquet(files: _*)
+    TableIndex.openFiles(spark, tableDir, readManifest(spark, tableDir, None, v))
   }
 
   /** MERGE INTO as a snapshot commit: read the head snapshot, apply the
@@ -349,11 +340,9 @@ object Versioned {
   /** Read a branch head. A branch with no local commits reads its fork
     * point.
     */
-  def readBranch(spark: SparkSession, tableDir: String, name: String): DataFrame = {
-    val files = readManifest(spark, tableDir, Some(name),
-      branchVersions(spark, tableDir, name).lastOption.getOrElse(0))
-    spark.read.parquet(files.map(p => s"$tableDir/$p"): _*)
-  }
+  def readBranch(spark: SparkSession, tableDir: String, name: String): DataFrame =
+    TableIndex.openFiles(spark, tableDir, readManifest(spark, tableDir, Some(name),
+      branchVersions(spark, tableDir, name).lastOption.getOrElse(0)))
 
   /** Keys whose rows changed (insert, update, or delete) between two table
     * states — bag-semantics diff per side, keys deduped. Hash anti-joins,
@@ -466,7 +455,7 @@ object Versioned {
     val f = fs(spark, tableDir)
     val referenced = (None +: branches(spark, tableDir).map(Some(_))).flatMap(ref =>
       refVersions(spark, tableDir, ref).flatMap(v => readManifest(spark, tableDir, ref, v)))
-      .toSet
+      .map(_.path).toSet
     val dataRoot = new Path(tableDir, "data")
     if (!f.exists(dataRoot)) return Seq.empty
     val base = new Path(tableDir).toUri.getPath

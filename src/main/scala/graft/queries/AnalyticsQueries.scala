@@ -3191,7 +3191,7 @@ object AnalyticsQueries {
   private def corrMatrixQ(s: SparkSession, dir: String): DataFrame =
     graft.analytics.Correlation.pearsonMatrix(
         graft.Tables.lineitem(s, dir),
-        Seq("l_quantity", "l_discount", "l_tax"), scale = 100)
+        Seq("l_quantity", "l_discount", "l_tax"))
       .orderBy(col("col_a"), col("col_b"))
 
   private val corrMatrixOracle = {

@@ -49,7 +49,7 @@ object CurationQueries {
         concat(lit("xleak "), col("text")).as("text")))
     // kernel pin (r16 A/B x3: base 1.0-1.2 s vs pin8 0.77-0.94, exact-equal)
     AnalyticsQueries.withKernelShufflePartitionsFor(s, docs) {
-      Curation.decontaminate(corpus, bench, k = 5, minOverlap = 3)
+      Curation.decontaminate(corpus, bench)
         .orderBy(col("doc_id"))
         .anchor(Bound.PerEntity)
     }

@@ -98,7 +98,7 @@ object PipelineQueries {
     val delta = graft.Tables.cachedParquet(s, bloomDeltaFpParquet(s, dir))
     val bits = bloomBitsMemoGet(s, dir)
     AnalyticsQueries.withKernelShufflePartitionsFor(s, corpus, delta) {
-      graft.dedup.BloomDedup.bloomProbe(bits, corpus, delta, mBits = 1 << 16, k = 4)
+      graft.dedup.BloomDedup.bloomProbe(bits, corpus, delta)
         .orderBy(col("doc_id"))
         .anchor(Bound.Fixture)
     }
@@ -139,8 +139,7 @@ object PipelineQueries {
       // checkpoint: base is referenced twice below (gen's filter and the
       // final join's left side); without the cut each branch re-executes
       // the probe AND the corpus-streaming confirm scan
-      val base = BloomDedup.bloomProbe(merged, all, probe,
-        mBits = 1 << 16, k = 4, keepFp = true).anchor(Bound.Fixture)
+      val base = BloomDedup.bloomProbe(merged, all, probe, keepFp = true).anchor(Bound.Fixture)
       val gen = base.filter(col("bloom_hit"))
         .select(col("doc_id"), col("fp")).hint("broadcast")
         .join(all.select(col("fp"), (col("doc_id") % 7 =!= 0).as("__v1"),
@@ -275,7 +274,7 @@ object PipelineQueries {
     // ABCD x3: baseline 2.0-3.4 s steady vs pin8 0.8-1.1; eager anchors
     // added nothing on top (1.2-1.3), results exact-equal all arms.
     AnalyticsQueries.withKernelShufflePartitionsFor(s, Tables.documents(s, dir)) {
-      graft.text.TextAnalysis.rakeKeyphrases(Tables.documents(s, dir), k = 20)
+      graft.text.TextAnalysis.rakeKeyphrases(Tables.documents(s, dir))
         .anchor(Bound.Metadata)
     }
 
@@ -2933,8 +2932,7 @@ object PipelineQueries {
       val bits = bloomBitsMemoGet(s, dir)
       // checkpointed: referenced by the anti-join below AND the final fate
       // union, and tiny (confirmed-dup ids only)
-      graft.dedup.BloomDedup.bloomProbe(bits, corpusFp, deltaFp,
-          mBits = 1 << 16, k = 4)
+      graft.dedup.BloomDedup.bloomProbe(bits, corpusFp, deltaFp)
         .filter(col("verdict") === "drop").select("doc_id")
         .anchor(Bound.Fixture)
     }
@@ -3307,7 +3305,7 @@ object PipelineQueries {
         graft.Tables.cachedParquet(s, shinglesParquet(s, dir))) {
       val sh = graft.Tables.cachedParquet(s, shinglesParquet(s, dir))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val pairs = MinHashLSH.nearDuplicatesOPH(sh, buckets = 64, bands = 16)
+      val pairs = MinHashLSH.nearDuplicatesOPH(sh)
         .select("id_a", "id_b")
         .persist(StorageLevel.MEMORY_AND_DISK)
       val planted = sh.filter(col("id") < 1000000L && col("id") % 10 === 0)
@@ -3443,8 +3441,7 @@ object PipelineQueries {
     * embedded plane literals, OR-of-bands candidate join, exact cosine.
     */
   private def dedupEmbeddingLshQ(s: SparkSession, dir: String): DataFrame =
-    Similarity.bucketedThresholdPairs(Tables.embeddings(s, dir), 0.4,
-        bands = 4, planesPerBand = 4)
+    Similarity.bucketedThresholdPairs(Tables.embeddings(s, dir), 0.4)
       .orderBy(col("id_a"), col("id_b"))
 
   private val dedupEmbeddingLshOracle = {
@@ -4265,8 +4262,7 @@ object PipelineQueries {
       .select((col("doc_id") + 3000000L).as("doc_id"),
         concat(substring(col("k0"), 1, 10), lit("X"),
           substring(col("k0"), 12, 9)).as("k0"))
-    Dedup.editDistancePairs(keys.unionByName(twins), "k0", maxDist = 3,
-        prefixLen = 4)
+    Dedup.editDistancePairs(keys.unionByName(twins), "k0", maxDist = 3)
       .withColumn("dist", col("dist").cast("long"))
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -4351,7 +4347,7 @@ object PipelineQueries {
     * frame — the template-domination audit next to Heaps' law.
     */
   private def zipfFitQ(s: SparkSession, dir: String): DataFrame =
-    graft.text.Vocab.zipfFit(Tables.documents(s, dir), k = 500)
+    graft.text.Vocab.zipfFit(Tables.documents(s, dir))
 
   private val zipfFitOracle =
     """WITH tok AS (

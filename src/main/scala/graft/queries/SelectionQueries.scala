@@ -108,7 +108,7 @@ object SelectionQueries {
 
   /** OOV rate per source against the corpus top-500 vocabulary. */
   private def oovRateQ(s: SparkSession, dir: String): DataFrame =
-    graft.text.Vocab.oovRate(Tables.documents(s, dir), 500)
+    graft.text.Vocab.oovRate(Tables.documents(s, dir))
       .orderBy(col("source"))
 
   private val oovRateOracle =
@@ -299,7 +299,7 @@ object SelectionQueries {
     // kernel pin (r16 A/B x3: base 2.9-3.9 s vs pin8 2.7-2.9 in a hostile
     // window — every pin8 reading below every base reading; exact-equal)
     AnalyticsQueries.withKernelShufflePartitionsFor(s, Tables.documents(s, dir)) {
-      graft.text.Vocab.heapsCurve(Tables.documents(s, dir), points = 10)
+      graft.text.Vocab.heapsCurve(Tables.documents(s, dir))
         .orderBy(col("checkpoint"))
         .anchor(Bound.Metadata)
     }
@@ -437,7 +437,7 @@ object SelectionQueries {
     */
   private def giniQ(s: SparkSession, dir: String): DataFrame =
     graft.text.FeatureSelect.giniStumps(Tables.documents(s, dir),
-        when(col("lang") === "en", 1L).otherwise(0L), topTokens = 30)
+        when(col("lang") === "en", 1L).otherwise(0L))
       .orderBy(col("token"))
 
   private val giniOracle = {
@@ -524,8 +524,7 @@ object SelectionQueries {
     */
   private[queries] def skipgramPairsParquet(s: SparkSession, dir: String): String =
     graft.Fixtures.parquet("sg_pairs", dir) {
-      graft.text.SkipGram.pairs(Tables.documents(s, dir), window = 2,
-        minCount = 3L)
+      graft.text.SkipGram.pairs(Tables.documents(s, dir), minCount = 3L)
     }
 
   private def coocPpmiQ(s: SparkSession, dir: String): DataFrame = {

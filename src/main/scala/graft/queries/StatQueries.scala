@@ -497,7 +497,7 @@ object StatQueries {
   private def hyperballQ(s: SparkSession, dir: String): DataFrame = {
     val edges = Graphs.copurchaseEdges(s, dir)
     AnalyticsQueries.withKernelShufflePartitionsFor(s, edges) {
-      graft.analytics.HyperBall.neighborhoodFunction(edges, maxHops = 2, m = 32)
+      graft.analytics.HyperBall.neighborhoodFunction(edges, maxHops = 2)
     }
   }
 
@@ -686,7 +686,7 @@ object StatQueries {
     graft.analytics.Eval.ndcgAtK(
         Tables.events(s, dir).filter(col("user_id") % 5 === 0),
         col("user_id"), round(col("value") * 100, 0).cast("long"),
-        col("event_id"), rel, k = 10)
+        col("event_id"), rel)
       .orderBy(col("g"))
   }
 
@@ -3923,7 +3923,7 @@ object StatQueries {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= 4)
     graft.analytics.Eval.krippendorffAlpha(
-      ratings, col("user_id"), col("event_type"), maxRaters = 4)
+      ratings, col("user_id"), col("event_type"))
   }
 
   private val krippendorffOracle =
@@ -4229,7 +4229,7 @@ object StatQueries {
       .select((col("doc_id") + 500000L).as("pair_id"),
         col("text").as("cand"), col("text").as("ref"))
     graft.text.BleuScore.rougeN(
-      near.unionByName(copies), "pair_id", "cand", "ref", maxN = 2)
+      near.unionByName(copies), "pair_id", "cand", "ref")
   }
 
   private val rougeOracle =

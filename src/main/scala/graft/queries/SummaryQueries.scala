@@ -30,8 +30,8 @@ object SummaryQueries {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val trueTop = toks.groupBy(col("token")).agg(count(lit(1)).as("true_cnt"))
       .orderBy(col("true_cnt").desc, col("token")).limit(10)
-    val grid = graft.analytics.CountMin.sketch(toks, "token", depth = 4, width = 512)
-    graft.analytics.CountMin.estimate(grid, trueTop, "token", depth = 4, width = 512)
+    val grid = graft.analytics.CountMin.sketch(toks, "token")
+    graft.analytics.CountMin.estimate(grid, trueTop, "token")
       .join(trueTop, col("item") === col("token"))
       .select(col("token"), col("true_cnt"), col("est_cnt"),
         (col("est_cnt") - col("true_cnt")).as("overshoot"))
@@ -76,8 +76,7 @@ object SummaryQueries {
     */
   private def winnowingQ(s: SparkSession, dir: String): DataFrame =
     graft.dedup.Winnowing.fingerprintPairs(
-        PipelineQueries.augmented(Tables.documents(s, dir)),
-        k = 3, w = 4, minShared = 2, maxDocFreq = 50)
+        PipelineQueries.augmented(Tables.documents(s, dir)))
       .orderBy(col("doc_a"), col("doc_b"))
 
   private val winnowingOracle = {
@@ -233,7 +232,7 @@ object SummaryQueries {
     // familyStats) — the r15 anchor playbook case (r17 A/B x3 interleaved,
     // exact-equal: persist 1.38-1.73 s vs anchor 1.23-1.35 at sf0.1)
     val ch = graft.dedup.ContentChunking.chunks(
-        PipelineQueries.augmented(Tables.documents(s, dir)), divisor = 16)
+        PipelineQueries.augmented(Tables.documents(s, dir)))
       .anchor(Bound.PerEntity)
     val totals = ch.agg(
       countDistinct(col("doc")).as("n_docs"),
@@ -476,7 +475,7 @@ object SummaryQueries {
       .select(explode(split(col("text"), "\\s+")).as("token"))
       .filter(col("token") =!= "")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val grid = graft.analytics.HllGrid.registers(toks, "token", m = 256)
+    val grid = graft.analytics.HllGrid.registers(toks, "token")
     val truth = toks.agg(countDistinct(col("token")).as("true_distinct"))
     graft.analytics.HllGrid.estimate(grid)
       .crossJoin(broadcast(truth))
@@ -761,8 +760,7 @@ object SummaryQueries {
     */
   private def streamCountMinQ(s: SparkSession, dir: String): DataFrame =
     OneShotStream.drain(graft.analytics.CountMin.sketch(
-        OneShotStream.events(s, dir).select(col("user_id")), "user_id",
-        depth = 4, width = 512), "complete")
+        OneShotStream.events(s, dir).select(col("user_id")), "user_id"), "complete")
       .orderBy(col("r"), col("cell"))
 
   private val streamCountMinOracle = {
@@ -1221,7 +1219,7 @@ object SummaryQueries {
     */
   private def streamHllQ(s: SparkSession, dir: String): DataFrame =
     OneShotStream.drain(graft.analytics.HllGrid.registers(
-        OneShotStream.events(s, dir).select(col("user_id")), "user_id", m = 256),
+        OneShotStream.events(s, dir).select(col("user_id")), "user_id"),
         "complete")
       .orderBy(col("idx"))
 

@@ -61,9 +61,13 @@ object StreamingIngest {
       sum(when(col("report_type") === "ALERT", 1L).otherwise(0L)).as("alerts"),
       sum(when(col("speed_kmh") > RiskScore.OverspeedKmh, 1L).otherwise(0L)).as("overspeed"))
 
-  /** Checkpointed, partitioned, exactly-once append sink (K1). */
+  /** Checkpointed, partitioned, exactly-once append sink (K1). Appends
+    * to a `Layout.writeFact` table drop its manifest first, so its opens
+    * list and see the appended files.
+    */
   def factSink(normalized: DataFrame, targetDir: String, checkpointDir: String,
-               triggerMs: Long = 1000L): DataStreamWriter[org.apache.spark.sql.Row] =
+               triggerMs: Long = 1000L): DataStreamWriter[org.apache.spark.sql.Row] = {
+    graft.maintain.TableIndex.dropManifest(normalized.sparkSession, targetDir)
     normalized.writeStream
       .format("parquet")
       .option("path", targetDir)
@@ -71,6 +75,7 @@ object StreamingIngest {
       .partitionBy("device_id_bucket", "received_day")
       .trigger(Trigger.ProcessingTime(triggerMs))
       .outputMode("append")
+  }
 
   /** Streaming upsert (K3) via foreachBatch: per micro-batch, merge into the
     * keyed parquet table with the same `Upsert` used in batch — idempotent
@@ -87,6 +92,11 @@ object StreamingIngest {
     * small dimension-style tables. The swap renames the live directory aside
     * before promoting the new one (backup-swap): a crash at any point leaves
     * at least one complete copy on disk, and the next batch self-recovers.
+    *
+    * A `Layout.writeFact` table's manifest goes either way: the partition
+    * rewrite drops it ([[graft.maintain.Maintenance.overwritePartitions]]),
+    * and the swap replaces the whole directory, manifest included, with one
+    * that has none.
     */
   def upsertSink(scored: DataFrame, targetDir: String, checkpointDir: String,
                  keys: Seq[String], precedenceCol: String,

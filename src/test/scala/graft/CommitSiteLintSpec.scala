@@ -11,17 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * block a table with.
   */
 class CommitSiteLintSpec extends AnyFunSuite {
-
-  private val defLine = "^\\s*(?:private\\s+)?def\\s+(\\w+)".r.unanchored
-
-  /** (file, enclosing def) of every main-tree line containing `token`. */
-  private def sites(token: String): Seq[(String, String)] =
-    MainSources.all.flatMap { case (f, t) =>
-      t.linesIterator.scanLeft(("", "")) { case ((enclosing, _), line) =>
-        (line match { case defLine(name) => name; case _ => enclosing }, line)
-      }.collect { case (enclosing, line) if line.contains(token) =>
-        f.getName -> enclosing }.toSeq
-    }
+  import MainSources.sites
 
   test("versioned tables are written only by Versioned's commit core") {
     assert(sites("mode(\"errorifexists\")") == Seq("Versioned.scala" -> "commitCore"),

@@ -9,4 +9,15 @@ object MainSources {
     walk(new java.io.File("src/main/scala/graft"))
       .map(f => f -> java.nio.file.Files.readString(f.toPath))
   }
+
+  private val defLine = "^\\s*(?:private(?:\\[\\w+\\])?\\s+)?def\\s+(\\w+)".r.unanchored
+
+  /** (file, enclosing def) of every main-tree line containing `token`. */
+  def sites(token: String): Seq[(String, String)] =
+    all.flatMap { case (f, t) =>
+      t.linesIterator.scanLeft(("", "")) { case ((enclosing, _), line) =>
+        (line match { case defLine(name) => name; case _ => enclosing }, line)
+      }.collect { case (enclosing, line) if line.contains(token) =>
+        f.getName -> enclosing }.toSeq
+    }
 }

@@ -37,6 +37,38 @@ class VersionedSpec extends SparkSpec {
       == Seq((1L, "a")))                                             // time travel
   }
 
+  test("a 40-file snapshot opens from its manifest with 0 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = freshTable()
+    val df = spark.range(0, 400).select($"id", ($"id" % 7).cast("string").as("s"))
+      .repartition(40)
+    Versioned.commit(df, dir)
+    val group = "versioned-open"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(e.properties.getProperty("spark.job.description"))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val opened = try {
+      sc.setJobGroup(group, "open")
+      val out = Versioned.read(spark, dir)
+      // a job after the open: once its start event arrives, every event the
+      // open posted has arrived too (one listener bus, in order)
+      sc.setJobGroup(group, "sentinel")
+      sc.parallelize(Seq(1)).count()
+      org.scalatest.concurrent.Eventually.eventually(assert(jobs.contains("sentinel")))
+      out
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    assert(jobs.toArray.toSeq == Seq("sentinel"), s"the open ran jobs: $jobs")
+    assert(opened.inputFiles.length == 40)
+    val files = opened.inputFiles.toSeq
+    assert(opened.schema == spark.read.parquet(files: _*).schema)
+    assert(opened.as[(Long, String)].collect().toSet == df.as[(Long, String)].collect().toSet)
+  }
+
   test("overwrite commit replaces content logically, old snapshot readable") {
     val dir = freshTable()
     Versioned.commit(Seq((1L, "a")).toDF("id", "s"), dir)
