@@ -16,6 +16,16 @@ import org.apache.spark.sql.functions._
   *  - bloom filters on `device_id` / `correlation_id` (`:60-63`) → point
   *    predicates skip row groups that stats alone can't exclude
   *
+  * The bloom filters are sized per file ([[bloomOptions]]): parquet builds
+  * candidate filters from 1 MiB down to 1 KiB while it writes a column
+  * chunk and keeps the smallest one that holds the distinct values it saw
+  * at a 1 % false-positive rate. A file of a few dozen rows gets a 1 KiB
+  * filter instead of the 1 MiB an unsized one takes. A chunk that parquet
+  * wrote fully dictionary-encoded gets no filter at all: its dictionary
+  * already answers membership (most `device_id` chunks of the fact). The
+  * cap stays 1 MiB, which holds about 875 k distinct ids per file at 1 %;
+  * a file with more keeps the 1 MiB filter at a higher false-positive rate.
+  *
   * At 100 TB this layout is what turns the serving path's point lookup into
   * "prune to 1 bucket × few days, then skip most row groups".
   */
@@ -60,8 +70,7 @@ object Layout {
         .partitionBy("device_id_bucket", "received_day")
         .option("compression", "zstd")
         .option("parquet.block.size", (256L << 20).toString)
-        .option("parquet.bloom.filter.enabled#device_id", "true")
-        .option("parquet.bloom.filter.enabled#correlation_id", "true")
+        .options(bloomOptions(Seq("device_id", "correlation_id")))
         .parquet(staged)
       def violations(name: String): Long = obs.get.get(name).collect {
         case n: java.lang.Long => n.longValue
@@ -76,6 +85,18 @@ object Layout {
           s"java_hash_bucket(device_id, ${Normalize.DeviceBuckets})" + optOut)
       TableIndex.writeManifest(fact.sparkSession, staged)
     }
+
+  /** Parquet writer options that give each file a bloom filter on each of
+    * `columns`, sized to the distinct values of its own column chunk.
+    */
+  def bloomOptions(columns: Seq[String]): Map[String, String] =
+    // size the filter to what the chunk holds instead of parquet's 1 MiB cap
+    Map("parquet.bloom.filter.adaptive.enabled" -> "true") ++
+      columns.flatMap(c => Seq(
+        s"parquet.bloom.filter.enabled#$c" -> "true",
+        // 1 MiB down to 1 KiB, parquet's smallest adaptive candidate; only
+        // the per-column form of this key is read, the global one is ignored
+        s"parquet.bloom.filter.candidates.number#$c" -> "11"))
 
   /** Z-order (Morton) interleave of two bounded non-negative ints: bit b of
     * `x` lands at position 2b, of `y` at 2b+1. Sorting by the z-value keeps

@@ -1,7 +1,11 @@
 package graft.maintain
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Table-maintenance operators (SURVEY.md §2.11) over a plain-parquet,
   * directory-partitioned layout — the Spark analog of the reference's Trino
@@ -64,19 +68,44 @@ object Maintenance {
     * `optimize`, which is the only form that scales. The rewrite is staged
     * and swapped in by [[Promote]], which first restores a partition an
     * interrupted compaction left in its backup.
+    *
+    * The rewrite keeps the files' layout ([[fileLayout]]): a
+    * `Layout.writeFact` partition stays zstd with sized bloom filters, a
+    * snappy archive stays snappy without them.
     */
   def compactPartition(spark: SparkSession, path: String, dayCol: String,
                        day: String): Unit = {
     val partPath = s"$path/$dayCol=$day"
     TableIndex.dropManifest(spark, partPath)
     Promote.recover(spark, partPath)
-    val part = new org.apache.hadoop.fs.Path(partPath)
+    val part = new Path(partPath)
     val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(part)) return
     val bytes = fs.getContentSummary(part).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / (256L << 20)).toInt)
+    val layout = fileLayout(spark, part)
     Promote.replace(spark, partPath)(
-      spark.read.parquet(partPath).coalesce(nFiles).write.mode("overwrite").parquet(_))
+      spark.read.parquet(partPath).coalesce(nFiles).write.options(layout)
+        .mode("overwrite").parquet(_))
+  }
+
+  /** Writer options that reproduce the layout of the parquet files under
+    * `dir`, read from their footers: the codec of the first column chunk,
+    * and a sized bloom filter ([[Layout.bloomOptions]]) on every column
+    * some file's chunk carries one for. All footers are read, not one,
+    * because parquet writes no filter for a fully dictionary-encoded chunk
+    * even where filters were asked for.
+    */
+  private def fileLayout(spark: SparkSession, dir: Path): Map[String, String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val chunks = TableIndex.listEntries(spark, dir, dir)(_.endsWith(".parquet")).flatMap { e =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(dir, e.path), conf))
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      finally reader.close()
+    }
+    val codec = chunks.headOption.map(c => "compression" -> c.getCodec.name.toLowerCase)
+    val bloomed = chunks.filter(_.getBloomFilterOffset >= 0).map(_.getPath.toDotString).distinct
+    codec.toMap ++ (if (bloomed.isEmpty) Map.empty else Layout.bloomOptions(bloomed))
   }
 
   /** Stats refresh (M4, `cleanup.sql:33-38`): ANALYZE over a catalog table. */

@@ -1,6 +1,6 @@
 package graft.maintain
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Manifest-based table versioning over plain parquet — the analog of the
@@ -458,22 +458,19 @@ object Versioned {
       .map(_.path).toSet
     val dataRoot = new Path(tableDir, "data")
     if (!f.exists(dataRoot)) return Seq.empty
-    val base = new Path(tableDir).toUri.getPath
-    def rel(p: Path) = p.toUri.getPath.stripPrefix(base).stripPrefix("/")
+    val root = new Path(tableDir)
     val horizon = System.currentTimeMillis() - minAgeMs
     f.listStatus(dataRoot).toSeq.flatMap { entry =>
-      val files = scala.collection.mutable.ArrayBuffer[FileStatus]()
-      val it = f.listFiles(entry.getPath, true)
-      while (it.hasNext) files += it.next()
+      val files = TableIndex.listEntries(spark, root, entry.getPath)(_ => true)
       // only data files: committer markers (_SUCCESS) are not manifest-tracked
-      val orphans = files.filter(st => st.getPath.getName.endsWith(".parquet") &&
-        !referenced.contains(rel(st.getPath)) && st.getModificationTime <= horizon)
-      val parquet = files.count(_.getPath.getName.endsWith(".parquet"))
+      val orphans = files.filter(e => e.path.endsWith(".parquet") &&
+        !referenced.contains(e.path) && e.mtime <= horizon)
+      val parquet = files.count(_.path.endsWith(".parquet"))
       if (entry.isDirectory && orphans.size == parquet &&
-          (entry +: files).forall(_.getModificationTime <= horizon))
+          (entry.getModificationTime +: files.map(_.mtime)).forall(_ <= horizon))
         f.delete(entry.getPath, true)
-      else orphans.foreach(st => f.delete(st.getPath, false))
-      orphans.map(st => rel(st.getPath))
+      else orphans.foreach(e => f.delete(new Path(root, e.path), false))
+      orphans.map(_.path)
     }.sorted
   }
 }

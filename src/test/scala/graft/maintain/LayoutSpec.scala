@@ -5,7 +5,14 @@ import graft.ingest.Normalize
 import graft.plans.GuardTesting
 import graft.queries.TelematicsQueries
 import graft.serve.Api
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.values.bloomfilter.BloomFilter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -34,6 +41,101 @@ class LayoutSpec extends SparkSpec {
       case Array((d1, t1), (d2, t2)) => d1 < d2 || (d1 == d2 && t1 <= t2)
       case _ => true
     })
+  }
+
+  /** Every data file under `d`, as a local path. */
+  private def parquetFiles(d: String): Seq[String] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+    try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+    finally walk.close()
+  }
+
+  /** (file, chunk, the chunk's bloom filter if it has one) of every
+    * `column` chunk of every data file under `d`, read from the footers.
+    */
+  private def chunks(d: String, column: String)
+      : Seq[(String, ColumnChunkMetaData, Option[BloomFilter])] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    parquetFiles(d).flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
+        b.getColumns.asScala.filter(_.getPath.toDotString == column).map { c =>
+          (f, c, Option(reader.getBloomFilterDataReader(b).readBloomFilter(c)))
+        }
+      } finally reader.close()
+    }
+  }
+
+  /** Parquet writes a bloom filter only for a chunk with a page that is not
+    * dictionary-encoded; a fully dictionary-encoded chunk needs none.
+    */
+  private def nonDictionary(c: ColumnChunkMetaData): Boolean =
+    Option(c.getEncodingStats).forall(_.hasNonDictionaryEncodedPages)
+
+  private def mayContain(bloom: BloomFilter, id: String): Boolean =
+    bloom.findHash(bloom.hash(Binary.fromString(id)))
+
+  /** (file, filter) of every non-dictionary `correlation_id` chunk under
+    * `d`, asserting there is one and each filter is at most 2 KiB.
+    */
+  private def smallFilters(d: String): Seq[(String, BloomFilter)] = {
+    val cs = chunks(d, "correlation_id").filter(c => nonDictionary(c._2))
+    assert(cs.nonEmpty)
+    for ((f, _, bloom) <- cs)
+      assert(bloom.exists(_.getBitsetSize <= 2048), s"$f: filter ${bloom.map(_.getBitsetSize)}")
+    cs.map { case (f, _, bloom) => f -> bloom.get }
+  }
+
+  test("fact bloom filters are sized to their file: small, no false negatives") {
+    val filters = smallFilters(dir)
+    assert(filters.map(_._1).distinct.size == filters.size,
+      "a fact file has more than one row group")
+    val ids = spark.read.parquet(dir).select($"_metadata.file_path", $"correlation_id")
+      .as[(String, String)].collect()
+    val byFile = ids.groupBy(r => new Path(r._1).toUri.getPath).map { case (f, rs) =>
+      f -> rs.map(_._2).toSet
+    }
+    val all = ids.map(_._2).distinct.sorted
+    val absentChecked = filters.map { case (f, bloom) =>
+      val present = byFile(f)
+      assert(present.forall(mayContain(bloom, _)), s"$f: a present id is missing")
+      // ids of other files that this file's min/max statistics cannot exclude
+      val (lo, hi) = (present.min, present.max)
+      val absent = all.filter(id => id > lo && id < hi && !present(id)).take(20)
+      assert(absent.forall(!mayContain(bloom, _)), s"$f: an absent id passes the filter")
+      absent.size
+    }.sum
+    assert(absentChecked > 0)
+  }
+
+  test("a file of 200k distinct ids gets a filter large enough for 1% false positives") {
+    val d = graft.TempDirs.fixtureDir("layout_bloom_200k")
+    val n = 200000
+    spark.range(n).select(concat(lit("id-"), $"id".cast("string")).as("k")).coalesce(1)
+      .write.mode("overwrite").options(Layout.bloomOptions(Seq("k"))).parquet(d)
+    val bloom = chunks(d, "k").flatMap(_._3) match {
+      case Seq(b) => b
+      case bs => fail(s"expected one filter, got ${bs.size}")
+    }
+    assert(bloom.getBitsetSize >= (128 << 10), s"filter ${bloom.getBitsetSize} B")
+    assert((0 until n).forall(i => mayContain(bloom, s"id-$i")))
+    val falsePositives = (0 until 10000).count(i => mayContain(bloom, s"absent-$i"))
+    assert(falsePositives <= 200, s"$falsePositives false positives in 10000 absent ids")
+  }
+
+  test("compactPartition keeps a fact partition's zstd and sized bloom filters") {
+    val d = graft.TempDirs.fixtureDir("layout_compact") + "/fact"
+    val fact = TelematicsQueries.normalizedFact(spark, sf())
+    val bucket = fact.select(min($"device_id_bucket")).as[Int].head()
+    Layout.writeFact(fact.filter($"device_id_bucket" === bucket), d)
+    val bucketDir = s"$d/device_id_bucket=$bucket"
+    val day = new java.io.File(bucketDir).list().filter(_.startsWith("received_day="))
+      .min.stripPrefix("received_day=")
+    Maintenance.compactPartition(spark, bucketDir, "received_day", day)
+    val part = s"$bucketDir/received_day=$day"
+    val files = parquetFiles(part)
+    assert(files.nonEmpty && files.forall(_.contains(".zstd.")), files)
+    smallFilters(part)
   }
 
   test("point lookup on the layout prunes partitions in the scan") {

@@ -119,6 +119,9 @@ class OpsSpec extends SparkSpec {
     assert(files() == 16)
     Maintenance.compactPartition(spark, dir, "day", "2024-01-05")
     assert(files() == 1)
+    // the rewrite keeps the files' codec: Spark's default snappy stays snappy
+    assert(new java.io.File(s"$dir/day=2024-01-05").list()
+      .filter(_.endsWith(".parquet")).forall(_.contains(".snappy.")))
     val back = spark.read.parquet(dir)
     assert(back.count() == 400 && back.agg(sum("id")).as[Long].head() == (1 to 400).sum.toLong)
   }
