@@ -32,11 +32,9 @@ object Bootstrap {
 
   /** One row: `n`, `sum_cents`, `mean` (exact ratio), `b_used`, and the
     * `[loPermille, hiPermille]` percentile-bootstrap bounds `ci_lo`,
-    * `ci_hi` over `replicates` deterministic replicate means.
+    * `ci_hi` over 64 deterministic replicate means.
     */
-  def meanCI(df: DataFrame, idCol: Column, valueCents: Column, seed: String,
-             replicates: Int = 64): DataFrame = {
-    require(replicates >= 2, s"need >= 2 replicates, got $replicates")
+  def meanCI(df: DataFrame, idCol: Column, valueCents: Column, seed: String): DataFrame = {
     val base = df.select(idCol.cast("string").as("__id"),
       valueCents.cast("long").as("x"))
     val full = base
@@ -59,7 +57,6 @@ object Bootstrap {
     // codegen subexpression elimination (each conv re-inlines per
     // reference — measured 44 s vs 4 s for the same math here; the NOTES
     // explode-pushdown trap in aggregate form).
-    require(replicates % 4 == 0, s"replicates must be a multiple of 4, got $replicates")
     val msg = concat(lit(s"boot:$seed:"), col("__id"), lit(":"),
       col("rg").cast("string"))
     // w = #{hex digits of the field in {'0','1'}} ⇔ #{nibbles whose
@@ -80,7 +77,7 @@ object Bootstrap {
       shiftright(wq, 8 * (3 - s)).bitwiseAND(lit(0xFFL))
     val perRg = base
       .select(col("__id"), col("x"),
-        explode(sequence(lit(0), lit(replicates / 4 - 1))).as("rg"))
+        explode(sequence(lit(0), lit(15))).as("rg"))
       .select(col("rg"), col("x"),
         graft.functions.Md5Field.md5BinWeights4(msg).as("__wq"))
       .select(col("rg"), col("x"),

@@ -32,8 +32,7 @@ object Correlation {
     * allows n up to ~9·10⁶ per group, max|x| ≤ 10⁴ only ~9·10² (pinned by
     * CorrelationBoundSpec). Under ANSI mode (this engine's default) an
     * over-bound sum FAILS LOUDLY with ARITHMETIC_OVERFLOW rather than
-    * wrapping; rescale or clip the feature first (winsorize), or use
-    * [[momentsWide]] (DECIMAL(38) sums) when x is genuinely wide.
+    * wrapping; rescale or clip the feature first (winsorize).
     */
   def moments(df: DataFrame, groupCol: String, xCol: String): DataFrame = {
     val x = col(xCol).cast("long")
@@ -59,7 +58,7 @@ object Correlation {
 
   /** Pairwise Pearson correlation matrix from EXACT integer moment sums —
     * the feature-audit companion of [[moments]]: each input column is
-    * scaled onto an integer grid (`round(x·scale)` — explicit round on
+    * scaled onto the cent grid (`round(x·100)` — explicit round on
     * BOTH engines, because double→int CAST truncates in Spark but rounds
     * in DuckDB), all n/Σx/Σx²/Σxy accumulate as BIGINTs (order-free), and
     * each r is ONE fixed operand-order IEEE expression over them, with the
@@ -71,9 +70,9 @@ object Correlation {
     * persisted 1-row result — metadata-sized. Constant columns emit NULL r
     * (zero variance), not a 0/0.
     */
-  def pearsonMatrix(df: DataFrame, cols: Seq[String], scale: Int = 100): DataFrame = {
+  def pearsonMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, s"need at least 2 columns, got ${cols.size}")
-    val xs = cols.map(c => round(col(c) * scale, 0).cast("long"))
+    val xs = cols.map(c => round(col(c) * 100, 0).cast("long"))
     val aggs = Seq(count(lit(1)).as("n")) ++
       cols.indices.flatMap { i =>
         Seq(sum(xs(i)).as(s"s_$i"), sum(xs(i) * xs(i)).as(s"s_${i}_$i")) } ++
@@ -104,7 +103,7 @@ object Correlation {
     * with `A_d` = |top-d(A) ∩ top-d(B)| — the ranking-drift audit for
     * comparing retrieval variants (BM25 vs raw TF, old index vs new)
     * where Spearman over full lists is meaningless because only prefixes
-    * matter.
+    * matter. Each ranking is a `(doc_id, rank)` frame.
     *
     * Exactness at p = 1/2: every weight p^{d−1} is a power of two (exact
     * double), each A_d/d is one correctly-rounded division of exact longs,
@@ -116,12 +115,11 @@ object Correlation {
     * aggregate carrying D longs. Depth is a constant; nothing here touches
     * corpus scale.
     */
-  def rbo(rankA: DataFrame, rankB: DataFrame, depth: Int,
-          idCol: String = "id"): DataFrame = {
+  def rbo(rankA: DataFrame, rankB: DataFrame, depth: Int): DataFrame = {
     require(depth >= 1 && depth <= 32, s"depth must be in [1, 32], got $depth")
-    val ra = rankA.select(col(idCol).as("__id"), col("rank").as("__ra"))
+    val ra = rankA.select(col("doc_id").as("__id"), col("rank").as("__ra"))
       .filter(col("__ra") <= depth)
-    val rb = rankB.select(col(idCol).as("__id"), col("rank").as("__rb"))
+    val rb = rankB.select(col("doc_id").as("__id"), col("rank").as("__rb"))
       .filter(col("__rb") <= depth)
     val j = ra.join(rb, Seq("__id"), "full_outer")
       .select(coalesce(col("__ra"), lit(depth + 1L)).as("ra"),
@@ -223,26 +221,27 @@ object Correlation {
           .otherwise(lit(0.0)))
   }
 
+  /** Largest group the exact quadratic operators enumerate pairs of. */
+  private val MaxPairGroupSize = 100000
+
   /** ENFORCED bounded-group contract for the exact quadratic operators: the
-    * per-group row count is computed in-plan and any group over `bound`
-    * fails the job with a `raise_error` naming the group — a silent O(n²)
+    * per-group row count is computed in-plan and any group over
+    * [[MaxPairGroupSize]] fails the job with a `raise_error` naming the group — a silent O(n²)
     * blowup on a million-row group becomes a loud contract violation
     * instead (the `Expectations` discipline). The `||` short-circuits, so
     * within-bound rows never evaluate the error branch; the count join
     * shuffles on the group key the pair join was about to shuffle on
     * anyway.
     */
-  private def requireBounded(base: DataFrame, groupCol: String,
-                             bound: Int, op: String): DataFrame = {
+  private def requireBounded(base: DataFrame, groupCol: String, op: String): DataFrame = {
     val counts = base.groupBy(col(groupCol)).agg(count(lit(1)).as("__gn"))
     base.join(counts, Seq(groupCol))
-      .filter(col("__gn") <= bound ||
+      .filter(col("__gn") <= MaxPairGroupSize ||
         raise_error(concat(
           lit(s"$op: group "), col(groupCol).cast("string"),
           lit(" has "), col("__gn").cast("string"),
-          lit(s" rows, exceeding the declared bound $bound for the exact " +
-            "quadratic pair enumeration; raise the bound knowingly or use " +
-            "kendallTauSampled"))).cast("boolean"))
+          lit(s" rows, exceeding the bound $MaxPairGroupSize for the exact " +
+            "quadratic pair enumeration; use kendallTauSampled"))).cast("boolean"))
       .drop("__gn")
   }
 
@@ -256,13 +255,12 @@ object Correlation {
     * Scale note: O(n²) pairs per group by design, same contract as
     * [[kendallTau]] — exact and right for bounded per-segment series, and
     * the bound is ENFORCED in-plan ([[requireBounded]]): a group larger
-    * than `maxGroupSize` fails loudly instead of going quietly quadratic.
+    * than [[MaxPairGroupSize]] fails loudly instead of going quietly quadratic.
     */
   def theilSen(df: DataFrame, groupCol: String, xCol: String,
-               yCol: String, maxGroupSize: Int = 100000): DataFrame = {
+               yCol: String): DataFrame = {
     val bounded = requireBounded(
-      df.select(col(groupCol), col(xCol), col(yCol)), groupCol,
-      maxGroupSize, "theilSen")
+      df.select(col(groupCol), col(xCol), col(yCol)), groupCol, "theilSen")
     val a = bounded.select(col(groupCol), col(xCol).as("__x1"), col(yCol).as("__y1"))
     val b = bounded.select(col(groupCol), col(xCol).as("__x2"), col(yCol).as("__y2"))
     val pairs = a.join(b, Seq(groupCol))
@@ -291,10 +289,9 @@ object Correlation {
     * [[kendallTauSampled]] is the estimator for groups beyond it.
     */
   def kendallTau(df: DataFrame, groupCol: String, xCol: String, yCol: String,
-                 idCol: String, maxGroupSize: Int = 100000): DataFrame = {
+                 idCol: String): DataFrame = {
     val base = requireBounded(
-      df.select(col(groupCol), col(xCol), col(yCol), col(idCol)), groupCol,
-      maxGroupSize, "kendallTau")
+      df.select(col(groupCol), col(xCol), col(yCol), col(idCol)), groupCol, "kendallTau")
     val a = base.select(col(groupCol), col(xCol).as("__x1"),
       col(yCol).as("__y1"), col(idCol).as("__i1"))
     val b = base.select(col(groupCol), col(xCol).as("__x2"),
@@ -365,40 +362,6 @@ object Correlation {
       .withColumn("tau_a_est",
         (col("concordant") - col("discordant")).cast("double") /
           col("n_pairs").cast("double"))
-  }
-
-  /** [[moments]] with DECIMAL(38,0) power sums — the wide-input fallback:
-    * Σx⁴ gets 10³⁸ headroom instead of 2⁶³ (max|x| = 10⁶ allows n up to
-    * ~10¹⁴ per group vs [[moments]]' ~10⁹ at 10³), at decimal-aggregation
-    * cost. Same output columns; the shape statistics are the identical
-    * fixed-operand-order IEEE expressions over the (exact) sums cast to
-    * double. Use when the feature column can't be clipped into the BIGINT
-    * envelope; under ANSI the narrow path FAILS LOUDLY on overflow rather
-    * than wrapping, so the switch is never silent.
-    */
-  def momentsWide(df: DataFrame, groupCol: String, xCol: String): DataFrame = {
-    val x = col(xCol).cast("long").cast("decimal(38,0)")
-    val x2 = (col(xCol).cast("long") * col(xCol).cast("long")).cast("decimal(38,0)")
-    val agg = df.groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n"), sum(x).cast("decimal(38,0)").as("s1"),
-        sum(x2).cast("decimal(38,0)").as("s2"),
-        sum((x2 * x).cast("decimal(38,0)")).cast("decimal(38,0)").as("s3"),
-        sum((x2 * x2).cast("decimal(38,0)")).cast("decimal(38,0)").as("s4"))
-    val nD = col("n").cast("double")
-    val m = col("s1").cast("double") / nD
-    val m2 = col("s2").cast("double") / nD - m * m
-    val m3 = col("s3").cast("double") / nD - lit(3.0) * m * (col("s2").cast("double") / nD) +
-      lit(2.0) * m * m * m
-    val m4 = col("s4").cast("double") / nD - lit(4.0) * m * (col("s3").cast("double") / nD) +
-      lit(6.0) * m * m * (col("s2").cast("double") / nD) - lit(3.0) * m * m * m * m
-    agg.withColumn("mean", m)
-      .withColumn("variance", m2)
-      .withColumn("skewness",
-        when(col("variance") > 0.0, m3 / sqrt(col("variance") * col("variance") * col("variance")))
-          .otherwise(0.0))
-      .withColumn("kurtosis",
-        when(col("variance") > 0.0, m4 / (col("variance") * col("variance")) - lit(3.0))
-          .otherwise(0.0))
   }
 
   /** Rolling OLS slope per entity — the windowed trend detector ("is this

@@ -13,16 +13,16 @@ import org.apache.spark.sql.functions._
   * ([[aucExact]], [[ksStatistic]]) shares one plan idea: a cumulative
   * count over *distinct metric values* is needed, and the naive form is a
   * single-task `ORDER BY value` window over every distinct value. Instead
-  * the distinct values are histogrammed into width-`bucketWidth` buckets
+  * the distinct values are histogrammed into width-2048 buckets
   * (two-pass-quantiles style, [[Quantiles]]): the only empty-partition
   * window runs over the metadata-sized bucket frame, and the per-value
   * cumulative runs *partitioned by bucket* — parallel, each partition
   * bounded by the values falling in one bucket. Equality with the naive
   * form is what the oracle rows prove.
   *
-  * Scale contract: the bucket count is `(max score − min score) /
-  * bucketWidth` — pick a width that keeps it in the thousands (it is a
-  * histogram, not a sort). Scores are integer-scaled (cents) on entry, so
+  * Scale contract: the bucket count is `(max score − min score) / 2048`,
+  * in the thousands for cent-scaled scores (it is a histogram, not a
+  * sort). Scores are integer-scaled (cents) on entry, so
   * there is no FP comparison anywhere in rank space.
   */
 object Eval {
@@ -47,14 +47,12 @@ object Eval {
     * Mann-Whitney U statistic (2U here), so this row doubles as the exact
     * rank-sum test audit.
     */
-  def aucExact(df: DataFrame, scoreCents: Column, label: Column,
-               bucketWidth: Long = 2048L): DataFrame = {
-    require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
+  def aucExact(df: DataFrame, scoreCents: Column, label: Column): DataFrame = {
     val perVal = df
       .select(scoreCents.cast("long").as("s"), label.cast("long").as("y"))
       .groupBy(col("s"))
       .agg(sum(col("y")).as("p"), (count(lit(1)) - sum(col("y"))).as("n"))
-      .withColumn("b", expr(s"s div $bucketWidth"))
+      .withColumn("b", expr("s div 2048"))
     val bucketFrame = Window.orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val bucketCum = perVal.groupBy(col("b")).agg(sum(col("n")).as("nb"))
@@ -288,7 +286,10 @@ object Eval {
             (col("tp") * 2 + col("fp") + col("fn")).cast("double")))
   }
 
-  /** Retrieval evaluation at k on the integer grid: hit-rate@k and MRR@k
+  /** Cutoff rank of [[mrrAtK]] and [[ndcgAtK]]. */
+  private val AtK = 10
+
+  /** Retrieval evaluation at k = [[AtK]] on the integer grid: hit-rate@k and MRR@k
     * per the [[ndcgDiscounts]] discipline — reciprocal ranks are the
     * fixed integers round(2^20 / rank), so the MRR numerator is an
     * ORDER-FREE exact BIGINT sum over groups and MRR itself ONE gated
@@ -301,15 +302,14 @@ object Eval {
     (1 to k).map(i => math.round(math.pow(2, 20) / i))
 
   def mrrAtK(df: DataFrame, group: Column, score: Column, tie: Column,
-             relevant: Column, k: Int = 10): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val gridArr = array(mrrGrid(k).map(lit(_)): _*)
+             relevant: Column): DataFrame = {
+    val gridArr = array(mrrGrid(AtK).map(lit(_)): _*)
     val byScore = Window.partitionBy(col("g")).orderBy(col("s").desc, col("t"))
     val perGroup = df
       .select(group.as("g"), score.as("s"), tie.as("t"),
         relevant.cast("boolean").as("rel"))
       .withColumn("rk", row_number().over(byScore))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= AtK)
       .groupBy(col("g"))
       .agg(min(when(col("rel"), col("rk"))).as("first_rel"))
     perGroup.agg(
@@ -449,7 +449,7 @@ object Eval {
   def ndcgDiscounts(k: Int): Seq[Long] =
     (1 to k).map(i => math.round(math.pow(2, 20) / (math.log(i + 1) / math.log(2))))
 
-  /** NDCG@k per group: graded relevance `rel`, system order by (`score`
+  /** NDCG@k per group, k = [[AtK]]: graded relevance `rel`, system order by (`score`
     * desc, `tie`), ideal order by (`rel` desc, `tie`). DCG and IDCG are
     * exact BIGINTs on the [[ndcgDiscounts]] integer grid; NDCG is ONE
     * gated division. Both rank windows share the group partition key —
@@ -457,9 +457,8 @@ object Eval {
     * zero-relevance gate to NULL.
     */
   def ndcgAtK(df: DataFrame, group: Column, score: Column, tie: Column,
-              rel: Column, k: Int = 10): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val dArr = array(ndcgDiscounts(k).map(lit(_)): _*)
+              rel: Column): DataFrame = {
+    val dArr = array(ndcgDiscounts(AtK).map(lit(_)): _*)
     val base = df.select(group.as("g"), score.as("s"), tie.as("t"),
       rel.cast("long").as("r"))
     val byScore = Window.partitionBy(col("g")).orderBy(col("s").desc, col("t"))
@@ -469,10 +468,10 @@ object Eval {
       .withColumn("irk", row_number().over(byRel))
       .groupBy(col("g"))
       .agg(
-        coalesce(sum(when(col("rk") <= k,
+        coalesce(sum(when(col("rk") <= AtK,
           col("r") * element_at(dArr, col("rk").cast("int")))), lit(0L))
           .as("dcg_scaled"),
-        coalesce(sum(when(col("irk") <= k,
+        coalesce(sum(when(col("irk") <= AtK,
           col("r") * element_at(dArr, col("irk").cast("int")))), lit(0L))
           .as("idcg_scaled"))
       .withColumn("ndcg",
@@ -713,28 +712,25 @@ object Eval {
         canon(col("ss1")).as("ss1"), canon(col("ss0")).as("ss0"), col("d"))
   }
 
+  /** Most ratings one item may carry in [[krippendorffAlpha]]. */
+  private val MaxRaters = 4
+
   /** Krippendorff's alpha (nominal) over multi-rater item labels — the
     * agreement readout that, unlike Fleiss kappa, tolerates VARYING rater
     * counts per item (the real shape of crowd/LLM-judge labeling runs).
     * Exactness: the coincidence diagonal o_cc = Sigma_i n_ic(n_ic-1)/(m_i-1)
     * mixes per-item denominators, so every term is scaled by
-    * `scale` = lcm(1..maxRaters-1) - (m_i-1) divides it, making
+    * `scale` = lcm(1..MaxRaters-1) = 6 - (m_i-1) divides it, making
     * n_ic(n_ic-1)*(scale div (m_i-1)) an EXACT integer - and
     * alpha = 1 - (n-1)*(scale*n - Sigma o_scaled) / (scale*(n^2 - Sigma n_c^2))
-    * is one division of exact DECIMAL products. The per-item rater cap is
-    * ENFORCED in-plan (raise_error); items with one rating drop (nothing
+    * is one division of exact DECIMAL products. The per-item rater cap
+    * ([[MaxRaters]]) is ENFORCED in-plan (raise_error); items with one rating drop (nothing
     * pairable). One row: `n_ratings`, `n_items`, `n_categories`,
     * `do_num`/`de_num` (canonical strings), `alpha`.
     */
-  def krippendorffAlpha(df: DataFrame, itemCol: Column, ratingCol: Column,
-                        maxRaters: Int = 4): DataFrame = {
-    require(maxRaters >= 2 && maxRaters <= 13,
-      s"maxRaters must be in [2, 13] (lcm fits a long), got $maxRaters")
+  def krippendorffAlpha(df: DataFrame, itemCol: Column, ratingCol: Column): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
-    val scale = (1 until maxRaters).foldLeft(1L) { (acc, k) =>
-      acc / java.math.BigInteger.valueOf(acc).gcd(
-        java.math.BigInteger.valueOf(k)).longValue() * k
-    }
+    val scale = 6L // lcm(1..MaxRaters-1)
     // the (item, category) count frame is ≤ items × categories rows and
     // feeds its own m_i self-join; withM feeds the o_diag aggregate AND the
     // category marginal — anchored eagerly, the source derives once instead
@@ -747,12 +743,11 @@ object Eval {
     val withM = ic.join(
       ic.groupBy(col("item")).agg(sum(col("n_ic")).as("m_i")), Seq("item"))
       .filter(col("m_i") >= 2)
-      .filter(col("m_i") <= maxRaters ||
+      .filter(col("m_i") <= MaxRaters ||
         raise_error(concat(lit("krippendorffAlpha: item "), col("item"),
           lit(s" has "), col("m_i").cast("string"),
-          lit(s" ratings, over the declared maxRaters = $maxRaters; raise " +
-            "the cap knowingly (scale = lcm(1..maxRaters-1) must stay " +
-            "integral)"))).cast("boolean"))
+          lit(s" ratings, over the cap of $MaxRaters raters per item " +
+            "(scale = lcm(1..MaxRaters-1) must stay integral)"))).cast("boolean"))
       .anchor(Bound.Metadata)
     // scale div (m_i-1) is exact BY CONSTRUCTION (lcm divisibility);
     // `div`, not `/` - Column./ is double division

@@ -28,15 +28,15 @@ import graft.functions.Md5Field.md5U32
   */
 object HllGrid {
 
-  /** The register table: one row per TOUCHED register (idx, max rank);
-    * merge two grids with `unionByName → groupBy(idx) → max(m)`.
+  /** The m = 256 register table: one row per TOUCHED register (idx, max
+    * rank); merge two grids with `unionByName → groupBy(idx) → max(m)`.
     */
-  def registers(items: DataFrame, itemCol: String, m: Int = 256): DataFrame = {
-    val b = rankBase(m)
+  def registers(items: DataFrame, itemCol: String): DataFrame = {
+    val b = rankBase(256)
     val h = md5U32(concat(lit("hllg:"), col(itemCol).cast("string")))
     items
-      .select(pmod(h, lit(m.toLong)).as("idx"),
-        (h / m).cast("long").as("__w"))
+      .select(pmod(h, lit(256L)).as("idx"),
+        (h / 256).cast("long").as("__w"))
       .select(col("idx"),
         when(col("__w") === 0, lit(b))
           .otherwise(lit(b) - length(bin(col("__w")))).as("rank"))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * max-merge along edges. THE way to measure reachability growth /
   * effective diameter on a graph too large for exact per-node BFS:
   * exact per-node neighborhoods need O(n²) state in the worst case,
-  * while HyperBall state is a fixed `m` registers per node, rounds are
+  * while HyperBall state is a fixed m = 32 registers per node, rounds are
   * one equi-join + one max-aggregate each, and the merge is the same
   * algebra [[HllGrid]] already proves mergeable.
   *
@@ -34,8 +34,9 @@ object HyperBall {
     * `rank_sum`, `reg_xor` (exact register-state pins) and the min-id
     * seed node's `seed_sum_scaled` + `seed_estimate`.
     */
-  def neighborhoodFunction(pairs: DataFrame, maxHops: Int, m: Int = 32): DataFrame = {
+  def neighborhoodFunction(pairs: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
+    val m = 32
     val e = pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
     val adj = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))

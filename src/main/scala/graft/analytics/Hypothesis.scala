@@ -37,14 +37,14 @@ object Hypothesis {
     * broadcast and a single-partition window sort. The distinct count is
     * computed in-plan on the (already small-or-violating) histogram frame
     * and any overrun fails the job loudly BEFORE the window/broadcast
-    * consume it — quantize the column (cents, permille) or raise the
-    * bound knowingly. The count is a parallel aggregate over the anchored
+    * consume it — quantize the column (cents, permille). The count is a parallel aggregate over the anchored
     * histogram (never a single-partition pass, even on violating inputs).
     * The `||` short-circuits, so within-bound rows never evaluate the
     * error branch (the [[Correlation]] requireBounded discipline).
     */
-  private def requireBoundedDomain(vals: DataFrame, bound: Long,
-                                   op: String): DataFrame = {
+  private val MaxDistinctValues = 1L << 21
+
+  private def requireBoundedDomain(vals: DataFrame, op: String): DataFrame = {
     // r18 reshape (ADVICE r17 medium + VERDICT r17 #6): the r17 form
     // funneled the whole histogram through an UNPARTITIONED window to get
     // the count — on exactly the violating inputs the guard exists for
@@ -57,18 +57,17 @@ object Hypothesis {
     // outputs are identical (the `||` short-circuits as before). The
     // anchor also removes a real double-derivation for callers that
     // consume `vals` twice (cliffsDelta's cum branches, cvm's total).
-    // Scale bound: ≤ `bound` rows by contract — the anchor-envelope class
+    // Scale bound: ≤ MaxDistinctValues rows by contract — the anchor-envelope class
     // (violating inputs fail the count before the checkpoint's consumers).
     val hist = vals.anchor(Bound.Metadata)
     val nv = hist.agg(count(lit(1)).as("__nvals"))
     hist.crossJoin(broadcast(nv))
-      .filter(col("__nvals") <= bound ||
+      .filter(col("__nvals") <= MaxDistinctValues ||
         raise_error(concat(
           lit(s"$op: "), col("__nvals").cast("string"),
-          lit(s" distinct values exceed the declared value-domain bound " +
-            s"$bound for the rank/ECDF histogram frame; quantize the score " +
-            "column to a bounded grid (cents, permille) or raise " +
-            "maxDistinctValues knowingly"))).cast("boolean"))
+          lit(s" distinct values exceed the value-domain bound " +
+            s"$MaxDistinctValues for the rank/ECDF histogram frame; quantize " +
+            "the score column to a bounded grid (cents, permille)"))).cast("boolean"))
       .drop("__nvals")
   }
 
@@ -81,22 +80,20 @@ object Hypothesis {
     * row counts), `h`, and the tie-corrected `h_tie`.
     *
     * Operating envelope: the rank frame holds one row per DISTINCT score —
-    * `maxDistinctValues` (default 2²¹) is enforced in-plan
+    * [[MaxDistinctValues]] (2²¹) is enforced in-plan
     * ([[requireBoundedDomain]]); beyond it the broadcast rank map and its
     * single unpartitioned window stop being metadata-sized.
     */
-  def kruskalWallis(df: DataFrame, grpCol: String, centsCol: String,
-                    maxDistinctValues: Long = 1L << 21): DataFrame = {
+  def kruskalWallis(df: DataFrame, grpCol: String, centsCol: String): DataFrame = {
     // NULL scores dropped BEFORE the histogram (the mannWhitney/runsTest
     // discipline): NULL would rank NULLS FIRST here, NULLS LAST in SQL
     val ev = df.select(col(grpCol).as("grp"), col(centsCol).as("cents"))
       .filter(col("cents").isNotNull)
     val vals = requireBoundedDomain(
-      ev.groupBy(col("cents")).agg(count(lit(1)).as("cnt")),
-      maxDistinctValues, "kruskalWallis")
+      ev.groupBy(col("cents")).agg(count(lit(1)).as("cnt")), "kruskalWallis")
     val wv = Window.orderBy(col("cents"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // anchors (r17): `ranked` is the ≤ maxDistinctValues histogram (bounded
+    // anchors (r17): `ranked` is the ≤ MaxDistinctValues histogram (bounded
     // by the guard) consumed by BOTH the tie aggregate and the rank join —
     // unanchored, the vals subtree (a full scan + shuffle agg) ran once per
     // consumer; `g` is k group rows consumed by the total and the final fold
@@ -293,7 +290,7 @@ object Hypothesis {
         .groupBy(col("cents"))
         .agg(sum(when(col("__a"), 1L).otherwise(0L)).as("d_a"),
           sum(when(col("__a"), 0L).otherwise(1L)).as("d_b")),
-      (1L << 21), "mannWhitney")
+      "mannWhitney")
     val wv = Window.orderBy(col("cents"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ranked = vals
@@ -344,7 +341,7 @@ object Hypothesis {
         .groupBy(col("cents"))
         .agg(sum(when(col("__a"), 1L).otherwise(0L)).as("d_a"),
           sum(when(col("__a"), 0L).otherwise(1L)).as("d_b")),
-      (1L << 21), "cliffsDelta")
+      "cliffsDelta")
     val wv = Window.orderBy(col("cents"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = vals.withColumn("cb", sum(col("d_b")).over(wv))
@@ -739,20 +736,18 @@ object Hypothesis {
     * fails loudly beyond).
     *
     * Operating envelope: the ECDF frame holds one row per DISTINCT score —
-    * `maxDistinctValues` (default 2²¹) is enforced in-plan
+    * [[MaxDistinctValues]] (2²¹) is enforced in-plan
     * ([[requireBoundedDomain]]) before the unpartitioned cumulative
     * window consumes it.
     */
-  def cvmTwoSample(df: DataFrame, cohortA: Column, centsCol: String,
-                   maxDistinctValues: Long = 1L << 21): DataFrame = {
+  def cvmTwoSample(df: DataFrame, cohortA: Column, centsCol: String): DataFrame = {
     // NULL scores dropped pre-ECDF — same rationale as [[mannWhitney]]
     val vals = requireBoundedDomain(
       df.select(cohortA.as("__a"), col(centsCol).as("c"))
         .filter(col("c").isNotNull)
         .groupBy(col("c"))
         .agg(sum(when(col("__a"), 1L).otherwise(0L)).as("d_a"),
-          sum(when(col("__a"), 0L).otherwise(1L)).as("d_b")),
-      maxDistinctValues, "cvmTwoSample")
+          sum(when(col("__a"), 0L).otherwise(1L)).as("d_b")), "cvmTwoSample")
     val w = Window.orderBy(col("c"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = vals.agg(sum(col("d_a")).as("n_a"), sum(col("d_b")).as("n_b"))

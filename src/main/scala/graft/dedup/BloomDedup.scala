@@ -120,13 +120,8 @@ object BloomDedup {
     * the word array + a 64-entry mask table — no dynamic-shift expression
     * exists, so the mask lookup keeps it whole-stage), and the exact-confirm
     * left-semi join runs ONLY over bloom-hit rows.
-    */
-  def bloomDeltaDedup(corpusFp: DataFrame, deltaFp: DataFrame,
-                      mBits: Int = 1 << 16, k: Int = 4): DataFrame =
-    bloomProbe(corpusBloom(corpusFp, mBits, k), corpusFp, deltaFp,
-      mBits, k)
-
-  /** [[bloomDeltaDedup]] with a prebuilt bitmap — the standing-artifact
+    *
+    * Input: a prebuilt bitmap ([[corpusBloom]]) — the standing-artifact
     * entry point: the caller holds the corpus bloom (built once, maintained
     * across batches by OR-ing in each accepted batch's own bitmap) and pays
     * only the probe + exact confirm per incoming batch. The confirm
@@ -221,7 +216,7 @@ object BloomDedup {
     * same disclosure as [[bloomProbe]].
     */
   def bloomProbeBucketed(words: Array[Long], corpusFpTable: String,
-                         deltaFp: DataFrame, mBits: Int = 1 << 16, k: Int = 4): DataFrame = {
+                         deltaFp: DataFrame, mBits: Int, k: Int): DataFrame = {
     require(words.length == mBits / 64,
       s"bitmap has ${words.length} words, expected ${mBits / 64}")
     val s = deltaFp.sparkSession

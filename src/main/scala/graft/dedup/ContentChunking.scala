@@ -8,7 +8,7 @@ import graft.functions.Md5Field.md5U32
 /** Content-defined chunking (Rabin/CDC-style, cf. LBFS and every
   * dedupe-storage system since): cut each document into variable-size
   * chunks at content-determined positions — a token starts a new chunk iff
-  * `md5U32("cdc:" || token) mod divisor == 0` — so an insertion near the
+  * `md5U32("cdc:" || token) mod 16 == 0` — so an insertion near the
   * head of a document shifts only the chunk it lands in; boundaries
   * RESYNCHRONIZE at the next content cut and every later chunk hashes
   * identically. Fixed-size chunking has no such property (one inserted
@@ -22,17 +22,16 @@ import graft.functions.Md5Field.md5U32
   *
   * Scale shape: one (doc, pos) sort serves the running boundary count; the
   * chunk rollup is a map-combined aggregate on (doc, chunk) whose ordered
-  * concat runs over chunk-bounded arrays (expected `divisor` tokens). No
+  * concat runs over chunk-bounded arrays (expected 16 tokens). No
   * corpus self-join anywhere; chunk-level dedup downstream is a groupBy on
   * the chunk hash.
   */
 object ContentChunking {
 
   /** One row per (doc, chunk): ordinal, token count, start position and the
-    * chunk content hash. Expected chunk length ≈ `divisor` tokens.
+    * chunk content hash. Expected chunk length ≈ 16 tokens.
     */
-  def chunks(docs: DataFrame, divisor: Int = 16): DataFrame = {
-    require(divisor >= 2, s"divisor must be >= 2, got $divisor")
+  def chunks(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id").as("doc"), Dedup.tokens(col("text")).as("__t"))
       .select(col("doc"), expr("filter(__t, x -> x <> '')").as("__t"))
@@ -41,7 +40,7 @@ object ContentChunking {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     pos
       .withColumn("__bnd",
-        (pmod(md5U32(concat(lit("cdc:"), col("tok"))), lit(divisor.toLong)) === 0)
+        (pmod(md5U32(concat(lit("cdc:"), col("tok"))), lit(16L)) === 0)
           .cast("long"))
       .withColumn("chunk", sum(col("__bnd")).over(byPos))
       .groupBy(col("doc"), col("chunk"))

@@ -110,7 +110,7 @@ object Dedup {
   /** Positional k-shingle hashes: one entry per starting position, NOT
     * deduplicated — element i is the hash of tokens [i, i+k). The positional
     * variant of [[shinglesFromTokens]], for operators that need to know
-    * *where* a shingle occurs ([[sharedTokenRuns]]).
+    * *where* a shingle occurs ([[sharedTokenRunsFromPositional]]).
     */
   def positionalShingles(toks: Column, k: Int): Column =
     when(size(toks) >= k,
@@ -132,7 +132,7 @@ object Dedup {
     * beats the old <=maxFreq rare inner JOIN-BACK by two corpus-wide
     * shuffles — but its cardinality is data-dependent, so the broadcast is
     * verified, never assumed. The set is collected through a hard
-    * `limit(max + 1)` (driver memory bounded by construction); if it
+    * `limit(HotBroadcastMaxRows + 1)` (driver memory bounded by construction); if it
     * overflows, the cut falls back to a shuffle anti-join, which degrades
     * gracefully where an unbounded driver collect would OOM.
     *
@@ -141,16 +141,33 @@ object Dedup {
     * probe) and needs no persist/unpersist lifecycle; call sites with two
     * cut inputs probe once and reuse the returned joiner.
     */
-  private[graft] def hotCutJoiner(hot: DataFrame,
-                                  maxRows: Int = HotBroadcastMaxRows): DataFrame => DataFrame = {
-    val probe = hot.limit(maxRows + 1).collect()
-    if (probe.length <= maxRows) {
+  private[graft] def hotCutJoiner(hot: DataFrame): DataFrame => DataFrame = {
+    val probe = hot.limit(HotBroadcastMaxRows + 1).collect()
+    if (probe.length <= HotBroadcastMaxRows) {
       val local = broadcast(hot.sparkSession.createDataFrame(
         java.util.Arrays.asList(probe: _*), hot.schema))
       df => df.join(local, Seq("shingle"), "left_anti")
     } else {
       df => df.join(hot, Seq("shingle"), "left_anti")
     }
+  }
+
+  /** The positional k-shingle ARRAY frame `(id, __sh)` both run detectors
+    * start from — exposed so callers can materialize it once per corpus
+    * (BASELINE.md §Amortization). Persisted before any explode (object doc
+    * rule 1 — the cache is the pushdown boundary; without it the
+    * posexplode's inferred constraints substitute the shingle lambda, with
+    * `split` re-inlined per element, into the scan: measured 22 s → 1 s).
+    */
+  def positionalArrays(docs: DataFrame, k: Int): DataFrame = {
+    val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
+    docs.select(col("doc_id").as("id"), col("text").as("__text"))
+      .repartition(parallelism)
+      .withColumn("__toks", tokens(col("__text")))
+      .filter(size(col("__toks")) >= k)
+      .withColumn("__sh", positionalShingles(col("__toks"), k))
+      .select(col("id"), col("__sh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Verbatim shared-token-run detection — the exact-substring dedup signal
@@ -170,37 +187,15 @@ object Dedup {
     * bounds join fan-out at 100 TB while leaving genuine long overlaps (which
     * consist of rarer shingles too) intact.
     *
+    * Input: the `(id, __sh)` frame of [[positionalArrays]], which callers
+    * materialize once per corpus (BASELINE.md §Amortization: shingling
+    * amortizes; the df cut, candidate join, islands window, and per-pair
+    * aggregate all stay inside the caller's timer).
+    *
     * Scale shape: explode is positional (O(tokens) rows), the join key is an
     * 8-byte shingle hash, the islands window partitions by (pair, diag) —
     * granular keys bounded by document length, so no reducer ever sees more
     * than one pair-diagonal. Skew valve = the frequency cut.
-    */
-  /** The positional k-shingle ARRAY frame `(id, __sh)` both run detectors
-    * start from — exposed so callers can materialize it once per corpus
-    * (BASELINE.md §Amortization). Persisted before any explode (object doc
-    * rule 1 — the cache is the pushdown boundary; without it the
-    * posexplode's inferred constraints substitute the shingle lambda, with
-    * `split` re-inlined per element, into the scan: measured 22 s → 1 s).
-    */
-  def positionalArrays(docs: DataFrame, k: Int): DataFrame = {
-    val parallelism = docs.sparkSession.sessionState.conf.numShufflePartitions
-    docs.select(col("doc_id").as("id"), col("text").as("__text"))
-      .repartition(parallelism)
-      .withColumn("__toks", tokens(col("__text")))
-      .filter(size(col("__toks")) >= k)
-      .withColumn("__sh", positionalShingles(col("__toks"), k))
-      .select(col("id"), col("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
-
-  def sharedTokenRuns(docs: DataFrame, k: Int, minRunTokens: Int): DataFrame =
-    sharedTokenRunsFromPositional(positionalArrays(docs, k),
-      k, minRunTokens)
-
-  /** [[sharedTokenRuns]] with the `(id, __sh)` positional-array frame
-    * supplied by the caller (BASELINE.md §Amortization: shingling
-    * amortizes; the df cut, candidate join, islands window, and per-pair
-    * aggregate all stay inside the caller's timer).
     */
   def sharedTokenRunsFromPositional(arr: DataFrame, k: Int, minRunTokens: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -236,7 +231,7 @@ object Dedup {
   }
 
   /** Token-level BENCHMARK decontamination by verbatim run, the bipartite
-    * generalization of [[sharedTokenRuns]] (r12 verdict Next #6): flag
+    * generalization of [[sharedTokenRunsFromPositional]] (r12 verdict Next #6): flag
     * corpus documents sharing a maximal run of `minRunTokens`+ identical
     * consecutive TOKENS with any benchmark/eval document. The
     * contiguous-run criterion is the signal [[graft.text.Curation
@@ -248,10 +243,16 @@ object Dedup {
     * Mechanism: positional k-shingles on both sides; equal shingles at
     * (pos_c, pos_b) lie on diagonal `pos_c − pos_b`, and a shared R-token
     * run is a maximal stretch of R−k+1 consecutive diagonal matches —
-    * the same gaps-and-islands recovery as [[sharedTokenRuns]], with the
+    * the same gaps-and-islands recovery as [[sharedTokenRunsFromPositional]], with the
     * corpus-side document-frequency cut as the hot-boilerplate valve
     * (disclosed: a run through a >maxShingleFreq shingle is split; genuine
     * verbatim leaks are made of rare shingles too).
+    *
+    * Input: the CORPUS positional-array frame of [[positionalArrays]],
+    * supplied by the caller (BASELINE.md §Amortization: corpus shingling
+    * amortizes; the benchmark side — tiny by contract — is shingled in
+    * place, and the df cut, probe join, islands window, and aggregates
+    * stay inside the caller's timer).
     *
     * Scale shape: benchmark suites are tiny next to a 100 TB corpus, so
     * the positional benchmark shingles broadcast; the corpus never
@@ -259,18 +260,6 @@ object Dedup {
     * islands window partitions by (corpus doc, bench doc, diag), keys
     * bounded by document length. Output: one row per contaminated corpus
     * doc (n_runs, n_bench_docs, max_run_tokens).
-    */
-  def benchmarkTokenRuns(corpus: DataFrame, benchmark: DataFrame, k: Int,
-                         minRunTokens: Int): DataFrame =
-    benchmarkTokenRunsFromPositional(
-      positionalArrays(corpus, k), benchmark,
-      k, minRunTokens)
-
-  /** [[benchmarkTokenRuns]] with the CORPUS positional-array frame
-    * supplied by the caller (BASELINE.md §Amortization: corpus shingling
-    * amortizes; the benchmark side — tiny by contract — is shingled in
-    * place, and the df cut, probe join, islands window, and aggregates
-    * stay inside the caller's timer).
     */
   def benchmarkTokenRunsFromPositional(cpArr: DataFrame, benchmark: DataFrame,
                                        k: Int, minRunTokens: Int): DataFrame = {
@@ -345,8 +334,7 @@ object Dedup {
     * return for any caller outside the harnesses' clearCache lifecycle.
     */
   def dedupDeltaAgainstCorpus(baseSh: DataFrame, deltaSh: DataFrame,
-                              threshold: Double,
-                              maxShingleFreq: Int = 1000): DataFrame = {
+                              threshold: Double): DataFrame = {
     // sizes ride the explode as size(sh) (the prefix-filter discipline —
     // no per-id aggregate, no sizes join), and the whole decision is ONE
     // shingle-keyed shuffle join + one pair aggregate: the intersection is
@@ -359,13 +347,13 @@ object Dedup {
     val dEx = dArr.select(col("id"), size(col("sh")).cast("long").as("__n_d"),
         explode(col("sh")).as("shingle"))
     val bEx = bArr.select(col("id"), explode(col("sh")).as("shingle"))
-    // the df cut INVERTED (the benchmarkTokenRuns discipline): the
+    // the df cut INVERTED (the benchmarkTokenRunsFromPositional discipline): the
     // >maxShingleFreq HOT set is usually metadata-sized — broadcast via the
     // size-gated [[hotCutJoiner]] (shuffle-anti fallback above the
     // ceiling), probed ONCE for both join sides
     val hot = bEx.select(col("shingle")).unionAll(dEx.select(col("shingle")))
       .groupBy(col("shingle")).agg(count(lit(1)).as("f"))
-      .filter(col("f") > maxShingleFreq).select(col("shingle"))
+      .filter(col("f") > 1000).select(col("shingle"))
     val cut = hotCutJoiner(hot)
     // matches: delta doc d vs corpus doc, or delta doc d vs EARLIER delta
     // doc (id <) — one equi-join against the union of both sides, counting
@@ -575,12 +563,11 @@ object Dedup {
     * Candidate generation by shared-shingle equi-join (never all-pairs): docs
     * sharing zero shingles can't exceed Jaccard 0, so the join on shingle is
     * lossless for any threshold > 0. At 100 TB the worst case is a hot
-    * shingle; `maxShingleFreq` drops shingles shared by more than that many
-    * docs (stop-shingles contribute candidates, not matches — standard
+    * shingle; the cut drops shingles shared by more than 1000 docs
+    * (stop-shingles contribute candidates, not matches — standard
     * frequency cut).
     */
-  def ngramJaccardPairs(docs: DataFrame, k: Int, threshold: Double,
-                        maxShingleFreq: Int = 1000): DataFrame =
+  def ngramJaccardPairs(docs: DataFrame, k: Int, threshold: Double): DataFrame =
     // persist the array-form shingle frame BEFORE exploding: the cache is a
     // predicate-pushdown boundary, so the `isnotnull(sh)`/`size(sh) > 0`
     // constraints Catalyst infers from the downstream explode land on the
@@ -589,7 +576,7 @@ object Dedup {
     jaccardPairsFromShingles(
       withShingles(docs, k)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      threshold, maxShingleFreq)
+      threshold)
 
   /** Incremental dedup: drop new documents whose content hash already exists
     * in `existing` — the production shape for deduping a fresh crawl against
@@ -609,7 +596,8 @@ object Dedup {
 
   /** C4-style line-level dedup: split documents into lines, keep only each
     * line's globally-first occurrence (ordered by (doc, position)), and
-    * reassemble documents from their surviving lines. Near-duplicate
+    * reassemble documents from their surviving lines. Lines end at ". ",
+    * and survivors rejoin with ". ". Near-duplicate
     * documents collapse to their novel lines; boilerplate (headers, license
     * blocks) survives exactly once, in its earliest document.
     *
@@ -618,13 +606,13 @@ object Dedup {
     * *hash* instead of the string to shrink the shuffle key — kept as the raw
     * line here so the DuckDB oracle is collision-proof-identical.
     */
-  def lineDedup(docs: DataFrame, sep: String = "\\. ", joinSep: String = ". "): DataFrame = {
+  def lineDedup(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // coalesce: split(NULL) is a NULL array and posexplode would silently
     // drop the document; a null-text doc line-dedups as an empty-text doc
     val lines = docs
       .select(col("doc_id"),
-        posexplode(split(coalesce(col("text"), lit("")), sep))
+        posexplode(split(coalesce(col("text"), lit("")), "\\. "))
           .as(Seq("pos", "line")))
     val perDoc = lines.groupBy(col("doc_id")).agg(count(lit(1)).as("n_lines"))
     val w = Window.partitionBy(col("line")).orderBy(col("doc_id"), col("pos"))
@@ -632,7 +620,7 @@ object Dedup {
       .filter(col("__rn") === 1)
     val clean = kept.groupBy(col("doc_id")).agg(
       count(lit(1)).as("n_kept"),
-      concat_ws(joinSep,
+      concat_ws(". ",
         transform(sort_array(collect_list(struct(col("pos"), col("line")))),
           s => s.getField("line"))).as("clean_text"))
     perDoc.join(clean, Seq("doc_id"), "left")
@@ -741,12 +729,8 @@ object Dedup {
     * one has high containment but low Jaccard (the union is dominated by
     * the long doc). Same candidate machinery and frequency-cut valve as
     * [[ngramJaccardPairs]] — O(collisions), never all-pairs.
-    */
-  def containmentPairs(docs: DataFrame, k: Int, threshold: Double): DataFrame =
-    containmentPairsFromShingles(withShingles(docs, k),
-      threshold)
-
-  /** [[containmentPairs]] with pass 1's `(id, sh)` shingle frame supplied
+    *
+    * Input: pass 1's `(id, sh)` shingle frame supplied
     * by the caller — the entry point when the corpus shingles are already
     * materialized (the shared-fixture discipline; same contract as
     * [[graft.dedup.MinHashLSH.signaturesFromShingles]]).
@@ -800,14 +784,8 @@ object Dedup {
     * O(candidates · doc size) compute with corpus-ROW-count (not exploded
     * shingle-count) join inputs, r13: replaced two exploded-frame shuffles
     * + a groupBy with two doc-count joins (q_ppjoin 2.1 → measured below).
-    */
-  def prefixFilterJaccardPairs(docs: DataFrame, k: Int, threshold: Double): DataFrame =
-    prefixFilterJaccardPairsFromShingles(
-      withShingles(docs, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      threshold)
-
-  /** [[prefixFilterJaccardPairs]] with pass 1's `(id, sh)` shingle frame
+    *
+    * Input: pass 1's `(id, sh)` shingle frame
     * supplied by the caller — the entry point when the corpus shingles are
     * already materialized (BASELINE.md §Amortization: tokenization
     * amortizes; the prefix ranking, candidate join, and exact verification
@@ -914,14 +892,8 @@ object Dedup {
     * Scale shape: O(collisions of rare shingles), never all-pairs; both
     * join sides corpus-sized ⇒ shuffle-hash hinted (the file-size-derived
     * broadcast trap, see [[jaccardPairsFromShingles]]).
-    */
-  def tfCosinePairs(docs: DataFrame, k: Int, threshold: Double): DataFrame =
-    tfCosinePairsFromTf(
-      shingleTf(docs, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      threshold)
-
-  /** [[tfCosinePairs]] with the `(id, shingle, tf)` multiset frame
+    *
+    * Input: the `(id, shingle, tf)` multiset frame
     * supplied by the caller — the entry point when the corpus shingle TF
     * table is already materialized (BASELINE.md §Amortization: shingling
     * amortizes; the df cut, norms, dot join, and cosine verification stay
@@ -971,9 +943,8 @@ object Dedup {
     * runs per candidate, never per cross pair. No sort anywhere.
     */
   def editDistancePairs(df: DataFrame, keyCol: String, maxDist: Int,
-                        prefixLen: Int = 4,
-                        idCol: String = "doc_id"): DataFrame = {
-    val keyed = df.select(col(idCol).as("id"), col(keyCol).as("k"))
+                        prefixLen: Int = 4): DataFrame = {
+    val keyed = df.select(col("doc_id").as("id"), col(keyCol).as("k"))
       .filter(length(col("k")) >= prefixLen)
       .withColumn("blk", substring(col("k"), 1, prefixLen))
     keyed.as("a").hint("shuffle_hash")

@@ -24,18 +24,17 @@ import org.apache.spark.sql.functions._
   */
 object DupClusters {
 
-  /** Each undirected pair once as (u = min, v = max) longs, self-loops
+  /** Each undirected `(id_a, id_b)` pair once as (u = min, v = max) longs, self-loops
     * dropped: the edge set every pair-keyed graph kernel below starts from.
     */
-  private def undirectedEdges(pairs: DataFrame, idA: String,
-                              idB: String): DataFrame =
+  private def undirectedEdges(pairs: DataFrame): DataFrame =
     pairs.select(
-        least(col(idA).cast("long"), col(idB).cast("long")).as("u"),
-        greatest(col(idA).cast("long"), col(idB).cast("long")).as("v"))
+        least(col("id_a").cast("long"), col("id_b").cast("long")).as("u"),
+        greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
 
   /** Per-node triangle participation counts over the undirected edge set
-    * `pairs(idA, idB)` — the clustering-coefficient core of duplicate-graph
+    * `pairs(id_a, id_b)` — the clustering-coefficient core of duplicate-graph
     * analysis (a near-dup pair inside a dense triangle cluster is template
     * boilerplate; an isolated pair is a genuine copy).
     *
@@ -52,12 +51,11 @@ object DupClusters {
     * Scale shape: a degree aggregate, two equi-joins keyed on single node
     * ids / rank-ordered pairs, one explode+count — no cartesian anywhere.
     */
-  def triangleCounts(pairs: DataFrame, idA: String = "id_a",
-                     idB: String = "id_b"): DataFrame = {
+  def triangleCounts(pairs: DataFrame): DataFrame = {
     // normalize to (least, greatest) BEFORE distinct: an edge list carrying
     // both orientations (a,b) and (b,a) would otherwise survive as two rows,
     // doubling degrees and multiply-counting every triangle
-    val e0 = undirectedEdges(pairs, idA, idB)
+    val e0 = undirectedEdges(pairs)
     val tris = orientedTriangles(e0)
     tris.select(explode(array(col("x"), col("a"), col("b"))).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_triangles"))
@@ -106,7 +104,7 @@ object DupClusters {
     * kept at support 0 via the outer join.
     */
   def edgeTriangleSupport(pairs: DataFrame): DataFrame = {
-    val e0 = undirectedEdges(pairs, "id_a", "id_b")
+    val e0 = undirectedEdges(pairs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val triEdges = orientedTriangles(e0)
       .select(explode(array(
@@ -141,7 +139,7 @@ object DupClusters {
   def kTrussPeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k must be >= 3, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = undirectedEdges(pairs, "id_a", "id_b")
+    var e = undirectedEdges(pairs)
       .anchor(Bound.Fixture)
     def roundSupport(edges: DataFrame): DataFrame =
       orientedTriangles(edges)
@@ -193,7 +191,7 @@ object DupClusters {
     // labels is one (node, lbl) row per node — node-set-sized, the anchor
     // envelope class (see SCALE.md r18). q_label_prop A/B x4 interleaved,
     // exact-equal: 1.14-1.60 s (24 jobs) -> 0.67-0.93 (16 jobs).
-    val e = undirectedEdges(pairs, "id_a", "id_b")
+    val e = undirectedEdges(pairs)
       .anchor(Bound.Fixture)
     val nodes = e.select(col("u").as("n")).union(e.select(col("v").as("n"))).distinct()
     var labels = nodes.select(col("n"), col("n").as("lbl"))
@@ -238,7 +236,7 @@ object DupClusters {
   def kCorePeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be non-negative, got $rounds")
-    var e = undirectedEdges(pairs, "id_a", "id_b")
+    var e = undirectedEdges(pairs)
       .anchor(Bound.Fixture)
     (1 to rounds).foreach { _ =>
       val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
@@ -267,7 +265,7 @@ object DupClusters {
     * the join is distinct + counts on node keys.
     */
   def twoHopNeighbors(pairs: DataFrame): DataFrame = {
-    val e = undirectedEdges(pairs, "id_a", "id_b")
+    val e = undirectedEdges(pairs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val adj = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -314,7 +312,7 @@ object DupClusters {
     // that reproduced the driver's 3.2 s q_link_prediction reading:
     // 4.0-6.0 s with two lazy persists → 0.63 s anchored, identical rows).
     // Eager: calling this operator runs the edge-normalization job at once.
-    val e = undirectedEdges(pairs, "id_a", "id_b")
+    val e = undirectedEdges(pairs)
       .anchor(Bound.Fixture)
     val adj = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
     val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -386,8 +384,9 @@ object DupClusters {
         col("quality_score").as("canon_score"), col("n_members"))
   }
 
-  /** Fixed-point PageRank over the undirected pair graph: probabilities are
-    * scaled integers (`scale` = 1.0) and every division is a floor — so the
+  /** Two-iteration fixed-point PageRank over the undirected pair graph:
+    * probabilities are scaled integers (`scale` = 10¹² = 1.0) and every
+    * division is a floor — so the
     * result is bit-reproducible on any engine, cluster, or partitioning,
     * unlike floating PageRank whose per-node neighbor sums depend on
     * reduction order. Per iteration:
@@ -399,11 +398,10 @@ object DupClusters {
     * id-keyed join (contributions) and one aggregate (neighbor sum) — the
     * classic message-passing round, lineage-truncated like
     * [[connectedComponents]]. Overflow bound: 85 · deg(v) · scale must fit
-    * int64, i.e. max degree ≲ 10⁵ at the default scale — lower `scale` for
-    * denser graphs.
+    * int64, i.e. max degree ≲ 10⁵.
     */
-  def pageRankFixedPoint(pairs: DataFrame, iterations: Int = 2,
-                         scale: Long = 1000000000000L): DataFrame = {
+  def pageRankFixedPoint(pairs: DataFrame): DataFrame = {
+    val scale = 1000000000000L
     val e = pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .filter(col("u") =!= col("v")).distinct()
     val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
@@ -413,7 +411,7 @@ object DupClusters {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val base = 15L * scale / 100L
     var pr = deg.select(col("u").as("id"), lit(scale).as("pr"))
-    (1 to iterations).foreach { _ =>
+    (1 to 2).foreach { _ =>
       pr = edges.join(pr, edges("u") === pr("id"))
         .select(col("v"), expr("pr div du").as("c"))
         .groupBy(col("v"))
@@ -469,7 +467,7 @@ object DupClusters {
   }
 
   /** (id, component) for every node of the undirected edge set
-    * `pairs(idA, idB)`; `component` is the smallest node id reachable from
+    * `pairs(id_a, id_b)`; `component` is the smallest node id reachable from
     * `id` (so planted-duplicate groups get their original doc as canon).
     */
   def connectedComponents(pairs: DataFrame): DataFrame = {
@@ -531,10 +529,9 @@ object DupClusters {
   /** Deterministic random-walk corpus for graph-embedding training
     * (DeepWalk/node2vec's data-generation stage): one `steps`-hop walk per
     * start node, where the "random" neighbor choice at step s is the
-    * argmin of `md5(seed:walk:s:neighbor)` over the adjacency — a seeded
+    * argmin of `md5("walk":walk:s:neighbor)` over the adjacency — a seeded
     * pseudo-random draw that is exactly reproducible on any cluster (the
-    * same md5-permutation discipline as the sampling family; re-seed for
-    * fresh walks). Dead ends stay put (self-hold), so every walk has full
+    * same md5-permutation discipline as the sampling family). Dead ends stay put (self-hold), so every walk has full
     * length. Output: (walk, step1 … stepN).
     *
     * Scale shape: per step, one equi-join on the current node (O(Σ degree)
@@ -545,32 +542,12 @@ object DupClusters {
     * visited by W walks ships O(W · tasks) partials, not W·10⁶ sorted rows.
     * Steps are a small constant and walk state is one row per walk. The walk
     * corpus feeds skip-gram samplers exactly like a token corpus.
-    *
-    * Hub valve (`maxDegree`): when set, each node's adjacency is first cut
-    * to its `maxDegree` neighbors of smallest `md5(seed:deg:u:v)` — a
-    * deterministic per-node subsample, built once (one window over the edge
-    * table, cost O(Σ degree), no walk multiplier). DISCLOSED BIAS: walks
-    * then explore the capped subgraph, so edges outside a hub's retained
-    * sample are never traversed — acceptable for embedding-corpus
-    * generation (DeepWalk samples neighborhoods anyway), not for exact
-    * reachability. Default (None) is exact over the full adjacency.
     */
-  def randomWalks(edges: DataFrame, steps: Int, seed: String = "walk",
-                  maxDegree: Option[Int] = None): DataFrame = {
-    val fullAdj = edges.select(col("id_a").as("u"), col("id_b").as("v"))
+  def randomWalks(edges: DataFrame, steps: Int): DataFrame = {
+    val adjP = edges.select(col("id_a").as("u"), col("id_b").as("v"))
       .unionByName(edges.select(col("id_b").as("u"), col("id_a").as("v")))
       .distinct()
-    val adj = maxDegree match {
-      case None => fullAdj
-      case Some(d) =>
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("u")).orderBy(
-          md5(concat_ws(":", lit(seed), lit("deg"), col("u"), col("v"))),
-          col("v"))
-        fullAdj.withColumn("__dr", row_number().over(w))
-          .filter(col("__dr") <= d).drop("__dr")
-    }
-    val adjP = adj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = adjP.select(col("u")).distinct()
     var walk = nodes.select(col("u").as("walk"), col("u").as("cur"))
     (1 to steps).foreach { s =>
@@ -581,7 +558,7 @@ object DupClusters {
       // struct reproduces row_number-over-(md5, nxt) pick #1 exactly, with
       // the tie-break inside the ordering key so the argmin is total
       val key = struct(
-        md5(concat_ws(":", lit(seed), col("walk"), lit(s), col("nxt"))),
+        md5(concat_ws(":", lit("walk"), col("walk"), lit(s), col("nxt"))),
         col("nxt"))
       val carried = walk.columns.filter(c => c != "walk" && c != "cur")
         .map(c => min(col(c)).as(c)) // constant within the group: exact carry
@@ -665,37 +642,6 @@ object DupClusters {
         .otherwise(lit(null).cast("double")))
   }
 
-  /** Per-node local clustering coefficient C(v) = 2·T(v) / (d(v)·(d(v)−1))
-    * — the node-level companion of the global transitivity audit: on a
-    * near-dup or co-occurrence graph, high-C nodes sit inside mutually
-    * corroborated template families while low-C high-degree nodes are
-    * hubs whose neighbors are unrelated (the ones link-prediction valves
-    * and walk caps exist for).
-    *
-    * Triangle counts come from the skew-safe compact-forward enumeration
-    * ([[triangleCounts]] — wedge fan-out O(√m)-bounded, never low-id-
-    * celebrity deg²); degrees from one explode + map-combined count. The
-    * coefficient is ONE gated division of exact longs, so rows hash-match
-    * the naive per-corner oracle. Isolated-from-triangles nodes keep
-    * `n_triangles = 0`; `clustering` is NULL for degree < 2 (undefined,
-    * not 0 — a leaf is not "perfectly un-clustered").
-    */
-  def clusteringCoefficient(pairs: DataFrame): DataFrame = {
-    val e0 = undirectedEdges(pairs, "id_a", "id_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e0.select(explode(array(col("u"), col("v"))).as("node_id"))
-      .groupBy(col("node_id")).agg(count(lit(1)).as("degree"))
-    val tri = triangleCounts(e0, "u", "v")
-      .select(col("doc_id").as("node_id"), col("n_triangles"))
-    deg.join(tri, Seq("node_id"), "left_outer")
-      .select(col("node_id"), col("degree"),
-        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
-      .withColumn("clustering",
-        when(col("degree") >= 2,
-          (col("n_triangles") * 2).cast("double") /
-            (col("degree") * (col("degree") - 1)).cast("double")))
-  }
-
   /** Newman modularity Q of a GIVEN node partition over the undirected
     * `pairs` graph — the quality score that tells you whether a community
     * assignment (label propagation output, a blocking scheme, a shard
@@ -710,7 +656,7 @@ object DupClusters {
     * one final fold. Nothing is ever quadratic in nodes or communities.
     */
   def modularity(pairs: DataFrame, communities: DataFrame): DataFrame = {
-    val e = undirectedEdges(pairs, "id_a", "id_b")
+    val e = undirectedEdges(pairs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cm = communities.select(col("node_id").cast("long").as("n"),
       col("community").as("c"))

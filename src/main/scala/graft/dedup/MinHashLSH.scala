@@ -50,12 +50,6 @@ object MinHashLSH {
         .minhashAgg(pmod(xxhash64(col("s")), lit(P)), ps, P).as("sig"))
   }
 
-  /** doc_id, signature array<long> of length `numHashes`. Empty-shingle docs
-    * (shorter than k tokens) are dropped — they have no resemblance sketch.
-    */
-  def signatures(docs: DataFrame, k: Int, numHashes: Int): DataFrame =
-    signaturesFromShingles(Dedup.withShingles(docs, k), numHashes)
-
   /** Oracle-REPLAYABLE signatures over STRING shingles
     * ([[Dedup.withStringShingles]]): the base hash is the md5-u32 uniform
     * ([[graft.functions.Md5Field.md5U32]] — bit-exact in DuckDB via the
@@ -107,10 +101,12 @@ object MinHashLSH {
         .ophAgg(pmod(xxhash64(col("s")), lit(P)), a, b, P, buckets).as("sig"))
   }
 
-  /** [[nearDuplicatesFromShingles]] with one-permutation signatures. */
-  def nearDuplicatesOPH(sh: DataFrame, buckets: Int = 64, bands: Int = 16): DataFrame = {
-    val cands = candidatePairs(signaturesOPH(sh, buckets), bands)
-    verifyExact(cands, sh, 0.8)
+  /** [[nearDuplicatesFromShingles]] with 64-bucket one-permutation
+    * signatures in 16 bands.
+    */
+  def nearDuplicatesOPH(sh: DataFrame): DataFrame = {
+    val cands = candidatePairs(signaturesOPH(sh, 64), 16)
+    verifyExact(cands, sh)
   }
 
   /** The banded LSH index itself — (id, band, bucket), `bands` rows per
@@ -142,40 +138,38 @@ object MinHashLSH {
   def candidatePairs(sigs: DataFrame, bands: Int): DataFrame =
     candidatePairsFromBands(bandTable(sigs, bands))
 
-  /** Full pipeline: candidates verified with *exact* shingle Jaccard (the
-    * sketch only prunes; it never asserts).
+  /** Full pipeline over 5-token shingles, 128 hashes in 32 bands:
+    * candidates verified with *exact* shingle Jaccard ≥ 0.8 (the sketch only
+    * prunes; it never asserts).
     */
-  def nearDuplicates(docs: DataFrame, k: Int = 5, numHashes: Int = 128,
-                     bands: Int = 32, threshold: Double = 0.8): DataFrame = {
+  def nearDuplicates(docs: DataFrame): DataFrame = {
     // the shingle frame feeds three plan branches (signatures + both sides of
     // the verification join); persist so shingling runs once, not three times
     // — at cluster scale this is the sketch table you would checkpoint
-    val sh = Dedup.withShingles(docs, k)
+    val sh = Dedup.withShingles(docs, 5)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    nearDuplicatesFromShingles(sh, numHashes, bands, threshold)
+    nearDuplicatesFromShingles(sh, 128, 32)
   }
 
   /** [[nearDuplicates]] from an already-shingled, nonempty-filtered (id, sh)
     * frame (caller owns persistence — pass a persisted frame so shingling
     * runs once across the sketch and any exact baseline sharing it).
     */
-  def nearDuplicatesFromShingles(sh: DataFrame, numHashes: Int, bands: Int,
-                                 threshold: Double = 0.8): DataFrame = {
+  def nearDuplicatesFromShingles(sh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     val cands = candidatePairs(signaturesFromShingles(sh, numHashes), bands)
-    verifyExact(cands, sh, threshold)
+    verifyExact(cands, sh)
   }
 
-  /** Exact-Jaccard verification of a candidate pair set against the shingle
+  /** Exact-Jaccard verification (≥ 0.8) of a candidate pair set against the shingle
     * frame: the sketch only prunes; this asserts.
     */
-  private def verifyExact(cands: DataFrame, sh: DataFrame,
-                          threshold: Double): DataFrame =
+  private def verifyExact(cands: DataFrame, sh: DataFrame): DataFrame =
     cands
       .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
       .withColumn("intersection", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("jaccard", col("intersection").cast("double") /
         (size(col("sh_a")) + size(col("sh_b")) - col("intersection")).cast("double"))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= 0.8)
       .select("id_a", "id_b", "jaccard")
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   *
   * 64-bit fingerprint: each token votes ±1 on every bit position of its
   * 64-bit hash; fingerprint bit k is 1 iff the vote sum is positive.
-  * Near-duplicates = fingerprints within `maxHamming` bits, found via the
+  * Near-duplicates = fingerprints within `MaxHamming` = 3 bits, found via the
   * Manku block trick: two fingerprints within d bits must agree exactly on at
   * least one of d+1 blocks — candidates come from an equi-join on
   * (block_idx, block_value), then exact `bit_count(xor)` verification.
@@ -47,9 +47,11 @@ object SimHash {
         when(col("tok").isNotNull, xxhash64(col("tok")))).as("fp"))
   }
 
-  /** Near-dup pairs with Hamming distance ≤ maxHamming via block-join. */
-  def nearDuplicates(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val blocks = maxHamming + 1
+  private val MaxHamming = 3
+
+  /** Near-dup pairs with Hamming distance ≤ [[MaxHamming]] via block-join. */
+  def nearDuplicates(docs: DataFrame): DataFrame = {
+    val blocks = MaxHamming + 1
     val width = 64 / blocks
     val fps = fingerprints(docs)
     // the blocked frame is both sides of the self-join; persist the (tiny)
@@ -67,7 +69,7 @@ object SimHash {
         col("a.fp").as("fp_a"), col("b.fp").as("fp_b"))
       .distinct()
       .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= MaxHamming)
       .select("id_a", "id_b", "hamming")
   }
 }

@@ -43,7 +43,7 @@ case class NormalizeUnicode(child: Expression, form: String) extends UnaryExpres
 }
 
 object NormalizeUnicode {
-  /** Column wrapper: Unicode-normalize a string column (default NFC). */
-  def normalizeUnicode(c: Column, form: String = "NFC"): Column =
-    ColumnBridge.column(NormalizeUnicode(ColumnBridge.expression(c), form))
+  /** Column wrapper: NFC-normalize a string column. */
+  def normalizeUnicode(c: Column): Column =
+    ColumnBridge.column(NormalizeUnicode(ColumnBridge.expression(c), "NFC"))
 }

@@ -9,12 +9,16 @@ import scala.jdk.CollectionConverters._
 
 /** Table-maintenance operators (SURVEY.md §2.11) over a plain-parquet,
   * directory-partitioned layout — the Spark analog of the reference's Trino
-  * `DELETE`/`optimize`/`ANALYZE` cycle (`config/flink/cleanup.sql`).
+  * `DELETE`/`optimize` cycle (`config/flink/cleanup.sql`). Its `ANALYZE`
+  * step is Spark's own `ANALYZE TABLE … COMPUTE STATISTICS` statement,
+  * which needs no wrapper here.
   *
   * Each in-place writer drops the table's manifest
   * ([[TableIndex.dropManifest]]) before it touches a file, so a
   * `Layout.writeFact` table is never opened from a file list that no
-  * longer matches its directories.
+  * longer matches its directories. Each refuses a table written by a
+  * streaming file sink ([[TableIndex.requireNoSinkLog]]), whose log would
+  * go on naming the files it replaced or deleted.
   */
 object Maintenance {
 
@@ -43,6 +47,7 @@ object Maintenance {
     */
   def retentionDelete(spark: SparkSession, path: String, dayCol: String,
                       days: Int, asOf: java.time.LocalDate): Seq[String] = {
+    TableIndex.requireNoSinkLog(spark, path)
     TableIndex.dropManifest(spark, path)
     val cutoff = asOf.minusDays(days.toLong).toString
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -76,6 +81,7 @@ object Maintenance {
   def compactPartition(spark: SparkSession, path: String, dayCol: String,
                        day: String): Unit = {
     val partPath = s"$path/$dayCol=$day"
+    TableIndex.requireNoSinkLog(spark, partPath)
     TableIndex.dropManifest(spark, partPath)
     Promote.recover(spark, partPath)
     val part = new Path(partPath)
@@ -108,17 +114,12 @@ object Maintenance {
     codec.toMap ++ (if (bloomed.isEmpty) Map.empty else Layout.bloomOptions(bloomed))
   }
 
-  /** Stats refresh (M4, `cleanup.sql:33-38`): ANALYZE over a catalog table. */
-  def analyze(spark: SparkSession, table: String, columns: Seq[String] = Nil): Unit = {
-    val forCols = if (columns.nonEmpty) s" FOR COLUMNS ${columns.mkString(", ")}" else ""
-    spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS$forCols")
-  }
-
   /** Dynamic partition overwrite: rewrite only the partitions present in `df`
     * — the write half of the upsert-at-scale pattern (pairs with
     * `Upsert.upsert` output restricted to changed partitions).
     */
   def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
+    TableIndex.requireNoSinkLog(df.sparkSession, path)
     TableIndex.dropManifest(df.sparkSession, path)
     df.write
       .option("partitionOverwriteMode", "dynamic")

@@ -183,41 +183,6 @@ object Versioned {
   def commit(df: DataFrame, tableDir: String, append: Boolean = true): Int =
     commitCore(df, tableDir, None, append, None)
 
-  /** Optimistic commit WITH key-overlap validation (Iceberg's
-    * `validateNoConflictingData` analog): the caller claims its rows only
-    * touch `df`'s key set and that it read snapshot `expectedVersion`. If
-    * the head advanced, it diffs `expectedVersion → head` ([[changedKeys]]
-    * — the same check [[branchConflicts]] uses) and intersects with the
-    * incoming keys: disjoint ⇒ the interleaved commits are independent and
-    * the append lands on the validated head; overlapping ⇒ throws
-    * `ConcurrentModificationException` with sample keys, because appending
-    * would silently double-write a key both writers touched. A commit that
-    * lands after the validation also throws it.
-    */
-  def commitAtomicChecked(df: DataFrame, tableDir: String, keys: Seq[String],
-                          expectedVersion: Int): Int = {
-    import org.apache.spark.sql.functions.col
-    val spark = df.sparkSession
-    val incomingKeys = df.select(keys.map(col): _*).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val head = versions(spark, tableDir).lastOption.getOrElse(0)
-      if (head != expectedVersion) {
-        val baseDf =
-          if (expectedVersion == 0) read(spark, tableDir, Some(head)).limit(0)
-          else read(spark, tableDir, Some(expectedVersion))
-        val moved = changedKeys(baseDf, read(spark, tableDir, Some(head)), keys)
-        val sample = moved.join(incomingKeys, keys, "inner").limit(5).collect()
-        if (sample.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"commit validated against v$expectedVersion but head is v$head " +
-              "with overlapping keys: " +
-              sample.map(_.toSeq.mkString("(", ",", ")")).mkString(", "))
-      }
-      commitCore(df, tableDir, None, append = true, readVersion = Some(head))
-    } finally { incomingKeys.unpersist(); () }
-  }
-
   /** Read a snapshot (default: latest). Time travel = pass an old version. */
   def read(spark: SparkSession, tableDir: String,
            version: Option[Int] = None): DataFrame = {
@@ -232,8 +197,8 @@ object Versioned {
     * key-dedup merge ([[graft.ops.Upsert]]), commit as a logical overwrite
     * computed from that head. The manifest CAS makes the merge atomic —
     * readers see the old or the new table, never a partial rewrite
-    * (strictly stronger than the backup-swap file dance in
-    * `StreamingIngest.upsertFullSwap`) — and a concurrent commit that lands
+    * (strictly stronger than the backup-swap file dance of
+    * [[Promote.replace]]) — and a concurrent commit that lands
     * first makes this one throw instead of being overwritten. The pre-merge
     * snapshot stays time-travelable until expired. New data files land in a
     * fresh `data/<uuid>` directory, so the merge never overwrites files it
@@ -439,19 +404,23 @@ object Versioned {
     expired
   }
 
+  /** Age below which [[removeOrphanFiles]] keeps an unreferenced file:
+    * three days, Iceberg's default `older_than`.
+    */
+  private val OrphanMinAgeMs = 3L * 24 * 60 * 60 * 1000
+
   /** M2 `remove_orphan_files`: delete data files no retained manifest
     * references — crash debris, failed writes and expired-snapshot
-    * remnants. `minAgeMs` protects data of in-flight commits (files younger
-    * than the horizon are kept even if unreferenced), exactly Iceberg's
-    * `older_than` guard. A commit's `data/<uuid>` dir goes as a whole, with
+    * remnants. [[OrphanMinAgeMs]] protects data of in-flight commits (files
+    * younger than the horizon are kept even if unreferenced), exactly
+    * Iceberg's `older_than` guard. A commit's `data/<uuid>` dir goes as a whole, with
     * its `_SUCCESS` marker and checksums, once none of its files is
     * referenced and none is younger than the horizon; otherwise its
     * unreferenced old files go one by one (a checksummed `FileSystem`, such
     * as the local one, deletes each file's `.crc` sidecar with it).
     * Returns the deleted parquet files, relative to `tableDir`.
     */
-  def removeOrphanFiles(spark: SparkSession, tableDir: String,
-                        minAgeMs: Long = 0L): Seq[String] = {
+  def removeOrphanFiles(spark: SparkSession, tableDir: String): Seq[String] = {
     val f = fs(spark, tableDir)
     val referenced = (None +: branches(spark, tableDir).map(Some(_))).flatMap(ref =>
       refVersions(spark, tableDir, ref).flatMap(v => readManifest(spark, tableDir, ref, v)))
@@ -459,7 +428,7 @@ object Versioned {
     val dataRoot = new Path(tableDir, "data")
     if (!f.exists(dataRoot)) return Seq.empty
     val root = new Path(tableDir)
-    val horizon = System.currentTimeMillis() - minAgeMs
+    val horizon = System.currentTimeMillis() - OrphanMinAgeMs
     f.listStatus(dataRoot).toSeq.flatMap { entry =>
       val files = TableIndex.listEntries(spark, root, entry.getPath)(_ => true)
       // only data files: committer markers (_SUCCESS) are not manifest-tracked

@@ -426,7 +426,7 @@ object Multimodal {
     */
   def phashIncrementalBucketed(v1BandsTable: String, delta: DataFrame,
                                all: DataFrame, isV1: Column,
-                               numSalts: Int = 1): DataFrame = {
+                               numSalts: Int): DataFrame = {
     require(numSalts >= 1, s"numSalts must be >= 1, got $numSalts")
     val s = delta.sparkSession
     val deltaBands = phashBands(delta).anchor(Bound.Fixture)
@@ -746,14 +746,6 @@ object Multimodal {
     }
   }
 
-  /** Deterministic frame sampling for a time-dimension payload: n evenly
-    * spaced byte offsets standing in for frame indices.
-    */
-  def frameOffsets(nBytes: org.apache.spark.sql.Column,
-                   frames: Int): org.apache.spark.sql.Column =
-    transform(sequence(lit(0), lit(frames - 1)),
-      i => (nBytes * i / frames).cast("long"))
-
   /** ViT-style patch grid: one row per (image, patch) with pixel
     * coordinates; edge patches are clipped to the image. Pure narrow double
     * explode over the *metadata* columns — the blob is never touched, no
@@ -774,25 +766,6 @@ object Multimodal {
         least(lit(patch), col("height") - col("py") * patch).as("ph"))
   }
 
-  /** Resize stub: recomputes target dims preserving aspect ratio (the real
-    * math any resizer does) and fakes the payload as a truncation
-    * proportional to the pixel reduction — a real codec swaps only the byte
-    * transform, the column plumbing is identical.
-    */
-  def resizeStub(spark: SparkSession, media: DataFrame, maxDim: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.map { r =>
-        val scale = math.min(1.0, maxDim.toDouble / math.max(r.width, r.height))
-        val (w2, h2) = (math.max(1, (r.width * scale).toInt),
-          math.max(1, (r.height * scale).toInt))
-        val bytes = if (r.media == null) Array.empty[Byte] else r.media
-        val keep = math.max(1, (bytes.length * scale * scale).toInt)
-        r.copy(media = bytes.take(keep), width = w2, height = h2)
-      }
-    }
-  }
-
   /** Aspect-preserving downscale dims in pure integer math —
     * `w2 = max(1, w·maxDim / max(w,h))` (no-op when already within bounds).
     * Integer division, not a floating `scale` factor: `floor(w * 8/15.0)`
@@ -810,9 +783,10 @@ object Multimodal {
     * nearest-neighbor downscale (`src = dst · srcDim / dstDim`, integer
     * math — deterministic and oracle-reproducible, unlike interpolating
     * `Graphics2D` filters whose rounding is implementation-defined), then
-    * re-encode PNG. Payloads ImageIO cannot parse fall back to the
-    * [[resizeStub]] byte-truncation shape with the same [[fitDims]] metadata
-    * math — DLQ-style tolerance, matching [[decodeImage]].
+    * re-encode PNG. Payloads ImageIO cannot parse fall back to a byte
+    * truncation proportional to the pixel reduction, with the same
+    * [[fitDims]] metadata math — DLQ-style tolerance, matching
+    * [[decodeImage]].
     */
   def resizeImage(spark: SparkSession, media: DataFrame, maxDim: Int): Dataset[MediaRow] = {
     import spark.implicits._

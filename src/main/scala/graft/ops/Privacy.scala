@@ -131,9 +131,9 @@ object Privacy {
 
   /** Warner randomized response (1965) — the local-privacy collection
     * primitive: each row reports its true boolean with probability
-    * p = `pNum`/`pDen` and the flipped value otherwise, so no individual
-    * report is trustworthy, yet the population count debiases exactly:
-    * t̂ = (pDen·observed − (pDen−pNum)·n) / (2·pNum − pDen).
+    * p = 3/4 and the flipped value otherwise, so no individual report is
+    * trustworthy, yet the population count debiases exactly:
+    * t̂ = (4·observed − n) / 2.
     *
     * The coin is the deterministic md5 uniform over `idCol` under `seed`
     * (reproducible on any cluster — the library-wide draw discipline), so
@@ -145,13 +145,11 @@ object Privacy {
     *
     * Returns one row: `n`, `true_cnt` (audit-only — the collector cannot
     * see it in production), `observed`, the exact integer `est_num` =
-    * pDen·observed − (pDen−pNum)·n, and `est` = est_num/(2·pNum−pDen),
-    * one division.
+    * 4·observed − n, and `est` = est_num/2, one division.
     */
   def randomizedResponse(df: DataFrame, idCol: Column, truth: Column,
-                         seed: String, pNum: Int = 3, pDen: Int = 4): DataFrame = {
-    require(pDen > 0 && pNum * 2 > pDen && pNum <= pDen,
-      s"need 1/2 < p = $pNum/$pDen <= 1 for an identifiable estimator")
+                         seed: String): DataFrame = {
+    val (pNum, pDen) = (3, 4)
     val draw = pmod(
       graft.functions.Md5Field.md5U32(
         concat(lit(s"rr:$seed:"), idCol.cast("string"))),

@@ -33,16 +33,16 @@ object Sampling {
     * keys are an exact weighted-without-replacement sample (a row's inclusion
     * probability is proportional to its weight at every step). The uniform
     * `u ∈ (0,1)` is *deterministic*: the first 8 hex chars of
-    * `md5(seed || id)` as a 32-bit integer, then `(h + 0.5) / 2^32` — same
+    * `md5("aes" || id)` as a 32-bit integer, then `(h + 0.5) / 2^32` — same
     * md5-permutation discipline as [[stratifiedSample]], same sample on any
-    * cluster/partitioning/rerun; varying `seed` redraws. (Java
+    * cluster/partitioning/rerun. (Java
     * `String.hashCode` is NOT usable here: it is monotonic in trailing
     * digits of equal-length keys, which would silently turn the draw into
     * "highest ids win".) Weights must be strictly positive.
     */
-  private def aesKey(id: Column, weight: Column, seed: String): Column = {
+  private def aesKey(id: Column, weight: Column): Column = {
     val h = graft.functions.Md5Field.md5U32(
-      concat(lit(seed), id.cast("string")))
+      concat(lit("aes"), id.cast("string")))
     // (h + 0.5) / 2^32 is exact in double (division by a power of two). The
     // A-ES key u^(1/w) is ranked in the log domain — ln(u)/w orders
     // identically (ln is monotone, w > 0) but needs ONE transcendental where
@@ -58,9 +58,8 @@ object Sampling {
     * local top-n, no global sort, no single-reducer window — so the draw
     * scales to any corpus size.
     */
-  def weightedSample(df: DataFrame, weight: Column, n: Int, id: Column,
-                     seed: String = "aes"): DataFrame =
-    df.withColumn("__aes", aesKey(id, weight, seed))
+  def weightedSample(df: DataFrame, weight: Column, n: Int, id: Column): DataFrame =
+    df.withColumn("__aes", aesKey(id, weight))
       .orderBy(col("__aes").desc, id)
       .limit(n)
       .drop("__aes")
@@ -73,33 +72,31 @@ object Sampling {
   def weightedStratifiedSample(df: DataFrame, stratum: Column, weight: Column,
                                n: Int, id: Column): DataFrame = {
     val w = Window.partitionBy(stratum).orderBy(col("__aes").desc, id)
-    df.withColumn("__aes", aesKey(id, weight, "aes"))
+    df.withColumn("__aes", aesKey(id, weight))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= n)
       .drop("__aes", "__rn")
   }
 
   /** Seeded negative sampling for contrastive / recommender training: for
-    * each user in `positives` (user, item), up to `k` catalog items the user
-    * has NOT interacted with, drawn by deterministic rejection sampling.
+    * each user in `positives` (user, item), up to k = 3 catalog items the
+    * user has NOT interacted with, drawn by deterministic rejection sampling.
     *
     * The naive form — `users × catalog` anti-join positives, then sample —
     * is a cartesian product (|users|·|catalog| rows; at 100 TB, fatal). This
-    * implementation probes instead: each user generates `probes` candidate
-    * items via the md5 uniform (`item = min + md5U32(seed:user:i) mod n`),
+    * implementation probes instead: each user generates 12 candidate
+    * items via the md5 uniform (`item = min + md5U32("neg":user:i) mod n`),
     * duplicates within a user keep only their first probe, positives are
     * removed with ONE distributed anti-join, and the first `k` survivors by
     * probe index win. Cost is O(|users| · probes) regardless of catalog
-    * size; `probes` only needs to exceed `k` by the expected collision +
+    * size; the probes only need to exceed k by the expected collision +
     * positive-hit margin (probes ≥ k + |positives per user| · probes / n in
-    * expectation — the default 12-vs-3 margin is ample for catalogs ≥ 100×
-    * the per-user history). Catalog min/count arrive as a 1-row broadcast,
-    * never a driver collect. Fully deterministic: same seed, same negatives,
-    * any cluster, any partitioning.
+    * expectation — the 12-vs-3 margin is ample for catalogs ≥ 100× the
+    * per-user history). Catalog min/count arrive as a 1-row broadcast,
+    * never a driver collect. Fully deterministic: same negatives on any
+    * cluster, any partitioning.
     */
-  def negativeSample(positives: DataFrame, catalogIds: DataFrame,
-                     k: Int = 3, probes: Int = 12,
-                     seed: String = "neg"): DataFrame = {
+  def negativeSample(positives: DataFrame, catalogIds: DataFrame): DataFrame = {
     val userCol = positives.columns(0)
     val itemCol = positives.columns(1)
     val catCol = catalogIds.columns(0)
@@ -108,9 +105,9 @@ object Sampling {
       min(col(catCol)).as("__min_item"))
     val cand = positives.select(col(userCol)).distinct()
       .crossJoin(broadcast(stats))
-      .withColumn("probe_idx", explode(sequence(lit(0), lit(probes - 1))))
+      .withColumn("probe_idx", explode(sequence(lit(0), lit(11))))
       .withColumn("__u32",
-        graft.functions.Md5Field.md5U32(concat(lit(seed), lit(":"),
+        graft.functions.Md5Field.md5U32(concat(lit("neg"), lit(":"),
           col(userCol).cast("string"), lit(":"),
           col("probe_idx").cast("string"))))
       .withColumn("neg_item",
@@ -124,7 +121,7 @@ object Sampling {
       .join(positives.select(col(userCol), col(itemCol).as("neg_item")).distinct(),
         Seq(userCol, "neg_item"), "left_anti")
       .withColumn("__rk", row_number().over(byUser))
-      .filter(col("__rk") <= k)
+      .filter(col("__rk") <= 3)
       .select(col(userCol), col("neg_item"), col("probe_idx"))
   }
 

@@ -84,7 +84,7 @@ object CurationQueries {
       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** Token-level decontamination by VERBATIM RUN
-    * ([[graft.dedup.Dedup.benchmarkTokenRuns]]), the contiguous-overlap
+    * ([[graft.dedup.Dedup.benchmarkTokenRunsFromPositional]]), the contiguous-overlap
     * complement of [[decontaminateQ]]'s scattered distinct-shingle count:
     * corpus docs sharing a ≥15-token consecutive run with any benchmark
     * doc. Planted leaks: full copies (`xleak ` prefix, +3M — the run is

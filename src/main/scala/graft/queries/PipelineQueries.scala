@@ -74,7 +74,7 @@ object PipelineQueries {
       |FROM aug GROUP BY md5(text) HAVING count(*) > 1
       |ORDER BY content_hash""".stripMargin
 
-  /** Bloom-bitmap delta dedup ([[graft.dedup.BloomDedup.bloomDeltaDedup]]):
+  /** Bloom-bitmap delta dedup ([[graft.dedup.BloomDedup.bloomProbe]]):
     * the planted-dup corpus split at the 1M id line — originals are the
     * standing corpus, the +1M exact copies and +2M near copies are the
     * incoming batch. Exact copies MUST come back `is_dup` (no false
@@ -387,7 +387,7 @@ object PipelineQueries {
       |WHERE intersection::DOUBLE / (sa.n + sb.n - intersection)::DOUBLE >= 0.5
       |ORDER BY id_a, id_b""".stripMargin
 
-  /** Prefix-filtered exact Jaccard ([[Dedup.prefixFilterJaccardPairs]]):
+  /** Prefix-filtered exact Jaccard ([[Dedup.prefixFilterJaccardPairsFromShingles]]):
     * the oracle is the UNCUT exact pair join — no prefix machinery at all —
     * so the hash match is a proof that prefix filtering dropped no pair
     * (losslessness), on top of the usual value agreement.
@@ -427,7 +427,7 @@ object PipelineQueries {
       |WHERE intersection::DOUBLE / (sa.n + sb.n - intersection)::DOUBLE >= 0.5
       |ORDER BY id_a, id_b""".stripMargin
 
-  /** Shingle-TF cosine pairs ([[Dedup.tfCosinePairs]]) on the augmented
+  /** Shingle-TF cosine pairs ([[Dedup.tfCosinePairsFromTf]]) on the augmented
     * corpus: exact copies score ~1, near copies lose only the prepended
     * token's k shingles, unrelated docs share too few rare shingles to
     * reach the threshold. The oracle replicates the multiset shingles
@@ -468,7 +468,7 @@ object PipelineQueries {
       |WHERE dot::DOUBLE / (sqrt(na.norm2::DOUBLE) * sqrt(nb.norm2::DOUBLE)) >= 0.8
       |ORDER BY id_a, id_b""".stripMargin
 
-  /** Verbatim shared-run detection ([[Dedup.sharedTokenRuns]]) on the
+  /** Verbatim shared-run detection ([[Dedup.sharedTokenRunsFromPositional]]) on the
     * augmented corpus: planted exact copies share their full text (one
     * doc-length run); near copies share everything past the prepended token.
     * The oracle replicates positional shingles, the frequency cut, the
@@ -1636,7 +1636,7 @@ object PipelineQueries {
         .select(col("doc_id"), col("rank"))
       val b = TextAnalysis.keywordRank(docs, Seq("data", "query", "table"), k = 10)
         .select(col("doc_id"), col("rank"))
-      graft.analytics.Correlation.rbo(a, b, depth = 10, idCol = "doc_id")
+      graft.analytics.Correlation.rbo(a, b, depth = 10)
         .anchor(Bound.Metadata)
     }
 
@@ -4206,7 +4206,7 @@ object PipelineQueries {
       |    - 84.6 * (n_syllables::DOUBLE / n_words) AS flesch
       |FROM m ORDER BY doc_id""".stripMargin
 
-  /** Shingle-containment near-dup pairs ([[Dedup.containmentPairs]]) on the
+  /** Shingle-containment near-dup pairs ([[Dedup.containmentPairsFromShingles]]) on the
     * augmented corpus — catches the planted prefixed near-copies whose
     * symmetric Jaccard is diluted by the length difference.
     */

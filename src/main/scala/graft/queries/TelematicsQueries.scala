@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ingest.Normalize
+import graft.ingest.{Backfill, Normalize}
 import graft.score.RiskScore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -210,17 +210,15 @@ object TelematicsQueries {
   // ---- backfill coordinate parse (F14) ----------------------------------
 
   private def coordParse(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(s, dir)
-    // "(lon,lat)" point string, parsed per backfill_telematics.py:117,127-128
-    // (item 0 = longitude, item 1 = latitude)
+    // "(lon,lat)" point string, parsed by the backfill's tolerant F14 parse
+    // (backfill_telematics.py:117,127-128; item 0 = longitude, item 1 = latitude)
     val point = concat(lit("("), col("l_partkey").cast("string"), lit(","),
       col("l_orderkey").cast("string"), lit(")"))
-    val parts = split(regexp_replace(point, "[()]", ""), ",")
-    li.select(
-      col("l_orderkey"), col("l_linenumber"),
-      parts.getItem(0).cast("double").as("longitude"),
-      parts.getItem(1).cast("double").as("latitude")
-    ).orderBy(col("l_orderkey"), col("l_linenumber"))
+    val li = Tables.lineitem(s, dir)
+      .select(col("l_orderkey"), col("l_linenumber"), point.as("point"))
+    Backfill.parsePoint(li, "point")
+      .select(col("l_orderkey"), col("l_linenumber"), col("longitude"), col("latitude"))
+      .orderBy(col("l_orderkey"), col("l_linenumber"))
   }
 
   private val coordParseOracle =

@@ -32,23 +32,16 @@ object Ivf {
       new graft.functions.PqKernel(Array(centroids.map(_.toArray).toArray))
   }
 
-  /** Fit nlist centroids (deterministic for a fixed seed + input).
-    *
-    * `sampleFraction` < 1 fits k-means on a seeded sample — the corpus-scale
-    * path: centroid *quality* only shifts the recall/cost balance, never
-    * correctness (candidates are always verified with exact cosine), so a
-    * fraction that yields ~100×nlist sampled vectors is plenty. Random init
-    * (not kmeans||) halves the job count for the same reason.
+  /** Fit nlist centroids (deterministic for a fixed seed + input). Random
+    * init (not kmeans||) halves the job count: centroid *quality* only
+    * shifts the recall/cost balance, never correctness (candidates are
+    * always verified with exact cosine).
     */
-  def build(corpus: DataFrame, nlist: Int, sampleFraction: Double = 1.0): Index = {
-    // finite-vector guard BEFORE sampling (see Similarity.finiteVectors:
-    // array_to_vector throws on NaN/Inf — one corrupt embedding would
-    // abort the whole offline build); on a clean corpus it is a no-op and
-    // the sample draw is unchanged
-    val clean = Similarity.finiteVectors(corpus)
-    val base = if (sampleFraction < 1.0)
-      clean.sample(withReplacement = false, sampleFraction, 42L) else clean
-    val feats = base.select(
+  def build(corpus: DataFrame, nlist: Int): Index = {
+    // finite-vector guard (see Similarity.finiteVectors: array_to_vector
+    // throws on NaN/Inf — one corrupt embedding would abort the whole
+    // offline build); on a clean corpus it is a no-op
+    val feats = Similarity.finiteVectors(corpus).select(
       array_to_vector(col("embedding").cast("array<double>")).as("features"))
     val model = new KMeans().setK(nlist).setSeed(42L).setMaxIter(10)
       .setInitMode("random")

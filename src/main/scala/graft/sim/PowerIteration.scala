@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
   * truncated-toward-zero integer division (sign-split into `abs … div` so
   * engines whose `//` floors replay it exactly); headroom:
   * |q|·d·scale²·n ≲ 2^52 for n = 10⁹ docs at d = 64 — and
-  * DECIMAL(38) is the documented widening path beyond that (the
-  * `momentsWide` precedent).
+  * DECIMAL(38) sums are the widening path beyond that.
   *
   * Convergence is the standard power-method rate (λ₂/λ₁ per round); two
   * rounds suffice for the dominance audit, more rounds are just more of

@@ -192,18 +192,17 @@ object Similarity {
   }
 
   /** Full-corpus near-duplicate pairs at cosine ≥ threshold via banded
-    * SRP-LSH: `bands` independent bucket keys of `planesPerBand` sign bits
-    * each; a pair is a candidate iff it collides in ≥1 band (same banding
-    * scheme as minhash LSH), then every candidate is verified with the exact
-    * cosine. Work is O(collisions) — a (band, bucket) equi-join — never the
-    * all-pairs cross product. Recall at cosine c is
-    * 1-(1-(1-acos(c)/π)^planesPerBand)^bands: more bands → higher recall,
-    * more planes per band → smaller buckets (tune planesPerBand up for
-    * corpus sizes where 2^r buckets per band must keep bucket×bucket
-    * verification bounded).
+    * SRP-LSH: 4 independent bucket keys of 4 sign bits each; a pair is a
+    * candidate iff it collides in ≥1 band (same banding scheme as minhash
+    * LSH), then every candidate is verified with the exact cosine. Work is
+    * O(collisions) — a (band, bucket) equi-join — never the all-pairs cross
+    * product. Recall at cosine c is 1-(1-(1-acos(c)/π)^4)^4: more bands →
+    * higher recall, more planes per band → smaller buckets (more planes
+    * per band for corpus sizes where 2^r buckets per band must keep
+    * bucket×bucket verification bounded).
     */
-  def bucketedThresholdPairs(corpus: DataFrame, threshold: Double,
-                             bands: Int = 4, planesPerBand: Int = 4): DataFrame = {
+  def bucketedThresholdPairs(corpus: DataFrame, threshold: Double): DataFrame = {
+    val (bands, planesPerBand) = (4, 4)
     val planes = hyperplanes(bands * planesPerBand, 64, 42L)
     val v = spread(corpus.select(col("vec_id").as("id"), asDouble(col("embedding")).as("vec")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -430,11 +429,10 @@ object Similarity {
     * corpus side is the bucketed lake table, so the probe prunes to
     * matching buckets instead of scanning) — which is how an ingest
     * pipeline drops near-dups before they ever land. StreamingSpec runs it
-    * live over MemoryStream.
+    * live over MemoryStream. Vectors are 64-dimensional.
     */
-  def nearDupFlags(incoming: DataFrame, corpus: DataFrame, threshold: Double,
-                   dim: Int = 64): DataFrame = {
-    val planes = hyperplanes(8, dim, 42L)
+  def nearDupFlags(incoming: DataFrame, corpus: DataFrame, threshold: Double): DataFrame = {
+    val planes = hyperplanes(8, 64, 42L)
     val c = corpus.select(col("vec_id").as("dup_of"), asDouble(col("embedding")).as("c_vec"))
       .withColumn("bucket", srpBucket(col("c_vec"), planes))
     val in = incoming.select(col("vec_id").as("in_id"), asDouble(col("embedding")).as("in_vec"))

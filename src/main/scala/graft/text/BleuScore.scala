@@ -28,13 +28,12 @@ import org.apache.spark.sql.functions._
 object BleuScore {
 
   /** Per-n corpus rows `(n, match_cnt, cand_cnt, prec, cand_len,
-    * ref_len)` for n = 1..`maxN` over `pairs(pairIdCol, candCol,
+    * ref_len)` for n = 1..4 over `pairs(pairIdCol, candCol,
     * refCol)`. Tokenization is whitespace `split` — mirror it exactly in
     * any verification engine.
     */
   def ngramPrecision(pairs: DataFrame, pairIdCol: String, candCol: String,
-                     refCol: String, maxN: Int = 4): DataFrame = {
-    require(maxN >= 1, s"maxN must be >= 1, got $maxN")
+                     refCol: String): DataFrame = {
     // eager anchor (r17): the tokenized pair table feeds THREE consumers
     // (candidate gram counts, reference gram counts, the length totals) —
     // unanchored, each re-ran both tokenizations over the raw text; and the
@@ -53,7 +52,7 @@ object BleuScore {
 
     def sideCounts(t: Column, cntName: String): DataFrame =
       tok.select(col("pair_id"),
-          explode(flatten(array((1 to maxN).map(n => grams(t, n)): _*))).as("ng"))
+          explode(flatten(array((1 to 4).map(n => grams(t, n)): _*))).as("ng"))
         .groupBy(col("pair_id"), col("ng.n").as("n"), col("ng.gram").as("gram"))
         .agg(count(lit(1)).as(cntName))
 
@@ -73,7 +72,7 @@ object BleuScore {
     perN.crossJoin(broadcast(lens)).orderBy(col("n"))
   }
 
-  /** ROUGE-N corpus components — the RECALL-oriented counterpart of
+  /** ROUGE-N corpus components for n = 1..2 — the RECALL-oriented counterpart of
     * [[ngramPrecision]] (summarization eval asks "how much of the
     * reference did the candidate cover", BLEU asks the reverse). Per n:
     * clipped matches Σ_g min(c_cand, c_ref), candidate and reference
@@ -84,8 +83,7 @@ object BleuScore {
     * recall denominator.
     */
   def rougeN(pairs: DataFrame, pairIdCol: String, candCol: String,
-             refCol: String, maxN: Int = 2): DataFrame = {
-    require(maxN >= 1, s"maxN must be >= 1, got $maxN")
+             refCol: String): DataFrame = {
     // eager anchor on the array frame — same rationale as [[ngramPrecision]]
     // (two gram-count consumers re-tokenized the pair table otherwise)
     val tok = pairs.select(col(pairIdCol).as("pair_id"),
@@ -101,7 +99,7 @@ object BleuScore {
 
     def sideCounts(t: Column, cntName: String): DataFrame =
       tok.select(col("pair_id"),
-          explode(flatten(array((1 to maxN).map(n => grams(t, n)): _*))).as("ng"))
+          explode(flatten(array((1 to 2).map(n => grams(t, n)): _*))).as("ng"))
         .groupBy(col("pair_id"), col("ng.n").as("n"), col("ng.gram").as("gram"))
         .agg(count(lit(1)).as(cntName))
 

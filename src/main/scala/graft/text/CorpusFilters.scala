@@ -28,7 +28,7 @@ object CorpusFilters {
   // ---- C4-style cleanliness rules -----------------------------------------
 
   /** Per-document C4 rule booleans + the conjunctive `keep` flag. */
-  def c4Flags(docs: DataFrame, minWords: Int = 20): DataFrame = {
+  def c4Flags(docs: DataFrame): DataFrame = {
     // Coalesce so a null document gets definite flags (keep=false via
     // r_min_words) rather than NULL flags — NULL `keep` passes a
     // `filter(!keep)` reject-side audit, the same three-valued trap as the
@@ -45,7 +45,7 @@ object CorpusFilters {
       .withColumn("r_word_len_ok",
         coalesce(array_max(transform(w, x => length(x))) <= 30,
           lit(true)))
-      .withColumn("r_min_words", size(w) >= minWords)
+      .withColumn("r_min_words", size(w) >= 20)
       .withColumn("keep",
         col("r_terminal_punct") && col("r_no_brace") && col("r_no_lorem") &&
           col("r_no_badword") && col("r_word_len_ok") && col("r_min_words"))
@@ -80,8 +80,7 @@ object CorpusFilters {
     * conjunctive `keep`. All metrics are exact-integer-derived; the three
     * ratio columns are each one IEEE division (bit-stable cross-engine).
     */
-  def gopherFlags(docs: DataFrame,
-                  minStopwords: Int = 2): DataFrame = {
+  def gopherFlags(docs: DataFrame): DataFrame = {
     // Coalesce + ratio guards: under the null-safe tokenizer a null/blank
     // document has n_words = 0, and ANSI division would otherwise throw at
     // the first degenerate crawl row. Ratios are 0.0 for token-less docs
@@ -108,7 +107,7 @@ object CorpusFilters {
         col("mean_word_len").between(3.0, 10.0))
       .withColumn("g_symbol", col("symbol_ratio") <= 0.05)
       .withColumn("g_alpha", col("alpha_frac") >= 0.8)
-      .withColumn("g_stop", col("n_stopwords") >= minStopwords)
+      .withColumn("g_stop", col("n_stopwords") >= 2)
       .withColumn("keep", col("g_words") && col("g_mean_len") &&
         col("g_symbol") && col("g_alpha") && col("g_stop"))
   }

@@ -40,8 +40,8 @@ object Curation {
       .withColumn("seq_last", expr(s"(start_offset + n_tokens - 1) div $seqLen"))
   }
 
-  /** Benchmark decontamination: flag corpus documents sharing ≥ `minOverlap`
-    * distinct k-token shingles with any benchmark document (the standard
+  /** Benchmark decontamination: flag corpus documents sharing ≥ 3
+    * distinct 5-token shingles with any benchmark document (the standard
     * n-gram-overlap eval-leak check). Returns (doc_id, n_overlap,
     * contaminated) for documents with any overlap.
     *
@@ -50,24 +50,23 @@ object Curation {
     * candidate matching is a map-side hash probe per corpus shingle, then one
     * groupBy on doc id over only the *matching* shingles.
     */
-  def decontaminate(corpus: DataFrame, benchmark: DataFrame, k: Int = 5,
-                    minOverlap: Long = 3): DataFrame = {
+  def decontaminate(corpus: DataFrame, benchmark: DataFrame): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     // persist the array-form shingle frames BEFORE exploding ([[Dedup]]
     // object doc + ngramJaccardPairs): the cache is a pushdown boundary, so
     // the explode's inferred `isnotnull(sh)` constraint can't substitute the
     // whole shingle lambda (split re-inlined per element) into the scan —
     // measured 22 s → 1.2 s warm at sf0.1
-    val corpusSh = Dedup.withShingles(corpus, k)
+    val corpusSh = Dedup.withShingles(corpus, 5)
       .persist(StorageLevel.MEMORY_AND_DISK)
       .select(col("id"), explode(col("sh")).as("shingle"))
-    val benchSh = Dedup.withShingles(benchmark, k)
+    val benchSh = Dedup.withShingles(benchmark, 5)
       .persist(StorageLevel.MEMORY_AND_DISK)
       .select(explode(col("sh")).as("shingle")).distinct()
     corpusSh.join(broadcast(benchSh), Seq("shingle"))
       .groupBy(col("id").as("doc_id"))
       .agg(count(lit(1)).as("n_overlap"))
-      .withColumn("contaminated", col("n_overlap") >= minOverlap)
+      .withColumn("contaminated", col("n_overlap") >= 3L)
   }
 
   /** Gopher-style repetition features: duplicate-token fraction, top-token

@@ -34,8 +34,8 @@ import graft.functions.Md5Field.md5U32
   * difference is what makes the score reproducible bit-exactly on any engine
   * with integer binary rendering.
   *
-  * Scale shape (100 TB): the feature space is a FIXED bucket count (default
-  * 256; the paper uses 10k — still broadcastable), so the weight table is
+  * Scale shape (100 TB): the feature space is a FIXED bucket count (256;
+  * the paper uses 10k — still broadcastable), so the weight table is
   * metadata-sized regardless of corpus size. Two shuffles total: the bucket
   * count aggregate (map-side combined, reduce ships ≤ B rows) and the
   * per-document score aggregate. The weight table joins back by broadcast.
@@ -46,7 +46,7 @@ import graft.functions.Md5Field.md5U32
 object Dsir {
 
   /** doc_id, source, bucket rows — one per hashed bigram occurrence. */
-  private def bigramBuckets(docs: DataFrame, buckets: Int): DataFrame = {
+  private def bigramBuckets(docs: DataFrame): DataFrame = {
     val tok = docs
       .select(col("doc_id"), col("source"), graft.dedup.Dedup.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
@@ -58,9 +58,10 @@ object Dsir {
       .persist(StorageLevel.MEMORY_AND_DISK)
     tok.select(col("doc_id"), col("source"), explode(col("bg")).as("bigram"))
       .select(col("doc_id"), col("source"),
-        pmod(md5U32(col("bigram")), lit(buckets)).as("bucket"))
+        pmod(md5U32(col("bigram")), lit(256)).as("bucket"))
   }
 
+  /** Per-bucket target/raw counts and the quantized log-ratio weight. */
   private def weightsOf(bucketRows: DataFrame, targetSource: String): DataFrame =
     bucketRows
       .groupBy(col("bucket"))
@@ -71,16 +72,11 @@ object Dsir {
         (length(bin(col("tgt_cnt") + 1)) - length(bin(col("raw_cnt") + 1)))
           .cast("long"))
 
-  /** Per-bucket target/raw counts and the quantized log-ratio weight. */
-  def bucketWeights(docs: DataFrame, targetSource: String,
-                    buckets: Int = 256): DataFrame =
-    weightsOf(bigramBuckets(docs, buckets), targetSource)
-
   /** Per-document importance score: Σ weight over the document's hashed
     * bigrams (exact BIGINT). Documents with fewer than two tokens score 0.
     */
   def docScores(docs: DataFrame, targetSource: String): DataFrame = {
-    val bb = bigramBuckets(docs, 256).persist(StorageLevel.MEMORY_AND_DISK)
+    val bb = bigramBuckets(docs).persist(StorageLevel.MEMORY_AND_DISK)
     val w = weightsOf(bb, targetSource).select(col("bucket"), col("weight"))
     val scored = bb
       .join(broadcast(w), Seq("bucket"))

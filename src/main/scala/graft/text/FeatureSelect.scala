@@ -16,13 +16,13 @@ import org.apache.spark.sql.functions._
   * score itself hash-compares across engines. Empty children contribute 0.
   *
   * Scale shape: one distinct-presence aggregate (map-combined), one
-  * per-token count aggregate joined to the label, a `topTokens`-bounded
+  * per-token count aggregate joined to the label, a 30-token
   * TakeOrdered cut (no global sort), and the 1-row parent-count frame
-  * broadcasts into the final projection. Output is `topTokens` rows.
+  * broadcasts into the final projection. Output is 30 rows.
   */
 object FeatureSelect {
 
-  def giniStumps(docs: DataFrame, labelCol: Column, topTokens: Int = 30): DataFrame = {
+  def giniStumps(docs: DataFrame, labelCol: Column): DataFrame = {
     val base = docs.select(col("doc_id").as("doc"), labelCol.cast("long").as("y"),
         graft.dedup.Dedup.tokens(col("text")).as("t"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -33,7 +33,7 @@ object FeatureSelect {
     val perToken = presence.groupBy(col("token"))
       .agg(count(lit(1)).as("df"), sum(col("y")).as("p1"))
       .orderBy(col("df").desc, col("token"))
-      .limit(topTokens)
+      .limit(30)
     val parent = base.agg(count(lit(1)).as("n"), sum(col("y")).as("p"))
     def gini(pos: Column, tot: Column): Column =
       when(tot > 0,

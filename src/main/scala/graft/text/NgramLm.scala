@@ -65,11 +65,10 @@ object NgramLm {
     * division agree), cut at the EXACT p‰-th order statistic of the score
     * distribution ([[graft.analytics.Quantiles.exactOrderStatistic]]),
     * and flag documents above it. Per-doc rows: `doc`, `n_bigrams`,
-    * `nll_micronats`, `threshold`, `flagged`.
+    * `nll_micronats`, `threshold`, `flagged`. This form cuts at 900‰.
     */
-  def perplexityFilter(train: DataFrame, test: DataFrame, permille: Int = 900): DataFrame =
-    perplexityFilter(NgramLm.train(train), test, permille,
-      "doc_id", "text")
+  def perplexityFilter(train: DataFrame, test: DataFrame): DataFrame =
+    perplexityFilter(NgramLm.train(train), test, 900, "doc_id", "text")
 
   /** Model-based variant — the entry point when the trained counts are
     * shared across scorers. */

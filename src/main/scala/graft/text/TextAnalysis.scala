@@ -656,19 +656,19 @@ object TextAnalysis {
 
   /** Materialize the chunked posting index as a term-bucketed catalog table
     * — the SCALE.md §Curation serving layout: searches probe term buckets
-    * instead of re-tokenizing the corpus. Built once per (`key`, `buckets`,
-    * `chunkSize`) per process through [[graft.Fixtures]] (the build is an
+    * instead of re-tokenizing the corpus: 8 term buckets, posting lists
+    * chunked at 1024 ids. Built once per `key` per process through
+    * [[graft.Fixtures]] (the build is an
     * offline indexing job, same amortization rationale as
     * [[graft.sim.Ivf.cachedBuild]]); returns the table name. Bucketing +
     * within-bucket sort on `term` means a term-filtered probe scans only
     * `SelectedBucketsCount` buckets with zero Exchange on the scan side, and
     * [[buildPostingsChunked]] bounds every row even for hot terms.
     */
-  def materializePostings(docs: DataFrame, key: String, buckets: Int = 8,
-                          chunkSize: Int = 1024): String =
+  def materializePostings(docs: DataFrame, key: String): String =
     graft.Fixtures.bucketedTable(docs.sparkSession, "postings",
-        s"$key|$buckets|$chunkSize", "term", buckets, Seq("term", "posting_part")) {
-      buildPostingsChunked(docs, chunkSize)
+        s"$key|8|1024", "term", 8, Seq("term", "posting_part")) {
+      buildPostingsChunked(docs, 1024)
     }
 
   /** Conjunctive keyword search probing a [[materializePostings]] table:
@@ -828,13 +828,13 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_matches"))
   }
 
-  /** RAKE keyphrase extraction (Rose et al. 2010): candidate phrases are
+  /** RAKE keyphrase extraction (Rose et al. 2010), top 20 phrases: candidate phrases are
     * maximal stopword-free token runs (gaps-and-islands over token
     * positions); each word scores `degree/frequency` over the candidate set
     * and a phrase scores the sum of its word scores. To stay hash-exact the
     * per-word ratio is floor-scaled to an integer grid
-    * (`deg·scale div freq`) — phrase scores are then exact BIGint sums,
-    * order-independent, within 1/scale per word of the continuous form
+    * (`deg·10⁶ div freq`) — phrase scores are then exact BIGint sums,
+    * order-independent, within 10⁻⁶ per word of the continuous form
     * (the same quantize-for-exactness move as DSIR's bitlen weights).
     *
     * Scale shape: islands are per-document windows (doc-bounded); word
@@ -842,8 +842,7 @@ object TextAnalysis {
     * the score join shuffles on the word key like tf-idf); the top-k is
     * TakeOrderedAndProject.
     */
-  def rakeKeyphrases(docs: DataFrame, k: Int = 20,
-                     scale: Long = 1000000L): DataFrame = {
+  def rakeKeyphrases(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val arr = docs.select(col("doc_id"), toks(col("text")).as("t"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -865,10 +864,10 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("island"))
       .agg(first(array_join(col("words"), " ")).as("phrase"),
         first(col("plen")).as("plen"),
-        sum(expr(s"deg * $scale div freq")).as("score"))
+        sum(expr("deg * 1000000 div freq")).as("score"))
       .groupBy(col("phrase"))
       .agg(max(col("plen")).as("plen"), max(col("score")).as("score"))
       .orderBy(col("score").desc, col("phrase"))
-      .limit(k)
+      .limit(20)
   }
 }

@@ -25,6 +25,9 @@ object Vocab {
     tok.select(col("source"), explode(col("t")).as("term"))
   }
 
+  /** The top-`v` terms by corpus frequency; ties cut by term text so the
+    * vocabulary is a pure function of the corpus.
+    */
   private def topOf(toks: DataFrame, v: Int): DataFrame =
     toks
       .groupBy(col("term")).agg(count(lit(1)).as("c"))
@@ -32,13 +35,8 @@ object Vocab {
       .limit(v)
       .select(col("term"))
 
-  /** The top-`v` terms by corpus frequency; ties cut by term text so the
-    * vocabulary is a pure function of the corpus.
-    */
-  def topVocab(docs: DataFrame, v: Int): DataFrame = topOf(tokens(docs), v)
-
   /** Heaps'-law (type–token) growth curve: vocabulary size as a function of
-    * corpus size, sampled at `points` equal-width document-id checkpoints —
+    * corpus size, sampled at 10 equal-width document-id checkpoints —
     * the audit that says whether a corpus is still contributing new
     * vocabulary or has saturated (useful before paying for more data of the
     * same source). Sub-linear growth (V ≈ K·nᵝ, β < 1) is healthy; a curve
@@ -47,16 +45,16 @@ object Vocab {
     * Exactness: a token type is "seen by checkpoint c" iff its FIRST
     * occurrence (min doc id) is ≤ c — so each checkpoint's type count is an
     * exact conditional sum over the per-token min, and token totals are
-    * plain conditional counts. Checkpoints are `i·maxId/points` in integer
+    * plain conditional counts. Checkpoints are `i·maxId/10` in integer
     * division — a pure function of the corpus.
     *
     * Scale shape: one min-per-token aggregate (map-combined; vocabulary-
-    * sized result) and one `points`-column conditional aggregate over it,
+    * sized result) and one 10-column conditional aggregate over it,
     * plus the same over the occurrence stream; the 1-row id-range frame
     * broadcasts. Nothing is ever sorted.
     */
-  def heapsCurve(docs: DataFrame, points: Int = 10): DataFrame = {
-    require(points >= 2 && points <= 64, s"points must be in [2,64], got $points")
+  def heapsCurve(docs: DataFrame): DataFrame = {
+    val points = 10
     // `tok` is consumed exactly once (by `occ`, which IS persisted), so it
     // carries no cache of its own (r17 — the lazy persist only added
     // cache-block management)
@@ -94,14 +92,14 @@ object Vocab {
         col("r.n_tokens").as("n_tokens"), col("r.n_types").as("n_types"))
   }
 
-  /** Per-source token count, OOV count against the top-`v` vocabulary, and
+  /** Per-source token count, OOV count against the top-500 vocabulary, and
     * the OOV rate (one division of exact longs). The token stream is built
     * (and its array frame persisted) ONCE and shared by the vocabulary cut
     * and the audit join — the corpus is tokenized a single time.
     */
-  def oovRate(docs: DataFrame, v: Int = 500): DataFrame = {
+  def oovRate(docs: DataFrame): DataFrame = {
     val toks = tokens(docs)
-    val voc = topOf(toks, v).withColumn("__in", lit(1))
+    val voc = topOf(toks, 500).withColumn("__in", lit(1))
     toks
       .join(broadcast(voc), Seq("term"), "left_outer")
       .groupBy(col("source"))
@@ -136,7 +134,7 @@ object Vocab {
           col("f1").cast("double") / col("n_tokens").cast("double")))
   }
 
-  /** Zipf's-law fit over the top-`k` rank–frequency curve: OLS of ln(freq)
+  /** Zipf's-law fit over the top-500 rank–frequency curve: OLS of ln(freq)
     * on ln(rank) — slope ≈ −1 is the healthy-corpus signature, a flat
     * slope means the corpus is template-dominated (the [[heapsCurve]]
     * companion along the OTHER axis of lexical statistics). The top-k cut
@@ -152,13 +150,12 @@ object Vocab {
     * intercept (÷10⁶ back to nats) and R² are then single
     * fixed-operand-order IEEE expressions over exact integers.
     */
-  def zipfFit(docs: DataFrame, k: Int = 500): DataFrame = {
+  def zipfFit(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // k·(ln(max c)·10⁶)² must stay under 2⁶³: k ≤ 10⁴ holds for per-term
-    // counts up to ~10¹³ (ANSI fails loudly beyond, the moments precedent)
-    require(k >= 2 && k <= 10000, s"k must be in [2, 10000], got $k")
+    // k·(ln(max c)·10⁶)² must stay under 2⁶³: at k = 500 it does for every
+    // BIGINT count (ln c ≤ 44)
     val tf = tokens(docs).groupBy(col("term")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("term")).limit(k)
+      .orderBy(col("c").desc, col("term")).limit(500)
     val ranked = tf
       .withColumn("rank",
         row_number().over(Window.orderBy(col("c").desc, col("term"))).cast("long"))

@@ -19,21 +19,27 @@ class CorrelationBoundSpec extends SparkSpec {
     }
 
   test("kendallTau / theilSen refuse a group over the declared bound, loudly") {
-    val df = noisy(50).toDF("grp", "x", "y", "id")
+    // one row past the 100 000-row bound; the guard fires before any pair
+    val over = spark.range(100001L)
+      .select(lit("g").as("grp"), col("id").as("x"), col("id").as("y"), col("id"))
     val ex = intercept[Throwable] {
-      Correlation.kendallTau(df, "grp", "x", "y", "id", maxGroupSize = 10).collect()
+      Correlation.kendallTau(over, "grp", "x", "y", "id").collect()
     }
-    assert(ex.getMessage.contains("exceeding the declared bound 10"),
-      s"guard must name the bound, got: ${ex.getMessage}")
+    assert(ex.getMessage.contains("100001 rows, exceeding the bound 100000"),
+      s"guard must name the group size and the bound, got: ${ex.getMessage}")
     val ex2 = intercept[Throwable] {
-      Correlation.theilSen(df, "grp", "x", "y", maxGroupSize = 10).collect()
+      Correlation.theilSen(over, "grp", "x", "y").collect()
     }
     assert(ex2.getMessage.contains("theilSen"))
-    // within the bound: identical results with and without a tight bound
-    val loose = Correlation.kendallTau(df, "grp", "x", "y", "id").collect().toSeq
-    val tight = Correlation.kendallTau(df, "grp", "x", "y", "id",
-      maxGroupSize = 50).collect().toSeq
-    assert(loose == tight)
+    // within the bound: the guard passes every row to the exact enumeration
+    val rows = noisy(50)
+    val df = rows.toDF("grp", "x", "y", "id")
+    val got = Correlation.kendallTau(df, "grp", "x", "y", "id")
+      .select("n_pairs", "concordant", "discordant").as[(Long, Long, Long)].head()
+    val signs = for {
+      (_, x1, y1, i1) <- rows; (_, x2, y2, i2) <- rows if i1 < i2
+    } yield math.signum((x1 - x2) * (y1 - y2))
+    assert(got == ((signs.size.toLong, signs.count(_ > 0).toLong, signs.count(_ < 0).toLong)))
   }
 
   test("kendallTauSampled: exact on monotone groups, converges on noisy data") {
@@ -64,7 +70,7 @@ class CorrelationBoundSpec extends SparkSpec {
     assert(np == Map("g" -> 64L))
   }
 
-  test("moments: documented Σx⁴ envelope — edge passes, over-bound fails loudly (ANSI), momentsWide survives") {
+  test("moments: documented Σx⁴ envelope — edge passes, over-bound fails loudly (ANSI)") {
     // n = 9·10⁶ at |x| = 10³: Σx⁴ = 9·10¹⁸ < 2⁶³−1 ≈ 9.22·10¹⁸ — the edge
     val edge = spark.range(9000000L)
       .select(lit("g").as("g"), lit(1000L).as("x"))
@@ -79,21 +85,5 @@ class CorrelationBoundSpec extends SparkSpec {
     }
     assert(ex.getMessage.toLowerCase.contains("overflow"),
       s"expected ARITHMETIC_OVERFLOW, got: ${ex.getMessage}")
-    // the DECIMAL(38) fallback clears the same input exactly
-    val wide = Correlation.momentsWide(over, "g", "x").collect().head
-    assert(wide.getAs[java.math.BigDecimal]("s4")
-      .compareTo(new java.math.BigDecimal("10000000000000000000")) == 0) // 10¹⁹
-    assert(wide.getAs[Double]("mean") == 1000.0 &&
-      wide.getAs[Double]("variance") == 0.0)
-    // agreement with the narrow path inside the envelope
-    val small = Seq(("a", 1L), ("a", 2L), ("a", 5L), ("a", 9L), ("b", 4L))
-      .toDF("g", "x")
-    val narrow = Correlation.moments(small, "g", "x")
-      .select("g", "mean", "variance", "skewness", "kurtosis")
-      .orderBy("g").collect().toSeq
-    val asWide = Correlation.momentsWide(small, "g", "x")
-      .select("g", "mean", "variance", "skewness", "kurtosis")
-      .orderBy("g").collect().toSeq
-    assert(narrow.toString == asWide.toString)
   }
 }

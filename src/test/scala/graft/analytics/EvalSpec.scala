@@ -21,12 +21,16 @@ class EvalSpec extends SparkSpec {
   }
 
   test("aucExact: bucketed two-level cumulative ≡ width-1 buckets (every value its own bucket)") {
-    val df = (1 to 200).map(i => (i.toLong * 37 % 501, i % 3 == 0)).toDF("s", "y")
-    val a = Eval.aucExact(df, col("s"), col("y"), bucketWidth = 2048L)
-      .select($"two_u".cast("long"), $"n_pos", $"n_neg").head()
-    val b = Eval.aucExact(df, col("s"), col("y"), bucketWidth = 1L)
-      .select($"two_u".cast("long"), $"n_pos", $"n_neg").head()
-    assert(a === b)
+    // scores span ten 2048-wide buckets, with ties inside and across labels
+    val rows = (1 to 300).map(i => (i.toLong * 7919 % 20011 / 3 * 3, i % 3 == 0))
+    val df = rows.toDF("s", "y")
+    val a = Eval.aucExact(df, col("s"), col("y"))
+      .select($"two_u".cast("long"), $"n_pos", $"n_neg").as[(Long, Long, Long)].head()
+    // width-1 form: 2U counted pair by pair
+    val (pos, neg) = rows.partition(_._2)
+    val twoU = (for ((p, _) <- pos; (n, _) <- neg)
+      yield if (p > n) 2L else if (p == n) 1L else 0L).sum
+    assert(a === ((twoU, pos.size.toLong, neg.size.toLong)))
   }
 
   test("aucExact: perfect separation gives AUC 1.0, reversed gives 0.0") {
@@ -84,7 +88,7 @@ class EvalSpec extends SparkSpec {
     assert(math.abs(g - 2.0 / 3.0) < 1e-15)
   }
 
-  test("randomizedResponse: deterministic under seed; p=1 degenerates to the exact count") {
+  test("randomizedResponse: deterministic under seed; every report replays its md5 coin") {
     val df = (1 to 100).map(i => (i.toLong, i % 5 == 0)).toDF("id", "t")
     val a = graft.ops.Privacy.randomizedResponse(df, $"id", $"t", "sd")
       .select($"observed", $"est_num").as[(Long, Long)].head()
@@ -93,11 +97,15 @@ class EvalSpec extends SparkSpec {
     assert(a === b)
     // est_num identity: 4·obs − n
     assert(a._2 === 4 * a._1 - 100)
-    // truthful coin (p = 1/1) reports exactly, estimator collapses to truth
-    val exact = graft.ops.Privacy.randomizedResponse(df, $"id", $"t", "sd",
-      pNum = 1, pDen = 1)
+    // the coin: md5U32("rr:<seed>:<id>") mod 4 < 3 reports the truth, else its flip
+    def coin(id: Int): Long = {
+      val d = java.security.MessageDigest.getInstance("MD5").digest(s"rr:sd:$id".getBytes("UTF-8"))
+      java.lang.Long.parseLong(d.take(4).map(b => f"${b & 0xff}%02x").mkString, 16) % 4
+    }
+    val reported = (1 to 100).count { i => (i % 5 == 0) == (coin(i) < 3) }.toLong
+    val r = graft.ops.Privacy.randomizedResponse(df, $"id", $"t", "sd")
       .select($"true_cnt", $"observed", $"est").as[(Long, Long, Double)].head()
-    assert(exact._1 === 20L && exact._2 === 20L && exact._3 === 20.0)
+    assert(r === ((20L, reported, (4.0 * reported - 100) / 2)))
   }
 
   test("aucExactBy: per-group AUC matches per-group aucExact; no global window in the plan") {
@@ -121,12 +129,12 @@ class EvalSpec extends SparkSpec {
   }
 
   test("ndcgAtK: perfect ranking is EXACTLY 1.0 (integer grid); reversed ranking matches hand DCG") {
-    val D = Eval.ndcgDiscounts(3)
+    val D = Eval.ndcgDiscounts(10)
     // group 1: system score ranks rel as (0, 2, 3); ideal is (3, 2, 0)
     val df = Seq((1L, 30L, 1L, 0L), (1L, 20L, 2L, 2L), (1L, 10L, 3L, 3L),
       // group 2: system order == ideal order
       (2L, 30L, 4L, 3L), (2L, 20L, 5L, 1L)).toDF("g", "s", "t", "r")
-    val m = Eval.ndcgAtK(df, col("g"), col("s"), col("t"), col("r"), k = 3)
+    val m = Eval.ndcgAtK(df, col("g"), col("s"), col("t"), col("r"))
       .select($"g", $"dcg_scaled", $"idcg_scaled", $"ndcg")
       .as[(Long, Long, Long, Option[Double])].collect().map(x => x._1 -> x).toMap
     assert(m(1L)._2 === 2L * D(1) + 3L * D(2))
@@ -137,13 +145,18 @@ class EvalSpec extends SparkSpec {
   }
 
   test("ndcgAtK: zero-relevance group gates to NULL; k truncates the tail") {
-    val df = Seq((1L, 10L, 1L, 0L), (1L, 9L, 2L, 0L),
-      (2L, 10L, 3L, 1L), (2L, 9L, 4L, 3L), (2L, 8L, 5L, 3L)).toDF("g", "s", "t", "r")
-    val m = Eval.ndcgAtK(df, col("g"), col("s"), col("t"), col("r"), k = 1)
-      .select($"g", $"ndcg").as[(Long, Option[Double])].collect().toMap
-    assert(m(1L).isEmpty, "all-zero relevance has no ideal to normalize by")
-    // k=1: system top is rel 1, ideal top is rel 3 → 1/3 exactly on the grid
-    assert(m(2L).get === 1.0 / 3.0)
+    // group 2: the system ranks rel 1 first, nine rel-0 items next and the
+    // rel-3 item 11th, past k = 10; the ideal order puts it first
+    val g2 = (2L, 100L, 100L, 1L) +: (1 to 9).map(i => (2L, 100L - i, 100L + i, 0L)) :+
+      ((2L, 1L, 200L, 3L))
+    val df = (Seq((1L, 10L, 1L, 0L), (1L, 9L, 2L, 0L)) ++ g2).toDF("g", "s", "t", "r")
+    val D = Eval.ndcgDiscounts(10)
+    val m = Eval.ndcgAtK(df, col("g"), col("s"), col("t"), col("r"))
+      .select($"g", $"dcg_scaled", $"ndcg").as[(Long, Long, Option[Double])].collect()
+      .map(x => x._1 -> (x._2, x._3)).toMap
+    assert(m(1L)._2.isEmpty, "all-zero relevance has no ideal to normalize by")
+    assert(m(2L)._1 === D(0), "the rel-3 item at rank 11 adds nothing to DCG@10")
+    assert(m(2L)._2.get === D(0).toDouble / (3L * D(0) + D(1)).toDouble)
   }
 
   test("survival hazardTable: hand case — risk sets shrink as entities churn") {
@@ -263,7 +276,7 @@ class EvalSpec extends SparkSpec {
     // k truncation: relevant beyond k is a miss
     val far = (1 to 12).map(i => (9L, (100 - i).toLong, i.toLong, i == 12))
       .toDF("g", "s", "t", "rel")
-    val fr = Eval.mrrAtK(far, col("g"), col("s"), col("t"), col("rel"), k = 10)
+    val fr = Eval.mrrAtK(far, col("g"), col("s"), col("t"), col("rel"))
       .select($"hits", $"rr_sum_scaled").as[(Long, Long)].head()
     assert(fr === ((0L, 0L)))
   }
@@ -317,7 +330,7 @@ class EvalSpec extends SparkSpec {
     // n = 7, o_diag/6 = 5, Do = 2/7, De = 4/7 -> alpha = 0.5 exactly
     val df = Seq(("i1", "a"), ("i1", "a"), ("i2", "a"), ("i2", "b"),
       ("i3", "b"), ("i3", "b"), ("i3", "b"), ("i4", "c")).toDF("item", "r")
-    val out = Eval.krippendorffAlpha(df, col("item"), col("r"), maxRaters = 4)
+    val out = Eval.krippendorffAlpha(df, col("item"), col("r"))
       .select(col("n_ratings"), col("n_items"), col("n_categories"),
         col("do_num"), col("de_num"), col("alpha"))
       .as[(Long, Long, Long, String, String, Double)].head()
@@ -331,8 +344,8 @@ class EvalSpec extends SparkSpec {
     // rater cap is enforced in-plan
     val over = (1 to 6).map(i => ("x", s"r$i")).toDF("item", "r")
     val err = intercept[Exception] {
-      Eval.krippendorffAlpha(over, col("item"), col("r"), maxRaters = 4).collect()
+      Eval.krippendorffAlpha(over, col("item"), col("r")).collect()
     }
-    assert(err.getMessage.contains("maxRaters"))
+    assert(err.getMessage.contains("over the cap of 4 raters per item"))
   }
 }

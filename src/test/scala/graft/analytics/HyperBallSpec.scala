@@ -27,7 +27,7 @@ class HyperBallSpec extends SparkSpec {
       2 -> Map(1L -> Set(1L, 2L, 3L, 4L), 2L -> Set(1L, 2L, 3L, 4L),
         3L -> Set(1L, 2L, 3L, 4L, 5L), 4L -> Set(1L, 2L, 3L, 4L, 5L),
         5L -> Set(3L, 4L, 5L)))
-    val out = HyperBall.neighborhoodFunction(edges, maxHops = 2, m = 32)
+    val out = HyperBall.neighborhoodFunction(edges, maxHops = 2)
       .select($"hop", $"n_nodes", $"n_cells", $"rank_sum", $"reg_xor")
       .as[(Int, Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     (0 to 2).foreach { h =>
@@ -44,7 +44,7 @@ class HyperBallSpec extends SparkSpec {
 
   test("seed estimate is within the HLL regime and balls only grow") {
     val edges = (1L to 30L).map(i => (i, i % 30 + 1)).toDF("id_a", "id_b") // ring
-    val out = HyperBall.neighborhoodFunction(edges, maxHops = 2, m = 32)
+    val out = HyperBall.neighborhoodFunction(edges, maxHops = 2)
       .select($"hop", $"n_cells", $"seed_estimate")
       .as[(Int, Long, Double)].collect().sortBy(_._1)
     assert(out.map(_._2).sliding(2).forall(w => w(0) <= w(1)),

@@ -568,26 +568,23 @@ class HypothesisSpec extends SparkSpec {
 
   test("value-domain guard: kruskalWallis / cvmTwoSample fail loudly past the bound") {
     // a raw high-cardinality column (every row its own value) models the
-    // unquantized-micros misuse the envelope fences off
-    val wide = spark.range(2000)
+    // unquantized-micros misuse the envelope fences off: one value past 2²¹
+    def wide(n: Long) = spark.range(n)
       .select((col("id") % 4).cast("string").as("grp"), col("id").as("cents"))
+    val over = wide((1L << 21) + 1)
     val errKw = intercept[Exception] {
-      Hypothesis.kruskalWallis(wide, "grp", "cents",
-        maxDistinctValues = 1000L).collect()
+      Hypothesis.kruskalWallis(over, "grp", "cents").collect()
     }
     assert(errKw.getMessage.contains("kruskalWallis") &&
-      errKw.getMessage.contains("distinct values"))
+      errKw.getMessage.contains("2097153 distinct values"))
     val errCvm = intercept[Exception] {
-      Hypothesis.cvmTwoSample(wide, col("grp") === "0", "cents",
-        maxDistinctValues = 1000L).collect()
+      Hypothesis.cvmTwoSample(over, col("grp") === "0", "cents").collect()
     }
     assert(errCvm.getMessage.contains("cvmTwoSample"))
     // within-bound frames compute normally through the same guard path
-    val kw = Hypothesis.kruskalWallis(wide, "grp", "cents",
-      maxDistinctValues = 4096L).head()
+    val kw = Hypothesis.kruskalWallis(wide(2000), "grp", "cents").head()
     assert(kw.getAs[Long]("n") == 2000L && kw.getAs[Long]("k") == 4L)
-    val cvm = Hypothesis.cvmTwoSample(wide, col("grp") === "0", "cents",
-      maxDistinctValues = 4096L).head()
+    val cvm = Hypothesis.cvmTwoSample(wide(2000), col("grp") === "0", "cents").head()
     assert(cvm.getAs[Long]("n_a") == 500L && cvm.getAs[Long]("n_b") == 1500L)
   }
 }

@@ -97,7 +97,7 @@ class PlanSpec extends SparkSpec {
   test("bucketed embedding dedup never plans a nested-loop join") {
     import graft.sim.Similarity
     val df = Similarity.bucketedThresholdPairs(
-      graft.Tables.embeddings(spark, sf()), 0.6, bands = 4, planesPerBand = 4)
+      graft.Tables.embeddings(spark, sf()), 0.6)
     val p = plan(df)
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"full-corpus dedup must be a bucketed equi-join, got:\n$p")

@@ -16,7 +16,7 @@ class Round8PlanSpec extends SparkSpec {
   private val docs = graft.Tables.documents(spark, sf())
 
   test("rakeKeyphrases: no product join; top-k plans as TakeOrderedAndProject") {
-    val p = plan(graft.text.TextAnalysis.rakeKeyphrases(docs, k = 10))
+    val p = plan(graft.text.TextAnalysis.rakeKeyphrases(docs))
     assert(!p.contains("CartesianProduct"), s"rake planned a product:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"rake top-k must not global-sort:\n$p")
   }

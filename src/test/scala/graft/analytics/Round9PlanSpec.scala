@@ -40,7 +40,7 @@ class Round9PlanSpec extends SparkSpec {
 
   test("giniStumps: top-m via TakeOrderedAndProject, not a global sort") {
     val df = graft.text.FeatureSelect.giniStumps(docs,
-      when(col("lang") === "en", 1L).otherwise(0L), topTokens = 30)
+      when(col("lang") === "en", 1L).otherwise(0L))
     val p = plan(df)
     assert(p.contains("TakeOrderedAndProject"), s"gini top-m must not global-sort:\n$p")
   }

@@ -30,8 +30,7 @@ class StatPlanSpec extends SparkSpec {
   }
 
   test("bootstrap meanCI: rank/CI windows sit above the B-row replicate aggregate, never the data") {
-    val df = Bootstrap.meanCI(docs, col("doc_id"), col("n_chars"), "pp",
-      replicates = 8)
+    val df = Bootstrap.meanCI(docs, col("doc_id"), col("n_chars"), "pp")
     assert(products(plan(df)) <= 1, "only the 1-row stats broadcast may be a product")
     val windows = df.queryExecution.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
@@ -78,8 +77,7 @@ class StatPlanSpec extends SparkSpec {
   }
 
   test("clusteringCoefficient: equi-joins only, no product") {
-    val e = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("id_a", "id_b")
-    val p = plan(graft.dedup.DupClusters.clusteringCoefficient(e))
+    val p = plan(graft.SparkEntry.queries("q_clustering_coeff")(spark, sf()))
     assert(products(p) === 0, s"clustering coefficient planned a product:\n$p")
   }
 

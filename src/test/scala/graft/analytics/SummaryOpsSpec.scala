@@ -15,15 +15,15 @@ class SummaryOpsSpec extends SparkSpec {
   test("countMin: estimates are overestimate-only and exact when collision-free") {
     val items = (Seq.fill(100)("hot") ++ (1 to 50).map(i => s"cold$i"))
       .toDF("item")
-    val grid = CountMin.sketch(items, "item", depth = 4, width = 4096)
+    val grid = CountMin.sketch(items, "item")
     val query = (Seq("hot") ++ (1 to 50).map(i => s"cold$i")).toDF("item")
-    val est = CountMin.estimate(grid, query, "item", depth = 4, width = 4096)
+    val est = CountMin.estimate(grid, query, "item")
       .as[(String, Long)].collect().toMap
     val truth = Map("hot" -> 100L) ++ (1 to 50).map(i => s"cold$i" -> 1L)
     truth.foreach { case (k, v) =>
       assert(est(k) >= v, s"$k: est ${est(k)} < true $v — one-sidedness broken")
     }
-    // 51 distinct items into 4×4096 cells: collisions are possible but the
+    // 51 distinct items into 4×512 cells: collisions are possible but the
     // MIN over 4 independent rows recovering the exact count is the
     // overwhelmingly common case; require it for the hot item at least
     assert(est("hot") === 100L)
@@ -32,10 +32,10 @@ class SummaryOpsSpec extends SparkSpec {
   test("countMin: grids merge by cellwise addition (sketch(A ∪ B) = sketch(A) ⊕ sketch(B))") {
     val a = (1 to 40).map(i => s"t${i % 7}").toDF("item")
     val b = (1 to 25).map(i => s"t${i % 5}").toDF("item")
-    val merged = CountMin.sketch(a.unionByName(b), "item", depth = 3, width = 64)
+    val merged = CountMin.sketch(a.unionByName(b), "item")
       .as[(Int, Long, Long)].collect().toSet
-    val summed = CountMin.sketch(a, "item", depth = 3, width = 64)
-      .unionByName(CountMin.sketch(b, "item", depth = 3, width = 64))
+    val summed = CountMin.sketch(a, "item")
+      .unionByName(CountMin.sketch(b, "item"))
       .groupBy($"r", $"cell").agg(sum($"cnt").as("cnt"))
       .as[(Int, Long, Long)].collect().toSet
     assert(merged === summed)
@@ -49,7 +49,7 @@ class SummaryOpsSpec extends SparkSpec {
       (3L, "unrelated words only here nothing shared at all today"),
       (10L, s"alpha beta gamma $shared delta epsilon") // exact copy of 1
     ).toDF("doc_id", "text")
-    val fps = Winnowing.fingerprints(docs, k = 3, w = 4)
+    val fps = Winnowing.fingerprints(docs)
       .as[(Long, Long)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSet)
     // exact copy ⇒ identical fingerprint sets
     assert(fps(1L) === fps(10L))
@@ -57,8 +57,9 @@ class SummaryOpsSpec extends SparkSpec {
     // shared fingerprint — docs 1 and 2 share a 10-token run
     assert(fps(1L).intersect(fps(2L)).nonEmpty)
     assert(fps(3L).intersect(fps(1L)).isEmpty)
-    val pairs = Winnowing.fingerprintPairs(docs, k = 3, w = 4,
-      minShared = 1, maxDocFreq = 50)
+    // the 10-token run holds two disjoint full windows (2w + k − 1 = 10
+    // tokens), so every pair sharing it shares 2 fingerprints
+    val pairs = Winnowing.fingerprintPairs(docs)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)) && pairs.contains((1L, 10L))
       && pairs.contains((2L, 10L)))
@@ -69,9 +70,9 @@ class SummaryOpsSpec extends SparkSpec {
     val docs = (1L to 20L).map(i =>
       (i, (1 to 30).map(j => s"w${(i * 31 + j * 17) % 13}").mkString(" ")))
       .toDF("doc_id", "text")
-    val one = Winnowing.fingerprints(docs, k = 3, w = 4)
+    val one = Winnowing.fingerprints(docs)
       .as[(Long, Long)].collect().toSet
-    val many = Winnowing.fingerprints(docs.repartition(7), k = 3, w = 4)
+    val many = Winnowing.fingerprints(docs.repartition(7))
       .as[(Long, Long)].collect().toSet
     assert(one === many)
     // ≤ one fingerprint per full window, and the 2/(w+1) density makes it
@@ -171,9 +172,9 @@ class SummaryOpsSpec extends SparkSpec {
   }
 
   test("cdc chunking: insertion resynchronizes — all chunks after the first boundary are shared") {
-    val base = (1 to 60).map(i => s"tok$i").mkString(" ")
+    val base = (1 to 120).map(i => s"tok$i").mkString(" ")
     val docs = Seq((1L, base), (2L, s"inserted $base")).toDF("doc_id", "text")
-    val ch = graft.dedup.ContentChunking.chunks(docs, divisor = 8)
+    val ch = graft.dedup.ContentChunking.chunks(docs)
       .select($"doc", $"chunk", $"chunk_hash")
       .as[(Long, Long, String)].collect()
     val h1 = ch.filter(_._1 == 1L).map(_._3).toSet
@@ -184,7 +185,7 @@ class SummaryOpsSpec extends SparkSpec {
     assert(missing.size <= 1, s"CDC failed to resynchronize: $missing")
     // chunk ids are a partition of each doc's tokens
     val n1 = ch.filter(_._1 == 1L).map(_._2).distinct.length
-    assert(n1 >= 2, "divisor 8 over 60 tokens should cut at least once")
+    assert(n1 >= 2, "divisor 16 over 120 tokens should cut at least once")
   }
 
   test("interpolate: exact blend between knots, NULL outside the span, knots pass through") {

@@ -3,7 +3,8 @@ package graft.dedup
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Bloom-bitmap delta dedup ([[BloomDedup.bloomDeltaDedup]]): hand verdicts,
+/** Bloom-bitmap delta dedup ([[BloomDedup.bloomProbe]] over a
+  * [[BloomDedup.corpusBloom]] bitmap): hand verdicts,
   * the no-false-negative invariant, exactness of `is_dup` regardless of the
   * bitmap's false-positive rate, and the forced-false-positive path on a
   * deliberately undersized bitmap.
@@ -14,11 +15,16 @@ class BloomDedupSpec extends SparkSpec {
   private def fp(df: org.apache.spark.sql.DataFrame) =
     df.select(col("doc_id"), md5(col("text")).as("fp"))
 
+  /** Verdicts of `deltaFp` against an `mBits` bitmap built from `corpusFp`. */
+  private def deltaDedup(corpusFp: org.apache.spark.sql.DataFrame,
+                         deltaFp: org.apache.spark.sql.DataFrame, mBits: Int) =
+    BloomDedup.bloomProbe(BloomDedup.corpusBloom(corpusFp, mBits, 4), corpusFp, deltaFp,
+      mBits = mBits, k = 4)
+
   test("bloomDeltaDedup: exact copy dropped, novel kept — by hand") {
     val corpus = Seq((1L, "alpha text"), (2L, "beta text")).toDF("doc_id", "text")
     val delta = Seq((10L, "alpha text"), (11L, "gamma text")).toDF("doc_id", "text")
-    val out = BloomDedup.bloomDeltaDedup(
-        fp(corpus).select(col("fp")), fp(delta), mBits = 1 << 10, k = 4)
+    val out = deltaDedup(fp(corpus).select(col("fp")), fp(delta), mBits = 1 << 10)
       .orderBy("doc_id")
       .select("doc_id", "bloom_hit", "is_dup", "verdict")
       .as[(Long, Boolean, Boolean, String)].collect().toSeq
@@ -33,8 +39,7 @@ class BloomDedupSpec extends SparkSpec {
     val corpus = (0 until 40).map(i => (i.toLong, s"corpus doc $i")).toDF("doc_id", "text")
     val delta = ((100 until 140).map(i => (i.toLong, s"novel doc $i")) ++
       Seq((200L, "corpus doc 7"), (201L, "corpus doc 33"))).toDF("doc_id", "text")
-    val out = BloomDedup.bloomDeltaDedup(
-        fp(corpus).select(col("fp")), fp(delta), mBits = 64, k = 4)
+    val out = deltaDedup(fp(corpus).select(col("fp")), fp(delta), mBits = 64)
       .select("doc_id", "bloom_hit", "is_dup").as[(Long, Boolean, Boolean)]
       .collect().toSeq
     val byId = out.map(t => t._1 -> t).toMap
@@ -47,17 +52,6 @@ class BloomDedupSpec extends SparkSpec {
     // deterministic given the md5 position math
     assert(out.exists(t => t._2 && !t._3),
       "expected at least one false positive at load 2.5")
-  }
-
-  test("bloomProbe with a prebuilt bitmap ≡ bloomDeltaDedup") {
-    val corpus = (0 until 25).map(i => (i.toLong, s"c$i")).toDF("doc_id", "text")
-    val delta = (0 until 20).map(i => (100L + i, if (i % 4 == 0) s"c$i" else s"x$i"))
-      .toDF("doc_id", "text")
-    val cfp = fp(corpus).select(col("fp"))
-    val full = BloomDedup.bloomDeltaDedup(cfp, fp(delta), mBits = 1 << 10, k = 4)
-    val words = BloomDedup.corpusBloom(cfp, 1 << 10, 4)
-    val probe = BloomDedup.bloomProbe(words, cfp, fp(delta), mBits = 1 << 10, k = 4)
-    assert(full.exceptAll(probe).isEmpty && probe.exceptAll(full).isEmpty)
   }
 
   test("mergeBlooms: OR of split bitmaps ≡ bitmap of the union, probes agree") {
@@ -85,12 +79,10 @@ class BloomDedupSpec extends SparkSpec {
     val corpus = (0 until 30).map(i => (i.toLong, s"c$i")).toDF("doc_id", "text")
     val delta = (0 until 30).map(i => (100L + i, if (i % 3 == 0) s"c$i" else s"n$i"))
       .toDF("doc_id", "text")
-    val a = BloomDedup.bloomDeltaDedup(fp(corpus).select(col("fp")),
-        fp(delta), mBits = 1 << 12, k = 4)
+    val a = deltaDedup(fp(corpus).select(col("fp")), fp(delta), mBits = 1 << 12)
       .orderBy("doc_id").collect().toSeq
-    val b = BloomDedup.bloomDeltaDedup(
-        fp(corpus.repartition(7)).select(col("fp")),
-        fp(delta.repartition(5)), mBits = 1 << 12, k = 4)
+    val b = deltaDedup(fp(corpus.repartition(7)).select(col("fp")),
+        fp(delta.repartition(5)), mBits = 1 << 12)
       .orderBy("doc_id").collect().toSeq
     assert(a == b)
   }

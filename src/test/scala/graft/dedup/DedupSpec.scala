@@ -11,6 +11,14 @@ class DedupSpec extends SparkSpec {
   private lazy val docs = Tables.documents(spark, sf())
   private lazy val aug = PipelineQueries.augmented(docs)
 
+  private def shingled(d: org.apache.spark.sql.DataFrame, k: Int) =
+    Dedup.withShingles(d, k).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  private def tfCosine(d: org.apache.spark.sql.DataFrame, k: Int, threshold: Double) =
+    Dedup.tfCosinePairsFromTf(
+      Dedup.shingleTf(d, k).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      threshold)
+
   test("shingles: < k tokens yields empty, k tokens yields one, dups collapse") {
     val out = Seq("a b c", "a b c d e", "x x x x x x", "a b c d e f")
       .toDF("text").select(Dedup.shingles(col("text"), 5).as("sh"))
@@ -24,7 +32,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash LSH finds every planted exact and near duplicate") {
-    val found = MinHashLSH.nearDuplicates(aug, threshold = 0.8)
+    val found = MinHashLSH.nearDuplicates(aug)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val exactPlanted = docs.filter($"doc_id" % 10 === 0)
       .select($"doc_id").as[Long].collect()
@@ -50,7 +58,8 @@ class DedupSpec extends SparkSpec {
     val docD = (toks("fd", 12) ++ runR.take(14)).mkString(" ") // 14 < minRun
     val df = Seq((1L, docA), (2L, docB), (3L, docC), (4L, docD))
       .toDF("doc_id", "text")
-    val out = Dedup.sharedTokenRuns(df, k = 5, minRunTokens = 15)
+    val out = Dedup.sharedTokenRunsFromPositional(Dedup.positionalArrays(df, 5),
+        k = 5, minRunTokens = 15)
       .orderBy($"id_a", $"id_b")
       .as[(Long, Long, Long, Long)].collect().toSeq
     // (A,B): run R only; (A,C): R and S; (B,C): R only; doc 4's 14-token
@@ -59,7 +68,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash signature agreement approximates exact jaccard") {
-    val sigs = MinHashLSH.signatures(aug, k = 5, numHashes = 128)
+    val sigs = MinHashLSH.signaturesFromShingles(shingled(aug, 5), numHashes = 128)
     val planted = sigs.filter($"id" === 1L || $"id" === 2000001L)
       .select($"sig").as[Seq[Long]].collect()
     val agree = planted(0).zip(planted(1)).count { case (a, b) => a == b }.toDouble / 128
@@ -70,7 +79,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash LSH reports exact jaccard on its candidates (no sketch values)") {
-    val pairs = MinHashLSH.nearDuplicates(aug, threshold = 0.8)
+    val pairs = MinHashLSH.nearDuplicates(aug)
       .as[(Long, Long, Double)].collect()
     val exactPairs = Dedup.ngramJaccardPairs(aug, 5, 0.8)
       .select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)].collect()
@@ -81,7 +90,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash: planted exact dups at hamming 0, near dups within 3") {
-    val found = SimHash.nearDuplicates(aug, maxHamming = 3)
+    val found = SimHash.nearDuplicates(aug)
       .as[(Long, Long, Int)].collect()
       .map { case (a, b, h) => (a, b) -> h }.toMap
     docs.filter($"doc_id" % 10 === 0).select($"doc_id").as[Long].collect()
@@ -97,7 +106,7 @@ class DedupSpec extends SparkSpec {
   test("OPH minhash: planted dups captured, output subset of exact pairs") {
     import graft.dedup.{Dedup => D}
     val sh = D.withShingles(aug, 5)
-    val pairs = MinHashLSH.nearDuplicatesOPH(sh, buckets = 64, bands = 16)
+    val pairs = MinHashLSH.nearDuplicatesOPH(sh)
       .select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)].collect()
     // hard guarantee: every planted exact copy with >= 5 tokens is captured
     val plantedIds = D.withShingles(
@@ -154,7 +163,7 @@ class DedupSpec extends SparkSpec {
     val short = "alpha beta gamma delta epsilon zeta eta theta"
     val long = short + " " + (1 to 40).map(i => s"filler$i").mkString(" ")
     val docs = Seq((1L, short), (2L, long), (3L, "totally different words entirely here now")).toDF("doc_id", "text")
-    val cont = Dedup.containmentPairs(docs, k = 5, threshold = 0.9)
+    val cont = Dedup.containmentPairsFromShingles(shingled(docs, 5), threshold = 0.9)
       .as[(Long, Long, Long, Long, Long, Double, Double)].collect()
     assert(cont.length == 1)
     val (a, b, inter, sa, _, ca, cb) = cont.head
@@ -167,11 +176,11 @@ class DedupSpec extends SparkSpec {
 
   test("prefixFilterJaccardPairs equals the uncut exact join (losslessness)") {
     val corpus = aug
-    val exact = Dedup.ngramJaccardPairs(corpus, k = 5, threshold = 0.5,
+    val exact = Dedup.jaccardPairsFromShingles(shingled(corpus, 5), threshold = 0.5,
         maxShingleFreq = Int.MaxValue)
       .select($"id_a", $"id_b", $"intersection", $"jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
-    val pf = Dedup.prefixFilterJaccardPairs(corpus, k = 5, threshold = 0.5)
+    val pf = Dedup.prefixFilterJaccardPairsFromShingles(shingled(corpus, 5), threshold = 0.5)
       .select($"id_a", $"id_b", $"intersection", $"jaccard")
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(pf == exact)
@@ -180,7 +189,7 @@ class DedupSpec extends SparkSpec {
     // docs must collide in prefixes and survive with jaccard 1.0
     val d = Seq((1L, "a b c d e f g h"), (2L, "a b c d e f g h"),
       (3L, "q r s t u v w x")).toDF("doc_id", "text")
-    val out = Dedup.prefixFilterJaccardPairs(d, k = 5, threshold = 0.5)
+    val out = Dedup.prefixFilterJaccardPairsFromShingles(shingled(d, 5), threshold = 0.5)
       .as[(Long, Long, Long, Long, Long, Double)].collect()
     assert(out.map(r => (r._1, r._2)).toSeq == Seq((1L, 2L)) && out.head._6 == 1.0)
   }
@@ -190,7 +199,7 @@ class DedupSpec extends SparkSpec {
     // k=1 word vectors, hand-computable: A={x:2,y:1}, B={x:1,y:2} →
     // dot 4, norms 5/5, cosine 0.8; distinct-shingle Jaccard calls them 1.0
     val d = Seq((1L, "x x y"), (2L, "x y y"), (3L, "z w v")).toDF("doc_id", "text")
-    val rows = Dedup.tfCosinePairs(d, k = 1, threshold = 0.75)
+    val rows = tfCosine(d, k = 1, threshold = 0.75)
       .as[(Long, Long, Long, Long, Long, Double)].collect()
     assert(rows.length == 1)
     val (a, b, dot, n2a, n2b, cos) = rows.head
@@ -201,7 +210,7 @@ class DedupSpec extends SparkSpec {
     // identical docs → cosine ~1; docs shorter than k are dropped
     val e = Seq((1L, "p q r s t u"), (2L, "p q r s t u"), (3L, "p q"))
       .toDF("doc_id", "text")
-    val same = Dedup.tfCosinePairs(e, k = 5, threshold = 0.9)
+    val same = tfCosine(e, k = 5, threshold = 0.9)
       .as[(Long, Long, Long, Long, Long, Double)].collect()
     assert(same.map(r => (r._1, r._2)).toSeq == Seq((1L, 2L)))
     assert(math.abs(same.head._6 - 1.0) < 1e-12)

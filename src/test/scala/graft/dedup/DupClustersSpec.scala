@@ -103,16 +103,18 @@ class DupClustersSpec extends SparkSpec {
   }
 
   test("pageRankFixedPoint: hand-computed values on a path; center of a star dominates") {
-    // path 1-2-3, one iteration, scale 1000: base = 150
-    // contrib: 1 -> 1000/1 = 1000; 2 -> 1000/2 = 500; 3 -> 1000
-    // pr1(1) = 150 + 85*500/100 = 575; pr1(2) = 150 + 85*2000/100 = 1850; pr1(3) = 575
+    // path 1-2-3, two iterations at scale 10¹² (= 1.0): base = 1.5·10¹¹
+    // it 1: sums 1: 5·10¹¹, 2: 2·10¹², 3: 5·10¹¹
+    //   pr1(1) = pr1(3) = 1.5·10¹¹ + 85·5·10¹¹/100 = 5.75·10¹¹; pr1(2) = 1.85·10¹²
+    // it 2: sums 1: 1.85·10¹² div 2 = 9.25·10¹¹, 2: 2·5.75·10¹¹ = 1.15·10¹²
+    //   pr2(1) = pr2(3) = 1.5·10¹¹ + 7.8625·10¹¹; pr2(2) = 1.5·10¹¹ + 9.775·10¹¹
     val path = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val it1 = DupClusters.pageRankFixedPoint(path, iterations = 1, scale = 1000L)
+    val it2 = DupClusters.pageRankFixedPoint(path)
       .as[(Long, Long)].collect().toMap
-    assert(it1 == Map(1L -> 575L, 2L -> 1850L, 3L -> 575L))
+    assert(it2 == Map(1L -> 936250000000L, 2L -> 1127500000000L, 3L -> 936250000000L))
     // star K1,4: the hub must outrank every leaf after two iterations
     val star = (2L to 5L).map(i => (1L, i)).toDF("id_a", "id_b")
-    val pr = DupClusters.pageRankFixedPoint(star, iterations = 2)
+    val pr = DupClusters.pageRankFixedPoint(star)
       .as[(Long, Long)].collect().toMap
     assert((2L to 5L).forall(l => pr(1L) > pr(l)))
     assert((2L to 5L).map(pr).toSet.size == 1) // leaves identical by symmetry
@@ -213,11 +215,11 @@ class DupClustersSpec extends SparkSpec {
   }
 
   test("randomWalks min_by aggregate reproduces the windowed argmin semantics") {
-    // reference: row_number over (md5(seed:walk:s:nxt), nxt) picking rank 1 —
+    // reference: row_number over (md5("walk":walk:s:nxt), nxt) picking rank 1 —
     // the pre-r9 implementation — computed by hand via the same draw
     val edges = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (4L, 0L))
       .toDF("id_a", "id_b")
-    val walks = DupClusters.randomWalks(edges, steps = 3, seed = "w9")
+    val walks = DupClusters.randomWalks(edges, steps = 3)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
     def md5Hex(s: String): String = java.security.MessageDigest
       .getInstance("MD5").digest(s.getBytes("UTF-8"))
@@ -229,64 +231,12 @@ class DupClustersSpec extends SparkSpec {
       var cur = start
       val steps = (1 to 3).map { s =>
         val nbrs = adj.getOrElse(cur, Seq(cur))
-        cur = nbrs.minBy(n => (md5Hex(s"w9:$start:$s:$n"), n))
+        cur = nbrs.minBy(n => (md5Hex(s"walk:$start:$s:$n"), n))
         cur
       }
       (start, steps(0), steps(1), steps(2))
     }
     assert(walks.toSeq == expected)
-  }
-
-  test("randomWalks maxDegree cap: deterministic, stays in graph, respects cap") {
-    // hub 0 with 6 spokes; cap d=2 → walks from the spokes through 0 may
-    // only continue to 0's two retained neighbors (+0 itself via self-hold)
-    val spokes = (1L to 6L).map(h => (0L, h))
-    val edges = spokes.toDF("id_a", "id_b")
-    val capped = DupClusters.randomWalks(edges, steps = 2, seed = "cap",
-      maxDegree = Some(2)).as[(Long, Long, Long)].collect().toSeq.sortBy(_._1)
-    val again = DupClusters.randomWalks(edges.repartition(5), steps = 2,
-      seed = "cap", maxDegree = Some(2)).as[(Long, Long, Long)]
-      .collect().toSeq.sortBy(_._1)
-    assert(capped == again, "capped walks must be partitioning-invariant")
-    // every visited node is a real node
-    val nodes = (0L to 6L).toSet
-    capped.foreach { case (_, s1, s2) =>
-      assert(nodes.contains(s1) && nodes.contains(s2)) }
-    // from node 0 the walk can only reach its ≤2 retained spokes: across all
-    // walks, the set of distinct successors OF node 0 has size ≤ 2
-    val succOf0 = capped.flatMap { case (_, s1, s2) =>
-      Seq(s1).filter(_ != 0L).filter(_ => true) // successors recorded below
-    }
-    val stepsFrom0 = capped.collect { case (w, s1, _) if w == 0L => s1 } ++
-      capped.collect { case (_, s1, s2) if s1 == 0L => s2 }
-    assert(stepsFrom0.toSet.size <= 2,
-      s"hub 0 should step only to its 2 retained neighbors, saw $stepsFrom0")
-    assert(succOf0.forall(nodes.contains))
-  }
-
-  test("clusteringCoefficient: triangle+pendant hand graph; leaf is NULL not 0") {
-    // triangle 1-2-3 plus pendant 4 attached to 1:
-    //   node 1: d=3, T=1 → C = 2/(3·2) = 1/3; nodes 2,3: d=2, T=1 → C = 1
-    //   node 4: d=1 → C undefined (NULL)
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L)).toDF("id_a", "id_b")
-    val r = DupClusters.clusteringCoefficient(edges)
-      .select($"node_id", $"degree", $"n_triangles", $"clustering")
-      .as[(Long, Long, Long, Option[Double])].collect().map(x => x._1 -> x).toMap
-    assert(r(1L) === ((1L, 3L, 1L, Some(1.0 / 3.0))))
-    assert(r(2L) === ((2L, 2L, 1L, Some(1.0))))
-    assert(r(3L) === ((3L, 2L, 1L, Some(1.0))))
-    assert(r(4L) === ((4L, 1L, 0L, None)))
-  }
-
-  test("clusteringCoefficient: orientation-duplicated edge list does not double-count") {
-    val once = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("id_a", "id_b")
-    val both = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 1L), (1L, 3L))
-      .toDF("id_a", "id_b")
-    val a = DupClusters.clusteringCoefficient(once)
-      .as[(Long, Long, Long, Option[Double])].collect().toSet
-    val b = DupClusters.clusteringCoefficient(both)
-      .as[(Long, Long, Long, Option[Double])].collect().toSet
-    assert(a === b)
   }
 
   test("bfsHops: path graph — synchronous rounds give exact min hops, bounded radius") {

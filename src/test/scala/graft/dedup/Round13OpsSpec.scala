@@ -32,14 +32,15 @@ class Round13OpsSpec extends SparkSpec {
       // no overlap at all
       (5L, toks(30, "u").mkString(" "))).toDF("doc_id", "text")
 
-    val at15 = Dedup.benchmarkTokenRuns(corpus, bench, k = 5, minRunTokens = 15)
+    val corpusArr = Dedup.positionalArrays(corpus, 5)
+    val at15 = Dedup.benchmarkTokenRunsFromPositional(corpusArr, bench, k = 5, minRunTokens = 15)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(at15.keySet == Set(1L, 4L), s"flagged at 15: ${at15.keySet}")
     assert(at15(1L) == ((1L, 1L, 15L)))
     assert(at15(4L) == ((2L, 2L, 15L)))
 
-    val at10 = Dedup.benchmarkTokenRuns(corpus, bench, k = 5, minRunTokens = 10)
+    val at10 = Dedup.benchmarkTokenRunsFromPositional(corpusArr, bench, k = 5, minRunTokens = 10)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(at10.keySet == Set(1L, 2L, 3L, 4L))
@@ -75,13 +76,15 @@ class Round13OpsSpec extends SparkSpec {
   }
 
   test("dedupDeltaAgainstCorpus: hot shingles make candidates die and counts prune — by hand") {
-    // base docs B1..B3 all contain the shingle (h1..h5) -> with
-    // maxShingleFreq = 2 that shingle is HOT (df = 4 incl. the delta doc).
+    // base docs B1..B3 and 1000 fillers all contain the shingle (h1..h5)
+    // -> past the 1000-doc cut that shingle is HOT (df = 1005 incl. the
+    // delta docs); a filler shares nothing else with any other doc.
     val common = toks(5, "h").mkString(" ")
-    val base = Seq(
+    val fillers = (1 to 1000).map(i => (1000L + i, common + " " + toks(10, s"f${i}_").mkString(" ")))
+    val base = (Seq(
       (10L, common + " " + toks(10, "a").mkString(" ")),
       (11L, common + " " + toks(10, "b").mkString(" ")),
-      (12L, common + " " + toks(10, "c").mkString(" "))).toDF("doc_id", "text")
+      (12L, common + " " + toks(10, "c").mkString(" "))) ++ fillers).toDF("doc_id", "text")
     // delta doc 50 shares ONLY the hot shingle with B3 (c-tokens absent):
     // every candidate route is hot, so it must be KEPT even though its
     // full-space Jaccard vs B1 would be tiny anyway; delta doc 51 copies
@@ -92,12 +95,12 @@ class Round13OpsSpec extends SparkSpec {
       (51L, common + " " + toks(10, "a").mkString(" "))).toDF("doc_id", "text")
     val out = Dedup.dedupDeltaAgainstCorpus(
         Dedup.withShingles(base, 5), Dedup.withShingles(delta, 5),
-        threshold = 0.5, maxShingleFreq = 2)
+        threshold = 0.5)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     // doc 50: shares only the hot run with the corpus -> zero candidates
     assert(out(50L) == ((0L, true)), s"hot-only overlap must not match: ${out(50L)}")
     // doc 51 vs B1: 15 tokens -> 11 distinct 5-shingles each (full
-    // sizes); only the pure (h1..h5) window is hot (df 5 > 2), the ten
+    // sizes); only the pure (h1..h5) window is hot (df 1005 > 1000), the ten
     // straddling/rare windows are shared, so pruned i = 10 against
     // union = 11 + 11 - 10 = 12, 10/12 >= 0.5 -> dropped, exactly once
     assert(out(51L) == ((1L, false)), s"rare mass must still match: ${out(51L)}")

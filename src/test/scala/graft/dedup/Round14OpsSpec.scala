@@ -63,8 +63,9 @@ class Round14OpsSpec extends SparkSpec {
 
   test("hotCutJoiner: broadcast path ≡ shuffle-anti fallback, and the gate trips on size") {
     // ADVICE r13 medium: the >maxFreq hot-set broadcast must be gated.
-    // Build a frame with two hot shingles and three rare ones; cut with a
-    // generous ceiling (broadcast path) and with maxRows = 1 (forced
+    // Build a frame with two hot shingles and three rare ones; cut with the
+    // two-row hot set (broadcast path) and with that set padded past the
+    // HotBroadcastMaxRows ceiling by shingles no row carries (forced
     // fallback) — the results must be identical by complement either way.
     val rows = Seq(
       (1L, "hot1"), (2L, "hot1"), (3L, "hot1"),
@@ -73,17 +74,24 @@ class Round14OpsSpec extends SparkSpec {
       .toDF("id", "shingle")
     val hot = rows.groupBy("shingle").agg(count(lit(1)).as("f"))
       .filter(col("f") > 2).select("shingle")
+    def padded(total: Int) = hot.unionByName(spark.range(total - 2L)
+      .select(concat(lit("pad"), col("id").cast("string")).as("shingle")))
     def collectCut(df: org.apache.spark.sql.DataFrame) =
       df.select("id", "shingle")
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val viaBroadcast = collectCut(Dedup.hotCutJoiner(hot)(rows))
-    val viaFallback = collectCut(Dedup.hotCutJoiner(hot, maxRows = 1)(rows))
+    def broadcasts(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("BroadcastHashJoin")
+    val viaBroadcast = Dedup.hotCutJoiner(hot)(rows)
+    val viaFallback = Dedup.hotCutJoiner(padded(Dedup.HotBroadcastMaxRows + 1))(rows)
     val expected = Set((1L, "rare_a"), (2L, "rare_b"), (3L, "rare_c"))
-    assert(viaBroadcast == expected, s"broadcast path: $viaBroadcast")
-    assert(viaFallback == expected, s"fallback path: $viaFallback")
+    assert(collectCut(viaBroadcast) == expected, s"broadcast path: ${collectCut(viaBroadcast)}")
+    assert(collectCut(viaFallback) == expected, s"fallback path: ${collectCut(viaFallback)}")
+    assert(broadcasts(viaBroadcast) && !broadcasts(viaFallback),
+      "the gate must trip one row past the ceiling")
     // boundary: a hot set exactly AT the ceiling still broadcasts
-    val atCeiling = collectCut(Dedup.hotCutJoiner(hot, maxRows = 2)(rows))
-    assert(atCeiling == expected)
+    val atCeiling = Dedup.hotCutJoiner(padded(Dedup.HotBroadcastMaxRows))(rows)
+    assert(collectCut(atCeiling) == expected)
+    assert(broadcasts(atCeiling))
   }
 
   test("LSH verdicts ≡ exact-kernel verdicts on the xsnap fixture (sf0.001)") {

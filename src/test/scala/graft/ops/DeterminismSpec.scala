@@ -36,7 +36,7 @@ class DeterminismSpec extends SparkSpec {
 
   test("lineDedup output is partitioning-invariant") {
     val (a, b) = variants(docs)
-    def run(d: DataFrame) = Dedup.lineDedup(d, sep = " ", joinSep = " ")
+    def run(d: DataFrame) = Dedup.lineDedup(d)
       .select($"doc_id", $"n_kept", $"clean_text")
       .as[(Long, Long, String)].collect().toSet
     assert(run(a) == run(b))
@@ -71,11 +71,12 @@ class DeterminismSpec extends SparkSpec {
         d, $"doc_id" % 3, ($"doc_id" % 5 + 1).cast("double"), n = 4, id = $"doc_id")
       .select($"doc_id").as[Long].collect().toSet
     assert(strat(a) == strat(b))
-    // different seeds redraw; the draw is not a fixed prefix of ids
-    def seeded(seed: String) = Sampling.weightedSample(
-        docs, lit(1.0), n = 20, id = $"doc_id", seed = seed)
+    // uniform weights: the draw is not a fixed prefix or suffix of ids
+    val uniform = Sampling.weightedSample(docs, lit(1.0), n = 20, id = $"doc_id")
       .select($"doc_id").as[Long].collect().toSet
-    assert(seeded("s1") != seeded("s2"))
+    val ids = docs.select($"doc_id").as[Long].collect().sorted
+    assert(uniform.size == 20 && uniform != ids.take(20).toSet &&
+      uniform != ids.takeRight(20).toSet)
     // weight sensitivity: weight-10 rows must beat weight-0.1 rows in
     // expectation — with 30 of each and n=20, a correct A-ES draw picks
     // far more heavy rows (probability of the reverse is astronomically

@@ -73,7 +73,7 @@ class GeoIncrementalSpec extends SparkSpec {
     val df = Seq((1.0, -1.0, 7.0, 1.0), (2.0, -2.0, 7.0, -1.0),
       (3.0, -3.0, 7.0, -1.0), (4.0, -4.0, 7.0, 1.0))
       .toDF("x", "y", "z", "w")
-    val out = Correlation.pearsonMatrix(df, Seq("x", "y", "z", "w"), scale = 10)
+    val out = Correlation.pearsonMatrix(df, Seq("x", "y", "z", "w"))
       .select($"col_a", $"col_b", $"r").as[(String, String, Option[Double])]
       .collect().map(t => (t._1, t._2) -> t._3).toMap
     assert(math.abs(out(("x", "y")).get + 1.0) < 1e-12)
@@ -200,20 +200,17 @@ class GeoIncrementalSpec extends SparkSpec {
 
   test("vocab OOV: tie at the cut breaks by term; rates hand-computed") {
     import graft.text.Vocab
+    // 499 terms of count 3 fill all but the last slot of the top-500
+    // vocabulary; c and d (count 1 each) tie for it -> term order keeps c
+    val hot = (1 to 499).map(i => f"h$i%03d")
     val docs = Seq(
-      (1L, "a a b c", "s1"),  // counts: a=2, b=1, c=1
-      (2L, "a b d", "s2")     //         a=3, b=2, c=1, d=1
+      (1L, (hot ++ hot :+ "c").mkString(" "), "s1"),
+      (2L, (hot :+ "d").mkString(" "), "s2")
     ).toDF("doc_id", "text", "source")
-    // top-2 = a (3), b (2); c and d are OOV
-    val voc = Vocab.topVocab(docs, 2).collect().map(_.getString(0)).toSet
-    assert(voc == Set("a", "b"))
-    // top-3 tie between c (1) and d (1) -> term order keeps c
-    val voc3 = Vocab.topVocab(docs, 3).collect().map(_.getString(0)).toSet
-    assert(voc3 == Set("a", "b", "c"))
-    val rates = Vocab.oovRate(docs, 2).collect()
+    val rates = Vocab.oovRate(docs).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(rates("s1") == (4L, 1L)) // c
-    assert(rates("s2") == (3L, 1L)) // d
+    assert(rates("s1") == (999L, 0L)) // c made the cut
+    assert(rates("s2") == (500L, 1L)) // d did not
   }
 
   test("kendallTau: hand-computed concordance; perfect and inverted orders") {
@@ -382,18 +379,18 @@ class GeoIncrementalSpec extends SparkSpec {
 
   test("rbo: identical rankings score the truncated maximum; disjoint score 0") {
     import graft.analytics.Correlation
-    val r1 = (1L to 10L).map(i => (i, i)).toDF("id", "rank")
+    val r1 = (1L to 10L).map(i => (i, i)).toDF("doc_id", "rank")
     val same = Correlation.rbo(r1, r1, depth = 10)
       .select($"rbo", $"a_10").as[(Double, Long)].head()
     // truncated max: 0.5 * sum(0.5^(d-1) * d/d) = 1 - 0.5^10
     assert(math.abs(same._1 - (1.0 - math.pow(0.5, 10))) < 1e-15 && same._2 == 10L)
-    val r2 = (1L to 10L).map(i => (i + 100, i)).toDF("id", "rank")
+    val r2 = (1L to 10L).map(i => (i + 100, i)).toDF("doc_id", "rank")
     val disj = Correlation.rbo(r1, r2, depth = 10).select($"rbo").as[Double].head()
     assert(disj == 0.0)
     // top-heavy agreement beats tail agreement: swapping ranks 1&2 hurts
     // more than swapping 9&10
     def swapped(a: Long, b: Long) = (1L to 10L)
-      .map(i => (if (i == a) b else if (i == b) a else i, i)).toDF("id", "rank")
+      .map(i => (if (i == a) b else if (i == b) a else i, i)).toDF("doc_id", "rank")
     val top = Correlation.rbo(r1, swapped(1, 2), 10).select($"rbo").as[Double].head()
     val tail = Correlation.rbo(r1, swapped(9, 10), 10).select($"rbo").as[Double].head()
     assert(top < tail && tail < same._1)
@@ -437,14 +434,14 @@ class GeoIncrementalSpec extends SparkSpec {
     import graft.text.TextAnalysis
     // stopword 'the' splits islands. Islands: [big cat], [big dog], [cat]
     // freq: big=2, cat=2, dog=1; deg: big=2+2=4, cat=2+1=3, dog=2
-    // scores (scale 100): big=200, cat=150, dog=200
-    // phrases: "big cat"=350, "big dog"=400, "cat"=150
+    // scores (scale 10⁶): big=2·10⁶, cat=1.5·10⁶, dog=2·10⁶
+    // phrases: "big cat"=3.5·10⁶, "big dog"=4·10⁶, "cat"=1.5·10⁶
     val docs = Seq(
       (1L, "big cat the big dog"),
       (2L, "the cat")
     ).toDF("doc_id", "text")
-    val out = TextAnalysis.rakeKeyphrases(docs, k = 10, scale = 100L)
+    val out = TextAnalysis.rakeKeyphrases(docs)
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
-    assert(out == Map("big dog" -> 400L, "big cat" -> 350L, "cat" -> 150L))
+    assert(out == Map("big dog" -> 4000000L, "big cat" -> 3500000L, "cat" -> 1500000L))
   }
 }

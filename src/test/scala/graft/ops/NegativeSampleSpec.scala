@@ -15,7 +15,7 @@ class NegativeSampleSpec extends SparkSpec {
   private def catalog = (10L to 29L).toDF("item_id")
 
   test("negatives are never positives, at most k per user, ordered by probe index") {
-    val neg = Sampling.negativeSample(positives, catalog, k = 3, probes = 12)
+    val neg = Sampling.negativeSample(positives, catalog)
     val rows = neg.collect()
     val pos = positives.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     rows.foreach { r =>
@@ -33,15 +33,24 @@ class NegativeSampleSpec extends SparkSpec {
     rows.foreach(r => assert(cat.contains(r.getLong(1))))
   }
 
-  test("deterministic across reruns and partitionings; seed redraws") {
+  test("deterministic across reruns and partitionings; draws replay the md5 probes") {
     val a = Sampling.negativeSample(positives, catalog).orderBy("user_id", "probe_idx")
       .collect().toSeq
     val b = Sampling.negativeSample(positives.repartition(5), catalog.repartition(3))
       .orderBy("user_id", "probe_idx").collect().toSeq
     assert(a == b, "same draw on any partitioning")
-    val c = Sampling.negativeSample(positives, catalog, seed = "other")
-      .orderBy("user_id", "probe_idx").collect().toSeq
-    assert(a != c, "different seed must redraw")
+    // probe i of user u is item 10 + md5U32("neg:u:i") mod 20; a user keeps
+    // the first 3 probes that are neither repeats nor positives
+    def md5U32(s: String): Long = java.lang.Long.parseLong(
+      java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+        .take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
+    val pos = positives.as[(Long, Long)].collect().toSet
+    val expected = pos.map(_._1).toSeq.sorted.flatMap { u =>
+      (0 until 12).map(i => (u, 10L + md5U32(s"neg:$u:$i") % 20, i))
+        .groupBy(_._2).values.map(_.minBy(_._3)).toSeq.sortBy(_._3)
+        .filterNot(t => pos.contains((u, t._2))).take(3)
+    }
+    assert(a.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))) == expected)
   }
 
   test("plan: catalog stats are a 1-row broadcast, no cartesian product") {

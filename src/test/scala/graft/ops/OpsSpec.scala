@@ -151,17 +151,6 @@ class OpsSpec extends SparkSpec {
     assert(rows() == all)
   }
 
-  test("analyze computes catalog statistics (M4)") {
-    spark.sql("DROP TABLE IF EXISTS graft_stats_t")
-    (1 to 100).toDF("id").write.saveAsTable("graft_stats_t")
-    try {
-      Maintenance.analyze(spark, "graft_stats_t", Seq("id"))
-      val stats = spark.sql("DESCRIBE EXTENDED graft_stats_t")
-        .filter($"col_name" === "Statistics").select("data_type").as[String].head()
-      assert(stats.contains("100 rows"), stats)
-    } finally spark.sql("DROP TABLE graft_stats_t")
-  }
-
   test("dlqSplit routes malformed JSON to the DLQ side and parses the rest") {
     import org.apache.spark.sql.types._
     val df = Seq((1L, """{"k": 5}"""), (2L, """{"k"""), (3L, """{"k": 7}"""), (4L, "not json"))

@@ -2,8 +2,6 @@ package graft.ops
 
 import graft.{SparkSpec, Tables}
 import graft.score.{RiskScore, TypedRiskScore}
-import graft.stream.StreamingIngest
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 class SkewAndTypedSpec extends SparkSpec {
@@ -60,51 +58,5 @@ class SkewAndTypedSpec extends SparkSpec {
       .select("device_id", "report_date", "total_reports", "overspeed_reports", "night_reports")
     val untyped = RiskScore.aggregate(RiskScore.base(fact))
     assert(typed.exceptAll(untyped).count() == 0 && untyped.exceptAll(typed).count() == 0)
-  }
-
-  test("transformWithState (state v2) matches the v1 running totals cross-batch") {
-    implicit val s = spark
-    implicit val sql = spark.sqlContext
-    graft.GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      val mem = MemoryStream[(String, Double)]
-      val q = StreamingIngest.runningDeviceTotalsV2(mem.toDS())
-        .toDF("device_id", "n", "max_speed")
-        .writeStream.format("memory").queryName("running_v2_out")
-        .outputMode("update").start()
-      try {
-        mem.addData(("d7", 10.0), ("d7", 30.0), ("d9", 5.0))
-        q.processAllAvailable()
-        mem.addData(("d7", 20.0))
-        q.processAllAvailable()
-        val last = spark.table("running_v2_out")
-          .groupBy("device_id").agg(max("n").as("n"), max("max_speed").as("m"))
-          .as[(String, Long, Double)].collect()
-          .map { case (k, n, m) => k -> ((n, m)) }.toMap
-        // same cross-batch semantics as the v1 mapGroupsWithState operator
-        assert(last("d7") == ((3L, 30.0)) && last("d9") == ((1L, 5.0)))
-      } finally q.stop()
-    }
-  }
-
-  test("mapGroupsWithState keeps running totals across micro-batches") {
-    implicit val s = spark
-    implicit val sql = spark.sqlContext
-    val mem = MemoryStream[(String, Double)]
-    val q = StreamingIngest.runningDeviceTotals(mem.toDS())
-      .toDF("device_id", "n", "max_speed")
-      .writeStream.format("memory").queryName("running_out").outputMode("update").start()
-    try {
-      mem.addData(("d7", 10.0), ("d7", 30.0), ("d9", 5.0))
-      q.processAllAvailable()
-      mem.addData(("d7", 20.0))
-      q.processAllAvailable()
-      val last = spark.table("running_out")
-        .groupBy("device_id").agg(max("n").as("n"), max("max_speed").as("m"))
-        .as[(String, Long, Double)].collect()
-        .map { case (k, n, m) => k -> ((n, m)) }.toMap
-      assert(last("d7") == ((3L, 30.0))) // state carried: 2 + 1 events, max from batch 1
-      assert(last("d9") == ((1L, 5.0)))
-    } finally q.stop()
   }
 }

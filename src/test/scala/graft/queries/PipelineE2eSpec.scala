@@ -50,8 +50,9 @@ class PipelineE2eSpec extends SparkSpec {
       .select(md5(col("text")).as("fp"))
     val deltaFp = aug.filter(col("doc_id") >= 1000000L)
       .select(col("doc_id"), md5(col("text")).as("fp"))
-    val drop0 = graft.dedup.BloomDedup
-      .bloomDeltaDedup(corpusFp, deltaFp, mBits = 1 << 16, k = 4)
+    val bloom = graft.dedup.BloomDedup
+    val drop0 = bloom
+      .bloomProbe(bloom.corpusBloom(corpusFp, 1 << 16, 4), corpusFp, deltaFp, mBits = 1 << 16, k = 4)
       .filter(col("verdict") === "drop")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val ingest = fates.filter(_._2 == "ingest_dup").keySet
@@ -103,7 +104,8 @@ class PipelineE2eSpec extends SparkSpec {
     val s2 = s1.filter(!col("doc_id").isin(drop2Ids: _*))
     val bench = graft.Tables.documents(spark, sf())
       .select(col("doc_id"), col("text")).filter(col("doc_id") % 97 === 3)
-    val drop3 = Dedup.benchmarkTokenRuns(s2, bench, k = 5, minRunTokens = 15)
+    val drop3 = Dedup.benchmarkTokenRunsFromPositional(Dedup.positionalArrays(s2, 5), bench,
+        k = 5, minRunTokens = 15)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val contaminated = fates.filter(_._2 == "contaminated").keySet
     assert(contaminated == drop3,

@@ -67,7 +67,7 @@ class Round17OpsSpec extends SparkSpec {
       val expected = Multimodal.phashIncremental(v1Bands, delta, hashes, isV1)
         .collect().sortBy(_.getLong(0))
       val got = Multimodal.phashIncrementalBucketed("r17_phb_idx", delta,
-        hashes, isV1).collect().sortBy(_.getLong(0))
+        hashes, isV1, numSalts = 1).collect().sortBy(_.getLong(0))
       assert(got.length == expected.length,
         s"row counts diverge: ${got.length} vs ${expected.length}")
       got.zip(expected).foreach { case (g, e) =>
@@ -95,7 +95,7 @@ class Round17OpsSpec extends SparkSpec {
       // index co-located; the delta side shuffles INTO its layout)
       graft.GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         def exchanges(t: String) = countExchanges(
-          Multimodal.phashIncrementalBucketed(t, delta, hashes, isV1)
+          Multimodal.phashIncrementalBucketed(t, delta, hashes, isV1, numSalts = 1)
             .queryExecution.executedPlan.toString)
         val nBucketed = exchanges("r17_phb_idx")
         val nPlain = exchanges("r17_phb_idx_plain")
@@ -103,10 +103,10 @@ class Round17OpsSpec extends SparkSpec {
           s"bucketing saved no Exchange: bucketed=$nBucketed plain=$nPlain")
         // the precise claim: the standing index never moves when bucketed
         assert(!standingSideMoves(Multimodal.phashIncrementalBucketed(
-          "r17_phb_idx", delta, hashes, isV1), "r17_phb_idx"),
+          "r17_phb_idx", delta, hashes, isV1, numSalts = 1), "r17_phb_idx"),
           "bucketed standing index was shuffled")
         assert(standingSideMoves(Multimodal.phashIncrementalBucketed(
-          "r17_phb_idx_plain", delta, hashes, isV1), "r17_phb_idx_plain"),
+          "r17_phb_idx_plain", delta, hashes, isV1, numSalts = 1), "r17_phb_idx_plain"),
           "plain-table control should shuffle (pin would prove nothing)")
       }
     } finally {

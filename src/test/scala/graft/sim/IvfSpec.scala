@@ -41,18 +41,6 @@ class IvfSpec extends SparkSpec {
     assert(cells.forall(c => c >= 0 && c < 16))
   }
 
-  test("sampled build still yields a usable index") {
-    val sampled = Ivf.build(emb, nlist = 16, sampleFraction = 0.5)
-    assert(sampled.centroids.length == 16)
-    val queries = emb.filter($"vec_id" < 10)
-    val ivf = Ivf.topK(emb, queries, sampled, k = 3, nprobe = 4)
-      .select($"query_id", $"nn_id").as[(Long, Long)].collect()
-    val brute = Similarity.bruteForceTopK(emb, queries, k = 3)
-      .select($"query_id", $"nn_id").as[(Long, Long)].collect().toSet
-    val recall = ivf.count(brute).toDouble / brute.size
-    assert(recall >= 0.4, s"sampled-index recall@3 = $recall")
-  }
-
   test("cell-partitioned layout prunes the scan to probed cells") {
     val base = graft.TempDirs.fixtureDir("ivf") + "/corpus"
     Ivf.writeCellPartitioned(emb, index, base)

@@ -86,7 +86,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("bucketed threshold pairs: subset of exact pairs with exact cosines") {
     val small = emb.filter($"vec_id" < 200)
-    val bucketed = Similarity.bucketedThresholdPairs(small, 0.4, bands = 4, planesPerBand = 4)
+    val bucketed = Similarity.bucketedThresholdPairs(small, 0.4)
       .as[(Long, Long, Double)].collect()
     assert(bucketed.nonEmpty, "no candidate survived banded SRP")
     val exact = Similarity.thresholdPairs(small, 0.4, lit(true))

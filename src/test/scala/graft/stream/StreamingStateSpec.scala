@@ -4,95 +4,15 @@ import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** State-store observability for the watermarked stateful operators: the
-  * 100 TB contract of `alertEnrichmentJoin` and `sessionizedDeviceCounts`
-  * is that WATERMARKS ACTUALLY BOUND STATE — join buffers and open
-  * sessions are evicted as event time advances, so state size tracks the
-  * watermark horizon, not stream length. These tests replay multi-batch
-  * feeds with advancing event time and pin that contract through
-  * `StreamingQueryProgress.stateOperators`: rows ARE removed, and the
-  * resident state row count plateaus instead of growing with input.
+/** State-store observability for the live sketch maintenance streams:
+  * multi-batch feeds pin, through `StreamingQueryProgress.stateOperators`,
+  * that resident state is bounded by the sketch shape, not stream length.
   */
 class StreamingStateSpec extends SparkSpec {
   import spark.implicits._
 
   private def stateRowsNow(q: StreamingQuery): Long =
     Option(q.lastProgress).map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
-
-  private def stateRowsRemoved(q: StreamingQuery): Long =
-    q.recentProgress.flatMap(_.stateOperators.map(_.numRowsRemoved)).sum
-
-  test("interval join: watermark evicts join state; state plateaus across a replayed feed") {
-    implicit val sql = spark.sqlContext
-    val alertMem = MemoryStream[Edge]
-    val statusMem = MemoryStream[Edge]
-    val joined = StreamingIngest.alertEnrichmentJoin(
-      StreamingIngest.ingest(alertMem.toDF()),
-      StreamingIngest.ingest(statusMem.toDF()),
-      lookback = "5 minutes", watermark = "10 minutes")
-    val q = joined.writeStream.format("memory").queryName("state_join_out")
-      .outputMode("append").start()
-    try {
-      val t0 = 1704067200L
-      // 6 batches, each 30 min of event time later: every batch's statuses
-      // fall behind the watermark two batches on, so join state must cycle
-      val perBatchState = (0 until 6).map { b =>
-        val t = t0 + b * 1800L
-        statusMem.addData(Edge.mk("7", t - 100L), Edge.mk("7", t - 200L),
-          Edge.mk("8", t - 150L))
-        alertMem.addData(Edge.mk("7", t, rt = "ALERT"))
-        q.processAllAvailable()
-        stateRowsNow(q)
-      }
-      // each alert matched its in-lookback statuses (2 per batch for dev 7)
-      assert(spark.table("state_join_out").count() == 12L)
-      // watermark-driven eviction happened
-      assert(stateRowsRemoved(q) > 0L,
-        s"expected watermark to remove join state, progress shows none " +
-          s"(per-batch state: $perBatchState)")
-      // state plateaus: once the watermark starts moving (batch 2 on), the
-      // resident row count stays at the horizon's worth of rows instead of
-      // accumulating all 24 input rows
-      val steady = perBatchState.drop(2)
-      assert(steady.max <= perBatchState(1) + 8,
-        s"join state should plateau at the watermark horizon, got $perBatchState")
-      assert(perBatchState.last < 24L,
-        s"state (${perBatchState.last}) must not retain the whole stream (24 rows)")
-    } finally q.stop()
-  }
-
-  test("sessionization: closed sessions leave the state store; open-session count plateaus") {
-    implicit val sql = spark.sqlContext
-    val mem = MemoryStream[Edge]
-    val sessions = StreamingIngest.sessionizedDeviceCounts(
-      StreamingIngest.ingest(mem.toDF()), gap = "30 minutes", watermark = "10 minutes")
-    val q = sessions.writeStream.format("memory").queryName("state_sess_out")
-      .outputMode("append").start()
-    try {
-      val t0 = 1704067200L
-      // two devices, a fresh 2-event session every 2 h of event time: the
-      // previous session's gap expires behind the watermark each round, so
-      // append emits it and the store drops it
-      val perBatchState = (0 until 5).map { b =>
-        val t = t0 + b * 7200L
-        mem.addData(Edge.mk("7", t), Edge.mk("7", t + 60L),
-          Edge.mk("9", t + 30L))
-        q.processAllAvailable()
-        stateRowsNow(q)
-      }
-      // first 4 rounds' sessions closed and were emitted (append mode only
-      // emits finalized sessions): 2 devices × 4 closed rounds
-      assert(spark.table("state_sess_out").count() == 8L)
-      assert(stateRowsRemoved(q) > 0L,
-        s"expected closed sessions to be removed from state " +
-          s"(per-batch state: $perBatchState)")
-      // resident state = open sessions only (2 devices), never the history
-      assert(perBatchState.drop(1).max <= perBatchState(1),
-        s"open-session state should plateau, got $perBatchState")
-      assert(perBatchState.last <= 4L,
-        s"state (${perBatchState.last}) must hold open sessions only")
-    } finally q.stop()
-  }
 
   /** The three live sketch/eval maintenance streams (`q_stream_count_min`,
     * `q_stream_hll`, `q_stream_eval`) are complete-mode aggregations whose
@@ -108,8 +28,7 @@ class StreamingStateSpec extends SparkSpec {
     implicit val sql = spark.sqlContext
     val mem = MemoryStream[(Long, Long)]
     val src = mem.toDF().toDF("user_id", "value")
-    val cm = graft.analytics.CountMin
-      .sketch(src.select($"user_id"), "user_id", depth = 4, width = 512)
+    val cm = graft.analytics.CountMin.sketch(src.select($"user_id"), "user_id")
     val q = cm.writeStream.format("memory").queryName("state_cm_out")
       .outputMode("complete").start()
     try {
@@ -140,8 +59,7 @@ class StreamingStateSpec extends SparkSpec {
       // the sink state equals the batch-built sketch over the same rows
       val fed = (0 until 4).flatMap(b =>
         (0 until 500).map(i => (b * 137 + i * 7) % 900L))
-      val batchGrid = graft.analytics.CountMin
-        .sketch(fed.toDF("user_id"), "user_id", depth = 4, width = 512)
+      val batchGrid = graft.analytics.CountMin.sketch(fed.toDF("user_id"), "user_id")
       val mismatches = spark.table("state_cm_out")
         .join(batchGrid.withColumnRenamed("cnt", "cnt_b"), Seq("r", "cell"), "full_outer")
         .filter(org.apache.spark.sql.functions.not($"cnt" <=> $"cnt_b")).count()
@@ -151,8 +69,7 @@ class StreamingStateSpec extends SparkSpec {
     // HLL registers: state ≤ m, same progress contract
     val memH = MemoryStream[(Long, Long)]
     val hll = graft.analytics.HllGrid
-      .registers(memH.toDF().toDF("user_id", "value").select($"user_id"),
-        "user_id", m = 256)
+      .registers(memH.toDF().toDF("user_id", "value").select($"user_id"), "user_id")
     val qh = hll.writeStream.format("memory").queryName("state_hll_out")
       .outputMode("complete").start()
     try {

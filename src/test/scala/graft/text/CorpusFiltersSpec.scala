@@ -19,8 +19,7 @@ class CorpusFiltersSpec extends SparkSpec {
       3L -> ("x " * 25 + "code {brace} here."),         // no_brace
       4L -> ("lorem ipsum " + "word " * 25 + "end."),   // no_lorem + punct
       5L -> ("w " * 25 + "z" * 31 + "."),               // word_len_ok
-      6L -> ("w " * 25 + "zqxbadword.")),               // no_badword
-      minWords = 20)
+      6L -> ("w " * 25 + "zqxbadword.")))               // no_badword
     val m = df.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(m(1L).getAs[Boolean]("keep"))
     assert(!m(2L).getAs[Boolean]("r_min_words"))
@@ -51,8 +50,7 @@ class CorpusFiltersSpec extends SparkSpec {
       1L -> long,
       2L -> "one two three",                                  // too few words
       3L -> (long + " # # # # # # # # # #"),                  // symbol spam
-      4L -> "9 8 7 6 5 4 3 2 1 0 9 8 7 6 5 4 3 2 1 0 x y"),   // numeric salad
-      minStopwords = 0)
+      4L -> "9 8 7 6 5 4 3 2 1 0 9 8 7 6 5 4 3 2 1 0 x y"))   // numeric salad
     val m = df.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(m(1L).getAs[Boolean]("g_words") && m(1L).getAs[Boolean]("g_alpha"))
     assert(m(1L).getAs[Long]("n_words") === 25L)

@@ -31,13 +31,14 @@ class CurationSpec extends SparkSpec {
   }
 
   test("decontaminate flags planted leaks and nothing else") {
-    val bench = Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
+    // 8 tokens: 4 distinct 5-grams, past the 3-gram contamination bar
+    val bench = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta")).toDF("doc_id", "text")
     val corpus = Seq(
-      (10L, "alpha beta gamma delta epsilon zeta eta"), // contains bench 5-grams
+      (10L, "alpha beta gamma delta epsilon zeta eta theta iota"), // contains bench 5-grams
       (11L, "totally unrelated words with nothing shared here at all"),
       (12L, "alpha beta gamma unrelated tail words")    // < 5-gram overlap
     ).toDF("doc_id", "text")
-    val out = Curation.decontaminate(corpus, bench, k = 5, minOverlap = 2)
+    val out = Curation.decontaminate(corpus, bench)
       .as[(Long, Long, Boolean)].collect().toMap2
     assert(out.keySet == Set(10L))
     assert(out(10L)._2) // contaminated

@@ -14,20 +14,22 @@ class DsirSpec extends SparkSpec {
   ).toDF("doc_id", "text", "source")
 
   test("bucket weights follow the power-of-two log-ratio formula") {
-    val w = Dsir.bucketWeights(docs, "tgt").collect()
-    // formula consistency on every bucket: w = bitlen(tgt+1) - bitlen(raw+1)
-    w.foreach { r =>
-      val (t, raw, wt) = (r.getAs[Long]("tgt_cnt"), r.getAs[Long]("raw_cnt"),
-        r.getAs[Long]("weight"))
-      def bitlen(n: Long) = 64 - java.lang.Long.numberOfLeadingZeros(n)
-      assert(wt == bitlen(t + 1) - bitlen(raw + 1), s"bucket row $r")
+    // one-bigram documents score exactly their bucket's weight
+    // w = bitlen(tgt+1) - bitlen(raw+1); the four bigrams hash to distinct
+    // buckets (fixed md5 values)
+    val planted = Seq("p q" -> ((3, 0)), "r s" -> ((1, 6)), "u v" -> ((2, 2)), "k l" -> ((0, 1)))
+    val rows = planted.flatMap { case (bg, (t, r)) =>
+      Seq.fill(t)(bg -> "tgt") ++ Seq.fill(r)(bg -> "raw") }
+    val df = rows.zipWithIndex.map { case ((bg, src), i) => (i.toLong, bg, src) }
+      .toDF("doc_id", "text", "source")
+    def bitlen(n: Long) = 64 - java.lang.Long.numberOfLeadingZeros(n)
+    val weight = planted.map { case (bg, (t, r)) => bg -> (bitlen(t + 1L) - bitlen(r + 1L)).toLong }.toMap
+    assert(weight == Map("p q" -> 2L, "r s" -> -1L, "u v" -> 0L, "k l" -> -1L))
+    val scores = Dsir.docScores(df, "tgt").select($"doc_id", $"n_bigrams", $"score")
+      .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    rows.zipWithIndex.foreach { case ((bg, _), i) =>
+      assert(scores(i.toLong) == ((1L, weight(bg))), s"doc $i ($bg)")
     }
-    // the planted bigrams hash to distinct buckets (fixed md5 values):
-    // "a b" → (tgt 2, raw 1, w 0), "b a" → (1, 0, +1), "x y"/"b c" → (0, 1, −1)
-    val byCounts = w.map(r => (r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
-    assert(byCounts((2L, 1L)) == 0L)
-    assert(byCounts((1L, 0L)) == 1L)
-    assert(byCounts((0L, 1L)) == -1L)
   }
 
   test("doc scores: target-like docs score higher; bigram-less docs score zero") {
@@ -47,9 +49,23 @@ class DsirSpec extends SparkSpec {
 
   test("weight table stays bucket-bounded and broadcastable") {
     val big = graft.Tables.documents(spark, sf())
-    val w = Dsir.bucketWeights(big, "src0", buckets = 64)
-    assert(w.count() <= 64)
-    val p = Dsir.docScores(big, "src0").queryExecution.executedPlan.toString
+    val scored = Dsir.docScores(big, "src0")
+    scored.collect()
+    val p = scored.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), s"weights must broadcast back:\n$p")
+    // the broadcast weight table holds one row per bucket: at most 256
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val broadcastRows = nodes(scored.queryExecution.executedPlan).collect {
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+          if b.output.exists(_.name == "weight") => b.metrics("numOutputRows").value
+    }
+    assert(broadcastRows.nonEmpty && broadcastRows.forall(n => n > 0 && n <= 256),
+      s"weight broadcast rows: $broadcastRows")
   }
 }

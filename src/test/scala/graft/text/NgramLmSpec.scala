@@ -65,7 +65,7 @@ class NgramLmSpec extends SparkSpec {
     val text = (Seq.fill(12)("a") ++ Seq.fill(6)("b") ++ Seq.fill(4)("c") ++
       Seq.fill(3)("d")).mkString(" ")
     val docs = Seq(("s", text)).toDF("source", "text")
-    val r = Vocab.zipfFit(docs, k = 10).head()
+    val r = Vocab.zipfFit(docs).head()
     assert(r.getAs[Long]("k") == 4L)
     assert(math.abs(r.getAs[Double]("slope") + 1.0) < 1e-3)
     assert(math.abs(r.getAs[Double]("intercept") - math.log(12.0)) < 1e-3)

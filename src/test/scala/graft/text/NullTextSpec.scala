@@ -121,7 +121,7 @@ class NullTextSpec extends SparkSpec {
   }
 
   test("rakeKeyphrases: no empty or blank keyphrase from degenerate docs") {
-    val phrases = TextAnalysis.rakeKeyphrases(docs, k = 20)
+    val phrases = TextAnalysis.rakeKeyphrases(docs)
       .select(col("phrase")).as[String].collect().toSeq
     assert(phrases.nonEmpty)
     assert(phrases.forall(_.trim.nonEmpty),
@@ -191,7 +191,7 @@ class NullTextSpec extends SparkSpec {
     assert(sb.forall(!_.isNullAt(3)))
     val pairs = Seq((1L, "", "a b"), (2L, null.asInstanceOf[String], null
       .asInstanceOf[String]), (3L, "a b c", "a b c")).toDF("pid", "c", "r")
-    val bleu = BleuScore.ngramPrecision(pairs, "pid", "c", "r", maxN = 2)
+    val bleu = BleuScore.ngramPrecision(pairs, "pid", "c", "r")
       .collect()
     assert(bleu.nonEmpty) // empty candidates contribute nothing, no throw
   }

@@ -94,7 +94,7 @@ class Round9OpsSpec extends SparkSpec {
     val docs = Seq(
       (1L, "good apple", 1L), (2L, "good pear", 1L),
       (3L, "bad apple", 0L), (4L, "bad pear", 0L)).toDF("doc_id", "text", "y")
-    val out = FeatureSelect.giniStumps(docs, col("y"), topTokens = 10)
+    val out = FeatureSelect.giniStumps(docs, col("y"))
       .as[(String, Long, Long, Double)].collect()
       .map(r => r._1 -> r._4).toMap
     // parent gini 0.5; 'good'/'bad' split perfectly → gain 0.5; 'apple'/
@@ -106,10 +106,12 @@ class Round9OpsSpec extends SparkSpec {
   test("heapsCurve: exact type/token counts at hand-checked checkpoints") {
     val docs = Seq((1L, "a b"), (2L, "a c"), (3L, "a b"), (4L, "d e f"))
       .toDF("doc_id", "text")
-    val out = Vocab.heapsCurve(docs, points = 2)
+    val out = Vocab.heapsCurve(docs)
       .as[(Int, Long, Long)].collect().sortBy(_._1)
-    // maxId 4; checkpoint 1 = ids with id·2 ≤ 4 (ids 1,2): 4 tokens,
-    // types {a,b,c} = 3; checkpoint 2 = all: 9 tokens, 6 types
-    assert(out.toSeq == Seq((1, 4L, 3L), (2, 9L, 6L)))
+    // maxId 4; checkpoint i holds the ids with id·10 ≤ 4·i: none for i ≤ 2,
+    // id 1 for i = 3-4 (2 tokens, {a,b}), ids 1-2 for i = 5-7 (4 tokens,
+    // {a,b,c}), ids 1-3 for i = 8-9 (6 tokens), all at i = 10 (9 tokens, 6 types)
+    assert(out.toSeq == Seq((1, 0L, 0L), (2, 0L, 0L), (3, 2L, 2L), (4, 2L, 2L),
+      (5, 4L, 3L), (6, 4L, 3L), (7, 4L, 3L), (8, 6L, 3L), (9, 6L, 3L), (10, 9L, 6L)))
   }
 }

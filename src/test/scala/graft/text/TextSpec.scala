@@ -58,11 +58,12 @@ class TextSpec extends SparkSpec {
   test("resize stub preserves aspect ratio and shrinks payload") {
     val media = Multimodal.mediaFromDocuments(
       Seq((100L, "x" * 1000, "en", "s", 1000L)).toDF("doc_id", "text", "lang", "source", "n_chars"))
-    // doc 100: width 100%640+64=164, height 100%480+48=148
-    val out = Multimodal.resizeStub(spark, media, maxDim = 82).collect().head
+    // doc 100: width 100%640+64=164, height 100%480+48=148; its text bytes
+    // are no PNG, so resizeImage takes its byte-truncation fallback
+    val out = Multimodal.resizeImage(spark, media.toDF(), maxDim = 82).collect().head
     assert(out.width == 82 && out.height == 74) // scale 0.5 exactly
     assert(out.media.length == 250) // 1000 * 0.25
-    val noop = Multimodal.resizeStub(spark, media, maxDim = 2000).collect().head
+    val noop = Multimodal.resizeImage(spark, media.toDF(), maxDim = 2000).collect().head
     assert(noop.width == 164 && noop.media.length == 1000) // no upscale
   }
 
@@ -73,12 +74,6 @@ class TextSpec extends SparkSpec {
     assert(f.doc_id == 7L && f.n_bytes == 3L && f.format == "png") // 7%3+1 = 2
     assert(f.luma_mean == ('a'.toInt + 'b'.toInt + 'c'.toInt) / 3.0)
     assert(f.n_frames == 1 && f.width == 7 + 64 && f.height == 7 + 48)
-  }
-
-  test("frameOffsets: evenly spaced, within payload") {
-    val offs = Seq(1000L).toDF("n")
-      .select(Multimodal.frameOffsets(col("n"), 4)).as[Seq[Long]].head()
-    assert(offs == Seq(0L, 250L, 500L, 750L))
   }
 
   test("real PNG round trip: ImageIO decode recovers exact dimensions and pixel stats") {
