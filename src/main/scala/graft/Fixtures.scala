@@ -1,6 +1,6 @@
 package graft
 
-import graft.maintain.Layout
+import graft.maintain.{Layout, LocalFs}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** The one memo of on-disk fixtures (BASELINE.md §Amortization): a shingle,
@@ -31,7 +31,7 @@ object Fixtures {
 
   /** A fixture dir holding `df` as parquet; returns its path. */
   def parquet(tag: String, key: String)(df: => Dataset[_]): String =
-    dir(tag, key)(p => df.write.mode("overwrite").parquet(p))
+    dir(tag, key)(p => LocalFs.write(df).mode("overwrite").parquet(p))
 
   /** A catalog table holding `df` bucketed on `bucketCol` (and sorted within
     * buckets by `sortCols`, see [[Layout.writeBucketed]]), written once per

@@ -99,7 +99,7 @@ object Drift {
     * event log is scanned once and never re-shuffled.
     */
   def abTest(events: DataFrame, unitCol: String, success: Column,
-             seed: String, minSuccesses: Long = 1L): DataFrame = {
+             seed: String, minSuccesses: Long): DataFrame = {
     require(minSuccesses >= 1, s"minSuccesses must be >= 1, got $minSuccesses")
     val arm = pmod(graft.functions.Md5Field.md5U32(concat(lit(s"ab:$seed:"),
       col("unit").cast("string"))), lit(2L))

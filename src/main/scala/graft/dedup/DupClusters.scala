@@ -302,7 +302,7 @@ object DupClusters {
     * prediction the signal you usually want to ignore anyway. Endpoint
     * degrees (and so `n_union`) stay exact.
     */
-  def linkPrediction(pairs: DataFrame, maxMiddleDegree: Int = Int.MaxValue): DataFrame = {
+  def linkPrediction(pairs: DataFrame, maxMiddleDegree: Int): DataFrame = {
     require(maxMiddleDegree >= 1, s"maxMiddleDegree must be >= 1, got $maxMiddleDegree")
     // one EAGER anchor on the normalized edge set; adj deliberately NOT
     // persisted — it is a map-only union over the anchor, so each consumer
@@ -581,23 +581,14 @@ object DupClusters {
     * the edge list plus a map-combined aggregate — the PageRank message
     * shape without the dangling-mass correction. Edges are used as-is
     * (directed); scores live keyed by node.
+    *
+    * `edges` must be distinct and materialized (anchored, scanned or
+    * local): its three consumers (a1, the h1 join, the a2 join) read it as
+    * is, so a caller that builds the edges with a join fuses the distinct
+    * into its one anchor (q_hits).
     */
-  def hits(edges: DataFrame,
-           distinctAnchored: Boolean = false): DataFrame = {
-    // eager anchor, not a lazy persist (r17): the distinct edge table is
-    // MB-scale (two longs per edge) with THREE consumers (a1, the h1 join,
-    // the a2 join) — the anchor playbook case (lazy cache-block management
-    // + live lineage re-planning cost more than one eager materialization;
-    // A/B x4 interleaved, exact-equal: persist 1.31-2.28 s vs anchor
-    // 1.30-1.50 on q_hits at sf0.1 — the anchor arm never lost an iter).
-    // `distinctAnchored = true` (r18 dispatch-floor fusion, VERDICT r17
-    // Next #3): the caller certifies `edges` is ALREADY a distinct,
-    // materialized (checkpointed/scanned) edge frame, so the internal
-    // distinct + SECOND eager materialization — write + read + shuffle +
-    // write of the same edge list — is skipped (q_hits A/B x4 interleaved,
-    // exact-equal: 1.49-1.87 s -> 1.25-1.52, 16 -> 15 jobs).
-    val e0 = edges.select(col("src"), col("dst"))
-    val e = if (distinctAnchored) e0 else e0.distinct().anchor(Bound.Fixture)
+  def hits(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
     val a1 = e.groupBy(col("dst")).agg(count(lit(1)).as("a1")) // Σ h0 = indeg
     val h1 = e.join(a1, Seq("dst"))
       .groupBy(col("src")).agg(sum(col("a1")).as("h1"))

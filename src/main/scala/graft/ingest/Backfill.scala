@@ -41,7 +41,7 @@ object Backfill {
   def readChunk(spark: SparkSession, url: String, table: String,
                 reportTypes: Seq[String], epochFrom: Long, epochTo: Long,
                 deviceIds: Seq[String],
-                props: Map[String, String] = Map.empty): DataFrame = {
+                props: Map[String, String]): DataFrame = {
     val base = spark.read.format("jdbc")
       .option("url", url)
       .option("dbtable", pushdownSubquery(table, reportTypes, epochFrom, epochTo, deviceIds))

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import graft.maintain.LocalFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -20,7 +21,7 @@ object Formats {
     "escape" -> "\"") // RFC 4180 doubled quotes, not backslash
 
   def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").options(csvOpts).csv(path)
+    LocalFs.write(df).mode("overwrite").options(csvOpts).csv(path)
 
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     // multiLine: without it, quoted embedded newlines split records on read
@@ -31,7 +32,7 @@ object Formats {
       .schema(schema).csv(path)
 
   def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("compression", "zstd").orc(path)
+    LocalFs.write(df).mode("overwrite").option("compression", "zstd").orc(path)
 
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
@@ -45,7 +46,7 @@ object Formats {
   private val AvroProvider = "org.apache.spark.sql.avro.AvroFileFormat"
 
   def writeAvro(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").format(AvroProvider).save(path)
+    LocalFs.write(df).mode("overwrite").format(AvroProvider).save(path)
 
   def readAvro(spark: SparkSession, path: String): DataFrame =
     spark.read.format(AvroProvider).load(path)

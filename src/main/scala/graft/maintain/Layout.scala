@@ -28,6 +28,10 @@ import org.apache.spark.sql.functions._
   *
   * At 100 TB this layout is what turns the serving path's point lookup into
   * "prune to 1 bucket × few days, then skip most row groups".
+  *
+  * Every writer here starts its write with [[LocalFs.write]], so its files,
+  * `.crc` sidecars and partition dirs are created without a forked `chmod`
+  * each (2,947 of them per sf0.1 fact write otherwise).
   */
 object Layout {
 
@@ -57,15 +61,15 @@ object Layout {
   def writeFact(fact: DataFrame, path: String): Unit =
     Promote.replace(fact.sparkSession, path) { staged =>
       val obs = Observation()
-      fact.observe(obs,
+      val observed = fact.observe(obs,
         sum(when(abs(datediff(col("received_day"), to_date(col("gps_epoch")))) >
           SkewDays, 1L).otherwise(0L)).as("skew_violations"),
         sum(when(!(col("device_id_bucket") <=>
           deviceBucket(col("device_id"), Normalize.DeviceBuckets)), 1L)
           .otherwise(0L)).as("bucket_violations"))
-        .repartition(col("device_id_bucket"), col("received_day"))
-        .sortWithinPartitions(col("device_id"), col("gps_epoch"))
-        .write
+      LocalFs.write(observed
+          .repartition(col("device_id_bucket"), col("received_day"))
+          .sortWithinPartitions(col("device_id"), col("gps_epoch")))
         .mode("overwrite")
         .partitionBy("device_id_bucket", "received_day")
         .option("compression", "zstd")
@@ -279,10 +283,10 @@ object Layout {
 
   /** Rewrite a table clustered by the z-order of two columns. */
   def writeZOrdered(df: DataFrame, path: String, x: Column, y: Column): Unit =
-    df.withColumn("__z", zValue(x, y, 16))
+    LocalFs.write(df.withColumn("__z", zValue(x, y, 16))
       .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
+      .drop("__z"))
+      .mode("overwrite").parquet(path)
 
   /** Drop a catalog table AND its warehouse directory: the in-memory catalog
     * is fresh per JVM but `spark-warehouse/` persists, so a stale location
@@ -308,8 +312,8 @@ object Layout {
     * sort-merge join skip its sort when both sides declare the same order.
     */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int,
-                    sortCols: Seq[String] = Seq.empty): Unit = {
-    val w = df.write.mode("overwrite").format("parquet").bucketBy(buckets, key)
+                    sortCols: Seq[String]): Unit = {
+    val w = LocalFs.write(df).mode("overwrite").format("parquet").bucketBy(buckets, key)
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
       .saveAsTable(table)
   }

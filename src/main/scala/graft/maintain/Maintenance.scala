@@ -18,7 +18,9 @@ import scala.jdk.CollectionConverters._
   * `Layout.writeFact` table is never opened from a file list that no
   * longer matches its directories. Each refuses a table written by a
   * streaming file sink ([[TableIndex.requireNoSinkLog]]), whose log would
-  * go on naming the files it replaced or deleted.
+  * go on naming the files it replaced or deleted. The rewrites start with
+  * [[LocalFs.write]], so they create their files without forking a `chmod`
+  * per file.
   */
 object Maintenance {
 
@@ -91,7 +93,7 @@ object Maintenance {
     val nFiles = math.max(1, math.ceil(bytes.toDouble / (256L << 20)).toInt)
     val layout = fileLayout(spark, part)
     Promote.replace(spark, partPath)(
-      spark.read.parquet(partPath).coalesce(nFiles).write.options(layout)
+      LocalFs.write(spark.read.parquet(partPath).coalesce(nFiles)).options(layout)
         .mode("overwrite").parquet(_))
   }
 
@@ -121,7 +123,7 @@ object Maintenance {
   def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
     TableIndex.requireNoSinkLog(df.sparkSession, path)
     TableIndex.dropManifest(df.sparkSession, path)
-    df.write
+    LocalFs.write(df)
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .partitionBy(partitionCols: _*)

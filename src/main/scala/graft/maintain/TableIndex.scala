@@ -64,7 +64,8 @@ object TableIndex {
     * walk of the tree, the write-time cost the readers no longer pay. Plain
     * `listStatus` per dir: `listFiles`' located statuses load each file's
     * owner and permissions, which the local file system forks a process
-    * for (~6 s for a 960-file table).
+    * for (~6 s for a 960-file table). Creating a file forks too, for its
+    * `chmod`; the write jobs avoid that through [[LocalFs]].
     */
   private[maintain] def listEntries(spark: SparkSession, root: Path, dir: Path)(
       keep: String => Boolean): Seq[Entry] = {

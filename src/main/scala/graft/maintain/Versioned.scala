@@ -135,7 +135,7 @@ object Versioned {
   private def commitCore(df: DataFrame, tableDir: String, ref: Option[String],
                          append: Boolean, readVersion: Option[Int]): Int = {
     val dataDir = new Path(tableDir, s"data/${java.util.UUID.randomUUID()}")
-    df.write.mode("errorifexists").parquet(dataDir.toString)
+    LocalFs.write(df).mode("errorifexists").parquet(dataDir.toString)
     val files = TableIndex.listEntries(df.sparkSession, new Path(tableDir), dataDir)(
       _.endsWith(".parquet"))
     publish(df.sparkSession, tableDir, ref, files, append, readVersion)
@@ -297,7 +297,7 @@ object Versioned {
     * Returns the branch-local commit number.
     */
   def commitToBranch(df: DataFrame, tableDir: String, name: String,
-                     append: Boolean = true): Int = {
+                     append: Boolean): Int = {
     branchBase(df.sparkSession, tableDir, name) // asserts the branch exists
     commitCore(df, tableDir, Some(name), append, None)
   }

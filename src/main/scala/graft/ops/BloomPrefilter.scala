@@ -19,21 +19,26 @@ import org.apache.spark.sql.types.BinaryType
   * `xxhash64` so the filter stores 8-byte hashes, never the key bytes.
   *
   * The built filter returns to the driver as one compact binary (like any
-  * broadcast variable — ~1.2 MB at 1M expected items) and is inlined as a
+  * broadcast variable — ~180 KB at its 200 k expected items) and is inlined as a
   * literal, which keeps `might_contain` foldable-checkable and the fact-side
   * scan a pure map stage. No false negatives: the downstream join re-checks
   * equality, so the composition is exactly the plain join.
   */
 object BloomPrefilter {
 
+  /** Keys a filter is sized for: the q_bloom_join dimension (BUILDING
+    * customers) with headroom. More keys only raise the false-positive
+    * rate, which the downstream join absorbs.
+    */
+  private val ExpectedItems = 200000L
+
   /** Distributed bloom build over `keys` (partial filters merge associatively
     * in the agg); the finished filter is collected to the driver.
     */
-  def build(keys: DataFrame, key: Column,
-            expectedItems: Long = 1000000L): Array[Byte] = {
+  def build(keys: DataFrame, key: Column): Array[Byte] = {
     val agg = new BloomFilterAggregate(
       ColumnBridge.expression(xxhash64(key)),
-      Literal(expectedItems), Literal(8L * 1024 * 1024)).toAggregateExpression()
+      Literal(ExpectedItems), Literal(8L * 1024 * 1024)).toAggregateExpression()
     keys.agg(ColumnBridge.column(agg).as("bloom")).head().getAs[Array[Byte]](0)
   }
 
@@ -52,9 +57,8 @@ object BloomPrefilter {
     * negatives), but only the surviving ~|matching| rows enter the shuffle.
     */
   def prefilteredJoin(fact: DataFrame, dim: DataFrame,
-                      factKey: String, dimKey: String,
-                      expectedItems: Long = 1000000L): DataFrame = {
-    val bloom = build(dim, col(dimKey), expectedItems)
+                      factKey: String, dimKey: String): DataFrame = {
+    val bloom = build(dim, col(dimKey))
     prefilter(fact, col(factKey), bloom)
       .join(dim, col(factKey) === col(dimKey))
   }

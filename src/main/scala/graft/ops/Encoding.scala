@@ -91,7 +91,7 @@ object Encoding {
     * map-side and downstream dot products are (doc, idx)-keyed joins.
     */
   def featureHash(docs: DataFrame, idCol: String, textCol: String,
-                  k: Int = 1024): DataFrame = {
+                  k: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     val u32 = graft.functions.Md5Field.md5U32(concat(lit("fh:"), col("tok")))
     docs

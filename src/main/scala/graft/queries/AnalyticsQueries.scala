@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Anchor._
 import graft.analytics.StarQueries
+import graft.maintain.LocalFs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -387,11 +388,12 @@ object AnalyticsQueries {
     val base = graft.Fixtures.dir("events_late", dir) { p =>
       val ev = graft.Tables.events(s, dir)
         .select(col("event_id"), col("ts").cast("timestamp").as("ts"))
-      ev.filter(col("event_id") % 2 === 0)
-        .coalesce(1).write.mode("overwrite").parquet(s"$p/a")
-      ev.filter(col("event_id") % 2 =!= 0)
+      LocalFs.write(ev.filter(col("event_id") % 2 === 0).coalesce(1))
+        .mode("overwrite").parquet(s"$p/a")
+      LocalFs.write(ev.filter(col("event_id") % 2 =!= 0)
         .withColumn("ts", col("ts") - expr("INTERVAL 3650 DAYS"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$p/b")
+        .coalesce(1))
+        .mode("overwrite").parquet(s"$p/b")
     }
     val p = java.nio.file.Paths.get(base)
     def part(sub: String): java.nio.file.Path =
@@ -832,7 +834,7 @@ object AnalyticsQueries {
       .filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"))
     BloomPrefilter.prefilteredJoin(graft.Tables.orders(s, dir), dim,
-        factKey = "o_custkey", dimKey = "c_custkey", expectedItems = 200000L)
+        factKey = "o_custkey", dimKey = "c_custkey")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
         sum(col("o_totalprice").cast(DecimalType(18, 2)))
@@ -1298,11 +1300,11 @@ object AnalyticsQueries {
   private def schemaMergeQ(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(s, dir)
     val tmp = graft.TempDirs.runDir("schema_rt").toString
-    docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("source"))
-      .write.parquet(s"$tmp/v1")
-    docs.filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-      .write.parquet(s"$tmp/v2")
+    LocalFs.write(docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("source")))
+      .parquet(s"$tmp/v1")
+    LocalFs.write(docs.filter(col("doc_id") % 2 === 1)
+      .select(col("doc_id"), col("source"), col("n_chars")))
+      .parquet(s"$tmp/v2")
     s.read.option("mergeSchema", "true").parquet(s"$tmp/v1", s"$tmp/v2")
       .orderBy(col("doc_id"))
   }
@@ -2246,7 +2248,7 @@ object AnalyticsQueries {
     // non-leaf-frame class the helper contract excludes
     withKernelShufflePartitionsFor(s,
       graft.Tables.orders(s, dir), graft.Tables.lineitem(s, dir)) {
-      graft.dedup.DupClusters.hits(e, distinctAnchored = true)
+      graft.dedup.DupClusters.hits(e)
         .orderBy(col("authority2").desc, col("node")).limit(10)
         .anchor(Bound.Metadata)
     }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Anchor._
 import graft.Tables
+import graft.maintain.LocalFs
 import graft.text.Curation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -783,9 +784,10 @@ object CurationQueries {
     val tmp = graft.TempDirs.runDir("csv_dlq").toString
     import s.implicits._
     val bad = Seq("notanumber|srcX|12", "12abc|srcY|5").toDF("value")
-    docs.select(concat_ws("|", col("doc_id"), col("source"), col("n_chars")).as("value"))
-      .unionByName(bad)
-      .write.mode("overwrite").text(tmp)
+    LocalFs.write(docs
+      .select(concat_ws("|", col("doc_id"), col("source"), col("n_chars")).as("value"))
+      .unionByName(bad))
+      .mode("overwrite").text(tmp)
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("source", StringType),
       StructField("n_chars", LongType), StructField("_raw", StringType)))
@@ -997,10 +999,10 @@ object CurationQueries {
   private[queries] def partEvoRoot(s: SparkSession, dir: String): String =
     graft.Fixtures.dir("part_evo", dir) { tmp =>
       val docs = Tables.documents(s, dir)
-      docs.filter(col("doc_id") % 2 === 0)
-        .write.partitionBy("lang").parquet(s"$tmp/v1")
-      docs.filter(col("doc_id") % 2 === 1)
-        .write.partitionBy("lang", "source").parquet(s"$tmp/v2")
+      LocalFs.write(docs.filter(col("doc_id") % 2 === 0))
+        .partitionBy("lang").parquet(s"$tmp/v1")
+      LocalFs.write(docs.filter(col("doc_id") % 2 === 1))
+        .partitionBy("lang", "source").parquet(s"$tmp/v2")
     }
 
   // ---- registry ------------------------------------------------------------

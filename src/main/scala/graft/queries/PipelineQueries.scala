@@ -3,6 +3,7 @@ package graft.queries
 import graft.Anchor._
 import graft.Tables
 import graft.dedup.{Dedup, DupClusters, MinHashLSH, SimHash}
+import graft.maintain.LocalFs
 import graft.multimodal.Multimodal
 import graft.sim.{Ivf, Similarity}
 import graft.text.TextAnalysis
@@ -2502,8 +2503,8 @@ object PipelineQueries {
     graft.Fixtures.dir("minhash_pairs", dir) { p =>
       val sh = graft.Tables.cachedParquet(s, shinglesParquet(s, dir))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      MinHashLSH.nearDuplicatesFromShingles(sh, numHashes = 64, bands = 16)
-        .write.mode("overwrite").parquet(p)
+      LocalFs.write(MinHashLSH.nearDuplicatesFromShingles(sh, numHashes = 64, bands = 16))
+        .mode("overwrite").parquet(p)
       sh.unpersist()
     }
 
@@ -3592,8 +3593,7 @@ object PipelineQueries {
     val codesDf = aug.select(col("vec_id").as("nn_id"),
         Pq.codes(col("embedding").cast("array<double>"), index).as("codes"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val pq = Pq.topK(aug, queries, index, k = 3,
-        precomputedCodes = Some(codesDf))
+    val pq = Pq.topK(codesDf, queries, index, k = 3)
       .select("query_id", "nn_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
     val planted = emb.filter(col("vec_id") % 10 === 0)
@@ -4497,9 +4497,9 @@ object PipelineQueries {
     val base = graft.Fixtures.dir("bigram_model", dir) { p =>
       val m = graft.text.NgramLm.train(
         Tables.documents(s, dir).filter(col("doc_id") % 2 === 0))
-      m.c12.write.mode("overwrite").parquet(p + "/c12")
-      m.c1.write.mode("overwrite").parquet(p + "/c1")
-      m.vocab.write.mode("overwrite").parquet(p + "/vocab")
+      LocalFs.write(m.c12).mode("overwrite").parquet(p + "/c12")
+      LocalFs.write(m.c1).mode("overwrite").parquet(p + "/c1")
+      LocalFs.write(m.vocab).mode("overwrite").parquet(p + "/vocab")
     }
     graft.text.NgramLm.BigramModel(
       graft.Tables.cachedParquet(s, base + "/c12"), graft.Tables.cachedParquet(s, base + "/c1"),

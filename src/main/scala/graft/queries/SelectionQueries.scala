@@ -524,7 +524,8 @@ object SelectionQueries {
     */
   private[queries] def skipgramPairsParquet(s: SparkSession, dir: String): String =
     graft.Fixtures.parquet("sg_pairs", dir) {
-      graft.text.SkipGram.pairs(Tables.documents(s, dir), minCount = 3L)
+      graft.text.SkipGram.pairs(Tables.documents(s, dir), window = 2, minCount = 3L,
+        tNum = 1L, tDen = 100L)
     }
 
   private def coocPpmiQ(s: SparkSession, dir: String): DataFrame = {

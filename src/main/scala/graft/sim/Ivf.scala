@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.maintain.LocalFs
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -81,9 +82,9 @@ object Ivf {
     * nprobe/nlist of the files, no join needed.
     */
   def writeCellPartitioned(corpus: DataFrame, index: Index, path: String): Unit =
-    corpus
-      .withColumn("cell", cellId(col("embedding").cast("array<double>"), index))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
+    LocalFs.write(corpus
+      .withColumn("cell", cellId(col("embedding").cast("array<double>"), index)))
+      .mode("overwrite").partitionBy("cell").parquet(path)
 
   /** ANN top-k over a cell-partitioned corpus ([[writeCellPartitioned]]):
     * the probed-cell set (≤ queries×nprobe values, collected driver-side like

@@ -98,21 +98,17 @@ object Pq {
       element_at(element_at(tabCol, sub + 1), element_at(codesCol, sub + 1) + 1)
     }.reduce(_ + _)
 
-  /** Encode the corpus once, then ADC top-k per query (smallest approximate
-    * L2). In production the codes frame is the materialized index table;
-    * pass it via `precomputedCodes` to search without re-encoding.
+  /** ADC top-k per query (smallest approximate L2) over `corpusCodes`, the
+    * corpus encoded once as `(nn_id, codes)` rows ([[codes]]); in
+    * production that frame is the materialized index table.
     */
-  def topK(corpus: DataFrame, queries: DataFrame, index: Index, k: Int,
-           precomputedCodes: Option[DataFrame] = None): DataFrame = {
-    val c = precomputedCodes.getOrElse(
-      corpus.select(col("vec_id").as("nn_id"),
-        codes(col("embedding").cast("array<double>"), index).as("codes")))
+  def topK(corpusCodes: DataFrame, queries: DataFrame, index: Index, k: Int): DataFrame = {
     // the lookup table is computed once per query row, before the broadcast
     val q = queries.select(col("vec_id").as("query_id"),
         adcTable(col("embedding").cast("array<double>"), index).as("adc_tab"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("approx_dist"), col("nn_id"))
-    c.crossJoin(broadcast(q))
+    corpusCodes.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("nn_id"))
       .withColumn("approx_dist", adcFromTable(col("adc_tab"), col("codes"), index))
       .withColumn("rank", row_number().over(w))

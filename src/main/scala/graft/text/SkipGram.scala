@@ -36,11 +36,11 @@ object SkipGram {
 
   /** (center, context, n_pairs) counts over the subsampled corpus;
     * `minCount` prunes the long tail (SQL HAVING). `tNum/tDen` is the
-    * subsample threshold t as an exact rational (default 1/100 — tokens
-    * above 1% of the stream get dropped proportionally).
+    * subsample threshold t as an exact rational (1/100 drops tokens above
+    * 1% of the stream proportionally).
     */
-  def pairs(docs: DataFrame, window: Int = 2, minCount: Long = 2L,
-            tNum: Long = 1L, tDen: Long = 100L): DataFrame = {
+  def pairs(docs: DataFrame, window: Int, minCount: Long,
+            tNum: Long, tDen: Long): DataFrame = {
     require(window >= 1 && window <= 16, s"window must be in [1,16], got $window")
     val tok = docs
       .select(col("doc_id").as("doc"), graft.dedup.Dedup.tokens(col("text")).as("t"))

@@ -20,7 +20,7 @@ class AnchorBoundLintSpec extends AnyFunSuite {
   /** bound class -> `.anchor(Bound.<Class>` sites across the main tree. */
   private val inventory: Map[String, Int] = Map(
     "Metadata" -> 40, // group/class frames, histograms, k-row totals, top-k lists
-    "Fixture" -> 35, // planted-graph, versioned, media and delta-batch fixtures
+    "Fixture" -> 34, // planted-graph, versioned, media and delta-batch fixtures
     "PerEntity" -> 39, // one row per user/doc/node/part
     "Data" -> 3 // the exceptions below
   )

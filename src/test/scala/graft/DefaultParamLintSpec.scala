@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DefaultParamLintSpec extends AnyFunSuite {
 
-  private val pinned = 32
+  private val pinned = 18
 
   test("the main tree declares exactly the pinned number of default-valued def parameters") {
     val perFile = MainSources.all

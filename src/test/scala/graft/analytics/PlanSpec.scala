@@ -168,7 +168,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val dim = graft.Tables.customer(spark, sf())
       .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-    val bloom = BloomPrefilter.build(dim, col("c_custkey"), expectedItems = 10000L)
+    val bloom = BloomPrefilter.build(dim, col("c_custkey"))
     val pre = BloomPrefilter.prefilter(graft.Tables.orders(spark, sf()), col("o_custkey"), bloom)
     val p = plan(pre)
     // the bloom probe is a plain Filter over the scan — nothing exchanged

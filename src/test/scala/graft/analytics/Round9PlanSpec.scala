@@ -16,7 +16,8 @@ class Round9PlanSpec extends SparkSpec {
   private val docs = graft.Tables.documents(spark, sf())
 
   test("skipGram pairs: the (doc, position) pair join is an equi-join; the only product is the 1-row broadcast totals") {
-    val df = graft.text.SkipGram.pairs(docs, window = 2)
+    val df = graft.text.SkipGram.pairs(docs, window = 2, minCount = 2L,
+      tNum = 1L, tDen = 100L)
     df.collect() // finalize AQE so the 1-row broadcast side resolves
     // executedPlan.toString on a finalized AQE plan prints Final AND
     // Initial sections — pin the FINAL one only

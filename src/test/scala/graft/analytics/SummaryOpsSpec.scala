@@ -135,7 +135,8 @@ class SummaryOpsSpec extends SparkSpec {
   test("abTest: arm counts partition the units; degenerate 100% rate yields NULL z, not an abort") {
     val ev = (1L to 40L).flatMap(u => Seq((u, "buy"), (u, "view")))
       .toDF("user_id", "event_type")
-    val r = Drift.abTest(ev, "user_id", $"event_type" === "buy", seed = "t")
+    val r = Drift.abTest(ev, "user_id", $"event_type" === "buy", seed = "t",
+      minSuccesses = 1L)
       .collect().head
     assert(r.getAs[Long]("n_a") + r.getAs[Long]("n_b") === 40L)
     // every unit converts ⇒ pooled variance 0 ⇒ gated NULL
@@ -144,7 +145,8 @@ class SummaryOpsSpec extends SparkSpec {
     // interior rates produce a finite z with the sign of (rate_a − rate_b)
     val ev2 = (1L to 40L).map(u => (u, if (u % 4 == 0) "buy" else "view"))
       .toDF("user_id", "event_type")
-    val r2 = Drift.abTest(ev2, "user_id", $"event_type" === "buy", seed = "t")
+    val r2 = Drift.abTest(ev2, "user_id", $"event_type" === "buy", seed = "t",
+      minSuccesses = 1L)
       .collect().head
     val z = r2.getAs[Double]("z")
     assert(!z.isNaN && !z.isInfinite)
@@ -261,7 +263,7 @@ class SummaryOpsSpec extends SparkSpec {
   test("linkPrediction: hand case and middle-degree valve") {
     val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
       .toDF("id_a", "id_b")
-    val out = DupClusters.linkPrediction(e)
+    val out = DupClusters.linkPrediction(e, maxMiddleDegree = Int.MaxValue)
       .as[(Long, Long, Long, Long, Double)].collect().toSet
     // only non-adjacent distance-2 pair is (1,4): common {2,3}, degs 2/2
     assert(out === Set((1L, 4L, 2L, 2L, 1.0)))

@@ -165,7 +165,7 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.branches(spark, dir) == Seq("dev"))
     // commit-less branch reads its fork point
     assert(Versioned.readBranch(spark, dir, "dev").count() == 2)
-    Versioned.commitToBranch(Seq((3L, "c")).toDF("id", "s"), dir, "dev")
+    Versioned.commitToBranch(Seq((3L, "c")).toDF("id", "s"), dir, "dev", append = true)
     // isolation: main unchanged, branch sees the append
     assert(Versioned.read(spark, dir).count() == 2)
     assert(Versioned.readBranch(spark, dir, "dev").count() == 3)
@@ -221,11 +221,11 @@ class VersionedSpec extends SparkSpec {
     // a dropped branch leaves its data (files may be live in merged main);
     // a recreated branch must still commit
     Versioned.createBranch(spark, dir, "dev")
-    Versioned.commitToBranch(Seq((2L, "b")).toDF("id", "s"), dir, "dev")
+    Versioned.commitToBranch(Seq((2L, "b")).toDF("id", "s"), dir, "dev", append = true)
     Versioned.mergeBranch(spark, dir, "dev", Seq("id")) // FF: main adopts the branch's files
     Versioned.dropBranch(spark, dir, "dev")
     Versioned.createBranch(spark, dir, "dev")
-    Versioned.commitToBranch(Seq((3L, "c")).toDF("id", "s"), dir, "dev")
+    Versioned.commitToBranch(Seq((3L, "c")).toDF("id", "s"), dir, "dev", append = true)
     assert(Versioned.readBranch(spark, dir, "dev").count() == 3)
     assert(Versioned.read(spark, dir).count() == 2) // main still pre-second-merge
   }
@@ -311,7 +311,7 @@ class VersionedSpec extends SparkSpec {
         (1 to 4).map { i =>
           val df = Seq(row(w, i)).toDF("id", "s")
           if (w <= 2) Versioned.commit(df, dir)
-          else Versioned.commitToBranch(df, dir, "dev")
+          else Versioned.commitToBranch(df, dir, "dev", append = true)
         }
       }
     }

@@ -8,7 +8,7 @@ class BloomPrefilterSpec extends SparkSpec {
 
   test("no false negatives: every dim key passes its own bloom") {
     val dim = (0L until 5000L).map(i => i * 7).toDF("k")
-    val bloom = BloomPrefilter.build(dim, col("k"), expectedItems = 5000L)
+    val bloom = BloomPrefilter.build(dim, col("k"))
     assert(BloomPrefilter.prefilter(dim, col("k"), bloom).count() == 5000L)
   }
 
@@ -16,7 +16,7 @@ class BloomPrefilterSpec extends SparkSpec {
     val dim = Tables.customer(spark, sf())
       .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
     val fact = Tables.orders(spark, sf())
-    val bloom = BloomPrefilter.build(dim, col("c_custkey"), expectedItems = 10000L)
+    val bloom = BloomPrefilter.build(dim, col("c_custkey"))
     val pre = BloomPrefilter.prefilter(fact, col("o_custkey"), bloom)
     val (total, kept) = (fact.count(), pre.count())
     // BUILDING is ~1/5 of customers; the bloom must cut the fact side hard
@@ -31,8 +31,7 @@ class BloomPrefilterSpec extends SparkSpec {
     val dim = Tables.customer(spark, sf())
       .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
     val fact = Tables.orders(spark, sf())
-    val viaBloom = BloomPrefilter.prefilteredJoin(fact, dim, "o_custkey", "c_custkey",
-        expectedItems = 10000L)
+    val viaBloom = BloomPrefilter.prefilteredJoin(fact, dim, "o_custkey", "c_custkey")
       .select(col("o_orderkey")).as[Long].collect().sorted.toSeq
     val plain = fact.join(dim, col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey")).as[Long].collect().sorted.toSeq

@@ -48,7 +48,9 @@ class PqSpec extends SparkSpec {
         .select(($"vec_id" + 1000L).as("vec_id"), $"embedding"))
     val idx = Pq.build(aug, dim = 64, m = 8, k = 16)
     val queries = aug.filter($"vec_id" >= 1000L)
-    val top = Pq.topK(aug, queries, idx, k = 3)
+    val codes = aug.select($"vec_id".as("nn_id"),
+      Pq.codes(col("embedding").cast("array<double>"), idx).as("codes"))
+    val top = Pq.topK(codes, queries, idx, k = 3)
       .select($"query_id", $"nn_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val missing = queries.select($"vec_id").as[Long].collect()

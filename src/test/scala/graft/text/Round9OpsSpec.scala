@@ -30,12 +30,13 @@ class Round9OpsSpec extends SparkSpec {
     val flood = (1L to 8L).map(i =>
       (i, (Seq.fill(50)("the") :+ s"rare$i").mkString(" ")))
     val out = SkipGram.pairs(flood.toDF("doc_id", "text"), window = 2,
-      minCount = 1L).as[(String, String, Long)].collect()
+      minCount = 1L, tNum = 1L, tDen = 100L).as[(String, String, Long)].collect()
     val theMass = out.filter(p => p._1 == "the" && p._2 == "the").map(_._3).sum
     // unsubsampled the-the mass would be ≈ 8 docs · 50 tokens · 4 ≈ 1600
     assert(theMass < 100, s"subsampling left the-the mass at $theMass")
     val again = SkipGram.pairs(flood.toDF("doc_id", "text").repartition(5),
-      window = 2, minCount = 1L).as[(String, String, Long)].collect()
+      window = 2, minCount = 1L, tNum = 1L, tDen = 100L)
+      .as[(String, String, Long)].collect()
     assert(again.sortBy(p => (p._1, p._2)).toSeq ==
       out.sortBy(p => (p._1, p._2)).toSeq)
   }
