@@ -36,8 +36,9 @@ object Tables {
     *    at `local[4]` that is ~3 ms against ~100-150 ms for a listing open.
     *    The open reads the files the last `writeFact` wrote; the in-place
     *    writers (`Maintenance.compactPartition`, `retentionDelete`,
-    *    `overwritePartitions`, `StreamingIngest.factSink`) drop the
-    *    manifest before they touch the table, so the next open lists;
+    *    `overwritePartitions`) drop the manifest before they touch the
+    *    table, and `StreamingIngest.factSink` before each batch's files
+    *    land, so the next open lists;
     *  - any other path lists its directory, as `spark.read.parquet` does.
     */
   def cachedParquet(spark: SparkSession, path: String): DataFrame = {

@@ -3,9 +3,9 @@ package graft.maintain
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.{DataFrameWriter, Dataset}
+import org.apache.spark.sql.{DataFrameWriter, Dataset, SparkSession}
 
 /** The local file system every batch Spark write of the program creates
   * its files through: Hadoop's checksummed `LocalFileSystem` (data files and
@@ -32,9 +32,11 @@ import org.apache.spark.sql.{DataFrameWriter, Dataset}
   * the session opened first. The keys ride on the writer, not on the
   * session, so a caller that builds its own session gets them too. Reads
   * and the single-file creates outside a write job (manifests, refs) stay
-  * on the session's file system, and so do streaming file sinks: Spark 4.1's
-  * `FileStreamSink` builds its Hadoop conf from the session alone, so a
-  * stream writer's options cannot reach it.
+  * on the session's file system. A stream reaches this one only through
+  * `foreachBatch`: Spark 4.1's `FileStreamSink` builds its Hadoop conf from
+  * the session alone, so a file sink's writer options cannot reach it, and
+  * `StreamingIngest.factSink` writes each batch with [[write]] instead. The
+  * stream's checkpoint stays on the session's file system.
   */
 class LocalFs extends LocalFileSystem(new LocalFs.Raw)
 
@@ -54,4 +56,11 @@ object LocalFs {
 
   /** `ds.write`, creating its files through [[LocalFs]]. */
   def write[T](ds: Dataset[T]): DataFrameWriter[T] = ds.write.options(options)
+
+  /** The file system of `path` as the jobs of [[write]] open it, for the
+    * directories a caller makes outside a write job. Uncached: the caller
+    * closes it.
+    */
+  def fileSystem(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(spark.sessionState.newHadoopConfWithOptions(options))
 }

@@ -16,11 +16,10 @@ import scala.jdk.CollectionConverters._
   * Each in-place writer drops the table's manifest
   * ([[TableIndex.dropManifest]]) before it touches a file, so a
   * `Layout.writeFact` table is never opened from a file list that no
-  * longer matches its directories. Each refuses a table written by a
-  * streaming file sink ([[TableIndex.requireNoSinkLog]]), whose log would
-  * go on naming the files it replaced or deleted. The rewrites start with
-  * [[LocalFs.write]], so they create their files without forking a `chmod`
-  * per file.
+  * longer matches its directories. A table the fact stream appends to
+  * (`StreamingIngest.factSink`) keeps no other file list, so they rewrite
+  * its files like any other. The rewrites start with [[LocalFs.write]], so
+  * they create their files without forking a `chmod` per file.
   */
 object Maintenance {
 
@@ -49,7 +48,6 @@ object Maintenance {
     */
   def retentionDelete(spark: SparkSession, path: String, dayCol: String,
                       days: Int, asOf: java.time.LocalDate): Seq[String] = {
-    TableIndex.requireNoSinkLog(spark, path)
     TableIndex.dropManifest(spark, path)
     val cutoff = asOf.minusDays(days.toLong).toString
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -83,7 +81,6 @@ object Maintenance {
   def compactPartition(spark: SparkSession, path: String, dayCol: String,
                        day: String): Unit = {
     val partPath = s"$path/$dayCol=$day"
-    TableIndex.requireNoSinkLog(spark, partPath)
     TableIndex.dropManifest(spark, partPath)
     Promote.recover(spark, partPath)
     val part = new Path(partPath)
@@ -121,7 +118,6 @@ object Maintenance {
     * `Upsert.upsert` output restricted to changed partitions).
     */
   def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    TableIndex.requireNoSinkLog(df.sparkSession, path)
     TableIndex.dropManifest(df.sparkSession, path)
     LocalFs.write(df)
       .option("partitionOverwriteMode", "dynamic")

@@ -127,38 +127,6 @@ object TableIndex {
     upToRoot(path).foreach(p => f.delete(new Path(p, ManifestName), false))
   }
 
-  /** The log Spark's file sink keeps at a table's root. Once a table holds
-    * one, every open reads only the files the log names.
-    */
-  private val SinkLogName = "_spark_metadata"
-
-  /** Refuses, before any file is touched, to replace or delete files in
-    * the table that `path` lies in when that table is a file-sink table
-    * (`StreamingIngest.factSink`): its log would go on naming the replaced
-    * files, and every later open would throw `FileNotFoundException`.
-    */
-  def requireNoSinkLog(spark: SparkSession, path: String): Unit = {
-    val f = fs(spark, new Path(path))
-    upToRoot(path).find(p => f.exists(new Path(p, SinkLogName))).foreach { root =>
-      throw new IllegalArgumentException(
-        s"$root is written by a streaming file sink ($SinkLogName); its files cannot be rewritten in place")
-    }
-  }
-
-  /** Refuses a file-sink target that holds parquet data but no sink log:
-    * the log the sink's first batch starts would hide that data from every
-    * open.
-    */
-  def requireSinkTarget(spark: SparkSession, targetDir: String): Unit = {
-    val root = new Path(targetDir)
-    val f = fs(spark, root)
-    val unlogged = f.exists(root) && !f.exists(new Path(root, SinkLogName)) &&
-      listEntries(spark, root, root)(p => p.endsWith(".parquet") && p.split('/').forall(visible)).nonEmpty
-    require(!unlogged,
-      s"$targetDir holds parquet data without a streaming file-sink log ($SinkLogName); " +
-        "a file sink would hide that data from every open")
-  }
-
   /** `t` with every field, element and value nullable: the form a file
     * source reports its data schema in.
     */

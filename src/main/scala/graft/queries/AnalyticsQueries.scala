@@ -368,18 +368,18 @@ object AnalyticsQueries {
 
   /** Watermark LATE-DATA accounting proven live, across a restart: run 1
     * streams the on-time half of `events` into an append-mode 6-hour
-    * window aggregate (file sink + checkpoint) — its trailing no-data
-    * batch advances the watermark to max(ts) − 3 days and emits exactly
-    * the windows that closed. Run 2 RESUMES the same checkpoint with a
-    * second file whose rows sit 3650 days in the past: the restored
-    * watermark must classify every one as late and drop it, appending
-    * NOTHING (a 2014 window in the sink would mean late data leaked
-    * through the restart). Final sink = on-time windows whose end the
-    * watermark passed — the oracle replays the cutoff from the same
-    * max-timestamp arithmetic. Sequential runs impose arrival order by
-    * construction (file-listing order across two loose files proved
-    * nondeterministic), and watermark persistence across checkpoint
-    * restart is exactly what a production resume relies on.
+    * window aggregate (a `foreachBatch` parquet append + checkpoint) —
+    * its trailing no-data batch advances the watermark to max(ts) − 3
+    * days and emits exactly the windows that closed. Run 2 RESUMES the
+    * same checkpoint with a second file whose rows sit 3650 days in the
+    * past: the restored watermark must classify every one as late and
+    * drop it, appending NOTHING (a 2014 window in the sink would mean
+    * late data leaked through the restart). Final sink = on-time windows
+    * whose end the watermark passed — the oracle replays the cutoff from
+    * the same max-timestamp arithmetic. Sequential runs impose arrival
+    * order by construction (file-listing order across two loose files
+    * proved nondeterministic), and watermark persistence across
+    * checkpoint restart is exactly what a production resume relies on.
     */
   private def streamLateQ(s: SparkSession, dir: String): DataFrame = {
     // per-SF fixture: the two single-file halves (order is imposed by the
@@ -415,8 +415,9 @@ object AnalyticsQueries {
       .groupBy(window(col("ts"), "6 hours").as("w"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("window_start"), col("n"))
-    def run(): Unit = OneShotStream.run(stream)(_.format("parquet")
-      .option("path", sink).option("checkpointLocation", ckpt).outputMode("append"))
+    def run(): Unit = OneShotStream.run(stream)(_.option("checkpointLocation", ckpt)
+      .outputMode("append")
+      .foreachBatch((batch: DataFrame, _: Long) => LocalFs.write(batch).mode("append").parquet(sink)))
     java.nio.file.Files.copy(part("a"), src.resolve("ontime.parquet"))
     run()
     java.nio.file.Files.copy(part("b"), src.resolve("late.parquet"))

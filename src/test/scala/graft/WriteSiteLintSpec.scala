@@ -8,8 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * write that bypasses the helper creates its files through the stock
   * local file system, which forks a `chmod` per file, `.crc` and
   * directory. `.write(` with an argument (Java streams, `ImageIO`,
-  * `PngCodec`) is not a Dataset write, and neither is `.writeStream`,
-  * whose file sink takes the session's Hadoop conf, not its options.
+  * `PngCodec`) is not a Dataset write.
+  *
+  * A stream writes files only through `foreachBatch` and the helper: no
+  * stream writer in the main tree is a file sink. Spark's `FileStreamSink`
+  * takes the session's Hadoop conf, not the writer's options, so it forks
+  * a `chmod` per file, and its `_spark_metadata` log hides from every open
+  * the files it did not write. A stream writer is the method chain that
+  * starts at `.writeStream` or at the sink argument of
+  * `OneShotStream.run`; it is a file sink if it names a file format, a
+  * `path` option or a path to `start`.
   */
 class WriteSiteLintSpec extends AnyFunSuite {
 
@@ -31,6 +39,25 @@ class WriteSiteLintSpec extends AnyFunSuite {
     assert(sites.isEmpty,
       s"${sites.size} Dataset writes outside LocalFs: ${sites.mkString(", ")}. " +
         "Start a write with graft.maintain.LocalFs.write.")
+  }
+
+  private val streamWriter = """\.writeStream\b|OneShotStream\.run\(""".r
+  private val fileSink =
+    """format\("(?:parquet|orc|json|csv|text|avro|delta)"\)|option\("path"|\.start\(\s*[^)\s]""".r
+
+  test("no stream writer is a file sink") {
+    val sites = MainSources.all.flatMap { case (f, t) =>
+      val lines = t.linesIterator.toIndexedSeq
+      lines.indices.collect {
+        case i if !comment(lines(i)) && streamWriter.findFirstIn(lines(i)).nonEmpty &&
+          (lines(i) +: lines.drop(i + 1).takeWhile(_.trim.startsWith(".")))
+            .exists(l => fileSink.findFirstIn(l).nonEmpty) =>
+          s"${f.getName}:${i + 1}"
+      }
+    }
+    assert(sites.isEmpty,
+      s"${sites.size} file-sink streams: ${sites.mkString(", ")}. Write each batch " +
+        "with foreachBatch and graft.maintain.LocalFs.write.")
   }
 
   test("only LocalFs names the local file system's Hadoop key") {

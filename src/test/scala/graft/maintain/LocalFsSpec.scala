@@ -7,10 +7,12 @@ import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import graft.TempDirs.fixtureDir
 import graft.queries.TelematicsQueries
+import graft.stream.{Edge, StreamingIngest}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** [[LocalFs]] against the stock local file system: the program's writers
@@ -96,6 +98,25 @@ class LocalFsSpec extends SparkSpec {
       $"device_id_bucket" === bucketDir.split('=').last.toInt)
     assertNoWriteJobChmod(Maintenance.overwritePartitions(
       part.withColumn("speed_kmh", $"speed_kmh" + 1), d, Seq("device_id_bucket", "received_day")))
+  }
+
+  test("factSink starts no chmod for the table's files") {
+    implicit val sql = spark.sqlContext
+    val d = fixtureDir("localfs_fact_sink") + "/fact"
+    val ckpt = fixtureDir("localfs_fact_sink_ckpt")
+    val edges = Seq("7", "8").flatMap(dev => Seq(1704844800L, 1704931200L).map(Edge.mk(dev, _)))
+    val forked = chmods {
+      val mem = MemoryStream[Edge]
+      val q = StreamingIngest.factSink(StreamingIngest.ingest(mem.toDF()), d, ckpt).start()
+      try {
+        mem.addData(edges: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    // the checkpoint's offset and commit logs stay on the session's file system
+    val table = forked.filterNot(_.startsWith(ckpt))
+    assert(table.isEmpty, s"${table.size} chmod processes, e.g. ${table.take(3)}")
+    assert(spark.read.parquet(d).count() == edges.size)
   }
 
   test("Fixtures.parquet starts no chmod") {

@@ -193,36 +193,56 @@ class TableIndexSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("factSink keeps the open true") {
-    val d = written("tix_fact_sink", tiny)
-    val want = rows(listed(d))
-    assert(want.nonEmpty)
-    // it refuses the table: its log would hide every writeFact row from every open
-    intercept[IllegalArgumentException](sinkInto(d, "tix_fact_sink", Seq(Edge.mk("7", 1704844800L))))
-    assert(!new java.io.File(d, "_spark_metadata").exists())
-    assert(rows(Tables.cachedParquet(spark, d)) == want)
-    assert(rows(listed(d)) == want)
+  /** The rows `StreamingIngest.factSink` writes for `edges`, in the
+    * column order of the fact.
+    */
+  private def ingested(edges: Seq[Edge]): DataFrame =
+    StreamingIngest.ingest(edges.toDF()).select(tiny.columns.map(col).toSeq: _*)
+
+  /** Asserts that the manifest-or-listing open and a listing open of `d`
+    * both give exactly `want`.
+    */
+  private def assertOpens(d: String, want: DataFrame): Unit = {
+    val expected = rows(want)
+    assert(expected.nonEmpty)
+    assert(rows(Tables.cachedParquet(spark, d)) == expected)
+    assert(rows(listed(d)) == expected)
   }
 
-  test("compactPartition, retentionDelete and overwritePartitions refuse a factSink table; its rows stay readable") {
+  test("factSink keeps the open true") {
+    val d = written("tix_fact_sink", tiny)
+    val edge = Seq(Edge.mk("7", 1704844800L))
+    sinkInto(d, "tix_fact_sink", edge)
+    assert(!new java.io.File(d, "_spark_metadata").exists())
+    assertOpens(d, tiny.unionByName(ingested(edge)))
+  }
+
+  test("compactPartition, overwritePartitions and retentionDelete on a factSink table keep exactly the expected rows") {
     val d = graft.TempDirs.fixtureDir("tix_sink_table") + "/fact"
-    // two days (2024-01-10, 2024-01-11) of two devices
-    sinkInto(d, "tix_sink_table", for {
+    // two days (2024-01-10, 2024-01-11) of two devices in two buckets
+    val edges = for {
       dev <- Seq("7", "8"); t <- Seq(1704844800L, 1704844860L, 1704931200L)
-    } yield Edge.mk(dev, t))
-    val want = rows(listed(d))
-    assert(want.size == 6)
-    val bucketDir = new java.io.File(d).listFiles().map(_.getPath)
-      .filter(_.contains("device_id_bucket=")).min
-    // each would leave the sink's log naming files it replaced or deleted
-    intercept[IllegalArgumentException](
-      Maintenance.compactPartition(spark, bucketDir, "received_day", "2024-01-10"))
-    intercept[IllegalArgumentException](
-      Maintenance.retentionDelete(spark, bucketDir, "received_day", 0,
-        java.time.LocalDate.parse("2024-01-12")))
-    intercept[IllegalArgumentException](
-      Maintenance.overwritePartitions(listed(d).limit(1), d, Seq("device_id_bucket", "received_day")))
-    assert(rows(listed(d)) == want)
-    assert(rows(Tables.cachedParquet(spark, d)) == want)
+    } yield Edge.mk(dev, t)
+    sinkInto(d, "tix_sink_table", edges)
+    val streamed = ingested(edges)
+    assert(streamed.count() == 6)
+    assertOpens(d, streamed)
+    val bucket = new java.io.File(d).listFiles().map(_.getName)
+      .filter(_.startsWith("device_id_bucket=")).min
+    val touched = $"device_id_bucket" === bucket.split('=').last.toInt &&
+      $"received_day" === lit("2024-01-10").cast("date")
+
+    Maintenance.compactPartition(spark, s"$d/$bucket", "received_day", "2024-01-10")
+    assertOpens(d, streamed)
+
+    Maintenance.overwritePartitions(listed(d).filter(touched)
+      .withColumn("speed_kmh", $"speed_kmh" + 1), d, Seq("device_id_bucket", "received_day"))
+    val bumped = streamed.withColumn("speed_kmh",
+      when(touched, $"speed_kmh" + 1).otherwise($"speed_kmh"))
+    assertOpens(d, bumped)
+
+    assert(Maintenance.retentionDelete(spark, s"$d/$bucket", "received_day", 0,
+      java.time.LocalDate.parse("2024-01-11")).nonEmpty)
+    assertOpens(d, bumped.filter(!touched))
   }
 }

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.ingest.Normalize
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 case class Edge(report_type: String, tenant: String, provider: String,
                 model: String, firmware: String, device_id: String,
@@ -23,6 +24,19 @@ object Edge {
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Lands `rows` in `srcDir` as the edge-JSON file `<name>.json`. */
+  private def writeJson(srcDir: String, name: String, rows: Seq[Edge]): Unit = {
+    val tmp = new java.io.File(s"$srcDir/.$name.tmp")
+    val w = new java.io.PrintWriter(tmp)
+    rows.foreach { e =>
+      val fields = e.productIterator.zip(Edge.mk("x", 0).productElementNames)
+        .collect { case (v, n) if v != null => s""""$n": "$v"""" }
+      w.println(fields.mkString("{", ", ", "}"))
+    }
+    w.close()
+    tmp.renameTo(new java.io.File(s"$srcDir/$name.json")) // atomic visibility
+  }
 
   test("streaming ingest applies the exact batch normalize semantics") {
     implicit val sql = spark.sqlContext
@@ -71,17 +85,7 @@ class StreamingSpec extends SparkSpec {
     val base = graft.TempDirs.fixtureDir("e2e")
     val (srcDir, outDir, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
     new java.io.File(srcDir).mkdirs()
-    def writeBatch(name: String, rows: Seq[Edge]): Unit = {
-      val tmp = new java.io.File(s"$srcDir/.$name.tmp")
-      val w = new java.io.PrintWriter(tmp)
-      rows.foreach { e =>
-        val fields = e.productIterator.zip(Edge.mk("x", 0).productElementNames)
-          .collect { case (v, n) if v != null => s""""$n": "$v"""" }
-        w.println(fields.mkString("{", ", ", "}"))
-      }
-      w.close()
-      tmp.renameTo(new java.io.File(s"$srcDir/$name.json")) // atomic visibility
-    }
+    def writeBatch(name: String, rows: Seq[Edge]): Unit = writeJson(srcDir, name, rows)
     def start() = StreamingIngest.factSink(
       StreamingIngest.ingest(spark.readStream.schema(Normalize.kafkaEdgeSchema).json(srcDir)),
       outDir, ckpt).start()
@@ -101,6 +105,48 @@ class StreamingSpec extends SparkSpec {
     val parts = new java.io.File(outDir).listFiles().map(_.getName)
       .filter(_.startsWith("device_id_bucket="))
     assert(parts.nonEmpty)
+  }
+
+  test("a batch run again after its commit-log entry is lost replaces its own files") {
+    val base = graft.TempDirs.fixtureDir("rerun")
+    val (srcDir, outDir, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
+    new java.io.File(srcDir).mkdirs()
+    def run(): Seq[Long] = {
+      val q = StreamingIngest.factSink(
+        StreamingIngest.ingest(spark.readStream.schema(Normalize.kafkaEdgeSchema).json(srcDir)),
+        outDir, ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+      q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+    }
+    def files(): Seq[String] = {
+      val all = java.nio.file.Files.walk(java.nio.file.Paths.get(outDir))
+      try all.iterator().asScala.map(_.toString.drop(outDir.length))
+        .filter(_.endsWith(".parquet")).toSeq.sorted
+      finally all.close()
+    }
+
+    writeJson(srcDir, "b1", (0 until 5).map(i => Edge.mk("7", 1704067200L + i)))
+    assert(run() == Seq(0L))
+    writeJson(srcDir, "b2", (0 until 4).map(i => Edge.mk("8", 1704067300L + i)))
+    assert(run() == Seq(1L))
+    val before = files()
+    val commits = new java.io.File(ckpt, "commits")
+    Seq("1", ".1.crc").foreach(n => new java.io.File(commits, n).delete())
+    assert(!new java.io.File(commits, "1").exists())
+
+    assert(run() == Seq(1L), "batch 1 runs again")
+    val out = spark.read.parquet(outDir)
+    assert(out.count() == 9)
+    assert(out.select("correlation_id").distinct().count() == 9)
+    // batch 0's files are untouched, batch 1's are replaced one for one
+    val after = files()
+    def ofBatch(fs: Seq[String], id: Int) = fs.filter(_.contains(s"/b$id-"))
+    assert(ofBatch(after, 0) == ofBatch(before, 0))
+    assert(ofBatch(after, 1).size == ofBatch(before, 1).size)
+    assert(ofBatch(after, 1) != ofBatch(before, 1))
+    assert(after.forall(p => p.contains("/b0-") || p.contains("/b1-")), after)
+    val top = new java.io.File(outDir).list().toSeq
+    assert(top.forall(_.startsWith("device_id_bucket=")), s"left under the table: $top")
   }
 
   test("streaming near-dup filter flags planted dups against a static corpus") {
